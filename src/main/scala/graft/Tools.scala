@@ -58,44 +58,6 @@ object Tools {
       }
       spark.stop(); return
     }
-    if (name == "searchbench") {
-      // scale search probe: build a bucketed-leaf index over n x d
-      // synthetic vectors, then time vicinity searches + verify one
-      // against brute force.
-      import org.apache.spark.sql.functions._
-      import graft.operators._
-      val nums = args.drop(1).filter(_.forall(_.isDigit))
-      val n = nums.headOption.map(_.toLong).getOrElse(1000000L)
-      val d = nums.lift(1).map(_.toInt).getOrElse(64)
-      val bucket = nums.lift(2).map(_.toInt).getOrElse(100)
-      val pts = graft.sources.Ingest.randomUniform(spark, n, d).localCheckpoint()
-      var t0 = System.nanoTime()
-      val index = IndexBuild.buildIndex(pts, "id", "vector",
-        bucketSize = bucket).localCheckpoint()
-      val nodes = index.count()
-      println(f"build(bucket=$bucket): ${(System.nanoTime() - t0) / 1e9}%.1f s, $nodes index rows")
-      val q = (0 until d).map(i => (i % 7) * 0.1 - 0.3)
-      // radii scaled to the expected uniform-data distance ~ sqrt(d/3)
-      val radii = Seq(0.82, 0.9, 1.0).map(f => f * math.sqrt(d / 3.0))
-      for (r <- radii) {
-        t0 = System.nanoTime()
-        val cnt = IndexSearch.searchExact(index, pts, "id", "vector", q, r).count()
-        println(f"searchExact(frontier) r=$r%.2f: ${(System.nanoTime() - t0) / 1e9}%.2f s, $cnt matches")
-      }
-      val rMid = radii(1)
-      t0 = System.nanoTime()
-      val localCands = IndexSearch.searchBoxLocal(index, q, rMid)
-      val localCnt = pts.join(localCands.withColumnRenamed("id", "id2"),
-          col("id") === col("id2"))
-        .filter(graft.functions.VectorFunctions.dist(col("vector"),
-          graft.functions.VectorFunctions.doubleVec(q)) <= rMid).count()
-      println(f"searchExact(local walk) r=$rMid%.2f: ${(System.nanoTime() - t0) / 1e9}%.2f s, $localCnt matches")
-      t0 = System.nanoTime()
-      val brute = BruteForce.rangeSearch(pts, "vector", q, rMid).count()
-      println(f"bruteForce r=$rMid%.2f: ${(System.nanoTime() - t0) / 1e9}%.2f s, $brute matches")
-      println(s"exact==brute: ${localCnt == brute}")
-      spark.stop(); return
-    }
     if (name == "storebench") {
       // A/B the incremental-ingest probe: inline (re-shingle corpus per
       // batch) vs the persisted shingle-store path, same JVM

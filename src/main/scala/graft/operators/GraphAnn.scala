@@ -867,7 +867,7 @@ object GraphAnn {
     * store — the 100 TB serving path (judge r14 #1): the store is never
     * collected or broadcast; each round is one frontier join against
     * the partition-pruned adjacency, the exact iterative shape
-    * [[graft.operators.IndexSearch.searchBoxDistributed]] uses for the
+    * [[graft.operators.IndexSearch.frontierSearch]] uses for the
     * tree. Driver state per round is ONE bounded collect of the
     * frontier's gb values (≤ `buckets` ints — the PartitionFilters
     * pruning trick every persisted-store probe here uses).

@@ -58,9 +58,10 @@ object IndexMaintain {
     * old + new points. `points` must be the current indexed point set
     * (needed to re-split the touched leaves).
     *
-    * Routing auto-switches like searchBox: trees up to `localNodeLimit`
-    * internal nodes are collected into a COMPACT primitive map (one Long
-    * per node: dim in the high 32 bits, mid float bits in the low 32 —
+    * Routing auto-switches like searchBox, in one probe job
+    * (`IndexSearch.collectWithin`): trees up to `localNodeLimit` internal
+    * nodes are collected into a COMPACT primitive map (one Long per
+    * node: dim in the high 32 bits, mid float bits in the low 32 —
     * no boxed Map, ~16 bytes/node in the broadcast) and walked per point
     * in one distributed map; larger trees are routed by the per-level
     * frontier join, which never materializes the tree anywhere. */
@@ -73,18 +74,13 @@ object IndexMaintain {
     val newPts = newPoints
       .select(col(idCol).cast("long").as("id"),
         col(vecCol).cast("array<float>").as("vector"))
-    // One probe job, not two: collect up to localNodeLimit+1 node rows —
-    // if everything fit, those rows ARE the routing tree (routeLocal
-    // needs them anyway; the old separate limit().count() probe doubled
-    // the work); if the limit overflowed, discard and route distributed.
-    val probe = math.min(localNodeLimit + 1, Int.MaxValue.toLong - 1).toInt
-    val nodeRows = internal.select("rangeId", "dimension", "mid")
-      .limit(probe).collect()
-    val routed =
-      if (nodeRows.length <= localNodeLimit)
-        routeLocal(nodeRows, newPts)
-      else
-        routeDistributed(internal, newPts)
+    // One probe job: if the node rows fit, they ARE the routing tree;
+    // if the limit overflowed, discard them and route distributed.
+    val routed = IndexSearch.collectWithin(
+        internal.select("rangeId", "dimension", "mid"), localNodeLimit) match {
+      case Some(nodeRows) => routeLocal(nodeRows, newPts)
+      case None => routeDistributed(internal, newPts)
+    }
 
     // Touched destinations + the old points already sitting there.
     val touched = routed.select(col("rangeId").as("leafRangeId")).distinct()

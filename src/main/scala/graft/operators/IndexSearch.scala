@@ -1,10 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
-import scala.collection.mutable
 
 /** Vicinity search over the space-partitioning index.
   *
@@ -17,26 +16,40 @@ import scala.collection.mutable
   * (the caller-side re-verification of MemoryVectorIndex.cs:237-241).
   *
   * Physical strategy (ours, not the reference's):
-  *  - `searchBoxLocal`: collect the index to the driver once and walk it
-  *    in memory — the index is ~2N tiny rows; for N up to a few million
-  *    nodes this is a single collect + an in-memory descent, and the
-  *    result is a broadcast-able id set. This mirrors the reference's SQL
-  *    recursive CTE, which also runs on one node.
-  *  - `searchBoxDistributed`: iterative frontier loop — per level, join
-  *    the (tiny, broadcast) frontier against the index relation. Survives
-  *    indexes too large for any single node; ~depth joins, each
-  *    broadcast-hash, no large-side shuffle.
+  *  - local: while the index fits `localNodeLimit` rows, it is collected
+  *    in ONE job and pinned ([[PinnedIndex]]), and the descent is the
+  *    pinned tree's in-memory walk — the index is ~2N tiny rows, and the
+  *    reference's SQL recursive CTE also runs on one node.
+  *  - distributed ([[frontierSearch]]): past the limit, an iterative
+  *    frontier loop — per level, join the (tiny) frontier against the
+  *    index relation. Survives indexes too large for any single node;
+  *    ~depth joins, no large-side shuffle.
   */
 object IndexSearch {
+
+  /** Collect `df` if it has at most `limit` rows — None when the limit
+    * overflowed (the caller then takes its distributed path). The size
+    * probe and the collect are one job: the rows that prove the index
+    * fits are the rows the local path uses. */
+  private[graft] def collectWithin(df: DataFrame, limit: Long): Option[Array[Row]] = {
+    val rows = df.limit(math.min(limit + 1, Int.MaxValue.toLong - 1).toInt).collect()
+    if (rows.length <= limit) Some(rows) else None
+  }
+
+  /** The index pinned in one job, if it fits `localNodeLimit` rows. */
+  private def pinWithin(index: DataFrame, localNodeLimit: Long): Option[PinnedIndex] =
+    collectWithin(index.select(PinnedIndex.NodeCols.map(col): _*), localNodeLimit)
+      .map(rows => PinnedIndex.fromRows(rows))
 
   /** Candidate leaf ids within the box (auto local/distributed). */
   def searchBox(index: DataFrame, q: Seq[Double], domain: Double,
                 localNodeLimit: Long = 2_000_000L): DataFrame = {
-    val probe = math.min(localNodeLimit + 1, Int.MaxValue.toLong - 1).toInt
-    if (index.limit(probe).count() <= localNodeLimit)
-      searchBoxLocal(index, q, domain)
-    else
-      searchBoxDistributed(index, q, domain)
+    val spark = index.sparkSession
+    import spark.implicits._
+    pinWithin(index, localNodeLimit) match {
+      case Some(tree) => tree.candidates(q, domain).toDF("id")
+      case None => frontierSearch(index, doubleVec(q), domain, Nil, None, hint = true)
+    }
   }
 
   /** Exact vicinity search: candidate ids from the L2 budget descent
@@ -52,142 +65,19 @@ object IndexSearch {
 
   /** Candidate leaf ids for an L2 ball query: the local path uses the
     * reference's squared-distance-budget pruning
-    * (MemoryVectorIndex.cs:259-344) — budget starts at r² and tightens by
-    * the squared offset each split adds on the non-query side; a subtree
-    * is pruned when the budget goes negative. Still a candidate SUPERSET
-    * of the true ball (the bound is a lower bound on the real distance),
-    * so searchExact's re-check stays exact. Indexes too large to collect
-    * fall back to the distributed box descent (a looser superset). */
+    * (MemoryVectorIndex.cs:259-344, [[PinnedIndex.candidatesL2]]). Still
+    * a candidate SUPERSET of the true ball (the bound is a lower bound on
+    * the real distance), so searchExact's re-check stays exact. Indexes
+    * too large to collect fall back to the distributed box descent (a
+    * looser superset). */
   def searchBall(index: DataFrame, q: Seq[Double], radius: Double,
                  localNodeLimit: Long = 2_000_000L): DataFrame = {
-    val probe = math.min(localNodeLimit + 1, Int.MaxValue.toLong - 1).toInt
-    if (index.limit(probe).count() <= localNodeLimit) {
-      val spark = index.sparkSession
-      import spark.implicits._
-      val nodes = index.select("rangeId", "dimension", "mid", "lowRangeId",
-        "highRangeId", "id").collect()
-      walkTree(nodes, 0, q, radius, l2 = true).ids.toDF("id")
-    } else searchBoxDistributed(index, q, radius)
-  }
-
-  /** In-memory descent over one tree's collected node rows; `off` is the
-    * column offset of rangeId within each Row (rows after it must be
-    * dimension, mid, lowRangeId, highRangeId, id — the index schema).
-    * Shared by the single-index and per-document local walks. */
-  private[graft] final case class WalkResult(ids: Seq[Long], nodesVisited: Long)
-
-  /** One tree node of the collected walk structure (serializable so the
-    * whole map can be BROADCAST for the batch per-partition walks). */
-  private[graft] final case class WalkNode(
-      dim: Integer, mid: Float, low: java.lang.Long, high: java.lang.Long,
-      ids: mutable.ArrayBuffer[Long], internal: Boolean)
-
-  /** Build the rangeId → node map once; walk it many times
-    * ([[walkMap]]) — the batch path amortizes this across Q queries. */
-  private[graft] def buildWalkMap(rows: Iterable[org.apache.spark.sql.Row],
-                                  off: Int): mutable.LongMap[WalkNode] = {
-    val byId = mutable.LongMap.empty[WalkNode]
-    rows.foreach { r =>
-      val rangeId = r.getLong(off)
-      val n = byId.getOrElseUpdate(rangeId,
-        WalkNode(null, 0f, null, null, mutable.ArrayBuffer.empty,
-          internal = false))
-      if (!r.isNullAt(off + 5)) n.ids += r.getLong(off + 5)
-      if (!r.isNullAt(off + 3)) {
-        // internal row for this rangeId (leaf rows may share the rangeId
-        // only under bucket leaves; the ids buffer is carried over)
-        byId.update(rangeId, WalkNode(
-          if (r.isNullAt(off + 1)) null else Int.box(r.getInt(off + 1)),
-          if (r.isNullAt(off + 2)) 0f else r.getFloat(off + 2),
-          Long.box(r.getLong(off + 3)),
-          if (r.isNullAt(off + 4)) null else Long.box(r.getLong(off + 4)),
-          n.ids, internal = true))
-      }
-    }
-    byId
-  }
-
-  private[graft] def walkTree(rows: Iterable[org.apache.spark.sql.Row],
-                              off: Int, q: Seq[Double], domain: Double,
-                              l2: Boolean = false): WalkResult =
-    walkMap(buildWalkMap(rows, off), q, domain, l2)
-
-  private[graft] def walkMap(byId: mutable.LongMap[WalkNode],
-                             q: Seq[Double], domain: Double,
-                             l2: Boolean = false): WalkResult = {
-    val out = mutable.ArrayBuffer.empty[Long]
-    var visited = 0L
-    if (l2) {
-      // Squared-distance budget descent (MemoryVectorIndex.cs:259-344):
-      // budget = r² − Σ_d offs(d)², where offs(d) is the known minimum
-      // |q(d) − p(d)| for any point p in the current subtree (the low
-      // child's region is v ≤ mid, the high child's v ≥ mid — F10 tie
-      // split keeps mid on both sides, so the bound max(±(q−mid), 0) is
-      // valid). Tighten on descent, restore on backtrack, prune at < 0.
-      val offs = new Array[Double](q.length)
-      def visit(rid: Long, budget: Double): Unit =
-        byId.get(rid).foreach { n =>
-          visited += 1
-          out ++= n.ids
-          if (n.internal) {
-            if (n.dim == null) {
-              // id-split node: no spatial narrowing
-              if (n.low != null) visit(n.low.longValue(), budget)
-              if (n.high != null) visit(n.high.longValue(), budget)
-            } else {
-              val d = n.dim.intValue()
-              val c = q(d)
-              val m = n.mid.toDouble
-              val old = offs(d)
-              if (n.low != null) {
-                val nb = math.max(math.max(c - m, 0d), old)
-                val b = budget + old * old - nb * nb
-                if (b >= 0) { offs(d) = nb; visit(n.low.longValue(), b); offs(d) = old }
-              }
-              if (n.high != null) {
-                val nb = math.max(math.max(m - c, 0d), old)
-                val b = budget + old * old - nb * nb
-                if (b >= 0) { offs(d) = nb; visit(n.high.longValue(), b); offs(d) = old }
-              }
-            }
-          }
-        }
-      // 1e-9 relative inflation: r² rounds below the exact squared sum
-      // for a point at EXACTLY distance r, and the budget's add/subtract
-      // chain drifts by ~d·ulp — either could prune a boundary match the
-      // exact re-check can't recover. The inflation dominates both; the
-      // few extra candidates are removed by the re-check.
-      visit(0L, domain * domain * 1.000000001d)
-    } else {
-      val stack = mutable.Stack[Long](0L)
-      while (stack.nonEmpty) {
-        byId.get(stack.pop()).foreach { n =>
-          visited += 1
-          out ++= n.ids
-          if (n.internal) {
-            val (lo, hi) =
-              if (n.dim == null) (true, true)
-              else {
-                val c = q(n.dim.intValue())
-                (n.mid.toDouble >= c - domain, n.mid.toDouble <= c + domain)
-              }
-            if (lo && n.low != null) stack.push(n.low.longValue())
-            if (hi && n.high != null) stack.push(n.high.longValue())
-          }
-        }
-      }
-    }
-    WalkResult(out.toSeq, visited)
-  }
-
-  /** Driver-local descent (index collected once). Returns one column
-    * `id` of candidate point ids. */
-  def searchBoxLocal(index: DataFrame, q: Seq[Double], domain: Double): DataFrame = {
     val spark = index.sparkSession
     import spark.implicits._
-    val nodes = index.select("rangeId", "dimension", "mid", "lowRangeId",
-      "highRangeId", "id").collect()
-    walkTree(nodes, 0, q, domain).ids.toDF("id")
+    pinWithin(index, localNodeLimit) match {
+      case Some(tree) => tree.candidatesL2(q, radius).toDF("id")
+      case None => frontierSearch(index, doubleVec(q), radius, Nil, None, hint = true)
+    }
   }
 
   /** Per-document box search over a (docId, ...) index built by
@@ -198,81 +88,25 @@ object IndexSearch {
     * Scale guard (mirrors searchBox): the selected documents' trees are
     * collected and walked locally only while they fit `localNodeLimit`;
     * past it — the many-document `docId = None` case at corpus scale —
-    * the descent runs as a distributed frontier loop keyed on
-    * (docId, rangeId), so no tree ever reaches the driver. */
+    * the descent runs as a frontier loop keyed on (docId, rangeId), so
+    * no tree ever reaches the driver. */
   def searchBoxPerDoc(index: DataFrame, q: Seq[Double], domain: Double,
                       docId: Option[Long] = None,
                       localNodeLimit: Long = 2_000_000L): DataFrame = {
     val spark = index.sparkSession
     import spark.implicits._
     val filtered = docId.map(d => index.filter(col("docId") === d)).getOrElse(index)
-    val probe = math.min(localNodeLimit + 1, Int.MaxValue.toLong - 1).toInt
-    if (filtered.limit(probe).count() <= localNodeLimit) {
-      val nodes = filtered.select("docId", "rangeId", "dimension", "mid",
-        "lowRangeId", "highRangeId", "id").collect()
-      nodes.groupBy(_.getLong(0)).toSeq.flatMap { case (doc, rows) =>
-        walkTree(rows, 1, q, domain).ids.map(id => (doc, id))
-      }.toDF("docId", "id")
-    } else searchBoxPerDocDistributed(filtered, q, domain)
-  }
-
-  /** Frontier-join descent over MANY documents' trees at once: every
-    * doc's root enters the frontier; each level joins the surviving
-    * (docId, childId) pairs back against the index on the COMPOSITE key,
-    * so documents descend independently in the same jobs. No broadcast
-    * hint on the child join — the frontier is O(docs × branching) wide
-    * and AQE picks broadcast only when it actually fits. */
-  private[graft] def searchBoxPerDocDistributed(index: DataFrame, q: Seq[Double],
-                                                domain: Double): DataFrame = {
-    val spark = index.sparkSession
-    import spark.implicits._
-    val qCol = doubleVec(q.map(_.toDouble))
-    val idx = index.localCheckpoint()
-    var frontier = idx.filter($"rangeId" === 0L).localCheckpoint()
-    var leaves = List.empty[DataFrame]
-    while (!frontier.isEmpty) {
-      leaves = frontier.filter($"id".isNotNull).select($"docId", $"id")
-        .localCheckpoint() :: leaves
-      val qv = element_at(qCol, $"dimension" + 1)
-      val childIds = frontier.filter($"lowRangeId".isNotNull)
-        .select($"docId".as("cdoc"), explode(array(
-          when($"dimension".isNull ||
-            $"mid".cast("double") >= qv - domain, $"lowRangeId"),
-          when($"dimension".isNull ||
-            $"mid".cast("double") <= qv + domain, $"highRangeId"))).as("childId"))
-        .filter($"childId".isNotNull)
-        .distinct()
-      val next = idx.join(childIds,
-          $"rangeId" === $"childId" && $"docId" === $"cdoc")
-        .drop("childId", "cdoc")
-        .localCheckpoint()
-      IndexBuild.freeCheckpoint(frontier)
-      frontier = next
+    collectWithin(filtered.select((PinnedIndex.NodeCols :+ "docId").map(col): _*),
+        localNodeLimit) match {
+      case Some(rows) =>
+        rows.groupBy(_.getLong(6)).toSeq.flatMap { case (doc, docRows) =>
+          PinnedIndex.fromRows(docRows).candidates(q, domain).map(id => (doc, id))
+        }.toDF("docId", "id")
+      // no broadcast hint on the child join: the frontier is
+      // O(docs × branching) wide and AQE picks broadcast only when it fits
+      case None =>
+        frontierSearch(filtered, doubleVec(q), domain, Seq("docId"), None, hint = false)
     }
-    IndexBuild.freeCheckpoint(frontier)
-    IndexBuild.freeCheckpoint(idx)
-    leaves.reduceOption(_ unionAll _)
-      .getOrElse(spark.emptyDataset[(Long, Long)].toDF("docId", "id"))
-  }
-
-  /** Search metrics — the reference's index-quality observability
-    * (predicate calls per match, MemoryVectorIndexTests.cs:165-196). */
-  case class SearchMetrics(nodesVisited: Long, leavesEmitted: Long,
-                           candidates: Long)
-
-  /** Box (or L2-budget) search with probe accounting: one collect, one
-    * instrumented walk (the same walkTree the plain local search uses). */
-  def searchBoxWithMetrics(index: DataFrame, q: Seq[Double], domain: Double,
-                           l2: Boolean = false)
-      : (DataFrame, SearchMetrics) = {
-    val spark = index.sparkSession
-    import spark.implicits._
-    val nodes = index.select("rangeId", "dimension", "mid", "lowRangeId",
-      "highRangeId", "id").collect()
-    val result = walkTree(nodes, 0, q, domain, l2)
-    (result.ids.toDF("id"),
-      SearchMetrics(result.nodesVisited, result.ids.size.toLong,
-        result.ids.size.toLong))
   }
 
   /** The reference's own query surface: `dbo.Search` is a recursive CTE
@@ -297,125 +131,87 @@ object IndexSearch {
          |SELECT id FROM node WHERE id IS NOT NULL""".stripMargin)
   }
 
-  /** BATCH box search — Q queries through ONE shared frontier descent
-    * (the serving shape at 100×: per-query descents re-scan the index Q
-    * times; this scans it once per LEVEL regardless of Q). The frontier
-    * holds (qid, qvec, childId) triples — O(Q × level width) rows,
-    * broadcast onto the partitioned index exactly like [[knnJoin]]'s
-    * broadcast-queries shape (`a6`) — so each level is one index scan
-    * joined against a broadcast query frontier, and queries that prune
-    * differently simply stop contributing rows. Pruning is the per-query
-    * L-inf box test (the `DDL.sql:240-249` predicate with `q[dim]` taken
-    * from the ROW's query vector), a candidate superset of each query's
-    * L2 ball; [[searchExactBatch]] re-checks exactly.
-    * Returns (qid, id) candidate pairs. */
-  def searchBoxBatch(index: DataFrame, queries: DataFrame, qidCol: String,
-                     qvecCol: String, domain: Double,
-                     localNodeLimit: Long = 2_000_000L): DataFrame = {
-    val spark = index.sparkSession
-    import spark.implicits._
-    // Fast path when the tree fits a broadcast (it's ~2N tiny rows): ONE
-    // scan of the partitioned queries with the tree map broadcast, each
-    // task walking its queries' L2-budget descents against the shared
-    // in-memory tree — a6's broadcast-small-side principle with the
-    // roles the data sizes dictate (queries partitioned, index
-    // broadcast). No loop, no per-level jobs. The frontier-join loop
-    // below remains the path for indexes too large for any single node.
-    val probe = math.min(localNodeLimit + 1, Int.MaxValue.toLong - 1).toInt
-    if (index.limit(probe).count() <= localNodeLimit) {
-      val nodes = index.select("rangeId", "dimension", "mid", "lowRangeId",
-        "highRangeId", "id").collect()
-      val bc = spark.sparkContext.broadcast(buildWalkMap(nodes, 0))
-      return queries
-        .select(col(qidCol).cast("long").as("qid"),
-          col(qvecCol).cast("array<double>").as("qvec"))
-        .as[(Long, Seq[Double])]
-        .flatMap { case (qid, qv) =>
-          walkMap(bc.value, qv, domain, l2 = true).ids.map(id => (qid, id))
-        }
-        .toDF("qid", "id")
-    }
-    val idx = index.localCheckpoint()
-    val qs = queries.select(col(qidCol).as("qid"),
-      col(qvecCol).cast("array<double>").as("qvec"))
-    var frontier = idx.filter($"rangeId" === 0L).crossJoin(broadcast(qs))
-      .localCheckpoint()
-    var leaves = List.empty[DataFrame]
-    while (!frontier.isEmpty) {
-      leaves = frontier.filter($"id".isNotNull).select($"qid", $"id")
-        .localCheckpoint() :: leaves
-      val qv = element_at($"qvec", $"dimension" + 1)
-      val childIds = frontier.filter($"lowRangeId".isNotNull)
-        .select($"qid", $"qvec", explode(array(
-          when($"dimension".isNull ||
-            $"mid".cast("double") >= qv - domain, $"lowRangeId"),
-          when($"dimension".isNull ||
-            $"mid".cast("double") <= qv + domain, $"highRangeId"))).as("childId"))
-        .filter($"childId".isNotNull)
-        .dropDuplicates("qid", "childId")
-      val next = idx.join(broadcast(childIds), $"rangeId" === $"childId")
-        .drop("childId")
-        .localCheckpoint()
-      IndexBuild.freeCheckpoint(frontier)
-      frontier = next
-    }
-    IndexBuild.freeCheckpoint(frontier)
-    IndexBuild.freeCheckpoint(idx)
-    leaves.reduceOption(_ unionAll _)
-      .getOrElse(spark.emptyDataset[(Long, Long)].toDF("qid", "id"))
-  }
-
-  /** BATCH exact vicinity search: the [[searchBoxBatch]] candidates
-    * re-checked with the true per-query euclidean predicate — equals the
-    * brute-force per-query oracle by construction. Output:
-    * (qid, point id columns...) for every point within `radius` of its
-    * query. */
+  /** BATCH exact vicinity search: for every row of `queries` (qidCol,
+    * qvecCol), every point within `radius`. Output: (qid, point id
+    * columns...). Candidates come from ONE pass for all Q queries (the
+    * serving shape at 100×: per-query descents re-scan the index Q
+    * times):
+    *  - while the tree fits `localNodeLimit` rows it is pinned and
+    *    broadcast, and each task walks its queries' L2-budget descents
+    *    ([[PinnedIndex.candidatePairs]]) — a6's broadcast-small-side
+    *    principle with queries partitioned and the index broadcast; no
+    *    loop, no per-level jobs;
+    *  - past it, ONE shared [[frontierSearch]] carries (qid, qvec) on every
+    *    frontier row, so each level is one index scan joined against the
+    *    broadcast query frontier, with the per-query L-inf box test taken
+    *    from the ROW's query vector.
+    * Both are candidate supersets of each query's L2 ball; the true
+    * per-query euclidean predicate re-checks them, so the result equals
+    * the brute-force per-query oracle by construction. */
   def searchExactBatch(index: DataFrame, points: DataFrame, idCol: String,
                        vecCol: String, queries: DataFrame, qidCol: String,
-                       qvecCol: String, radius: Double): DataFrame = {
-    val cands = searchBoxBatch(index, queries, qidCol, qvecCol, radius)
-      .withColumnRenamed("id", idCol)
-    val qs = queries.select(col(qidCol).as("qid"),
-      col(qvecCol).as("__qvec"))
-    points.join(cands, idCol)
+                       qvecCol: String, radius: Double,
+                       localNodeLimit: Long = 2_000_000L): DataFrame = {
+    val cands = pinWithin(index, localNodeLimit) match {
+      case Some(tree) =>
+        PinnedIndex.candidatePairs(tree, queries, qidCol, qvecCol, radius)
+      case None =>
+        frontierSearch(index, col("qvec"), radius, Seq("qid"),
+          Some(queries.select(col(qidCol).as("qid"),
+            col(qvecCol).cast("array<double>").as("qvec"))), hint = true)
+    }
+    val qs = queries.select(col(qidCol).as("qid"), col(qvecCol).as("__qvec"))
+    points.join(cands.withColumnRenamed("id", idCol), idCol)
       .join(broadcast(qs), "qid")
       .filter(dist(col(vecCol), col("__qvec")) <= radius)
       .drop("__qvec")
   }
 
-  /** Iterative frontier-join descent for indexes too large to collect. */
-  def searchBoxDistributed(index: DataFrame, q: Seq[Double], domain: Double): DataFrame = {
+  /** The frontier-join box descent, for indexes too large to collect:
+    * per level, each frontier node's surviving children (the same split
+    * test as the local walk) join back against the index relation.
+    * `keys` travel with every frontier row and come out beside each leaf
+    * id: none for one query; `docId` for per-document trees (also a join
+    * key, so documents descend independently in the same jobs); `qid` for
+    * a batch, whose `queries` (qid, qvec) are cross-joined onto the root
+    * and whose `qvec` rides along as the split test's query vector `q`.
+    * `hint` broadcasts each level's child ids onto the index scan.
+    *
+    * Per-level leaf ids are checkpointed (they ARE the result, so their
+    * blocks live until the caller is done) — which lets every frontier
+    * checkpoint be released as soon as its successor is materialized (no
+    * storage-block leak across levels). */
+  private[graft] def frontierSearch(index: DataFrame, q: Column, domain: Double,
+                                    keys: Seq[String], queries: Option[DataFrame],
+                                    hint: Boolean): DataFrame = {
     val spark = index.sparkSession
     import spark.implicits._
-    val qCol = doubleVec(q.map(_.toDouble))
+    val carried = keys ++ queries.map(_ => "qvec")
+    val joinKeys = "rangeId" +: keys.filter(index.columns.contains)
     val idx = index.localCheckpoint()
-    var frontier = idx.filter($"rangeId" === 0L).localCheckpoint()
-    // per-level leaf ids are checkpointed (they ARE the result, so their
-    // blocks live until the caller is done) — which lets every frontier
-    // checkpoint be released as soon as its successor is materialized
-    // (no storage-block leak across levels)
+    val root = idx.filter($"rangeId" === 0L)
+    var frontier = queries.fold(root)(qs => root.crossJoin(broadcast(qs)))
+      .localCheckpoint()
     var leaves = List.empty[DataFrame]
-    while (!frontier.isEmpty) {
-      leaves = frontier.filter($"id".isNotNull).select($"id")
+    do {
+      leaves = frontier.filter($"id".isNotNull).select((keys :+ "id").map(col): _*)
         .localCheckpoint() :: leaves
-      val qv = element_at(qCol, $"dimension" + 1)
-      val childIds = frontier.filter($"lowRangeId".isNotNull)
-        .select(explode(array(
+      val qv = element_at(q, $"dimension" + 1)
+      val children = frontier.filter($"lowRangeId".isNotNull)
+        .select(carried.map(col) :+ explode(array(
           when($"dimension".isNull ||
             $"mid".cast("double") >= qv - domain, $"lowRangeId"),
           when($"dimension".isNull ||
-            $"mid".cast("double") <= qv + domain, $"highRangeId"))).as("childId"))
-        .filter($"childId".isNotNull)
+            $"mid".cast("double") <= qv + domain, $"highRangeId"))).as("rangeId"): _*)
+        .filter($"rangeId".isNotNull)
         .distinct()
-      val next = idx.join(broadcast(childIds), $"rangeId" === $"childId")
-        .drop("childId")
+      val next = idx.join(if (hint) broadcast(children) else children, joinKeys)
         .localCheckpoint()
       IndexBuild.freeCheckpoint(frontier)
       frontier = next
-    }
+    } while (!frontier.isEmpty)
     IndexBuild.freeCheckpoint(frontier)
     IndexBuild.freeCheckpoint(idx)
-    leaves.reduceOption(_ unionAll _)
-      .getOrElse(spark.emptyDataset[Long].toDF("id"))
+    leaves.reduce(_ unionAll _)
   }
 }

@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
+import scala.collection.immutable.ArraySeq
 import scala.collection.mutable
 
 /** A pinned, immutable, serializable form of the space-partitioning index
@@ -21,25 +22,8 @@ final class PinnedIndex private (
     val leaves: mutable.LongMap[Array[Long]]) extends Serializable {
 
   /** Box-candidate ids for one query (driver- or executor-local walk). */
-  def candidates(q: Seq[Double], domain: Double): Seq[Long] = {
-    val out = mutable.ArrayBuffer.empty[Long]
-    val stack = mutable.Stack[Long](0L)
-    while (stack.nonEmpty) {
-      val rid = stack.pop()
-      leaves.get(rid).foreach(out ++= _)
-      internal.get(rid).foreach { n =>
-        val (lo, hi) =
-          if (n.dim < 0) (true, true)
-          else {
-            val c = q(n.dim)
-            (n.mid.toDouble >= c - domain, n.mid.toDouble <= c + domain)
-          }
-        if (lo && n.low >= 0) stack.push(n.low)
-        if (hi && n.high >= 0) stack.push(n.high)
-      }
-    }
-    out.toSeq
-  }
+  def candidates(q: Seq[Double], domain: Double): Seq[Long] =
+    walk(q, domain, l2 = false).get.ids
 
   /** Candidate ids for an L2 ball query via the reference's
     * squared-distance-budget pruning (MemoryVectorIndex.cs:259-344):
@@ -48,7 +32,73 @@ final class PinnedIndex private (
     * box test for ball queries (exactness comes from the caller's
     * re-check, same contract as `candidates`). */
   def candidatesL2(q: Seq[Double], radius: Double): Seq[Long] =
-    candidatesL2Bounded(q, radius, Int.MaxValue).get
+    walk(q, radius, l2 = true).get.ids
+
+  /** `candidatesL2` with an output cap: None once the candidate set
+    * exceeds `cap` (the caller would reject an InSet that big anyway —
+    * no point walking out the rest of the tree). */
+  def candidatesL2Bounded(q: Seq[Double], radius: Double, cap: Int): Option[Seq[Long]] =
+    walk(q, radius, l2 = true, cap).map(_.ids)
+
+  /** The tree's one vicinity descent (DDL.sql:234-295), from rangeId 0.
+    * Box mode follows the low child when `mid >= q[dim] - domain` and the
+    * high child when `mid <= q[dim] + domain` (both under an id split,
+    * dim < 0). L2 mode prunes by the squared-distance budget instead:
+    * budget = r² − Σ_d offs(d)², where offs(d) is the known minimum
+    * |q(d) − p(d)| for any point p in the current subtree (the low
+    * child's region is v ≤ mid, the high child's v ≥ mid — F10 tie split
+    * keeps mid on both sides, so the bound max(±(q−mid), 0) is valid);
+    * tighten on descent, restore on backtrack, prune at < 0. Returns the
+    * leaf ids reached and the number of nodes visited (the reference's
+    * probe count, MemoryVectorIndexTests.cs:165-196), or None once more
+    * than `cap` ids were emitted. */
+  private[graft] def walk(q: Seq[Double], domain: Double, l2: Boolean,
+                          cap: Int = Int.MaxValue): Option[PinnedIndex.Walk] = {
+    val qa = q.toArray
+    val out = mutable.ArrayBuffer.empty[Long]
+    var visited = 0L
+    object Aborted extends scala.util.control.ControlThrowable
+    val offs = new Array[Double](qa.length)
+    def visit(rid: Long, budget: Double): Unit = {
+      val leaf = leaves.get(rid)
+      val node = internal.get(rid)
+      if (leaf.isDefined || node.isDefined) visited += 1
+      leaf.foreach { ids =>
+        out ++= ids
+        if (out.size > cap) throw Aborted
+      }
+      node.foreach { n =>
+        if (n.dim < 0) {
+          if (n.low >= 0) visit(n.low, budget)
+          if (n.high >= 0) visit(n.high, budget)
+        } else {
+          val c = qa(n.dim)
+          val m = n.mid.toDouble
+          val old = offs(n.dim)
+          def descend(child: Long, gap: Double, inBox: Boolean): Unit =
+            if (child >= 0) {
+              if (!l2) { if (inBox) visit(child, budget) }
+              else {
+                val nb = math.max(math.max(gap, 0d), old)
+                val b = budget + old * old - nb * nb
+                if (b >= 0) { offs(n.dim) = nb; visit(child, b); offs(n.dim) = old }
+              }
+            }
+          descend(n.low, c - m, m >= c - domain)
+          descend(n.high, m - c, m <= c + domain)
+        }
+      }
+    }
+    // 1e-9 relative inflation of r²: r² rounds below the exact squared
+    // sum for a point at EXACTLY distance r, and the budget's
+    // add/subtract chain drifts by ~d·ulp — either could prune a boundary
+    // match the exact re-check can't recover. The inflation dominates
+    // both; the few extra candidates are removed by the re-check.
+    try {
+      visit(0L, domain * domain * 1.000000001d)
+      Some(PinnedIndex.Walk(out.toSeq, visited))
+    } catch { case Aborted => None }
+  }
 
   def nodeCount: Int = internal.size + leaves.size
 
@@ -138,67 +188,39 @@ final class PinnedIndex private (
         .sortBy { case (id, d) => (d, id) })
     } catch { case Aborted => None }
   }
-
-  /** `candidatesL2` with an output cap: None once the candidate set
-    * exceeds `cap` (the caller would reject an InSet that big anyway —
-    * no point walking out the rest of the tree). */
-  def candidatesL2Bounded(q: Seq[Double], radius: Double, cap: Int): Option[Seq[Long]] = {
-    val out = mutable.ArrayBuffer.empty[Long]
-    object Aborted extends scala.util.control.ControlThrowable
-    val offs = new Array[Double](q.length)
-    def visit(rid: Long, budget: Double): Unit = {
-      leaves.get(rid).foreach { ids =>
-        out ++= ids
-        if (out.size > cap) throw Aborted
-      }
-      internal.get(rid).foreach { n =>
-        if (n.dim < 0) {
-          if (n.low >= 0) visit(n.low, budget)
-          if (n.high >= 0) visit(n.high, budget)
-        } else {
-          val c = q(n.dim)
-          val m = n.mid.toDouble
-          val old = offs(n.dim)
-          if (n.low >= 0) {
-            val nb = math.max(math.max(c - m, 0d), old)
-            val b = budget + old * old - nb * nb
-            if (b >= 0) { offs(n.dim) = nb; visit(n.low, b); offs(n.dim) = old }
-          }
-          if (n.high >= 0) {
-            val nb = math.max(math.max(m - c, 0d), old)
-            val b = budget + old * old - nb * nb
-            if (b >= 0) { offs(n.dim) = nb; visit(n.high, b); offs(n.dim) = old }
-          }
-        }
-      }
-    }
-    try {
-      visit(0L, radius * radius * 1.000000001d)
-      Some(out.toSeq)
-    } catch { case Aborted => None }
-  }
 }
 
 object PinnedIndex {
 
+  /** The index node columns a tree is pinned from, in [[fromRows]]'
+    * order. */
+  private[graft] val NodeCols: Seq[String] =
+    Seq("rangeId", "dimension", "mid", "lowRangeId", "highRangeId", "id")
+
+  /** One [[PinnedIndex.walk]]: the leaf ids reached and the nodes visited. */
+  private[graft] final case class Walk(ids: Seq[Long], visited: Long)
+
   /** Collect an index relation into its pinned form. */
-  def pin(index: DataFrame): PinnedIndex = {
+  def pin(index: DataFrame): PinnedIndex =
+    fromRows(index.select(NodeCols.map(col): _*).collect())
+
+  /** Build the tree from collected node rows whose first six columns are
+    * [[NodeCols]] (later columns, e.g. a grouping `docId`, are ignored). */
+  private[graft] def fromRows(rows: Iterable[Row]): PinnedIndex = {
     val internal = mutable.LongMap.empty[PinnedNode]
     val leaves = mutable.LongMap.empty[Array[Long]]
     val buf = mutable.LongMap.empty[mutable.ArrayBuffer[Long]]
-    index.select("rangeId", "dimension", "mid", "lowRangeId", "highRangeId", "id")
-      .collect()
-      .foreach { r =>
-        val rid = r.getLong(0)
-        if (!r.isNullAt(5))
-          buf.getOrElseUpdate(rid, mutable.ArrayBuffer.empty) += r.getLong(5)
-        if (!r.isNullAt(3))
-          internal.update(rid, PinnedNode(
-            if (r.isNullAt(1)) -1 else r.getInt(1),
-            if (r.isNullAt(2)) 0f else r.getFloat(2),
-            r.getLong(3),
-            if (r.isNullAt(4)) -1L else r.getLong(4)))
-      }
+    rows.foreach { r =>
+      val rid = r.getLong(0)
+      if (!r.isNullAt(5))
+        buf.getOrElseUpdate(rid, mutable.ArrayBuffer.empty) += r.getLong(5)
+      if (!r.isNullAt(3))
+        internal.update(rid, PinnedNode(
+          if (r.isNullAt(1)) -1 else r.getInt(1),
+          if (r.isNullAt(2)) 0f else r.getFloat(2),
+          r.getLong(3),
+          if (r.isNullAt(4)) -1L else r.getLong(4)))
+    }
     buf.foreach { case (k, v) => leaves.update(k, v.toArray) }
     new PinnedIndex(internal, leaves)
   }
@@ -286,30 +308,38 @@ object PinnedIndex {
     result
   }
 
-  /** Index-accelerated similarity (range) join: for every row of
-    * `queries` (queryIdCol, queryVecCol), all points within `radius`.
-    * The pinned tree is broadcast; each task walks it per query row and
-    * emits candidate ids (one distributed map — no frontier loop); the
-    * exact predicate re-checks after joining the points back. Equals
-    * BruteForce.distanceJoin by construction. */
-  def searchJoin(pinned: PinnedIndex, points: DataFrame, idCol: String,
-                 vecCol: String, queries: DataFrame, queryIdCol: String,
-                 queryVecCol: String, radius: Double): DataFrame = {
-    val spark = points.sparkSession
+  /** L2-budget candidates for every row of `queries` (qidCol, qvecCol):
+    * the tree is broadcast and each task walks its query rows against it
+    * (one distributed map — no frontier loop). The query vector is walked
+    * as doubles, exactly as the re-check reads it. Returns (qid, id). */
+  private[graft] def candidatePairs(pinned: PinnedIndex, queries: DataFrame,
+                                    qidCol: String, qvecCol: String,
+                                    radius: Double): DataFrame = {
+    val spark = queries.sparkSession
     import spark.implicits._
     val pinB = spark.sparkContext.broadcast(pinned)
-    val cands = queries
-      .select(col(queryIdCol).cast("long"), col(queryVecCol).cast("array<float>"))
-      .as[(Long, Array[Float])]
+    queries
+      .select(col(qidCol).cast("long"), col(qvecCol).cast("array<double>"))
+      .as[(Long, Array[Double])]
       .flatMap { case (qid, qv) =>
-        val q = qv.map(_.toDouble).toSeq
-        pinB.value.candidatesL2(q, radius).map(id => (qid, id))
+        pinB.value.candidatesL2(ArraySeq.unsafeWrapArray(qv), radius)
+          .map(id => (qid, id))
       }
+      .toDF("qid", "id")
+  }
+
+  /** Index-accelerated similarity (range) join: for every row of
+    * `queries` (queryIdCol, queryVecCol), all points within `radius`:
+    * [[candidatePairs]], re-checked with the exact predicate after
+    * joining the points back. Equals BruteForce.distanceJoin by
+    * construction. */
+  def searchJoin(pinned: PinnedIndex, points: DataFrame, idCol: String,
+                 vecCol: String, queries: DataFrame, queryIdCol: String,
+                 queryVecCol: String, radius: Double): DataFrame =
+    candidatePairs(pinned, queries, queryIdCol, queryVecCol, radius)
       .toDF(queryIdCol, idCol)
-    cands
       .join(points.select(col(idCol), col(vecCol)), idCol)
       .join(broadcast(queries.select(col(queryIdCol), col(queryVecCol))), queryIdCol)
       .filter(dist(col(vecCol), col(queryVecCol)) <= radius)
       .select(col(queryIdCol), col(idCol))
-  }
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
 
 import graft.functions.DistSqExpr
-import graft.operators.IndexSearch
+import graft.operators.PinnedIndex
 
 import scala.collection.concurrent.TrieMap
 
@@ -34,23 +34,18 @@ import scala.collection.concurrent.TrieMap
   * or `spark.sql.extensions=graft.plans.GraftExtensions`.
   */
 object VectorIndexCatalog {
-  /** `nodes` is the index node relation PINNED at registration time
-    * (rangeId, dimension, mid, lowRangeId, highRangeId, id — the
-    * walkTree layout). Pinning once here means the optimizer rule runs a
-    * pure driver-local walk: NO Spark action inside optimization, ever.
-    * The pin budget is the same as PinnedIndex's (~48 bytes/node; a 10M
-    * point index ≈ 1 GB) — beyond it, don't register: use the library
-    * search path (`IndexSearch.searchExact` / frontier descent). */
+  /** `tree` is the index PINNED at registration time. Pinning once here
+    * means the optimizer rule runs a pure driver-local walk: NO Spark
+    * action inside optimization, ever. The pin budget is PinnedIndex's
+    * (~48 bytes/node; a 10M point index ≈ 1 GB) — beyond it, don't
+    * register: use the library search path (`IndexSearch.searchExact` /
+    * frontier descent). `vecs` holds the point vectors of a
+    * registerServing pin. */
   case class Entry(idCol: String, vecCol: String, index: DataFrame,
-                   nodes: Array[org.apache.spark.sql.Row],
+                   tree: PinnedIndex,
                    indexSources: Set[String],
-                   serving: Option[(graft.operators.PinnedIndex,
-                     scala.collection.mutable.LongMap[Array[Float]])] = None,
+                   vecs: Option[scala.collection.mutable.LongMap[Array[Float]]] = None,
                    hasNullVecs: Boolean = false) {
-    /** Leaf (= point) count of the pinned tree — the rule's cost model:
-      * a candidate set approaching this is a full scan in disguise. */
-    val leafCount: Int = nodes.count(!_.isNullAt(5))
-
     /** Memo for the kNN rewrite's driver-side walks, keyed (q, k, cap):
       * the optimizer's fixed-point batches re-run rules several times per
       * query, and a serving workload optimizes the same plan shape per
@@ -88,9 +83,8 @@ object VectorIndexCatalog {
     * snapshot. */
   def register(path: String, idCol: String, index: DataFrame,
                vecCol: String = "embedding"): Unit = {
-    val nodes = index.select("rangeId", "dimension", "mid", "lowRangeId",
-      "highRangeId", "id").collect()
-    entries.put(norm(path), Entry(idCol, vecCol, index, nodes, sourcePaths(index)))
+    entries.put(norm(path),
+      Entry(idCol, vecCol, index, PinnedIndex.pin(index), sourcePaths(index)))
   }
 
   /** Pin `index` AND the point vectors for serving-mode kNN rewrites:
@@ -105,10 +99,7 @@ object VectorIndexCatalog {
     * register(). */
   def registerServing(path: String, idCol: String, index: DataFrame,
                       points: DataFrame, vecCol: String = "embedding"): Unit = {
-    val nodes = index.select("rangeId", "dimension", "mid", "lowRangeId",
-      "highRangeId", "id").collect()
-    val pinned = graft.operators.PinnedIndex.pinWithVectors(
-      index, points, idCol, vecCol)
+    val (tree, vecs) = PinnedIndex.pinWithVectors(index, points, idCol, vecCol)
     // part of the pin snapshot: whether any row has a null vector. Null
     // distances sort FIRST under the default ascending order, so when
     // nulls exist the kNN rewrite must keep those rows (an IsNull
@@ -119,8 +110,8 @@ object VectorIndexCatalog {
       org.apache.spark.sql.functions.col(vecCol).isNull).head(1).nonEmpty
     // points sources join the invalidation set: a rewrite of either the
     // index store or the vector table must drop the pinned snapshot
-    entries.put(norm(path), Entry(idCol, vecCol, index, nodes,
-      sourcePaths(index) ++ sourcePaths(points), Some(pinned), hasNulls))
+    entries.put(norm(path), Entry(idCol, vecCol, index, tree,
+      sourcePaths(index) ++ sourcePaths(points), Some(vecs), hasNulls))
   }
 
   def unregister(path: String): Unit = entries.remove(norm(path))
@@ -207,14 +198,14 @@ case class IndexedVicinityRule(spark: SparkSession) extends Rule[LogicalPlan] {
       // and the driver. Above the cap the rewrite is skipped; the
       // original predicate alone is still exact, so this is a pure
       // access-path fallback (judge r2 #3).
-      ids = IndexSearch.walkTree(entry.nodes, 0, q, r).ids
+      ids = entry.tree.candidates(q, r)
       if ids.size <= maxCandidates
       // cost model: the walk already counted the candidates this radius
       // reaches, and the pinned tree knows its total leaves — when the
       // ratio says "≈ full scan", an IN-set prunes nothing (every
       // row-group keeps rows, every row pays the set probe), so skip
       // and let the plain exact predicate scan (judge r8 #6)
-      if maxSelectivity >= 1.0 || ids.size < maxSelectivity * entry.leafCount
+      if maxSelectivity >= 1.0 || ids.size < maxSelectivity * entry.tree.leafIdCount
     } yield And(InSet(idAttr, ids.map(Long.box).toSet[Any]), cond)
 
   private def maxCandidates: Int =
@@ -281,7 +272,7 @@ case class IndexedVicinityRule(spark: SparkSession) extends Rule[LogicalPlan] {
                         q: Seq[Double], k: Int, so: SortOrder): Option[Expression] =
     for {
       entry <- entryFor(rel)
-      (pinned, vecs) <- entry.serving
+      vecs <- entry.vecs
       if vecAttr.name == entry.vecCol
       idAttr <- rel.output.find(a =>
         a.name == entry.idCol &&
@@ -296,10 +287,10 @@ case class IndexedVicinityRule(spark: SparkSession) extends Rule[LogicalPlan] {
       cands <- entry.knnMemo.getOrElseUpdate((q, k, maxCandidates), {
         if (entry.knnMemo.size > 64) entry.knnMemo.clear()
         scala.util.Try(for {
-          topk <- pinned.knnBounded(q, k, vecs.apply, maxOffers = maxCandidates)
+          topk <- entry.tree.knnBounded(q, k, vecs.apply, maxOffers = maxCandidates)
           if topk.size == k // fewer pinned points than k: let the scan answer
-          cs <- pinned.candidatesL2Bounded(q, topk.last._2, maxCandidates)
-          if maxSelectivity >= 1.0 || cs.size < maxSelectivity * pinned.leafIdCount
+          cs <- entry.tree.candidatesL2Bounded(q, topk.last._2, maxCandidates)
+          if maxSelectivity >= 1.0 || cs.size < maxSelectivity * entry.tree.leafIdCount
         } yield cs).toOption.flatten
       })
     } yield {

@@ -65,7 +65,7 @@ class IndexExtrasSpec extends SparkSpec {
     index.createOrReplaceTempView("grid_index")
     val sqlIds = IndexSearch.searchBoxSql(spark, "grid_index", Seq(0.2, 0.3), 0.25)
       .as[Long].collect().toSet
-    val localIds = IndexSearch.searchBoxLocal(index, Seq(0.2, 0.3), 0.25)
+    val localIds = IndexSearch.searchBox(index, Seq(0.2, 0.3), 0.25)
       .as[Long].collect().toSet
     assert(sqlIds == localIds)
   }
@@ -73,10 +73,11 @@ class IndexExtrasSpec extends SparkSpec {
   test("search metrics count probes (quality observability)") {
     val g = Ingest.grid(spark, 30)
     val index = IndexBuild.buildIndex(g, "id", "vector")
-    val (cands, m) = IndexSearch.searchBoxWithMetrics(index, Seq(0.1, 0.1), 0.1)
-    assert(cands.count() == m.candidates)
-    assert(m.nodesVisited > 0 && m.nodesVisited < 2L * 900)
-    assert(m.leavesEmitted < 900, "pruning visits a strict subset of leaves")
+    val w = PinnedIndex.pin(index).walk(Seq(0.1, 0.1), 0.1, l2 = false).get
+    assert(w.ids.toSet == IndexSearch.searchBox(index, Seq(0.1, 0.1), 0.1)
+      .as[Long].collect().toSet)
+    assert(w.visited > 0 && w.visited < 2L * 900)
+    assert(w.ids.size < 900, "pruning visits a strict subset of leaves")
   }
 
   test("index walk: depths, parents and subtree counts are consistent") {
@@ -279,14 +280,35 @@ class IndexExtrasSpec extends SparkSpec {
     assert(gotLocal == want)
     // frontier-join loop forced (localNodeLimit = 0): candidates from
     // the distributed descent re-checked the same way
-    val cands = IndexSearch.searchBoxBatch(index, queries, "qid", "qvec",
-        r, localNodeLimit = 0L)
-      .withColumnRenamed("id", "vec_id")
-    val gotDist = e.join(cands, "vec_id")
-      .join(queries, "qid")
-      .filter(functions.VectorFunctions.dist(col("embedding"),
-        col("qvec")) <= r)
+    val gotDist = IndexSearch
+      .searchExactBatch(index, e, "vec_id", "embedding", queries,
+        "qid", "qvec", r, localNodeLimit = 0L)
       .select("qid", "vec_id").as[(Long, Long)].collect().toSet
     assert(gotDist == want)
+  }
+
+  test("batch search keeps exact-boundary matches of array<double> queries") {
+    // 1-D points 0.0, 0.5, 1.0; each radius is the exact distance to a
+    // point, which float-rounding the query before the walk would prune
+    val pts = Seq((0L, Seq(0.0f)), (1L, Seq(0.5f)), (2L, Seq(1.0f)))
+      .toDF("id", "vector")
+    val index = IndexBuild.buildIndex(pts, "id", "vector")
+    val pinned = PinnedIndex.pin(index)
+    Seq((0.6, Set(1L)), (0.8, Set(1L, 2L)), (0.55, Set(1L))).foreach {
+      case (q, want) =>
+        val r = q - 0.5
+        val queries = Seq((7L, Seq(q))).toDF("qid", "qvec")
+        val brute = BruteForce.distanceJoin(queries, "qvec", pts, "vector", r)
+          .select("id").as[Long].collect().toSet
+        assert(brute == want, s"q=$q")
+        val join = PinnedIndex.searchJoin(pinned, pts, "id", "vector",
+            queries, "qid", "qvec", r)
+          .select("id").as[Long].collect().toSet
+        assert(join == want, s"searchJoin q=$q")
+        val batch = IndexSearch.searchExactBatch(index, pts, "id", "vector",
+            queries, "qid", "qvec", r)
+          .select("id").as[Long].collect().toSet
+        assert(batch == want, s"searchExactBatch q=$q")
+    }
   }
 }

@@ -84,16 +84,16 @@ class IndexPropertySpec extends SparkSpec {
     var strictlyFewer = 0
     val queries = Seq((Seq(0.1, 0.1), 0.1), (Seq(-0.4, 0.3), 0.15),
       (Seq(0.0, 0.0), 0.2))
+    val pinned = PinnedIndex.pin(gidx)
     queries.foreach { case (q, r) =>
-      val (_, mBox) = IndexSearch.searchBoxWithMetrics(gidx, q, r)
-      val (ids, mL2) = IndexSearch.searchBoxWithMetrics(gidx, q, r, l2 = true)
-      assert(mL2.nodesVisited <= mBox.nodesVisited, s"q=$q r=$r")
-      if (mL2.nodesVisited < mBox.nodesVisited) strictlyFewer += 1
+      val box = pinned.walk(q, r, l2 = false).get
+      val l2 = pinned.walk(q, r, l2 = true).get
+      assert(l2.visited <= box.visited, s"q=$q r=$r")
+      if (l2.visited < box.visited) strictlyFewer += 1
       // candidates still complete vs brute force
       val want = BruteForce.rangeSearch(grid, "vector", q, r)
         .select("id").as[Long].collect().toSet
-      val got = ids.select("id").as[Long].collect().toSet
-      assert(want.subsetOf(got), s"q=$q r=$r")
+      assert(want.subsetOf(l2.ids.toSet), s"q=$q r=$r")
     }
     assert(strictlyFewer > 0, "budget never pruned beyond the box test")
   }

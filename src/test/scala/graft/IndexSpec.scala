@@ -112,11 +112,13 @@ class IndexSpec extends SparkSpec {
   test("distributed frontier search equals local walk") {
     val g = Ingest.grid(spark, 30)
     val index = IndexBuild.buildIndex(g, "id", "vector")
-    val local = IndexSearch.searchBoxLocal(index, Seq(0.2, -0.4), 0.15)
+    val local = IndexSearch.searchBox(index, Seq(0.2, -0.4), 0.15)
       .as[Long].collect().toSet
-    val dist = IndexSearch.searchBoxDistributed(index, Seq(0.2, -0.4), 0.15)
+    // localNodeLimit = 0 forces the frontier loop
+    val dist = IndexSearch.searchBox(index, Seq(0.2, -0.4), 0.15,
+        localNodeLimit = 0L)
       .select("id").as[Long].collect().toSet
-    assert(local == dist)
+    assert(local.nonEmpty && local == dist)
   }
 
   test("maintenance: remove then search equals brute force on survivors") {
