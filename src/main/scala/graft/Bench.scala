@@ -38,9 +38,12 @@ object Bench {
       try SparkEntry.queries(n)(spark, sfDir).count()
       catch { case _: Throwable => () }
     }
+    // a query that throws is still timed (the headline is unchanged) and
+    // its gate is listed as failed in the sidecars
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     val results = SparkEntry.queries.map { case (name, fn) =>
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      try { fn(spark, sfDir).count() } catch { case _: Throwable => failed += name; -1L }
       name -> (System.nanoTime() - t0) / 1e9
     }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
@@ -55,7 +58,9 @@ object Bench {
     // driver's end-of-round commit archives, giving per-query
     // round-over-round diffs from the committed artifacts.
     val n = results.size
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","n":$n,"queries":$qs,"sf":"$sfDir"}"""
+    val cores = cpus.toIntOption.getOrElse(spark.sparkContext.defaultParallelism)
+    val failedJson = failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","n":$n,"cpus":$cores,"failed":$failedJson,"queries":$qs,"sf":"$sfDir"}"""
     // Sidecars are written per core count (BENCH_FULL_c$cpus.json): the
     // driver runs the bench at 32 AND 8 cores, and a single filename
     // means the second run destroys the first — exactly what erased the

@@ -1602,21 +1602,25 @@ object GraphAnn {
     * StreamingMerge only once distinct tombstones reach `ratio` of the
     * stored rows (FreshDiskANN's delete amortization — removes stay
     * O(batch) sidecar appends until the lazy-deleted fraction is worth
-    * a full rewrite). The probe is two footer-metadata counts plus the
-    * tiny sidecar read; returns whether the merge ran. Deterministic in
+    * a full rewrite). The probe is [[openGraph]] (no tombstone sidecar:
+    * no merge) plus a footer-metadata row count, and the merge reuses the
+    * opened store; a sidecar that fails to read throws. Returns whether
+    * the merge ran. Deterministic in
     * (store state, ratio), so a streaming caller and a batch twin
     * applying the same delete batches consolidate at the same points
     * (StreamOpsSpec pins stream ≡ batch on the full store state). */
   def consolidateGraphIfNeeded(spark: SparkSession, path: String,
                                ratio: Double): Boolean = {
     require(ratio > 0, "consolidation ratio must be positive")
-    val tomb =
-      try spark.read.parquet(path + ".tomb").select("id").distinct().count()
-      catch { case _: Throwable => 0L }
-    if (tomb == 0) return false
-    val rows = spark.read.parquet(path).count()
-    if (rows > 0 && tomb.toDouble / rows >= ratio) {
-      consolidateGraph(spark, path); true
+    val tombPath = new org.apache.hadoop.fs.Path(path + ".tomb")
+    if (!tombPath.getFileSystem(spark.sessionState.newHadoopConf()).exists(tombPath))
+      return false
+    // opened once: the probe's tombstones and rows are the merge's input
+    val store = openGraph(spark, path)
+    if (store.tombstones.isEmpty) return false
+    val rows = store.rows.count()
+    if (rows > 0 && store.tombstones.length.toDouble / rows >= ratio) {
+      consolidateGraph(spark, path, store); true
     } else false
   }
 
@@ -1629,9 +1633,13 @@ object GraphAnn {
     * of the survivors if none remain); the tombstone sidecar is
     * cleared. Full-store rewrite by design — the amortized counterpart
     * of O(batch) removeGraph. */
-  def consolidateGraph(spark: SparkSession, path: String): Unit = {
+  def consolidateGraph(spark: SparkSession, path: String): Unit =
+    consolidateGraph(spark, path, openGraph(spark, path))
+
+  /** [[consolidateGraph]] of `store`, the store at `path` already open. */
+  private def consolidateGraph(spark: SparkSession, path: String,
+                               store: GraphStore): Unit = {
     import spark.implicits._
-    val store = openGraph(spark, path)
     if (store.tombstones.isEmpty) return
     val doomed = store.tombstones.toSet
     val survivors = store.rows

@@ -67,7 +67,7 @@ object IndexMaintain {
     * frontier join, which never materializes the tree anywhere. */
   def addPoints(index: DataFrame, points: DataFrame, newPoints: DataFrame,
                 idCol: String, vecCol: String, bucketSize: Int = 1,
-                localNodeLimit: Long = 2_000_000L): DataFrame = {
+                localNodeLimit: Long = IndexSearch.DefaultNodeLimit): DataFrame = {
     val spark = index.sparkSession
 
     val internal = index.filter(col("id").isNull)

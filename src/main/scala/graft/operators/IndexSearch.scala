@@ -1,9 +1,17 @@
 package graft.operators
 
+import java.lang.ref.SoftReference
+import java.util.concurrent.atomic.AtomicReference
+
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.VectorFunctions._
+import graft.plans.IndexedVicinityRule
 
 /** Vicinity search over the space-partitioning index.
   *
@@ -20,12 +28,29 @@ import graft.functions.VectorFunctions._
   *    in ONE job and pinned ([[PinnedIndex]]), and the descent is the
   *    pinned tree's in-memory walk — the index is ~2N tiny rows, and the
   *    reference's SQL recursive CTE also runs on one node.
+  *  - pinned once per file snapshot: when the index is a bare file scan
+  *    (column selections over a parquet read), the last pin is kept,
+  *    softly held, under the relation's schema and the sorted (path,
+  *    length, modification time) of its listed files — the files a query
+  *    over that DataFrame reads. Repeat queries walk it with no job while
+  *    its row count fits `localNodeLimit`. A rewritten directory, read
+  *    back, lists new files and pins afresh; an old DataFrame keeps its
+  *    old listing, as any Spark read does. Other plans (filters, joins,
+  *    computed columns, in-memory or checkpointed relations) pin on
+  *    every call.
+  *  - `searchExact` re-checks candidates as an id semi-join in the same
+  *    job as the exact predicate: an id IN-set filter on `points` (the
+  *    vicinity rule's form and cap), or a left semi-join past the cap
+  *    and on the distributed path — each `points` row comes out once.
   *  - distributed ([[frontierSearch]]): past the limit, an iterative
   *    frontier loop — per level, join the (tiny) frontier against the
   *    index relation. Survives indexes too large for any single node;
   *    ~depth joins, no large-side shuffle.
   */
 object IndexSearch {
+
+  /** Default `localNodeLimit`: index rows a local path may collect. */
+  private[graft] val DefaultNodeLimit = 2_000_000L
 
   /** Collect `df` if it has at most `limit` rows — None when the limit
     * overflowed (the caller then takes its distributed path). The size
@@ -36,14 +61,55 @@ object IndexSearch {
     if (rows.length <= limit) Some(rows) else None
   }
 
-  /** The index pinned in one job, if it fits `localNodeLimit` rows. */
-  private def pinWithin(index: DataFrame, localNodeLimit: Long): Option[PinnedIndex] =
-    collectWithin(index.select(PinnedIndex.NodeCols.map(col): _*), localNodeLimit)
-      .map(rows => PinnedIndex.fromRows(rows))
+  /** The files a bare file-scan index reads: its relation's schema and
+    * the sorted (path, length, modification time) of every listed file. */
+  private final case class Snapshot(schema: StructType, files: Seq[(String, Long, Long)])
+
+  /** The last tree pinned from a file snapshot, with its node-row count. */
+  private final case class Pin(snapshot: Snapshot, rows: Long, tree: SoftReference[PinnedIndex])
+
+  private val lastPin = new AtomicReference[Pin]()
+
+  /** The snapshot of `index` when its plan is column selections over one
+    * file relation (as `VectorIndexCatalog` reads source paths); None
+    * otherwise. */
+  private def snapshotOf(index: DataFrame): Option[Snapshot] = {
+    def scan(plan: LogicalPlan): Option[HadoopFsRelation] = plan match {
+      case Project(list, child) if list.forall(_.isInstanceOf[AttributeReference]) =>
+        scan(child)
+      case lr: LogicalRelation => lr.relation match {
+        case h: HadoopFsRelation => Some(h)
+        case _ => None
+      }
+      case _ => None
+    }
+    scan(index.queryExecution.analyzed).map { h =>
+      Snapshot(h.schema, h.location.listFiles(Nil, Nil).flatMap(_.files)
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted)
+    }
+  }
+
+  /** The index pinned, if it fits `localNodeLimit` rows: the kept pin of
+    * the same file snapshot (no job), else collected in one job. */
+  private def pinWithin(index: DataFrame, localNodeLimit: Long): Option[PinnedIndex] = {
+    val snapshot = snapshotOf(index)
+    val kept = Option(lastPin.get).filter(p => snapshot.contains(p.snapshot))
+      .flatMap(p => Option(p.tree.get).map(tree => (p.rows, tree)))
+    kept match {
+      case Some((rows, tree)) => Option.when(rows <= localNodeLimit)(tree)
+      case None =>
+        collectWithin(index.select(PinnedIndex.NodeCols.map(col): _*), localNodeLimit)
+          .map { rows =>
+            val tree = PinnedIndex.fromRows(rows)
+            snapshot.foreach(s => lastPin.set(Pin(s, rows.length, new SoftReference(tree))))
+            tree
+          }
+    }
+  }
 
   /** Candidate leaf ids within the box (auto local/distributed). */
   def searchBox(index: DataFrame, q: Seq[Double], domain: Double,
-                localNodeLimit: Long = 2_000_000L): DataFrame = {
+                localNodeLimit: Long = DefaultNodeLimit): DataFrame = {
     val spark = index.sparkSession
     import spark.implicits._
     pinWithin(index, localNodeLimit) match {
@@ -55,12 +121,30 @@ object IndexSearch {
   /** Exact vicinity search: candidate ids from the L2 budget descent
     * (strictly tighter than the box test for ball queries), re-checked
     * with the true euclidean predicate against the points table — equals
-    * the brute-force oracle by construction (zero false pos/neg). */
+    * the brute-force oracle by construction (zero false pos/neg). Each
+    * matching `points` row comes out once, `idCol` first. */
   def searchExact(index: DataFrame, points: DataFrame, idCol: String,
                   vecCol: String, q: Seq[Double], radius: Double): DataFrame = {
-    val cands = searchBall(index, q, radius).withColumnRenamed("id", idCol)
-    points.join(cands, idCol)
-      .filter(dist(col(vecCol), doubleVec(q)) <= radius)
+    val spark = index.sparkSession
+    import spark.implicits._
+    val exact = dist(col(vecCol), doubleVec(q)) <= radius
+    def semi(cands: DataFrame): DataFrame =
+      points.join(cands.withColumnRenamed("id", idCol), Seq(idCol), "left_semi")
+        .filter(exact)
+    val hits = pinWithin(index, DefaultNodeLimit) match {
+      case Some(tree) =>
+        val ids = tree.candidatesL2(q, radius).distinct
+        if (ids.size <= IndexedVicinityRule.DefaultMaxCandidates)
+          points.filter(col(idCol).isInCollection(ids) && exact)
+        else semi(ids.toDF("id"))
+      case None => semi(frontierSearch(index, doubleVec(q), radius, Nil, None, hint = true))
+    }
+    // output columns: `idCol` first, then the rest of `points` in order
+    val cols = hits.columns
+    val key = cols.find(_ == idCol).orElse(cols.find(_.equalsIgnoreCase(idCol)))
+      .getOrElse(idCol)
+    hits.select((key +: cols.filterNot(_ == key))
+      .map(c => col("`" + c.replace("`", "``") + "`")): _*)
   }
 
   /** Candidate leaf ids for an L2 ball query: the local path uses the
@@ -71,7 +155,7 @@ object IndexSearch {
     * too large to collect fall back to the distributed box descent (a
     * looser superset). */
   def searchBall(index: DataFrame, q: Seq[Double], radius: Double,
-                 localNodeLimit: Long = 2_000_000L): DataFrame = {
+                 localNodeLimit: Long = DefaultNodeLimit): DataFrame = {
     val spark = index.sparkSession
     import spark.implicits._
     pinWithin(index, localNodeLimit) match {
@@ -92,7 +176,7 @@ object IndexSearch {
     * no tree ever reaches the driver. */
   def searchBoxPerDoc(index: DataFrame, q: Seq[Double], domain: Double,
                       docId: Option[Long] = None,
-                      localNodeLimit: Long = 2_000_000L): DataFrame = {
+                      localNodeLimit: Long = DefaultNodeLimit): DataFrame = {
     val spark = index.sparkSession
     import spark.implicits._
     val filtered = docId.map(d => index.filter(col("docId") === d)).getOrElse(index)
@@ -151,14 +235,16 @@ object IndexSearch {
   def searchExactBatch(index: DataFrame, points: DataFrame, idCol: String,
                        vecCol: String, queries: DataFrame, qidCol: String,
                        qvecCol: String, radius: Double,
-                       localNodeLimit: Long = 2_000_000L): DataFrame = {
+                       localNodeLimit: Long = DefaultNodeLimit): DataFrame = {
     val cands = pinWithin(index, localNodeLimit) match {
       case Some(tree) =>
         PinnedIndex.candidatePairs(tree, queries, qidCol, qvecCol, radius)
+      // distinct: an id held by two leaves reaches a query twice
       case None =>
         frontierSearch(index, col("qvec"), radius, Seq("qid"),
           Some(queries.select(col(qidCol).as("qid"),
             col(qvecCol).cast("array<double>").as("qvec"))), hint = true)
+          .distinct()
     }
     val qs = queries.select(col(qidCol).as("qid"), col(qvecCol).as("__qvec"))
     points.join(cands.withColumnRenamed("id", idCol), idCol)

@@ -280,7 +280,8 @@ object PinnedIndex {
       val exhausted = cands.size >= pinned.leafIdCount
       var bumped = false
       if (cands.size >= k || exhausted) {
-        val candDf = cands.toDF(idCol)
+        // a point id in two leaves is one candidate: each row ranks once
+        val candDf = cands.distinct.toDF(idCol)
         val top = points
           .join(broadcast(candDf), idCol)
           .select(col(idCol).cast("long"),
@@ -311,7 +312,8 @@ object PinnedIndex {
   /** L2-budget candidates for every row of `queries` (qidCol, qvecCol):
     * the tree is broadcast and each task walks its query rows against it
     * (one distributed map — no frontier loop). The query vector is walked
-    * as doubles, exactly as the re-check reads it. Returns (qid, id). */
+    * as doubles, exactly as the re-check reads it. Returns (qid, id),
+    * each pair once even when the id sits in several leaves. */
   private[graft] def candidatePairs(pinned: PinnedIndex, queries: DataFrame,
                                     qidCol: String, qvecCol: String,
                                     radius: Double): DataFrame = {
@@ -323,7 +325,7 @@ object PinnedIndex {
       .as[(Long, Array[Double])]
       .flatMap { case (qid, qv) =>
         pinB.value.candidatesL2(ArraySeq.unsafeWrapArray(qv), radius)
-          .map(id => (qid, id))
+          .distinct.map(id => (qid, id))
       }
       .toDF("qid", "id")
   }

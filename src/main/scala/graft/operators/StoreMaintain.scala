@@ -51,8 +51,9 @@ object StoreMaintain {
       .localCheckpoint()
     val kept = remaining.select(col(partCol)).distinct()
       .collect().map(_.get(0)).toSet
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    remaining.write.mode("overwrite").partitionBy(partCol).parquet(path)
+    // per-writer option: the session's overwrite mode stays as it was
+    remaining.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partCol).parquet(path)
     // dynamic overwrite replaces only partitions PRESENT in `remaining`;
     // a partition the delete emptied has no rows to carry it — drop it
     val hPath = new org.apache.hadoop.fs.Path(path)

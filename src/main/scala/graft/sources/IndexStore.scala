@@ -19,10 +19,10 @@ object IndexStore {
     * a rewrite must never leave a stale candidate snapshot answering
     * vicinity queries (re-register after the write to re-pin). */
   def replaceDocs(index: DataFrame, path: String): Unit = {
-    val spark = index.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    // per-writer option: the session's overwrite mode stays as it was
     index.write
       .mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy("docId")
       .parquet(path)
     graft.plans.VectorIndexCatalog.invalidateStore(path)

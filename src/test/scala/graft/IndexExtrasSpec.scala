@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators._
@@ -7,6 +12,36 @@ import graft.sources.{Ingest, IndexStore}
 
 class IndexExtrasSpec extends SparkSpec {
   import spark.implicits._
+
+  /** `f`'s result and the Spark jobs it ran: job starts tagged with a
+    * fresh job group, counted once a later barrier job's start shows the
+    * listener bus has delivered them all. */
+  private def jobsOf[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val tag = s"counted-${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger
+    val delivered = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `tag` => jobs.incrementAndGet()
+          case g if g == tag + "-barrier" => delivered.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(tag, "counted")
+      val out = try f finally sc.clearJobGroup()
+      sc.setJobGroup(tag + "-barrier", "barrier")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(delivered.await(60, TimeUnit.SECONDS), "listener bus never drained")
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def tmpDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
 
   test("per-doc indexes search like per-doc brute force (one doc and all)") {
     val e = Tables.embeddings(spark, sf0001)
@@ -310,5 +345,102 @@ class IndexExtrasSpec extends SparkSpec {
           .select("id").as[Long].collect().toSet
         assert(batch == want, s"searchExactBatch q=$q")
     }
+  }
+
+  test("repeated searchExact on a parquet index runs one job and follows rewrites") {
+    val e = Tables.embeddings(spark, sf0001)
+    val q = QueryConstants.Q64
+    val r = QueryConstants.Radius
+    val dir = tmpDir("graftpin") + "/tree"
+    def ids(df: DataFrame) = df.select("vec_id").as[Long].collect().sorted.toSeq
+    def brute(pts: DataFrame) = ids(BruteForce.rangeSearch(pts, "embedding", q, r))
+    IndexBuild.buildIndex(e, "vec_id", "embedding").write.parquet(dir)
+    val index = spark.read.parquet(dir)
+    val want = brute(e)
+    assert(ids(IndexSearch.searchExact(index, e, "vec_id", "embedding", q, r)) == want)
+    // the second call walks the kept pin: only the re-check runs
+    val (again, jobs) = jobsOf(
+      ids(IndexSearch.searchExact(index, e, "vec_id", "embedding", q, r)))
+    assert(again == want)
+    assert(jobs == 1, s"second searchExact ran $jobs jobs")
+    // a different tree over the same directory, read back: a new snapshot
+    val even = e.filter(col("vec_id") % 2 === 0)
+    val wantEven = brute(even)
+    assert(wantEven != want, "the rewrite must change the answer")
+    IndexBuild.buildIndex(even, "vec_id", "embedding").write.mode("overwrite").parquet(dir)
+    val rewritten = spark.read.parquet(dir)
+    assert(ids(IndexSearch.searchExact(rewritten, e, "vec_id", "embedding", q, r)) == wantEven)
+  }
+
+  test("localNodeLimit = 0 after a kept pin still runs the frontier search") {
+    val e = Tables.embeddings(spark, sf0001)
+    val q = QueryConstants.Q64
+    val r = QueryConstants.Radius
+    val dir = tmpDir("graftpinlimit") + "/tree"
+    IndexBuild.buildIndex(e, "vec_id", "embedding").write.parquet(dir)
+    val index = spark.read.parquet(dir)
+    def box(limit: Long) = IndexSearch.searchBox(index, q, r, localNodeLimit = limit)
+      .as[Long].collect().toSet
+    val local = box(IndexSearch.DefaultNodeLimit)
+    val (kept, keptJobs) = jobsOf(box(IndexSearch.DefaultNodeLimit))
+    val (frontier, frontierJobs) = jobsOf(box(0L))
+    assert(kept == local && frontier == local && local.nonEmpty)
+    assert(frontierJobs > keptJobs + 1,
+      s"frontier ran $frontierJobs jobs, the kept pin $keptJobs")
+  }
+
+  test("duplicate point ids come out once per points row on every index path") {
+    // two points share id 1, both inside the ball; brute force returns
+    // each points row once
+    val pts = Seq((1L, Seq(0.0f)), (1L, Seq(0.1f)), (2L, Seq(1.0f)), (3L, Seq(0.3f)))
+      .toDF("id", "vector")
+    val index = IndexBuild.buildIndex(pts, "id", "vector")
+    val pinned = PinnedIndex.pin(index)
+    val q = Seq(0.05)
+    val r = 0.2
+    val queries = Seq((7L, q)).toDF("qid", "qvec")
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    def batch(limit: Long) = rows(IndexSearch.searchExactBatch(index, pts, "id", "vector",
+      queries, "qid", "qvec", r, localNodeLimit = limit).select("qid", "id"))
+    val ball = rows(BruteForce.rangeSearch(pts, "vector", q, r).select("id", "vector"))
+    val pairs = rows(BruteForce.distanceJoin(queries, "qvec", pts, "vector", r)
+      .select("qid", "id"))
+    val knn = BruteForce.knn(pts, "vector", "id", q, 2).select("id", "dist")
+      .as[(Long, Double)].collect().toSeq
+    assert(ball.size == 2 && pairs == Seq("[7,1]", "[7,1]"))
+    val wrong = Seq(
+      "searchExact" -> (rows(IndexSearch.searchExact(index, pts, "id", "vector", q, r)
+        .select("id", "vector")), ball),
+      "searchJoin" -> (rows(PinnedIndex.searchJoin(pinned, pts, "id", "vector", queries,
+        "qid", "qvec", r)), pairs),
+      "searchExactBatch local" -> (batch(IndexSearch.DefaultNodeLimit), pairs),
+      "searchExactBatch frontier" -> (batch(0L), pairs),
+      "knnDistributed" -> (PinnedIndex.knnDistributed(pinned, pts, "id", "vector", q, 2), knn))
+      .filter { case (_, (got, want)) => got != want }
+    if (wrong.nonEmpty) fail(wrong.map { case (call, (got, want)) =>
+      s"$call: $got, brute force $want" }.mkString("; "))
+  }
+
+  test("store writers leave the session's partitionOverwriteMode as it was") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "static")
+    try {
+      val e = Tables.embeddings(spark, sf0001)
+      val dir = tmpDir("graftmode")
+      Similarity.writeIvf(e, "vec_id", "embedding", 4, s"$dir/ivf")
+      val n = spark.read.parquet(s"$dir/ivf").count()
+      val doomed = e.filter(col("vec_id") < 10).select("vec_id")
+      StoreMaintain.removeFromStore(spark, s"$dir/ivf", doomed, "vec_id", "list_id")
+      assert(spark.conf.get(key) == "static", "removeFromStore")
+      assert(spark.read.parquet(s"$dir/ivf").count() == n - doomed.count())
+      val idx = IndexBuild.buildIndexPerDoc(e, "label", "vec_id", "embedding")
+      IndexStore.replaceDocs(idx, s"$dir/idx")
+      val all = IndexStore.load(spark, s"$dir/idx").count()
+      // one document replaced: the others' partitions stay
+      IndexStore.replaceDocs(idx.filter(col("docId") === 1), s"$dir/idx")
+      assert(spark.conf.get(key) == "static", "replaceDocs")
+      assert(IndexStore.load(spark, s"$dir/idx").count() == all)
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 }

@@ -404,6 +404,19 @@ class RecallSpec extends SparkSpec {
     assert(rC >= 0.85, s"recall after consolidate $rC below floor 0.85")
   }
 
+  test("consolidateGraphIfNeeded throws on an unreadable tombstone sidecar") {
+    val dir = java.nio.file.Files.createTempDirectory("graftgtomb")
+      .resolve("g").toString
+    GraphAnn.buildAndWrite(pts.filter(col("id") < 400), "id", "embedding",
+      numLists = 4, nprobe = 2, k = 8, alpha = 1.2, maxDegree = 8, path = dir)
+    // no sidecar: nothing to consolidate
+    assert(!GraphAnn.consolidateGraphIfNeeded(spark, dir, 0.01))
+    val tomb = java.nio.file.Paths.get(dir + ".tomb")
+    java.nio.file.Files.createDirectories(tomb)
+    java.nio.file.Files.writeString(tomb.resolve("part-0.parquet"), "not parquet")
+    intercept[Exception](GraphAnn.consolidateGraphIfNeeded(spark, dir, 0.01))
+  }
+
   test("distributed beam search over the store: recall, pinned parity, tombstones") {
     // the de-pinned serving path (judge r15): same store, no driver pin
     val dir = java.nio.file.Files.createTempDirectory("graftgdist")
