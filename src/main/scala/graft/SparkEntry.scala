@@ -22,11 +22,6 @@ object SparkEntry {
 
   private def embeddings(s: SparkSession, dir: String) = Tables.embeddings(s, dir)
 
-  /** Dev-tool visibility for Tools rtcheck. */
-  def htmlWrapForTest(docId: org.apache.spark.sql.Column,
-                      text: org.apache.spark.sql.Column) =
-    htmlWrap(docId, text)
-
   /** Remove a gate's temp working tree once its result is pinned off
     * the files (s2/s3 stream sinks) — repeated gate runs must not
     * accumulate temp dirs. */

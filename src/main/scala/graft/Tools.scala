@@ -1,17 +1,32 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
-/** Dev utility: run one named query with timing; `-e` prints the
-  * formatted physical plan instead. Usage:
-  *   Tools <queryName> [sfDir] [-e]
+import graft.operators._
+
+/** Dev probes. Usage:
+  *   Tools explain [sfDir] only=<query,...>
+  *       print each named gate's formatted physical plan
+  *   Tools runq [sfDir] only=<query,...> [reps=N]
+  *       run each named gate N times (default 1), printing wall time and
+  *       row count; rep 1 carries JVM/codegen/staging warm-up, so quote
+  *       the warm reps when comparing against recorded bench numbers
+  *   Tools <query> [sfDir] [-e]
+  *       one gate: three timed runs, or its formatted plan with `-e`
+  *   Tools recallbench [n] [d] [queries] [clustered] [graph]
+  *       ANN recall@10 against brute force, and warm probe latency
+  *   Tools mergedprof [n] [d] [listDiv] [k]
+  *       merged graph build with every stage forced and timed
+  * `sfDir` defaults to the sf0.1 test data; `SPARK_GRAFT_CPUS` sets the
+  * local core count (default 32).
   */
 object Tools {
   def main(args: Array[String]): Unit = {
     val name = args(0)
-    val sfDir = args.lift(1).filterNot(_.startsWith("-"))
+    val sfDir = args.lift(1).filterNot(a => a.startsWith("-") || a.contains("="))
       .getOrElse("/root/testdata/sf0.1")
-    val explain = args.contains("-e")
+    val nums = args.drop(1).filter(a => a.nonEmpty && a.forall(_.isDigit))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -22,2590 +37,186 @@ object Tools {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if (name == "explain") {
-      // dump the formatted physical plan of named gated queries:
-      //   Tools explain [sfDir] only=a22_maxsim,q30_pagerank
-      val only = args.find(_.startsWith("only="))
-        .map(_.drop(5).split(',').toSet)
-        .getOrElse(sys.error("explain needs only=<query,...>"))
-      SparkEntry.queries.filter(q => only(q._1)).foreach { case (n, fn) =>
+    def arg(key: String): Option[String] =
+      args.find(_.startsWith(key + "=")).map(_.drop(key.length + 1))
+    def only: Seq[String] = arg("only").map(_.split(',').toSeq)
+      .getOrElse(sys.error(s"$name needs only=<query,...>"))
+    try name match {
+      case "explain" => runGates(spark, sfDir, only, reps = 0)
+      case "runq" =>
+        runGates(spark, sfDir, only, arg("reps").fold(1)(_.toInt))
+      case "recallbench" => recallBench(spark, nums,
+        clustered = args.contains("clustered"), graph = args.contains("graph"))
+      case "mergedprof" => mergedProf(spark, nums, cpus)
+      case query =>
+        runGates(spark, sfDir, Seq(query), if (args.contains("-e")) 0 else 3)
+    } finally spark.stop()
+  }
+
+  /** Times each named gate `reps` times, printing its row count; with
+    * `reps = 0` prints each gate's formatted physical plan instead. */
+  private def runGates(spark: SparkSession, sfDir: String,
+                       names: Seq[String], reps: Int): Unit =
+    names.foreach { n =>
+      val fn = SparkEntry.queries.getOrElse(n, sys.error(s"unknown query $n"))
+      if (reps == 0) {
         println(s"\n===== $n =====")
         fn(spark, sfDir).explain("formatted")
       }
-      spark.stop(); return
-    }
-    if (name == "buildbench") {
-      // index-build scaling probe: n x d synthetic vectors, hybrid vs BFS
-      val nums = args.drop(1).filter(_.forall(_.isDigit))
-      val n = nums.headOption.map(_.toLong).getOrElse(200000L)
-      val d = nums.lift(1).map(_.toInt).getOrElse(64)
-      val thrOverride = nums.lift(2).map(_.toLong)
-      val pts = graft.sources.Ingest.randomUniform(spark, n, d).localCheckpoint()
-      val configs = thrOverride match {
-        case Some(t) => Seq((s"hybrid($t-local)", t))
-        case None if args.contains("hybrid-only") =>
-          Seq(("hybrid(128k-local)", 1L << 17))
-        case None => Seq(("hybrid(128k-local)", 1L << 17),
-          ("hybrid(8k-local)", 8192L),
-          ("pure-BFS", 0L))
-      }
-      for ((label, thr) <- configs) {
-        val t0 = System.nanoTime()
-        val idx = operators.IndexBuild.buildIndex(pts, "id", "vector",
-          localBuildThreshold = thr)
-        val leaves = idx.filter(org.apache.spark.sql.functions.col("id").isNotNull).count()
-        println(f"$label%-18s ${(System.nanoTime() - t0) / 1e9}%8.2f s  ($leaves leaves)")
-      }
-      spark.stop(); return
-    }
-    if (name == "storebench") {
-      // A/B the incremental-ingest probe: inline (re-shingle corpus per
-      // batch) vs the persisted shingle-store path, same JVM
-      import org.apache.spark.sql.functions._
-      import graft.operators.Dedup
-      val docs = Tables.documents(spark, sfDir)
-      val batch = docs.filter(col("doc_id") % 7 === 0)
-      val corpus = docs.filter(col("doc_id") % 7 =!= 0)
-      val dir = java.nio.file.Files.createTempDirectory("storebench")
-        .resolve("store").toString
-      def time(label: String)(thunk: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val n = thunk
-        println(f"$label%-22s ${(System.nanoTime() - t0) / 1e9}%6.2f s  ($n rows)")
-      }
-      time("store build")({
-        Dedup.writeShingleStore(corpus, "doc_id", "text", 3, dir); 0L
-      })
-      val store = Dedup.openShingleStore(spark, dir)
-      for (i <- 1 to 3) {
-        time(s"inline pairs #$i")(Dedup.ngramJaccardPairsAgainst(
-          batch, corpus, "doc_id", "text", 3, 0.3).count())
-        time(s"store pairs #$i")(Dedup.ngramJaccardPairsAgainstStore(
-          batch, store, "doc_id", "text", 0.3).count())
-        time(s"store reopen #$i")({
-          val st2 = Dedup.openShingleStore(spark, dir)
-          Dedup.ngramJaccardPairsAgainstStore(
-            batch, st2, "doc_id", "text", 0.3).count()
-        })
-      }
-      spark.stop(); return
-    }
-    if (name == "sketchbench") {
-      // growth rows for the persisted sketch stores (q49 HLL days, q50
-      // histogram months): ingest must grow ~linearly in event volume,
-      // PROBES must stay flat (they touch day/month-cardinality cells,
-      // never the log). The inline q46-shape window roll-up (7x event
-      // fanout through the range join) rides along as the rescan
-      // alternative the store exists to avoid.
-      import org.apache.spark.sql.functions._
-      import graft.operators.{FreqStore, HistStore, SketchStore}
-      val mult = args.drop(2).find(a => a.nonEmpty && a.forall(_.isDigit))
-        .map(_.toInt).getOrElse(10)
-      val e1 = Tables.events(spark, sfDir)
-        .select(col("ts"), col("user_id"), col("value")).localCheckpoint()
-      def eventsAt(m: Int) =
-        if (m == 1) e1
-        else (0 until m).map { c =>
-          e1.select(col("ts"),
-            (col("user_id") + lit(c * 100000000L)).as("user_id"),
-            col("value"))
-          // coalesce BEFORE the checkpoint: an m-leg union checkpoints
-          // as m x 32 partitions, and at m = 1000 the 32k near-empty
-          // tasks cost ~80 s of pure scheduling in EVERY timed pass —
-          // measured via `hllab` (the kernels run 100M rows in <2 s on
-          // 32 well-sized partitions); without this the growth rows
-          // measure the test harness, not the operator
-        }.reduce(_ unionByName _).coalesce(32).localCheckpoint()
-      def time(label: String)(thunk: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val n = thunk
-        println(f"$label%-26s ${(System.nanoTime() - t0) / 1e9}%8.2f s  ($n rows)")
-      }
-      for (m <- Seq(1, mult)) {
-        val e = eventsAt(m)
-        println(s"--- events ${m}x: ${e.count()} rows ---")
-        val hdir = java.nio.file.Files.createTempDirectory("skb")
-          .toString + "/hll"
-        time(s"hll ingest ${m}x")({ SketchStore.write(e, "ts", "user_id",
-          8, hdir); 0L })
-        time(s"hll ingest rep2 ${m}x")({ SketchStore.write(e, "ts",
-          "user_id", 8, hdir); 0L })
-        time(s"hll probe trail7 ${m}x")(
-          SketchStore.probeTrailing(spark, hdir, 7).count())
-        time(s"inline window ${m}x")({
-          val days = e.select(to_date(col("ts")).as("d0")).distinct()
-          days.join(e.select(to_date(col("ts")).as("day"), col("user_id")),
-              col("day").between(date_sub(col("d0"), 6), col("d0")))
-            .groupBy(col("d0"))
-            .agg(graft.functions.HllSketch.hllDistinct(col("user_id"), 8))
-            .count()
-        })
-        val gdir = java.nio.file.Files.createTempDirectory("skb")
-          .toString + "/hist"
-        time(s"hist ingest ${m}x")({ HistStore.write(e, "ts", "value",
-          256, gdir); 0L })
-        time(s"hist probe ${m}x")(
-          HistStore.probeRange(spark, gdir, "1990-01", "2099-12",
-            Seq(0.5, 0.9, 0.99)).count())
-        val fdir = java.nio.file.Files.createTempDirectory("skb")
-          .toString + "/freq"
-        time(s"freq ingest ${m}x")({ FreqStore.write(e, "ts", "user_id",
-          4, 9, fdir); 0L })
-        val keys = e.select(col("user_id")).distinct().limit(20)
-          .localCheckpoint()
-        time(s"freq probe ${m}x")(
-          FreqStore.probeRange(keys, "user_id", fdir,
-            "1990-01-01", "2099-12-31").count())
-      }
-      spark.stop(); return
-    }
-    if (name == "prchain") {
-      // Dump the INTERIOR plan of the pageRank fixpoint chain (round-18
-      // diagnostic): the gate's returned plan is a flat checkpoint scan,
-      // so the per-round join strategy/exchange structure is invisible
-      // in `Tools explain` — this rebuilds the same loop body over the
-      // staged trade graph WITHOUT the loop-end materialization and
-      // explains the lazy chain, which is exactly the plan the single
-      // fixpoint job executes.
-      import org.apache.spark.sql.functions._
-      val edges = spark.read.parquet(
-        s"/tmp/graft_tradegraph_${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}/store")
-      val ew = edges.select(col("src"), col("dst"))
-        .withColumn("outdeg", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
-        .repartition(col("dst"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      ew.count()
-      val nodes = ew.select(col("src").as("node"))
-        .union(ew.select(col("dst").as("node"))).distinct()
-        .localCheckpoint()
-      val n = nodes.count()
-      val unit = 1000000000000L
-      val base = (3L * unit) / (20L * n)
-      // default: the r17 LAZY chain (the regression shape); `eager`
-      // materializes each round like the shipped loop and explains the
-      // last round's body — the plan each per-round job executes
-      val eager = args.contains("eager")
-      val maybeB = (df: org.apache.spark.sql.DataFrame) =>
-        if (eager) broadcast(df) else df
-      var pr = nodes.withColumn("pr", lit(unit / n))
-      for (i <- 1 to 5) {
-        val contrib = ew
-          .join(maybeB(pr.withColumnRenamed("node", "src")), Seq("src"))
-          .select(col("dst").as("node"), expr("pr div outdeg").as("share"))
-          .groupBy(col("node")).agg(sum(col("share")).as("contrib"))
-        pr = nodes
-          .join(maybeB(contrib), Seq("node"), "left_outer")
-          .select(col("node"),
-            (lit(base) + expr("(17 * coalesce(contrib, 0L)) div 20")).as("pr"))
-        if (eager && i < 5) pr = pr.localCheckpoint()
-      }
-      pr.explain("formatted")
-      ew.unpersist(blocking = false)
-      spark.stop(); return
-    }
-    if (name == "bloomprof") {
-      // Growth-row A/B for the probe-side Bloom prefilter (judge r17
-      // #4): simulate the 100 TB admission shape — batch too big to
-      // broadcast (autoBroadcastJoinThreshold=-1 forces the shuffle
-      // join) probing a store it is narrow relative to — and measure
-      // the band probe with the prefilter off vs on. Also reports the
-      // default bench shape (broadcast on; the filter must self-disable
-      // and change nothing).
-      import org.apache.spark.sql.functions._
-      import graft.operators.Dedup
-      val docs = Tables.documents(spark, sfDir)
-      val batch = docs.filter(col("doc_id") % 29 === 0)
-      val storeDir =
-        s"/tmp/graft_shinglestore_${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}/store"
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(storeDir + ".meta"))) {
-        println(s"staging shingle store at $storeDir")
-        Dedup.writeShingleStore(docs.filter(col("doc_id") % 7 =!= 0),
-          "doc_id", "text", 3, storeDir)
-      }
-      val store = Dedup.openShingleStore(spark, storeDir)
-      def run(label: String, bloom: Boolean): Unit = {
-        spark.conf.set("graft.dedup.bloomPrefilter", bloom.toString)
-        val t0 = System.nanoTime()
-        val n = Dedup.ngramJaccardPairsAgainstStoreBand(batch, store,
-          "doc_id", "text", 0.3).count()
-        println(f"$label%-40s ${(System.nanoTime() - t0) / 1e9}%6.2f s  ($n pairs)")
-      }
-      // selectivity: what fraction of store POSTING ROWS pass a Bloom
-      // over the batch's shingles (df-weighted — hot shingles count
-      // once per posting)? This is the quantity that decides whether
-      // the prefilter can pay at any scale on this corpus.
-      val shingles = batch.select(
-        explode(array_distinct(Dedup.shinglesOf(Dedup.tokens(col("text")),
-          store.k))).as("shingle"))
-      val bf = shingles.stat.bloomFilter("shingle", shingles.count(), 0.01)
-      val bfB = spark.sparkContext.broadcast(bf)
-      val mc = udf((s: String) => s != null && bfB.value.mightContainString(s))
-      val total = store.post.count()
-      val pass = store.post.filter(mc(col("shingle"))).count()
-      println(f"selectivity: $pass of $total postings pass (${100.0 * pass / total}%.1f%%)")
-      for (r <- 1 to 3) {
-        println(s"--- rep $r ---")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        run("scale shape (no broadcast), bloom OFF", bloom = false)
-        run("scale shape (no broadcast), bloom ON", bloom = true)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-          (64 * 1024 * 1024).toString)
-        run("bench shape (broadcast), bloom enabled", bloom = true)
-      }
-      spark.conf.unset("graft.dedup.bloomPrefilter")
-      spark.stop(); return
-    }
-    if (name == "d29prof") {
-      // stage decomposition of the d29/d31 store probes (judge r17 #7):
-      // where do ~3.6 s warm go — batch shingling, prefix relation,
-      // store scan, candidate join, or verify join?
-      import org.apache.spark.sql.functions._
-      import graft.operators.Dedup
-      val docs = Tables.documents(spark, sfDir)
-      val batch = docs.filter(col("doc_id") % 7 === 0)
-      val storePath = s"/tmp/graft_shinglestore_${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}/store"
-      def time(label: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val n = f
-        println(f"$label%-34s ${(System.nanoTime() - t0) / 1e9}%6.2f s  ($n rows)")
-      }
-      for (r <- 1 to 3) {
-        println(s"--- rep $r ---")
-        val store = Dedup.openShingleStore(spark, storePath)
-        time("store open+postings count")(store.post.count())
-        time("batch shingle+cp (band shape)") {
-          val sh = batch.select(col("doc_id").as("doc"),
-              array_distinct(Dedup.shinglesOf(Dedup.tokens(col("text")),
-                store.k)).as("arr"))
-            .select(col("doc"), size(col("arr")).as("sza"),
-              explode(col("arr")).as("shingle"))
-            .localCheckpoint()
-          val n = sh.count()
-          graft.operators.IndexBuild.freeCheckpoint(sh); n
-        }
-        time("d29 full (prefix path)")(
-          Dedup.ngramJaccardPairsAgainstStore(batch, store, "doc_id",
-            "text", 0.3).count())
-        time("d29 candidates only")(
-          Dedup.storePrefixCandidates(batch, store, "doc_id",
-            "text", 0.3).count())
-        time("d31 full (band path)")(
-          Dedup.ngramJaccardPairsAgainstStoreBand(batch, store, "doc_id",
-            "text", 0.3).count())
-        time("d30 full (admit, band)")(
-          Dedup.admitNewAgainstStore(batch, store, "doc_id", "text", 0.3,
-            band = true).count())
-      }
-      spark.stop(); return
-    }
-    if (name == "runq") {
-      // execute named gated queries and print row counts — the
-      // single-query debugging twin of `explain`. reps=N repeats each
-      // query (rep 1 carries JVM/codegen/staging warmup; quote the
-      // warm reps when comparing against recorded bench numbers).
-      val only = args.find(_.startsWith("only="))
-        .map(_.drop(5).split(',').toSet)
-        .getOrElse(sys.error("runq needs only=<query,...>"))
-      val reps = args.find(_.startsWith("reps="))
-        .map(_.drop(5).toInt).getOrElse(1)
-      SparkEntry.queries.filter(q => only(q._1)).foreach { case (n, fn) =>
-        for (r <- 1 to reps) {
-          val t0 = System.nanoTime()
-          val c = fn(spark, sfDir).count()
-          println(f"$n%-28s rep$r ${(System.nanoTime() - t0) / 1e9}%8.2f s  ($c rows)")
-        }
-      }
-      spark.stop(); return
-    }
-    if (name == "contprof") {
-      // d27/d28 containment verify-stage A/B: exploded 3-way join +
-      // groupBy vs pair-local array_intersect
-      import org.apache.spark.sql.functions._
-      import graft.operators.Dedup
-      val docs = Tables.documents(spark, sfDir)
-      val tau = 0.8
-      def time(label: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val n = f
-        println(f"$label%-22s ${(System.nanoTime() - t0) / 1e9}%6.2f s  ($n rows)")
-      }
-      for (r <- 1 to 2) {
-        println(s"--- rep $r ---")
-        time("d27 current")(Dedup.containmentPairsPrefix(docs, "doc_id",
-          "text", 3, tau).count())
-        time("d28 current")(Dedup.dropContainedPrefix(docs, "doc_id",
-          "text", 3, tau).count())
-        // array-intersect verify variant for d27, inlined
-        time("d27 arrays") {
-          val sh = docs.select(col("doc_id").as("doc"),
-              array_distinct(Dedup.shinglesOf(Dedup.tokens(col("text")), 3))
-                .as("arr"))
-            .select(col("doc"), col("arr"), size(col("arr")).as("sz"))
-            .filter(col("sz") > 0)
-            .localCheckpoint()
-          val shx = sh.select(col("doc"), explode(col("arr")).as("shingle"),
-            col("sz"))
-          val dfc = shx.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-          val pref = shx.join(dfc, "shingle")
-            .groupBy(col("doc"))
-            .agg(max(col("sz")).as("sz"),
-              array_sort(collect_list(struct(col("df"), col("shingle"))))
-                .as("ordered"))
-            .select(col("doc"), col("sz"),
-              explode(slice(col("ordered"), lit(1),
-                (col("sz") - ceil(col("sz") * lit(tau)) + 1).cast("int")))
-                .as("s"))
-            .select(col("doc"), col("sz"), col("s.shingle").as("shingle"))
-          val cand = pref.as("x").join(shx.as("y"),
-              col("x.shingle") === col("y.shingle") &&
-                col("x.doc") =!= col("y.doc") &&
-                col("y.sz").cast("double") >= lit(tau) * col("x.sz"))
-            .select(col("x.doc").as("a"), col("y.doc").as("b")).distinct()
-          cand
-            .join(sh.select(col("doc").as("a"), col("arr").as("arrA"),
-              col("sz").as("sza")), Seq("a"))
-            .join(sh.select(col("doc").as("b"), col("arr").as("arrB")),
-              Seq("b"))
-            .withColumn("inter", size(array_intersect(col("arrA"),
-              col("arrB"))))
-            .withColumn("containment",
-              col("inter").cast("double") / col("sza"))
-            .filter(col("containment") >= tau)
-            .count()
-        }
-      }
-      spark.stop(); return
-    }
-    if (name == "admitprof") {
-      // phase timing of the store-admission probe (p17's dominant cost):
-      // current prefix-filtered path vs a single-pass band-join variant
-      import org.apache.spark.sql.functions._
-      import graft.operators._
-      import graft.sources.Warc
-      val docs = Tables.documents(spark, sfDir)
-      val warcDir = s"/tmp/graft_crawlwarc_${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}/store"
-      val store = Dedup.openShingleStore(spark,
-        s"/tmp/graft_shinglestore_${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}/store")
-      val crawled = Warc.readWarc(spark, warcDir)
-        .select(
-          regexp_extract(col("target_uri"), "doc(\\d+)$", 1)
-            .cast("long").as("doc_id"),
-          TextOps.htmlToText(col("body").cast("string")).as("text"))
-      val qcp = crawled
-        .filter(TextOps.qualityScore(col("text")) >= 0.5).localCheckpoint()
-      def time(label: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val n = f
-        println(f"$label%-24s ${(System.nanoTime() - t0) / 1e9}%6.2f s  ($n rows)")
-      }
-      val batch = docs.filter(col("doc_id") % 7 === 0).localCheckpoint()
-      for (r <- 1 to 2) {
-        println(s"--- rep $r ---")
-        time("batch prefix")(Dedup.ngramJaccardPairsAgainstStore(
-          batch, store, "doc_id", "text", 0.3).count())
-        time("batch band")(Dedup.ngramJaccardPairsAgainstStoreBand(
-          batch, store, "doc_id", "text", 0.3).count())
-        time("batch band+prune")(Dedup.ngramJaccardPairsAgainstStoreBand(
-          batch, store, "doc_id", "text", 0.3, pruneBuckets = true).count())
-        // current path
-        time("pairs(current)")(Dedup.ngramJaccardPairsAgainstStore(
-          qcp, store, "doc_id", "text", 0.3).count())
-        // single-pass band-join variant, inlined
-        time("pairs(band)    ") {
-          val tau = 0.3
-          val shA = qcp.select(col("doc_id").as("doc"),
-              array_distinct(Dedup.shinglesOf(Dedup.tokens(col("text")),
-                store.k)).as("arr"))
-            .select(col("doc"), size(col("arr")).as("sza"),
-              explode(col("arr")).as("shingle"))
-            .withColumn("pb",
-              pmod(xxhash64(col("shingle")), lit(store.buckets.toLong))
-                .cast("int"))
-            .localCheckpoint()
-          shA.as("x").join(store.post.as("y"),
-              col("x.pb") === col("y.pb") &&
-                col("x.shingle") === col("y.shingle") &&
-                col("y.sz").cast("double") >= lit(tau) * col("x.sza") &&
-                col("x.sza").cast("double") >= lit(tau) * col("y.sz"))
-            .groupBy(col("x.doc").as("a"), col("y.doc").as("b"))
-            .agg(count(lit(1)).as("inter"), max(col("y.sz")).as("szb"),
-              max(col("x.sza")).as("sza"))
-            .withColumn("jaccard", col("inter").cast("double") /
-              (col("sza") + col("szb") - col("inter")))
-            .filter(col("jaccard") >= tau)
-            .count()
-        }
-      }
-      spark.stop(); return
-    }
-    if (name == "rtcheck") {
-      // does htmlToText(htmlWrap(text)) == text byte-exactly?
-      import org.apache.spark.sql.functions._
-      import graft.operators.TextOps
-      val docs = Tables.documents(spark, sfDir)
-      val rt = docs.select(col("doc_id"), col("text"),
-        TextOps.htmlToText(SparkEntry.htmlWrapForTest(col("doc_id"),
-          col("text"))).as("rt"))
-      val n = rt.count()
-      val eq = rt.filter(col("rt") === col("text")).count()
-      println(s"roundtrip exact: $eq / $n")
-      rt.filter(col("rt") =!= col("text")).select(col("doc_id"))
-        .show(5, false)
-      rt.filter(col("rt") =!= col("text"))
-        .select(substring(col("text"), 1, 80).as("orig"),
-          substring(col("rt"), 1, 80).as("rt")).show(3, false)
-      spark.stop(); return
-    }
-    if (name == "p17prof") {
-      // stage-by-stage timing of the p17 crawl pipeline (warm: reps=2)
-      import org.apache.spark.sql.functions._
-      import graft.operators._
-      import graft.sources.Warc
-      val reps = args.find(_.startsWith("reps=")).map(_.drop(5).toInt)
-        .getOrElse(2)
       for (r <- 1 to reps) {
-        def time(label: String)(f: => Long): Unit = {
-          val t0 = System.nanoTime()
-          val n = f
-          println(f"rep$r $label%-18s ${(System.nanoTime() - t0) / 1e9}%6.2f s  ($n rows)")
-        }
-        val docs = Tables.documents(spark, sfDir)
-        val warcDir = s"/tmp/graft_crawlwarc_${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}/store"
-        time("warc read")(Warc.readWarc(spark, warcDir).count())
-        val crawled = Warc.readWarc(spark, warcDir)
-          .select(
-            regexp_extract(col("target_uri"), "doc(\\d+)$", 1)
-              .cast("long").as("doc_id"),
-            TextOps.htmlToText(col("body").cast("string")).as("text"))
-        time("read+extract")(crawled.count())
-        val qualified = crawled
-          .filter(TextOps.qualityScore(col("text")) >= 0.5)
-        time("qualified+cp") { val q = qualified.localCheckpoint(); q.count() }
-        val qcp = qualified.localCheckpoint()
-        val store = Dedup.openShingleStore(spark,
-          s"/tmp/graft_shinglestore_${sfDir.replaceAll("[^A-Za-z0-9.]", "_")}/store")
-        // band = true — the path the p17 gate actually runs (the
-        // corpus-wide crawl re-admission shape); the prefix path here
-        // was stale tooling measuring a join the gate no longer uses
-        time("admit") {
-          Dedup.admitNewAgainstStore(qcp, store, "doc_id", "text", 0.3,
-            band = true).count()
-        }
-        val admitted = qcp.join(
-          Dedup.admitNewAgainstStore(qcp, store, "doc_id", "text", 0.3,
-            band = true),
-          Seq("doc_id")).localCheckpoint()
-        time("admitted+cp")(admitted.count())
-        time("curate")(Pipeline.curate(admitted, "doc_id", "text").count())
-      }
-      spark.stop(); return
-    }
-    if (name == "hllab") {
-      // micro A/B isolating the q49-ingest cost stack: cmsFreq vs
-      // hllDistinct vs pre-hashed hll vs bare md5 on the same relation
-      import org.apache.spark.sql.functions._
-      import graft.functions.{CmsSketch, HllSketch, PortableHash}
-      val n = args.drop(2).find(a => a.forall(_.isDigit)).map(_.toLong)
-        .getOrElse(100000000L)
-      val e = spark.range(n).select(
-        (col("id") % 30).as("day"), col("id").as("user_id"))
-        .localCheckpoint()
-      println(s"rows ${e.count()} parts ${e.rdd.getNumPartitions}")
-      def time(label: String)(f: => Unit): Unit = {
-        val t0 = System.nanoTime(); f
-        println(f"$label%-24s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      }
-      time("cmsFreq")(e.groupBy("day").agg(
-        CmsSketch.cmsFreq(col("user_id"), 4, 9)).count())
-      time("hllDistinct")(e.groupBy("day").agg(
-        HllSketch.hllDistinct(col("user_id"), 8)).count())
-      time("hll prehashed")(e.select(col("day"),
-          PortableHash.md5Long60(col("user_id").cast("string")).as("h"))
-        .groupBy("day").agg(HllSketch.hll(col("h"), 8)).count())
-      time("md5 only")(e.select(
-        PortableHash.md5Long60(col("user_id").cast("string")).as("h"))
-        .agg(sum(col("h"))).count())
-      // the sketchbench shape exactly: TIMESTAMP day column grouped via
-      // date_format, string-cast md5 of the key — isolates which stage
-      // of the store-ingest stack carries the cost
-      val ets = spark.range(n).select(
-        (lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00"))
-          .cast("timestamp") + expr("make_interval(0, 0, 0, 0, CAST(id % 720 AS INT), 0, 0)"))
-          .as("ts"),
-        col("id").as("user_id"))
-        .localCheckpoint()
-      println(s"ts rows ${ets.count()} parts ${ets.rdd.getNumPartitions}")
-      time("date_format only")(ets.select(
-        date_format(col("ts"), "yyyy-MM-dd").as("day"))
-        .groupBy("day").count().count())
-      time("hll by date_format")(ets.select(
-          date_format(col("ts"), "yyyy-MM-dd").as("day"), col("user_id"))
-        .groupBy("day").agg(HllSketch.hllDistinct(col("user_id"), 8))
-        .count())
-      time("cms by date_format")(ets.select(
-          date_format(col("ts"), "yyyy-MM-dd").as("day"), col("user_id"))
-        .groupBy("day").agg(CmsSketch.cmsFreq(col("user_id"), 4, 9))
-        .count())
-      time("hll by long day")(ets.select(
-          (col("user_id") % 30).as("day"), col("user_id"))
-        .groupBy("day").agg(HllSketch.hllDistinct(col("user_id"), 8))
-        .count())
-      spark.stop(); return
-    }
-    if (name == "hllab2") {
-      // fresh-JVM bisect of the replicated-events agg anomaly
-      import org.apache.spark.sql.functions._
-      import graft.functions.HllSketch
-      val ev1 = Tables.events(spark, sfDir)
-        .select(col("ts"), col("user_id")).localCheckpoint()
-      val ev = (0 until 1000).map { c =>
-        ev1.select(col("ts"),
-          (col("user_id") + lit(c * 100000000L)).as("user_id"))
-      }.reduce(_ unionByName _).coalesce(32).localCheckpoint()
-      println(s"ev rows ${ev.count()} parts ${ev.rdd.getNumPartitions}")
-      def time(label: String)(f: => Unit): Unit = {
-        val t0 = System.nanoTime(); f
-        println(f"$label%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      }
-      for (r <- 1 to 2)
-        time(s"hll agg rep$r")(ev
-          .select(date_format(col("ts"), "yyyy-MM-dd").as("day"),
-            col("user_id"))
-          .groupBy("day").agg(HllSketch.hllDistinct(col("user_id"), 8))
-          .count())
-      time("count distinct day")(ev
-        .select(date_format(col("ts"), "yyyy-MM-dd").as("day"))
-        .groupBy("day").count().count())
-      time("sum user_id")(ev.agg(sum(col("user_id"))).count())
-      time("hll by day-long")(ev
-        .select((col("user_id") % 30).as("day"), col("user_id"))
-        .groupBy("day").agg(HllSketch.hllDistinct(col("user_id"), 8))
-        .count())
-      time("hll by to_date")(ev
-        .select(to_date(col("ts")).as("day"), col("user_id"))
-        .groupBy("day").agg(HllSketch.hllDistinct(col("user_id"), 8))
-        .count())
-      time("hll by fmt-of-date")(ev
-        .select(date_format(to_date(col("ts")), "yyyy-MM-dd").as("day"),
-          col("user_id"))
-        .groupBy("day").agg(HllSketch.hllDistinct(col("user_id"), 8))
-        .count())
-      val sdir = java.nio.file.Files.createTempDirectory("hllab2")
-        .toString + "/s"
-      time("SketchStore.write (ev)")(
-        graft.operators.SketchStore.write(ev, "ts", "user_id", 8, sdir))
-      val cdir = java.nio.file.Files.createTempDirectory("hllab2")
-        .toString + "/c"
-      time("cells write no-repart")(ev
-        .select(to_date(col("ts")).as("d"), col("user_id"))
-        .groupBy(col("d"))
-        .agg(HllSketch.hllDistinct(col("user_id"), 8).as("sk"))
-        .select(date_format(col("d"), "yyyy-MM-dd").as("day"),
-          col("sk.regs").as("regs"))
-        .write.mode("overwrite").partitionBy("day").parquet(cdir))
-      spark.stop(); return
-    }
-    if (name == "temporalbench") {
-      // growth rows for the SCD2/time-travel family (q42/q52/q53):
-      // replicate events by user_id shift (key count grows, per-key
-      // history length constant — the axis that matters for the keyed
-      // window and the PIT join). All three are one-exchange shapes,
-      // so growth must be ~linear in event volume.
-      import org.apache.spark.sql.functions._
-      import graft.operators.Relational
-      val mult = args.drop(2).find(a => a.nonEmpty && a.forall(_.isDigit))
-        .map(_.toInt).getOrElse(10)
-      val e1 = Tables.events(spark, sfDir)
-        .select(col("ts"), col("user_id"), col("event_id"),
-          col("event_type"), col("value")).localCheckpoint()
-      def eventsAt(m: Int) =
-        if (m == 1) e1
-        else (0 until m).map { c =>
-          e1.select(col("ts"),
-            (col("user_id") + lit(c * 100000000L)).as("user_id"),
-            (col("event_id") + lit(c * 1000000000L)).as("event_id"),
-            col("event_type"), col("value"))
-          // coalesce before checkpoint — see sketchbench: an m-leg
-          // union otherwise checkpoints as m x 32 near-empty partitions
-          // and the timed passes measure task scheduling, not the op
-        }.reduce(_ unionByName _).coalesce(32).localCheckpoint()
-      def time(label: String)(thunk: => Long): Unit = {
         val t0 = System.nanoTime()
-        val n = thunk
-        println(f"$label%-24s ${(System.nanoTime() - t0) / 1e9}%8.2f s  ($n rows)")
+        val c = fn(spark, sfDir).count()
+        println(f"$n%-28s rep$r ${(System.nanoTime() - t0) / 1e9}%8.2f s  ($c rows)")
       }
-      for (m <- Seq(1, mult)) {
-        val e = eventsAt(m)
-        println(s"--- events ${m}x: ${e.count()} rows ---")
-        val ch = e.withColumn("op",
-          when(col("event_type") === "error", lit("delete"))
-            .otherwise(lit("upsert")))
-        def hist = Relational.scd2(ch, "user_id", "ts", "event_id", "op",
-          Seq("event_type", "value"))
-        time(s"scd2 build ${m}x")(hist.count())
-        time(s"as-of ${m}x")(Relational.scd2AsOf(hist,
-          lit("2024-01-15 12:00:00").cast("timestamp")).count())
-        val dim = Relational.scd2(
-          ch.filter(col("event_type").isin("purchase", "error")),
-          "user_id", "ts", "event_id", "op", Seq("value"))
-        val facts = e.filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"), col("ts"))
-        time(s"pit join ${m}x")(Relational.pointInTimeJoin(
-          facts, "user_id", "ts", dim, "user_id").count())
-      }
-      spark.stop(); return
     }
-    if (name == "dedupbench") {
-      // Dedup scale-growth probe (judge r2 #5): time the exact-quadratic
-      // formulations (d2/d5/d6) against their scale paths (d8/d10/d9) on
-      // a 1× and an m× corpus, plus capped vs uncapped bucket guards.
-      // Copies carry a per-copy tag token / a perturbed first dim so the
-      // near-dup structure replicates WITHOUT collapsing into one
-      // all-pairs mega-cluster.
-      import org.apache.spark.sql.functions._
-      import graft.operators.{Dedup, Similarity}
-      // every trailing arg must be an absolute dir, a multiplier, or
-      // only= — and each is located positionally-independently, so
-      // `dedupbench only=d14 /some/dir` resolves the dir instead of
-      // silently benchmarking the default corpus
-      args.drop(1).foreach { a =>
-        require(a.startsWith("/") || a.startsWith("only=") ||
-          (a.nonEmpty && a.forall(_.isDigit)),
-          s"dedupbench arg '$a' is neither an absolute dir, a multiplier, nor only=")
-      }
-      val sfd = args.drop(1).find(_.startsWith("/"))
-        .getOrElse("/root/testdata/sf0.01")
-      val mult = args.drop(1).find(a => a.nonEmpty && a.forall(_.isDigit))
-        .map(_.toInt).getOrElse(10)
-      // only=d14,d15 restricts to the named cases (label prefix match)
-      val only = args.find(_.startsWith("only="))
-        .map(_.drop(5).split(',').toSet)
-      val docs1 = Tables.documents(spark, sfd).select("doc_id", "text")
-        .localCheckpoint()
-      def docsAt(m: Int) =
-        if (m == 1) docs1
-        else (0 until m).map { c =>
-          docs1.select((col("doc_id") + lit(c * 10000000L)).as("doc_id"),
-            concat(col("text"), lit(s" copytag$c")).as("text"))
-        }.reduce(_ unionByName _).localCheckpoint()
-      val e1 = Tables.embeddings(spark, sfd).select("vec_id", "embedding")
-        .localCheckpoint()
-      def embAt(m: Int) =
-        if (m == 1) e1
-        else (0 until m).map { c =>
-          e1.select((col("vec_id") + lit(c * 10000000L)).as("vec_id"),
-            expr(s"transform(embedding, (x, i) -> " +
-              s"if(i = 0, x + float(0.01) * $c, x))").as("embedding"))
-        }.reduce(_ unionByName _).localCheckpoint()
-      val planes = Similarity.hyperplanes(8, 64)
-      def want(label: String): Boolean =
-        only.forall(_.exists(label.startsWith))
-      def time(label: String)(thunk: => Long): Double = {
-        if (!want(label)) return 0.0
-        val t0 = System.nanoTime()
-        val n = thunk
-        val s = (System.nanoTime() - t0) / 1e9
-        println(f"$label%-34s $s%8.2f s  ($n pairs)")
-        s
-      }
-      // build only the corpora the selected cases touch — the 10x
-      // unions are eagerly checkpointed and cost real minutes
-      val needDocs = Seq("d2", "d5", "d8", "d10", "d11", "d12", "d15",
-        "d22", "d23", "d27", "d29", "d29s").exists(want)
-      val needEmb = Seq("d6", "d9", "d14").exists(want)
-      for (m <- Seq(1, mult)) {
-        lazy val d = docsAt(m); lazy val e = embAt(m)
-        println(s"--- corpus ${m}x: " +
-          (if (needDocs) s"${d.count()} docs " else "") +
-          (if (needEmb) s"${e.count()} vecs" else "") + "---")
-        time(s"d2 exact-jaccard uncapped ${m}x")(
-          Dedup.ngramJaccardPairs(d, "doc_id", "text", 3, 0.6).count())
-        time(s"d2 exact-jaccard df-capped ${m}x")(
-          Dedup.ngramJaccardPairs(d, "doc_id", "text", 3, 0.6,
-            maxShingleDf = Some(200L)).count())
-        time(s"d8 lsh+re-check ${m}x")(
-          Dedup.lshVerifiedPairs(d, "doc_id", "text", 3, 0.6).count())
-        // d22: the EXACT-threshold scale path — prefix-filtered
-        // candidates + candidates-only verify; same result relation as
-        // d2 uncapped, growth should track the candidate volume (which
-        // the rarest-first prefixes keep near the true-pair count), not
-        // the quadratic shingle join
-        time(s"d22 prefix-filter exact ${m}x")(
-          Dedup.ngramJaccardPrefixPairs(d, "doc_id", "text", 3, 0.6).count())
-        // d23 vs d27: asymmetric containment — the anchor joins raw
-        // shingles (hot-shingle quadratic exposure), the prefix path
-        // probes full postings with A's rarity prefix + size bands
-        // d29: incremental ingest — FIXED probe batch (the 1x slice)
-        // against a corpus that grows m×; the asymmetric prefix path
-        // should track the batch + match volume, not the corpus size
-        if (want("d29")) {
-          val batch = docs1.filter(col("doc_id") % 7 === 0)
-          time(s"d29 incremental vs ${m}x corpus")(
-            Dedup.ngramJaccardPairsAgainst(batch,
-              d.filter(col("doc_id") % 7 =!= 0),
-              "doc_id", "text", 3, 0.3).count())
-        }
-        // d29s: the same fixed batch probing a PERSISTED posting store
-        // over the m× corpus — the store build is the amortized
-        // (once-per-corpus) cost, so only the probe is timed
-        if (want("d29s")) {
-          val batch = docs1.filter(col("doc_id") % 7 === 0)
-          val dir = java.nio.file.Files
-            .createTempDirectory(s"d29s_$m").resolve("store").toString
-          Dedup.writeShingleStore(d.filter(col("doc_id") % 7 =!= 0),
-            "doc_id", "text", 3, dir)
-          val st = Dedup.openShingleStore(spark, dir)
-          time(s"d29s store probe vs ${m}x corpus")(
-            Dedup.ngramJaccardPairsAgainstStore(batch, st,
-              "doc_id", "text", 0.3).count())
-        }
-        time(s"d23 containment anchor ${m}x")(
-          Dedup.containmentPairs(d, "doc_id", "text", 3, 0.8).count())
-        time(s"d27 containment prefix ${m}x")(
-          Dedup.containmentPairsPrefix(d, "doc_id", "text", 3, 0.8).count())
-        // d22h: the hot-shingle shape the prefix filter exists for —
-        // EVERY doc carries the same boilerplate footer, so the naive
-        // shingle self-join pairs all n docs on each footer shingle
-        // (quadratic in the corpus) while rarest-first prefixes push
-        // the footer into suffixes and never join on it. Same result
-        // relation (the footer adds ~9 shared shingles per pair — far
-        // below tau for unrelated docs).
-        if (want("d22h")) {
-          val hot = d.select(col("doc_id"),
-            concat(col("text"), lit(" corpus wide shared boilerplate " +
-              "footer sentence appears everywhere verbatim")).as("text"))
-            .localCheckpoint()
-          time(s"d22h naive exact on hot corpus ${m}x")(
-            Dedup.ngramJaccardPairs(hot, "doc_id", "text", 3, 0.6).count())
-          time(s"d22h prefix exact on hot corpus ${m}x")(
-            Dedup.ngramJaccardPrefixPairs(hot, "doc_id", "text", 3, 0.6)
-              .count())
-        }
-        // d27h: containment on the same boilerplate corpus — the
-        // anchor's raw shingle join pairs ALL docs on the shared
-        // footer (quadratic); rarest-first prefixes never probe it
-        if (want("d27h")) {
-          val hot = d.select(col("doc_id"),
-            concat(col("text"), lit(" corpus wide shared boilerplate " +
-              "footer sentence appears everywhere verbatim")).as("text"))
-            .localCheckpoint()
-          time(s"d27h containment anchor hot ${m}x")(
-            Dedup.containmentPairs(hot, "doc_id", "text", 3, 0.8).count())
-          time(s"d27h containment prefix hot ${m}x")(
-            Dedup.containmentPairsPrefix(hot, "doc_id", "text", 3, 0.8)
-              .count())
-        }
-        time(s"d5 simhash16 uncapped ${m}x")(
-          Dedup.simHashPairs(d, "doc_id", "text", 3).count())
-        time(s"d5 simhash16 capped ${m}x")(
-          Dedup.simHashPairs(d, "doc_id", "text", 3,
-            maxBucket = Some(2000L)).count())
-        time(s"d10 simhash64 ${m}x")(
-          Dedup.simHash64Pairs(d, "doc_id", "text", 3).count())
-        time(s"d11 winnow pairs ${m}x")(
-          Dedup.winnowPairs(d, "doc_id", "text", 3, 4, minShared = 2L,
-            maxFpDf = Some(100L)).count())
-        time(s"d6 cosine all-pairs ${m}x")(
-          Dedup.cosinePairs(e, "vec_id", "embedding", 0.999).count())
-        time(s"d9 cosine-lsh ${m}x")(
-          Dedup.cosineLshPairs(e, "vec_id", "embedding", planes, 0.999).count())
-        // d12: transitive closure over the d8 pair graph — the growth of
-        // the O(log n)-round min-label/pointer-jump loop itself
-        if (want("d12")) {
-          val pairs12 = Dedup.lshVerifiedPairs(d, "doc_id", "text", 3, 0.6)
-            .localCheckpoint()
-          time(s"d12 cluster ids ${m}x")(
-            Dedup.clusterIds(pairs12).count())
-          // localBudget=0 forces the OVER-budget branch — the
-          // distributed min-label + pointer-jump loop (O(log n) rounds)
-          // the fast path short-circuits at these pair counts; this is
-          // the growth row for the 100-TB shape, where the pair relation
-          // can never fit one driver probe
-          time(s"d12 cluster ids distributed ${m}x")(
-            Dedup.clusterIds(pairs12, localBudget = 0L).count())
-        }
-        // d14: SemDeDup at FIXED target list size — C grows with the
-        // corpus, so per-cluster pair volume stays ~N·targetListSize
-        // (the linearity claim under test). persist() honours the
-        // documented cache contract for the count+train+assign reads.
-        if (want("d14")) {
-          val ep = e.persist()
-          time(s"d14 semdedup auto(L=125) ${m}x")(
-            Dedup.semDedupAuto(ep, "vec_id", "embedding",
-              targetListSize = 125L, tau = 0.999).count())
-          // the corpus-scale configuration: two-level routed assignment,
-          // O(sqrt C) per row instead of O(C)
-          time(s"d14 semdedup routed(L=125) ${m}x")(
-            Dedup.semDedupAuto(ep, "vec_id", "embedding",
-              targetListSize = 125L, tau = 0.999, routed = true).count())
-          // d14 anti-pattern: FIXED C — per-cluster lists grow with the
-          // corpus, so pair volume grows ~N²/C (the shape semDedupAuto
-          // exists to avoid)
-          time(s"d14 semdedup fixed(C=16) ${m}x")(
-            Dedup.semDedup(ep, "vec_id", "embedding", 16, 0.999).count())
-          ep.unpersist()
-        }
-        // d15: substring-level span dedup — postings count + semi-join
-        // + per-doc window merge; the copied corpus duplicates nearly
-        // every gram, the worst case for the postings relation
-        time(s"d15 dup spans ${m}x")(
-          Dedup.duplicateSpans(d, "doc_id", "text", 5, 2L).count())
-        time(s"d15 dup spans df-capped ${m}x")(
-          Dedup.duplicateSpans(d, "doc_id", "text", 5, 2L,
-            maxGramDf = Some(200L)).count())
-        // d18: the removal step — d15's spans + one doc-keyed join and
-        // a per-row range filter; should inherit d15's growth
-        time(s"d18 remove spans ${m}x")(
-          Dedup.removeDuplicateSpans(d, "doc_id", "text", 5, 2L).count())
-        // d19: keep-one election — d18 plus ONE gram-keyed window over
-        // the duplicated-postings relation; growth should track d18's
-        time(s"d19 keep-one spans ${m}x")(
-          Dedup.removeDuplicateSpansKeepOne(d, "doc_id", "text", 5, 2L)
-            .count())
-        // d20: global line dedup over its OWN line corpus (the
-        // documents table is single-line) — the corpus grows m×, and
-        // the global boilerplate line's occurrence count grows with it:
-        // the case the map-side-combined min-struct election exists for
-        // (a window by line would shuffle every copy to one reducer)
-        if (want("d20")) {
-          val lc = graft.operators.TextOps.lineCorpus(spark, 5000 * m)
-            .localCheckpoint()
-          time(s"d20 line dedup ${m}x")(
-            Dedup.dedupLines(lc, "doc_id", "text", minWords = 4).count())
-        }
-      }
-      spark.stop(); return
-    }
-    if (name == "textbench") {
-      // growth rows for the scoring/selection family: t8 URL dedup,
-      // t9 bigram CE, p13 DSIR, p14 weighted sampling at 1x/10x — all
-      // keyed-agg + broadcast-join shapes that must scale linearly
-      import org.apache.spark.sql.functions._
-      import graft.operators.{Pipeline, TextOps}
-      val sfd = args.drop(1).find(_.startsWith("/"))
-        .getOrElse("/root/testdata/sf0.01")
-      val mult = args.drop(1).find(a => a.nonEmpty && a.forall(_.isDigit))
-        .map(_.toInt).getOrElse(10)
-      val docs1 = Tables.documents(spark, sfd)
-        .select("doc_id", "text", "lang").localCheckpoint()
-      def docsAt(m: Int) =
-        if (m == 1) docs1
-        else (0 until m).map { c =>
-          docs1.select((col("doc_id") + lit(c * 10000000L)).as("doc_id"),
-            concat(col("text"), lit(s" copytag$c")).as("text"), col("lang"))
-        }.reduce(_ unionByName _).localCheckpoint()
-      def time(label: String)(thunk: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val n = thunk
-        println(f"$label%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s  ($n rows)")
-      }
-      for (m <- Seq(1, mult)) {
-        val d = docsAt(m)
-        println(s"--- corpus ${m}x: ${d.count()} docs ---")
-        time(s"t9 bigram CE ${m}x")(
-          TextOps.bigramCrossEntropy(d, "doc_id", "text",
-            col("lang") === "en").count())
-        time(s"p13 dsir weights ${m}x")(
-          Pipeline.dsirWeights(d, "doc_id", "text",
-            col("lang") === "en").count())
-        time(s"p14 weighted sample ${m}x")(
-          Pipeline.weightedSamplePerGroup(d, "doc_id", "lang",
-            TextOps.qualityScore(col("text")), 20, "ws").count())
-        val urls = TextOps.urlCorpus(spark, 500 * m).localCheckpoint()
-        time(s"t8 url dedup ${m}x")(
-          TextOps.urlDuplicates(urls, "doc_id", "url").count())
-      }
-      spark.stop(); return
-    }
-    if (name == "rpbench") {
-      // a18's scale claim measured: store the m-dim random projection
-      // as a SIDECAR column at ingest, coarse-rank on it (m doubles per
-      // row instead of d), exact re-rank a bounded pool. Times the
-      // full-d brute scan vs the sidecar coarse+re-rank, plus recall@10.
-      import graft.operators._
-      import graft.functions.VectorFunctions._
-      import org.apache.spark.sql.functions._
-      val nums = args.drop(1).filter(_.forall(_.isDigit))
-      val n = nums.headOption.map(_.toLong).getOrElse(1000000L)
-      val d = nums.lift(1).map(_.toInt).getOrElse(96)
-      val m = nums.lift(2).map(_.toInt).getOrElse(16)
-      val pool = nums.lift(3).map(_.toInt).getOrElse(500)
-      val planes = Similarity.hyperplanes(m, d)
-      val projCols = planes.map(p => dot(col("vector"),
-        doubleVec(p.toIndexedSeq)))
-      // ingest-time sidecar: (id, vector, proj[m]) — persisted so the
-      // coarse pass reads the narrow column only
-      val pts = graft.sources.Ingest.randomClustered(spark, n, d, 1024)
-        .select(col("id"), col("vector"),
-          array(projCols.toIndexedSeq: _*).as("proj"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      pts.count()
-      val q = (0 until d).map(i => ((i % 13) - 6) * 0.07)
-      val qp = planes.map(p =>
-        p.iterator.zip(q.iterator).map { case (a, b) => a * b }.sum)
-      for (run <- 1 to 3) {
-        var t0 = System.nanoTime()
-        val exact = BruteForce.knn(pts.select("id", "vector"), "vector",
-          "id", q, 10).select("id").collect().map(_.getLong(0)).toSet
-        val tb = (System.nanoTime() - t0) / 1e9
-        t0 = System.nanoTime()
-        val pooled = pts.select(col("id"), col("vector"),
-            dist(col("proj"), doubleVec(qp.toIndexedSeq)).as("pd"))
-          .orderBy(col("pd"), col("id")).limit(pool)
-          .withColumn("dist", dist(col("vector"), doubleVec(q)))
-          .orderBy(col("dist"), col("id")).limit(10)
-          .select("id").collect().map(_.getLong(0)).toSet
-        val tr = (System.nanoTime() - t0) / 1e9
-        val recall = exact.count(pooled.contains) / 10.0
-        println(f"run $run: brute($d-d)=$tb%6.2f s  rp($m-d coarse + " +
-          f"$pool re-rank)=$tr%6.2f s  recall@10=$recall%.2f")
-      }
-      spark.stop(); return
-    }
-    if (name == "prefixbench") {
-      // d22 threshold sensitivity: candidate volume + time vs τ — prefix
-      // filtering prunes ~(1−τ) of each doc's shingles into the join,
-      // so low τ keeps long prefixes and the method only pays off at
-      // the near-dup thresholds it is meant for
-      import graft.operators.Dedup
-      val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
-        .localCheckpoint()
-      val n = docs.count()
-      println(s"corpus $n docs ($sfDir)")
-      for (tau <- Seq(0.3, 0.5, 0.6, 0.8)) {
-        var t0 = System.nanoTime()
-        val cand = Dedup.ngramJaccardPrefixCandidates(
-          docs, "doc_id", "text", 3, tau).count()
-        val tc = (System.nanoTime() - t0) / 1e9
-        t0 = System.nanoTime()
-        val pairs = Dedup.ngramJaccardPrefixPairs(
-          docs, "doc_id", "text", 3, tau).count()
-        val tp = (System.nanoTime() - t0) / 1e9
-        t0 = System.nanoTime()
-        val brute = Dedup.ngramJaccardPairs(
-          docs, "doc_id", "text", 3, tau).count()
-        val tb = (System.nanoTime() - t0) / 1e9
-        println(f"tau=$tau%.1f  cands=$cand%9d  pairs=$pairs%7d  " +
-          f"prefix=$tp%6.2f s (cand pass $tc%6.2f)  naive=$tb%6.2f s")
-      }
-      spark.stop(); return
-    }
-    if (name == "editbench") {
-      // d25 scale probe: PassJoin candidate volume + pair time on the
-      // 32-char prefix corpus, at 1x and (if a multiplier arg is given)
-      // Nx via unioned id-shifted copies — the growth row for the
-      // segment-signature join
-      import org.apache.spark.sql.functions._
-      import graft.operators.Dedup
-      val mult = args.drop(1).find(_.forall(_.isDigit)).map(_.toInt).getOrElse(1)
-      val base = Tables.documents(spark, sfDir)
-        .select(col("doc_id"), substring(col("text"), 1, 32).as("s"))
-      val n0 = base.count()
-      val corpus = (0 until mult).map { i =>
-        base.select((col("doc_id") + lit(i * 10 * n0)).as("doc_id"), col("s"))
-      }.reduce(_ unionAll _).localCheckpoint()
-      val n = corpus.count()
-      println(s"corpus $n strings ($sfDir x $mult)")
-      for (k <- Seq(2, 4)) {
-        var t0 = System.nanoTime()
-        val cand = Dedup.editCandidates(corpus, "doc_id", "s", k).count()
-        val tc = (System.nanoTime() - t0) / 1e9
-        t0 = System.nanoTime()
-        val pairs = Dedup.editDistancePairs(corpus, "doc_id", "s", k).count()
-        val tp = (System.nanoTime() - t0) / 1e9
-        println(f"k=$k  cands=$cand%9d  pairs=$pairs%7d  " +
-          f"cand pass $tc%6.2f s  full $tp%6.2f s")
-      }
-      // unrelated-corpus scaling: random 32-char hex strings (md5 of the
-      // id) have no near-dup structure, so candidate volume measures the
-      // signature's false-positive rate and time measures the linear
-      // filter cost — the clique-free growth row
-      for (hn <- Seq(n, n * 10)) {
-        val hex = spark.range(hn).select(col("id").as("doc_id"),
-          md5(col("id").cast("string")).as("s")).localCheckpoint()
-        val t0 = System.nanoTime()
-        val cand = Dedup.editCandidates(hex, "doc_id", "s", 4).count()
-        val tc = (System.nanoTime() - t0) / 1e9
-        println(f"hex n=$hn%7d k=4  cands=$cand%9d  cand pass $tc%6.2f s")
-      }
-      spark.stop(); return
-    }
-    if (name == "docbench") {
-      // multi-document serving-build A/B: D docs × (n/D) points × d dims,
-      // sequential indexDocument loop (D × filter+build+write jobs) vs
-      // the one-wave indexAllDocuments (one build job, one write).
-      import org.apache.spark.sql.functions._
-      val nums = args.drop(1).filter(_.forall(_.isDigit))
-      val docs = nums.headOption.map(_.toInt).getOrElse(100)
-      val n = nums.lift(1).map(_.toLong).getOrElse(500000L)
-      val d = nums.lift(2).map(_.toInt).getOrElse(32)
-      val texts = graft.sources.Ingest.randomUniform(spark, n, d)
-        .select((col("id") % docs).as("docId"), col("id").as("vec_id"),
-          to_json(col("vector")).as("vector_json"))
-        .localCheckpoint()
-      val allDir = s"/tmp/graft-docbench-all-$docs-$n"
-      var t0 = System.nanoTime()
-      graft.sources.IndexStore.indexAllDocuments(
-        spark, texts, "vec_id", "vector_json", allDir)
-      println(f"one-wave indexAllDocuments($docs docs, $n pts): ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      val seqDir = s"/tmp/graft-docbench-seq-$docs-$n"
-      t0 = System.nanoTime()
-      (0L until docs.toLong).foreach(doc =>
-        graft.sources.IndexStore.indexDocument(
-          spark, texts, doc, "vec_id", "vector_json", seqDir))
-      println(f"sequential indexDocument × $docs: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      val a = spark.read.parquet(allDir).filter(col("id").isNotNull).count()
-      val b = spark.read.parquet(seqDir).filter(col("id").isNotNull).count()
-      println(s"leaves one-wave=$a sequential=$b equal=${a == b}")
-      spark.stop(); return
-    }
-    if (name == "recallbench") {
-      // ANN quality curves (the reference's own unmet qdrant-style
-      // aspiration, README.md:102): recall@10 vs brute force AND warm
-      // probe latency for every ANN family at n x d synthetic vectors.
-      // Queries are dataset vectors (stride-sampled ids), so ground
-      // truth is well-defined and the distributions match.
-      import org.apache.spark.sql.functions._
-      import graft.operators._
-      val nums = args.drop(1).filter(_.forall(_.isDigit))
-      val n = nums.headOption.map(_.toLong).getOrElse(1000000L)
-      val d = nums.lift(1).map(_.toInt).getOrElse(64)
-      val nq = nums.lift(2).map(_.toInt).getOrElse(20)
-      val kTop = 10
-      // `clustered` plants n points around 1000 uniform centers (noise
-      // scale 0.15) — the realistic regime where neighbours are real;
-      // the default uniform dataset is the ADVERSARIAL regime (64-d
-      // distance concentration: nearest neighbours are near-arbitrary,
-      // the floor for any ANN structure)
-      val clustered = args.contains("clustered")
-      val base = graft.sources.Ingest.randomUniform(spark, n, d)
-      val pts0 =
-        if (!clustered) base
-        else {
-          val cNum = 1000
-          val centers = graft.sources.Ingest
-            .randomUniform(spark, cNum, d, seed = 99L)
-            .select(col("id").as("cid"), col("vector").as("cvec"))
-          base.withColumn("cid", col("id") % cNum)
-            .join(broadcast(centers), "cid")
-            .select(col("id"), zip_with(col("vector"), col("cvec"),
-              (a, b) => (a * lit(0.15d) + b).cast("float")).as("vector"))
-        }
-      val tag = if (clustered) "c" else "u"
-      val pts = pts0.withColumnRenamed("vector", "embedding").localCheckpoint()
-      val queries: Seq[(Long, Seq[Double])] = pts
-        .filter(col("id") % lit(n / nq) === 7)
-        .orderBy(col("id")).limit(nq)
-        .select(col("id"), col("embedding").cast("array<double>"))
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
-      println(s"n=$n d=$d queries=${queries.size} k=$kTop")
-      val truth: Map[Long, Set[Long]] = queries.map { case (qid, q) =>
-        qid -> BruteForce.knn(pts, "embedding", "id", q, kTop)
-          .select("id").collect().map(_.getLong(0)).toSet
-      }.toMap
-      // serving stores, written once each
-      val planes = Similarity.hyperplanes(8, d)
-      val lshPath = s"/tmp/graft-recall-lsh-$n-$d-$tag"
-      val ivfPath = s"/tmp/graft-recall-ivf-$n-$d-$tag"
-      val pqPath = s"/tmp/graft-recall-pq-$n-$d-$tag"
-      val ivfpqPath = s"/tmp/graft-recall-ivfpq-$n-$d-$tag"
-      // stores are deterministic functions of (n, d, dataset tag):
-      // reuse across runs so probe-only sweeps don't pay the writes
-      def ensure(path: String)(write: => Unit): Unit =
-        if (!new java.io.File(path + "/_SUCCESS").exists) write
-      ensure(lshPath)(
-        Similarity.writeBucketed(pts, "id", "embedding", planes, lshPath))
-      ensure(ivfPath)(
-        Similarity.writeIvf(pts, "id", "embedding", 256, ivfPath))
-      ensure(pqPath)(
-        ProductQuant.writePq(pts, "id", "embedding", 8, 16, 1, pqPath))
-      ensure(ivfpqPath)(
-        IvfPq.write(pts, "id", "embedding", 256, coarseIters = 2,
-          m = 8, k = 16, pqIters = 1, path = ivfpqPath))
-      def measure(label: String)(
-          probe: Seq[Double] => org.apache.spark.sql.DataFrame): Unit = {
-        // warm once (plan + codegen), then one timed probe per query
-        probe(queries.head._2).select("id").collect()
-        var hits = 0L; var secs = 0.0
-        queries.foreach { case (qid, q) =>
-          val t0 = System.nanoTime()
-          val got = probe(q).select("id").collect().map(_.getLong(0)).toSet
-          secs += (System.nanoTime() - t0) / 1e9
-          hits += got.intersect(truth(qid)).size
-        }
-        val recall = hits.toDouble / (queries.size * kTop)
-        println(f"$label%-34s recall@10 ${recall}%6.3f   ${secs / queries.size}%7.3f s/probe")
-      }
-      measure("brute force (exact baseline)")(q =>
-        BruteForce.knn(pts, "embedding", "id", q, kTop))
-      measure("a1 LSH bucket (8 planes)")(q =>
-        Similarity.probeBucketed(spark, lshPath, "id", "embedding", planes, q, kTop))
-      measure("a1 LSH multi-probe (1-bit)")(q =>
-        Similarity.probeBucketedMulti(spark, lshPath, "id", "embedding", planes, q, kTop))
-      for (np <- Seq(1, 4, 16))
-        measure(s"a2 IVF lists=256 nprobe=$np")(q =>
-          Similarity.probeIvf(spark, ivfPath, "id", "embedding", q, np, kTop))
-      for (topN <- Seq(100, 1000))
-        measure(s"a4 PQ ADC m=8 k=16 topN=$topN")(q =>
-          ProductQuant.probePq(spark, pqPath, pts, "id", "embedding", q, topN, kTop))
-      for (np <- Seq(1, 4, 16); topN <- Seq(100, 1000))
-        measure(s"a5 IVFADC nprobe=$np topN=$topN")(q =>
-          IvfPq.probe(spark, ivfpqPath, pts, "id", "embedding", q, np, topN, kTop))
-      if (args.contains("graph")) {
-        // graph ANN (Vamana-style build + seeded greedy beam): the
-        // build is the expensive arm (a corpus×corpus bucketed kNN
-        // join) — opt-in via the `graph` flag. Serving is pinned and
-        // driver-local, so s/probe here measures the pure beam walk.
-        // list cap ~256 members: candidate volume = nprobe·cap per node
-        val lists = math.max(16, (n / 256L).toInt)
-        var t0 = System.nanoTime()
-        val (graph, seeds) = GraphAnn.build(pts, "id", "embedding",
-          numLists = lists, nprobe = 2, k = 12, alpha = 1.2,
-          maxDegree = 24)
-        val g = graph.localCheckpoint()
-        val deg = g.select(avg(size(col("nbrs")))).head().getDouble(0)
-        println(f"graph build (lists=$lists nprobe=2 k=12 R=24): " +
-          f"${(System.nanoTime() - t0) / 1e9}%.1f s, avg degree $deg%.1f")
-        t0 = System.nanoTime()
-        val pinned = GraphAnn.pin(g, seeds)
-        println(f"pin: ${(System.nanoTime() - t0) / 1e9}%.1f s " +
-          f"(${pinned.size} nodes, ${seeds.length} seeds)")
-        for (ef <- Seq(32, 128))
-          measure(s"graph ANN beam ef=$ef")(q =>
-            GraphAnn.graphKnn(spark, pinned, q, kTop, ef))
-      }
-      spark.stop(); return
-    }
-    if (name == "curatebench") {
-      // pair-reuse A/B (multi-configuration curation): three composed
-      // pipeline configurations (the p3/p5/p7 shapes) over one corpus —
-      // self-computing (each runs its own LSH + closure pass) vs shared
-      // (curatePairs + clusterIds computed once, curateWith after).
-      // Outputs are row-identical (PipelineSpec asserts it); this
-      // measures the wall-clock difference.
-      import org.apache.spark.sql.functions._
-      import graft.operators.{Dedup, Pipeline}
-      val sfd = args.drop(1).find(_.startsWith("/"))
-        .getOrElse("/root/testdata/sf0.1")
-      val docs = Tables.documents(spark, sfd).select("doc_id", "lang", "text")
-        .localCheckpoint()
-      val eval = docs.filter(col("doc_id") % 23 === 0)
-      val tg = QueryConstants.RebalanceTargets
-      def timeIt(label: String)(thunk: => Long): Double = {
-        val t0 = System.nanoTime(); val n = thunk
-        val s = (System.nanoTime() - t0) / 1e9
-        println(f"$label%-28s $s%8.2f s  ($n rows)"); s
-      }
-      val selfTotal =
-        timeIt("self p3")(Pipeline.curate(docs, "doc_id", "text").count()) +
-        timeIt("self p5")(Pipeline.curate(docs, "doc_id", "text",
-          evalDocs = Some(eval), domainCol = Some("lang"),
-          rebalanceTargets = tg).count()) +
-        timeIt("self p7")(Pipeline.curate(docs, "doc_id", "text",
-          evalDocs = Some(eval), domainCol = Some("lang"),
-          rebalanceTargets = tg, maxRepeat = 3).count())
-      val t0p = System.nanoTime()
-      val pairs = Pipeline.curatePairs(docs, "doc_id", "text").localCheckpoint()
-      val clusters = Dedup.clusterIds(pairs).localCheckpoint()
-      val prep = (System.nanoTime() - t0p) / 1e9
-      println(f"shared prep (pairs+closure)  $prep%8.2f s")
-      val sharedTotal = prep +
-        timeIt("shared p3")(Pipeline.curateWith(docs, "doc_id", "text",
-          pairs, clusters = Some(clusters)).count()) +
-        timeIt("shared p5")(Pipeline.curateWith(docs, "doc_id", "text",
-          pairs, clusters = Some(clusters), evalDocs = Some(eval),
-          domainCol = Some("lang"), rebalanceTargets = tg).count()) +
-        timeIt("shared p7")(Pipeline.curateWith(docs, "doc_id", "text",
-          pairs, clusters = Some(clusters), evalDocs = Some(eval),
-          domainCol = Some("lang"), rebalanceTargets = tg,
-          maxRepeat = 3).count())
-      println(f"TOTAL self $selfTotal%.2f s vs shared $sharedTotal%.2f s " +
-        f"(x${selfTotal / sharedTotal}%.2f)")
-      spark.stop(); return
-    }
-    if (name == "pipebench") {
-      // p15 growth probe (judge r11 #4): the exact-path curation
-      // composition — exactDedup → prefix-filtered Jaccard pairs →
-      // curateWith (decontam + domain rebalance) — at 1×/m×/3m× docs.
-      // The claim under test: the seven-stage composition is
-      // OUTPUT-bound (near-linear in docs + emitted pairs), not
-      // quadratic — the d27h protocol applied to the whole pipeline.
-      import org.apache.spark.sql.functions._
-      import graft.operators.{Dedup, Pipeline}
-      val sfd = args.drop(1).find(_.startsWith("/"))
-        .getOrElse("/root/testdata/sf0.1")
-      val mult = args.drop(1).find(a => a.nonEmpty && a.forall(_.isDigit))
-        .map(_.toInt).getOrElse(10)
-      val docs1 = Tables.documents(spark, sfd)
-        .select("doc_id", "lang", "text").localCheckpoint()
-      // Copy batches must be DISTINCT documents, not near-dups of the
-      // originals: tagged copies collapse under the dedup closure, and
-      // copies landing in the eval slice decontaminate their canonicals
-      // away (observed: 0 output rows at 10×, because the zh domain
-      // emptied and explicit-target rebalance correctly returns an
-      // EMPTY unsatisfiable mixture). Batch c keeps each doc's TOKENS
-      // (identical quality/lang statistics) but reorders them by
-      // md5(token ⊕ batch) — different shingles per batch, so no
-      // cross-batch pairs or contamination, while within-batch near-dup
-      // structure replicates (near-equal token multisets sort
-      // near-identically under the same key). Generation happens at
-      // checkpoint time, untimed.
-      def docsAt(m: Int) =
-        if (m == 1) docs1
-        else (0 until m).map { c =>
-          val shuffled =
-            if (c == 0) col("text")
-            else expr(s"""concat_ws(' ', transform(
-              array_sort(transform(split(text, '\\s+'),
-                t -> struct(md5(concat(t, '$c')) AS h, t AS t))),
-              s -> s.t))""")
-          docs1.select((col("doc_id") + lit(c * 10000000L)).as("doc_id"),
-            col("lang"), shuffled.as("text"))
-        }.reduce(_ unionByName _).localCheckpoint()
-      val tg = QueryConstants.RebalanceTargets
-      for (m <- Seq(1, mult, 3 * mult)) {
-        val d = docsAt(m)
-        val nd = d.count()
-        val t0 = System.nanoTime()
-        val ek = Pipeline.exactDedup(d, "doc_id", "text")
-        val pairs = Dedup.ngramJaccardPrefixPairs(ek, "doc_id", "text", 3, 0.6)
-          .select(col("a"), col("b"))
-        // FIXED eval suite (batch-0 originals): benchmark eval sets do
-        // not grow with the training corpus — a growing slice makes
-        // maxShared=1 decontamination remove ~everything (4396 -> 7
-        // survivors at 10x), which then empties a rebalance domain and
-        // the unsatisfiable mixture correctly returns zero rows
-        val rows = Pipeline.curateWith(d, "doc_id", "text", pairs,
-            evalDocs = Some(docs1.filter(col("doc_id") % 23 === 0)),
-            domainCol = Some("lang"), rebalanceTargets = tg)
-          .count()
-        val s = (System.nanoTime() - t0) / 1e9
-        println(f"p15 exact-path curation ${m}%2dx  $nd%9d docs  $s%8.2f s  ($rows rows)")
-      }
-      spark.stop(); return
-    }
-    if (name == "graphmaint") {
-      // graph-ANN store maintenance at scale: build+write n x d
-      // clustered vectors, append batch% more, tombstone+consolidate,
-      // recall spot-checks at each step. Args: n d [batchPct]
-      import org.apache.spark.sql.functions._
-      import graft.operators._
-      val nums = args.drop(1).filter(_.forall(_.isDigit))
-      val n = nums.headOption.map(_.toLong).getOrElse(1000000L)
-      val d = nums.lift(1).map(_.toInt).getOrElse(96)
-      val batchPct = nums.lift(2).map(_.toInt).getOrElse(1)
-      // centers scale with the coarse-list count: the seed set is one
-      // leader per IVF list, so serving recall needs lists ≈ clusters
-      // (a 1000-cluster corpus behind 64 seeds strands whole clusters
-      // regardless of the graph — measured via the MISS diagnostics)
-      val lists = math.max(64, (n / 1000).toInt)
-      val centers = graft.sources.Ingest.randomUniform(spark, lists, d, seed = 7L)
-        .select(col("id").as("cid"), col("vector").as("cvec"))
-      val all = graft.sources.Ingest.randomUniform(spark, n, d)
-        .withColumn("cid", col("id") % lists)
-        .join(broadcast(centers), "cid")
-        .select(col("id"), expr(
-          "CAST(zip_with(vector, cvec, (a, b) -> a * 0.15D + b) AS ARRAY<FLOAT>)")
-          .as("embedding"))
-        .localCheckpoint()
-      // batch slice COPRIME to the cluster id (97 vs lists): a slice
-      // aligned with clusters puts WHOLE clusters into one batch, and
-      // batch-snapshot inserts form no new->new edges — that scenario
-      // (a brand-new content domain arriving at once) is the
-      // documented chunked/streaming-append case, not this probe's
-      val base = all.filter(col("id") % 97 >= batchPct)
-      val adds = all.filter(col("id") % 97 < batchPct).localCheckpoint()
-      val nAdds = adds.count()
-      val dir = java.nio.file.Files.createTempDirectory("graphmaint")
-        .resolve("g").toString
-      def time[T](label: String)(f: => T): T = {
-        val t0 = System.nanoTime()
-        val r = f
-        println(f"$label%-22s ${(System.nanoTime() - t0) / 1e9}%8.1f s")
-        r
-      }
-      time(s"build+write($n x $d)")(GraphAnn.buildAndWrite(base, "id",
-        "embedding", numLists = lists, nprobe = 2, k = 12, alpha = 1.2,
-        maxDegree = 24, path = dir, buckets = 64))
-      // base-serving sanity BEFORE append: self-queries of 50 BASE
-      // points on the base pin isolate a serving-config failure (pool
-      // degenerate at this n/d/lists) from an append-path failure
-      val basePin = GraphAnn.pinStore(GraphAnn.openGraph(spark, dir))
-      val baseQs = base.orderBy("id").limit(50)
-        .select(col("id"), col("embedding").cast("array<double>"))
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toSeq))
-      val baseSelf = baseQs.count { case (id, v) =>
-        basePin.knn(v, 1, 64).headOption.exists(_._1 == id) }
-      println(s"base self-recall@1: $baseSelf/50")
-      time(s"append($nAdds = $batchPct%)")(GraphAnn.appendGraph(spark, dir,
-        adds, "id", "embedding", ef = 64))
-      val pinned = time("open+pin")(GraphAnn.pinStore(
-        GraphAnn.openGraph(spark, dir)))
-      println(s"pinned ${pinned.size} nodes")
-      // recall spot: 50 appended points self-query + 50 base queries
-      val addQs = adds.orderBy("id").limit(50)
-        .select(col("id"), col("embedding").cast("array<double>"))
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toSeq))
-      val t0 = System.nanoTime()
-      val selfHits = addQs.count { case (id, v) =>
-        pinned.knn(v, 10, 64).exists(_._1 == id) }
-      println(f"append self-recall@10: $selfHits/50  (${(System.nanoTime() - t0) / 1e9 / 50}%.4f s/probe)")
-      // diagnose failures: in-degree of the missed node + deep-beam retry
-      val inDeg = scala.collection.mutable.LongMap.empty[Int]
-      pinned.nbrs.foreach { case (_, ns) =>
-        ns.foreach(m => inDeg.update(m, inDeg.getOrElse(m, 0) + 1)) }
-      addQs.foreach { case (id, v) =>
-        if (!pinned.knn(v, 10, 64).exists(_._1 == id)) {
-          val deep = pinned.knn(v, 10, 512).exists(_._1 == id)
-          val holders = pinned.nbrs.iterator
-            .filter(_._2.contains(id)).map(_._1).toSeq
-          val pool = pinned.knn(v, 64, 64).map(_._1)
-          val hInfo = holders.map { h =>
-            val hd = f"${math.sqrt(v.zip(pinned.vecs(h).map(_.toDouble)).map(t => (t._1 - t._2) * (t._1 - t._2)).sum)}%.3f"
-            s"$h(d=$hd rank=${pool.indexOf(h)})"
-          }.mkString(",")
-          val drv = basePin.knn(v, 64, 64).take(3)
-            .map(t => f"${t._1}:${t._2}%.3f").mkString(",")
-          println(s"  MISS id=$id inDeg=${inDeg.getOrElse(id, 0)} " +
-            s"outDeg=${pinned.nbrs.getOrElse(id, Array.empty[Long]).length} " +
-            s"deepBeam512=$deep holders=$hInfo driverPool3=$drv " +
-            s"storedNbrs=${pinned.nbrs.getOrElse(id, Array.empty[Long]).mkString(",")}")
-        }
-      }
-      val doomed = all.filter(col("id") % lists === 7).select("id")
-        .as[Long](org.apache.spark.sql.Encoders.scalaLong).collect()
-      time(s"remove(${doomed.length})")(GraphAnn.removeGraph(spark, dir,
-        doomed.toSeq))
-      println(s"tombstones after remove: " +
-        s"${GraphAnn.openGraph(spark, dir).tombstones.length}")
-      val pinT = GraphAnn.pinStore(GraphAnn.openGraph(spark, dir))
-      val dset = doomed.toSet
-      val leak = addQs.count { case (_, v) =>
-        pinT.knn(v, 10, 64).exists(t => dset(t._1)) }
-      println(s"tombstone leak check: $leak/50 probes returned doomed ids (want 0)")
-      time("consolidate")(GraphAnn.consolidateGraph(spark, dir))
-      val after = GraphAnn.openGraph(spark, dir)
-      println(s"rows after consolidate: ${after.rows.count()} " +
-        s"(expected ${n - doomed.length}), tombstones ${after.tombstones.length}")
-      println(s"store dir: $dir")
-      println("doomed sample: " + doomed.take(5).mkString(","))
-      println("doomed still present: " + after.rows
-        .filter(col("id").isInCollection(doomed.toSet)).count())
-      spark.stop(); return
-    }
-    if (name == "graphmaint-dist") {
-      // graphmaint's DE-PINNED twin — the 100 TB-shape headline probe
-      // (judge r14 #6): same clustered n x d corpus, but serving and
-      // maintenance run the DISTRIBUTED paths end to end — batched
-      // graphKnnDistributed for every recall/latency read,
-      // appendGraphDistributed for the insert — so the driver never
-      // holds the (id, vec, nbrs) relation (the pin at 10M x 96 + R24
-      // is ~7 GB; this mode's driver state is the frontier's gb values
-      // and the bounded orphan-repair collects).
-      // Args: n d [batchPct] [listDiv] — lists = n/listDiv: the build's
-      // candidate volume is nprobe·N·listDiv, so listDiv is the
-      // build-cost/edge-quality knob (1000 = the gate default; 250
-      // keeps the 10M build inside an hour at 500 candidates/point)
-      import org.apache.spark.sql.functions._
-      import graft.operators._
-      val nums = args.drop(1).filter(_.forall(_.isDigit))
-      val n = nums.headOption.map(_.toLong).getOrElse(1000000L)
-      val d = nums.lift(1).map(_.toInt).getOrElse(96)
-      val batchPct = nums.lift(2).map(_.toInt).getOrElse(1)
-      val listDiv = nums.lift(3).map(_.toInt).getOrElse(1000)
-      val lists = math.max(64, (n / listDiv).toInt)
-      val centers = graft.sources.Ingest.randomUniform(spark, lists, d, seed = 7L)
-        .select(col("id").as("cid"), col("vector").as("cvec"))
-      val all = graft.sources.Ingest.randomUniform(spark, n, d)
-        .withColumn("cid", col("id") % lists)
-        .join(broadcast(centers), "cid")
-        .select(col("id"), expr(
-          "CAST(zip_with(vector, cvec, (a, b) -> a * 0.15D + b) AS ARRAY<FLOAT>)")
-          .as("embedding"))
-        .localCheckpoint()
-      val base = all.filter(col("id") % 97 >= batchPct)
-      val adds = all.filter(col("id") % 97 < batchPct).localCheckpoint()
-      val nAdds = adds.count()
-      // SPARK_GRAFT_DIST_DIR reuses an already-built store (resume a
-      // long probe after an interrupted maintenance phase — the store
-      // write is atomic-per-phase, so a kill during append leaves the
-      // built store intact); build + base-recall are skipped
-      val reuse = sys.env.get("SPARK_GRAFT_DIST_DIR").filter(_.nonEmpty)
-      val dir = reuse.getOrElse(java.nio.file.Files
-        .createTempDirectory("graphmaintd").resolve("g").toString)
-      def time[T](label: String)(f: => T): T = {
-        val t0 = System.nanoTime()
-        val r = f
-        println(f"$label%-26s ${(System.nanoTime() - t0) / 1e9}%8.1f s")
-        r
-      }
-      // buckets sized so one gb partition is ~n/1024 rows (the
-      // corpus-scale contract: thousands of buckets at 100 TB)
-      val buckets = math.max(64, (n / 10000).toInt)
-      def recallBatch(store: GraphAnn.GraphStore, qs: org.apache.spark.sql.DataFrame,
-                      label: String): Unit = {
-        val nq = qs.count()
-        val t0 = System.nanoTime()
-        val hits = GraphAnn.graphKnnDistributed(store, qs, "qid", "qv",
-            k = 10, ef = 64)
-          .filter(col("qid") === col("id")).count()
-        val s = (System.nanoTime() - t0) / 1e9
-        println(f"$label self-recall@10: $hits/$nq  (${s / math.max(nq, 1)}%.4f s/probe batched, $s%.1f s total)")
-      }
-      if (reuse.isEmpty) {
-        // MERGED per-list build (buildMerged): the flat build's two
-        // corpus-wide vector shuffles (~200 GB transient at 10M×96×k12)
-        // exceed this box's disk; the merged build shuffles vectors once
-        // (nprobe·N rows) and prunes inside each list partition
-        time(s"build+write($n x $d, merged)")(GraphAnn.buildAndWriteMerged(
-          base, "id", "embedding", numLists = lists, nprobe = 2, k = 12,
-          alpha = 1.2, maxDegree = 24, path = dir, buckets = buckets))
-        val st0 = GraphAnn.openGraph(spark, dir)
-        recallBatch(st0, base.orderBy("id").limit(50)
-          .select(col("id").as("qid"), col("embedding").as("qv")), "base")
-      } else println(s"reusing store: $dir")
-      time(s"append-dist($nAdds = $batchPct%)")(
-        GraphAnn.appendGraphDistributed(spark, dir, adds, "id",
-          "embedding", ef = 64))
-      val st1 = GraphAnn.openGraph(spark, dir)
-      recallBatch(st1, adds.orderBy("id").limit(50)
-        .select(col("id").as("qid"), col("embedding").as("qv")), "append")
-      val doomed = all.filter(col("id") % lists === 7).select("id")
-        .as[Long](org.apache.spark.sql.Encoders.scalaLong).collect()
-      time(s"remove(${doomed.length})")(GraphAnn.removeGraph(spark, dir,
-        doomed.toSeq))
-      val st2 = GraphAnn.openGraph(spark, dir)
-      val dset = doomed.toSet
-      val leak = GraphAnn.graphKnnDistributed(st2,
-          adds.orderBy("id").limit(50)
-            .select(col("id").as("qid"), col("embedding").as("qv")),
-          "qid", "qv", k = 10, ef = 64)
-        .filter(col("id").isInCollection(dset)).count()
-      println(s"tombstone leak check: $leak result rows doomed (want 0)")
-      time("consolidate")(GraphAnn.consolidateGraph(spark, dir))
-      val after = GraphAnn.openGraph(spark, dir)
-      println(s"rows after consolidate: ${after.rows.count()} " +
-        s"(expected ${n - doomed.length}), tombstones ${after.tombstones.length}")
-      spark.stop(); return
-    }
-    if (name == "mergedprof") {
-      // 10M x 96 merged-build stage decomposition (judge r15 #2): the
-      // same clustered corpus as graphmaint-dist, buildAndWriteMerged
-      // run with the stageProbe hook — every stage boundary FORCED and
-      // its wall time appended to /tmp/graft_mergedprof.log AS IT
-      // COMPLETES (the r15 per-stage print died with a killed pipe; a
-      // flushed file survives the driver). Args: n d [listDiv] [k] —
-      // k=0 runs the route+shuffle+member-sort skeleton with the
-      // within-list kNN/prune short-circuited (kk=0 emits no edges),
-      // so (k=12 run) - (k=0 run) isolates the local kNN+prune CPU
-      // from the list-shuffle cost at the same N.
-      import org.apache.spark.sql.functions._
-      import graft.operators._
-      val nums = args.drop(1).filter(_.forall(_.isDigit))
-      val n = nums.headOption.map(_.toLong).getOrElse(2000000L)
-      val d = nums.lift(1).map(_.toInt).getOrElse(96)
-      val listDiv = nums.lift(2).map(_.toInt).getOrElse(250)
-      val kk = nums.lift(3).map(_.toInt).getOrElse(12)
-      val lists = math.max(64, (n / listDiv).toInt)
-      val log = java.nio.file.Paths.get("/tmp/graft_mergedprof.log")
-      def emit(line: String): Unit = {
-        println(line)
-        java.nio.file.Files.write(log, (line + "\n").getBytes("UTF-8"),
-          java.nio.file.StandardOpenOption.CREATE,
-          java.nio.file.StandardOpenOption.APPEND)
-      }
-      emit(s"=== mergedprof n=$n d=$d lists=$lists (div=$listDiv) k=$kk " +
-        s"nprobe=2 maxDegree=24 cpus=$cpus ===")
-      val centers = graft.sources.Ingest.randomUniform(spark, lists, d, seed = 7L)
-        .select(col("id").as("cid"), col("vector").as("cvec"))
-      val all = graft.sources.Ingest.randomUniform(spark, n, d)
-        .withColumn("cid", col("id") % lists)
-        .join(broadcast(centers), "cid")
-        .select(col("id"), expr(
-          "CAST(zip_with(vector, cvec, (a, b) -> a * 0.15D + b) AS ARRAY<FLOAT>)")
-          .as("embedding"))
-        .localCheckpoint()
-      val dir = java.nio.file.Files
-        .createTempDirectory("mergedprof").resolve("g").toString
-      val buckets = math.max(64, (n / 10000).toInt)
-      val t0 = System.nanoTime()
-      GraphAnn.buildAndWriteMerged(all, "id", "embedding",
-        numLists = lists, nprobe = 2, k = kk, alpha = 1.2, maxDegree = 24,
-        path = dir, buckets = buckets,
-        stageProbe = Some((l, sec) => emit(f"  $l%-45s $sec%9.1f s")))
-      emit(f"  TOTAL build+write ${(System.nanoTime() - t0) / 1e9}%9.1f s")
-      spark.stop(); return
-    }
-    if (name == "knnkernel") {
-      // Single-JVM A/B of the merged-build within-list kNN kernel
-      // (judge r16 #3): the box runs CPU-bound stages with run-to-run
-      // swings of 1.5–3x, so build-level A/Bs of a kernel change are
-      // noise-dominated — this times the r16 single-chain kernel and
-      // the r17 flat four-lane kernel over the SAME lists, alternating
-      // reps in one process, and cross-checks the neighbour sets.
-      // Args: m d lists reps — default 500 96 64 5 (the 10M contract
-      // grain: 500-member lists at d=96).
-      val nums = args.drop(1).filter(a => a.nonEmpty && a.forall(_.isDigit))
-        .map(_.toInt)
-      val m = nums.headOption.getOrElse(500)
-      val d = nums.lift(1).getOrElse(96)
-      val nLists = nums.lift(2).getOrElse(64)
-      val reps = nums.lift(3).getOrElse(5)
-      val kk = 12
-      val rng = new scala.util.Random(17L)
-      // clustered like mergedprof: center + 0.15-scaled uniform noise
-      val listsData = Array.fill(nLists) {
-        val center = Array.fill(d)(rng.nextFloat())
-        val flat = new Array[Float](m * d)
-        var x = 0
-        while (x < flat.length) {
-          flat(x) = center(x % d) + rng.nextFloat() * 0.15f; x += 1
-        }
-        flat
-      }
-      // the r16 kernel: per-row boxed vectors, ONE accumulator chain,
-      // same 16-dim-block early exit (verbatim measurement twin of the
-      // pre-r17 flatMapGroups body)
-      def oldKernel(rows: Array[Array[Float]]): (Array[Array[Double]], Array[Array[Int]]) = {
-        val mm = rows.length
-        val nbrD = Array.ofDim[Double](mm, kk)
-        val nbrI = Array.ofDim[Int](mm, kk)
-        var i = 0
-        while (i < mm) { java.util.Arrays.fill(nbrD(i), Double.PositiveInfinity); i += 1 }
-        i = 0
-        while (i < mm) {
-          val vi = rows(i)
-          val bdI = nbrD(i)
-          var j = i + 1
-          while (j < mm) {
-            val vj = rows(j)
-            val cut = math.max(bdI(kk - 1), nbrD(j)(kk - 1))
-            var bail = false
-            var acc = 0d
-            if (cut == Double.PositiveInfinity) {
-              var x = 0
-              while (x < vi.length) {
-                val df = vi(x).toDouble - vj(x); acc += df * df; x += 1
-              }
-            } else {
-              val cut2 = cut * cut
-              val lim = cut2 + 4 * math.ulp(cut2)
-              var x = 0
-              val len = vi.length
-              while (x < len && !bail) {
-                val end = math.min(x + 16, len)
-                while (x < end) {
-                  val df = vi(x).toDouble - vj(x); acc += df * df; x += 1
-                }
-                if (acc > lim) bail = true
-              }
-            }
-            if (!bail) {
-              val dd = math.sqrt(acc)
-              def insert(row: Int, cand: Int): Unit = {
-                val bd = nbrD(row); val bi = nbrI(row)
-                if (dd < bd(kk - 1)) {
-                  var p = kk - 1
-                  while (p > 0 && dd < bd(p - 1)) { bd(p) = bd(p - 1); bi(p) = bi(p - 1); p -= 1 }
-                  bd(p) = dd; bi(p) = cand
-                }
-              }
-              insert(i, j); insert(j, i)
-            }
-            j += 1
-          }
-          i += 1
-        }
-        (nbrD, nbrI)
-      }
-      val rowsData = listsData.map { flat =>
-        Array.tabulate(m)(r => java.util.Arrays.copyOfRange(flat, r * d, (r + 1) * d))
-      }
-      // warmup both paths (JIT)
-      oldKernel(rowsData(0)); graft.operators.GraphAnn.listKnn(listsData(0), d, m, kk)
-      var oldBest = Double.MaxValue; var newBest = Double.MaxValue
-      for (rep <- 1 to reps) {
-        val t0 = System.nanoTime()
-        var l = 0
-        while (l < nLists) { oldKernel(rowsData(l)); l += 1 }
-        val tOld = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        l = 0
-        while (l < nLists) {
-          graft.operators.GraphAnn.listKnn(listsData(l), d, m, kk); l += 1
-        }
-        val tNew = (System.nanoTime() - t1) / 1e9
-        oldBest = math.min(oldBest, tOld); newBest = math.min(newBest, tNew)
-        println(f"rep $rep: old $tOld%7.3f s  new $tNew%7.3f s  (${tOld / tNew}%4.2fx)")
-      }
-      // neighbour-set agreement (indices may differ only at FP near-
-      // ties where the lane fold rounds differently): report, not assert
-      var same = 0; var diff = 0
-      for (l <- 0 until math.min(nLists, 8)) {
-        val (_, oi) = oldKernel(rowsData(l))
-        val (_, ni) = graft.operators.GraphAnn.listKnn(listsData(l), d, m, kk)
-        for (r <- 0 until m) {
-          val nr = java.util.Arrays.copyOfRange(ni, r * kk, (r + 1) * kk)
-          if (java.util.Arrays.equals(oi(r), nr)) same += 1 else diff += 1
-        }
-      }
-      println(f"best: old $oldBest%7.3f s  new $newBest%7.3f s  " +
-        f"speedup ${oldBest / newBest}%4.2fx  " +
-        f"nbr-set agreement $same/${same + diff}")
-      spark.stop(); return
-    }
-    if (name == "seedbench") {
-      // seed-init growth probe (judge r15 #1): time graphKnnDistributed's
-      // INIT shape — Q queries x C seeds exact top-m — as (a) the
-      // round-16 chunked join + top_m_by_dist aggregate (no O(C·d)
-      // driver term) vs (b) the r15 constant-table kernel (collect +
-      // NearestTopIdsExpr projection), at growing C. Args: d q m
-      // followed by any number of C values.
-      import org.apache.spark.sql.functions._
-      val nums = args.drop(1).filter(_.forall(_.isDigit)).map(_.toInt)
-      val d = nums.headOption.getOrElse(96)
-      val qn = nums.lift(1).getOrElse(10000)
-      val m = nums.lift(2).getOrElse(64)
-      val cs: Seq[Int] =
-        if (nums.length > 3) nums.drop(3).toSeq else Seq(10000, 40000, 100000)
-      val qs = graft.sources.Ingest.randomUniform(spark, qn, d, seed = 3L)
-        .select(col("id").as("qid"),
-          expr("CAST(vector AS ARRAY<DOUBLE>)").as("qv"))
-        .localCheckpoint()
-      args.find(_.startsWith("fb=")).foreach(f => spark.conf.set(
-        "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        f.drop(3)))
-      import graft.functions.VectorFunctions.dist
-      for (c <- cs) {
-        val seeds = graft.sources.Ingest.randomUniform(spark, c, d, seed = 11L)
-          .select(col("id"), expr("CAST(vector AS ARRAY<DOUBLE>)").as("vec"))
-          .localCheckpoint()
-        // (a) chunked join + bounded aggregate — the shipped init shape
-        var t0 = System.nanoTime()
-        val p = math.max(1, (c + 8191) / 8192)
-        val qb = 32
-        val qsC = qs
-          .withColumn("_qb", pmod(col("qid"), lit(qb.toLong)).cast("int"))
-          .withColumn("_sc", explode(array((0 until p).map(lit): _*)))
-        val seedC = seeds
-          .withColumn("_sc", pmod(col("id"), lit(p.toLong)).cast("int"))
-          .withColumn("_qb", explode(array((0 until qb).map(lit): _*)))
-        val aggRows = qsC.join(seedC, Seq("_sc", "_qb"))
-          .select(col("qid"), col("id"), dist(col("vec"), col("qv")).as("dist"))
-          .groupBy(col("qid"))
-          .agg(graft.functions.TopMByDist.topM(col("id"), col("dist"), m).as("t"))
-          .select(col("qid"), explode(col("t")).as("s")).count()
-        val ta = (System.nanoTime() - t0) / 1e9
-        // (b) the r15 form: O(C·d) collect + constant-table kernel
-        t0 = System.nanoTime()
-        val table = seeds.collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-        val kernRows = qs.select(col("qid"), col("qv"),
-            explode(graft.functions.NearestExpr.nearestTopIds(
-              col("qv"), table, m, sqrtCompare = true)).as("id"))
-          .join(broadcast(seeds), Seq("id"))
-          .select(col("qid"), col("id"), dist(col("vec"), col("qv")).as("dist"))
-          .count()
-        val tb = (System.nanoTime() - t0) / 1e9
-        println(f"C=$c%7d Q=$qn m=$m d=$d  agg-join $ta%7.1f s ($aggRows rows)" +
-          f"  collect+kernel $tb%7.1f s ($kernRows rows)  driver-bytes-old=${c.toLong * d * 8}%d")
-      }
-      spark.stop(); return
-    }
-    if (name == "knngrowth") {
-      // a25 gate-shape growth row (judge r15 watch #4): knnGraph's
-      // candidate volume is nprobe·N·(N/C), so under the production
-      // C ∝ N contract (fixed rows/list) the operator is LINEAR in N —
-      // the gate's fixed C=64 is a density stand-in, not the scaling
-      // story. Doubling N with C = N/listDiv should double wall time,
-      // not quadruple it. Args: d listDiv followed by N values.
-      import org.apache.spark.sql.functions._
-      import graft.operators.GraphAnn
-      val nums = args.drop(1).filter(a => a.nonEmpty && a.forall(_.isDigit))
-        .map(_.toInt)
-      val d = nums.headOption.getOrElse(16)
-      val listDiv = nums.lift(1).getOrElse(250)
-      val ns: Seq[Int] =
-        if (nums.length > 2) nums.drop(2).toSeq
-        else Seq(50000, 100000, 200000)
-      val nMin = ns.min
-      for ((n, i) <- ns.zipWithIndex) {
-        val c = math.max(16, n / listDiv)
-        val e = graft.sources.Ingest.randomUniform(spark, n, d, seed = 5L)
-          .select(col("id").as("vec_id"),
-            expr("CAST(vector AS ARRAY<FLOAT>)").as("embedding"))
-          .localCheckpoint()
-        // warmup once, at the smallest point regardless of arg order
-        // (JIT + codegen settle)
-        if (i == 0) {
-          val ew = if (n == nMin) e
-            else graft.sources.Ingest.randomUniform(spark, nMin, d, seed = 5L)
-              .select(col("id").as("vec_id"),
-                expr("CAST(vector AS ARRAY<FLOAT>)").as("embedding"))
-          GraphAnn.knnGraph(ew, "vec_id", "embedding",
-            numLists = math.max(16, nMin / listDiv), nprobe = 2, k = 4,
-            iters = 0).count()
-        }
-        val t0 = System.nanoTime()
-        val rows = GraphAnn.knnGraph(e, "vec_id", "embedding",
-          numLists = c, nprobe = 2, k = 4, iters = 0).count()
-        println(f"N=$n%8d C=$c%6d (rows/list≈$listDiv)  " +
-          f"${(System.nanoTime() - t0) / 1e9}%7.1f s  ($rows edges)")
-      }
-      spark.stop(); return
-    }
-    if (name == "d33growth") {
-      // d33 scale row (judge r16 #2 "Done" criteria): probe cost of
-      // semanticDecontamStore for a FIXED training batch under a 10×
-      // eval set, vs the d32 broadcast sweep whose per-row cost is
-      // O(E·d) by construction. Eval is CLUSTERED (256 true centers +
-      // small noise — the geometry real benchmark suites have; a
-      // structureless uniform eval set admits every list and nothing
-      // can beat the linear sweep), C ∝ √E balances the bound-scan
-      // term against members-per-list. Args: d trainN followed by E
-      // values. Three reps per point, min taken (quiet-box protocol).
-      import org.apache.spark.sql.functions._
-      import graft.operators.Dedup
-      val nums = args.drop(1).filter(a => a.nonEmpty && a.forall(_.isDigit))
-        .map(_.toInt)
-      val d = nums.headOption.getOrElse(64)
-      val trainN = nums.lift(1).getOrElse(200000)
-      val es: Seq[Int] =
-        if (nums.length > 2) nums.drop(2).toSeq else Seq(10000, 100000)
-      val train = graft.sources.Ingest.randomUniform(spark, trainN, d, seed = 3L)
-        .select(col("id").as("vec_id"),
-          expr("CAST(vector AS ARRAY<FLOAT>)").as("embedding"))
-        .localCheckpoint()
-      val centers = graft.sources.Ingest.randomUniform(spark, 256, d, seed = 13L)
-        .select(col("id").as("cid"), col("vector").as("cvec"))
-      // uniform-positive unit vectors sit at cos ~0.75 of each other;
-      // 0.9 keeps contamination a sparse tail, like a real decontam run
-      val tau = 0.9
-      for (e <- es) {
-        val c = math.max(16, 4 * math.sqrt(e.toDouble).toInt)
-        val evalDf = graft.sources.Ingest.randomUniform(spark, e, d, seed = 11L)
-          .select((col("id") + 5000000L).as("vec_id"),
-            pmod(col("id"), lit(256L)).as("cid"), col("vector").as("nvec"))
+
+  /** ANN quality curves: recall@10 against brute force, and warm probe
+    * latency, for every ANN family on n x d synthetic vectors. Queries
+    * are dataset vectors (stride-sampled ids), so ground truth is
+    * well-defined and the distributions match. `clustered` plants the
+    * points around 1000 uniform centers (noise scale 0.15), the regime
+    * where neighbours are real; the uniform default is the adversarial
+    * one (at 64 dimensions distances concentrate and nearest neighbours
+    * are near-arbitrary). `graph` adds the graph-ANN arm, whose build is
+    * a corpus x corpus bucketed kNN join. */
+  private def recallBench(spark: SparkSession, nums: Seq[String],
+                          clustered: Boolean, graph: Boolean): Unit = {
+    val n = nums.headOption.map(_.toLong).getOrElse(1000000L)
+    val d = nums.lift(1).map(_.toInt).getOrElse(64)
+    val nq = nums.lift(2).map(_.toInt).getOrElse(20)
+    val kTop = 10
+    val base = graft.sources.Ingest.randomUniform(spark, n, d)
+    val pts0 =
+      if (!clustered) base
+      else {
+        val cNum = 1000
+        val centers = graft.sources.Ingest
+          .randomUniform(spark, cNum, d, seed = 99L)
+          .select(col("id").as("cid"), col("vector").as("cvec"))
+        base.withColumn("cid", col("id") % cNum)
           .join(broadcast(centers), "cid")
-          .select(col("vec_id"),
-            expr("CAST(zip_with(cvec, nvec, (cx, nx) -> cx + 0.1 * (nx - 0.5)) AS ARRAY<FLOAT>)")
-              .as("embedding"))
-        val dir = s"/tmp/graft_d33growth_${d}_${e}/store"
+          .select(col("id"), zip_with(col("vector"), col("cvec"),
+            (a, b) => (a * lit(0.15d) + b).cast("float")).as("vector"))
+      }
+    val tag = if (clustered) "c" else "u"
+    val pts = pts0.withColumnRenamed("vector", "embedding").localCheckpoint()
+    val queries: Seq[(Long, Seq[Double])] = pts
+      .filter(col("id") % lit(n / nq) === 7)
+      .orderBy(col("id")).limit(nq)
+      .select(col("id"), col("embedding").cast("array<double>"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
+    println(s"n=$n d=$d queries=${queries.size} k=$kTop")
+    val truth: Map[Long, Set[Long]] = queries.map { case (qid, q) =>
+      qid -> BruteForce.knn(pts, "embedding", "id", q, kTop)
+        .select("id").collect().map(_.getLong(0)).toSet
+    }.toMap
+    val planes = Similarity.hyperplanes(8, d)
+    val lshPath = s"/tmp/graft-recall-lsh-$n-$d-$tag"
+    val ivfPath = s"/tmp/graft-recall-ivf-$n-$d-$tag"
+    val pqPath = s"/tmp/graft-recall-pq-$n-$d-$tag"
+    val ivfpqPath = s"/tmp/graft-recall-ivfpq-$n-$d-$tag"
+    // stores are deterministic functions of (n, d, dataset tag): reuse
+    // them across runs so probe-only sweeps don't pay the writes
+    def ensure(path: String)(write: => Unit): Unit =
+      if (!new java.io.File(path + "/_SUCCESS").exists) write
+    ensure(lshPath)(
+      Similarity.writeBucketed(pts, "id", "embedding", planes, lshPath))
+    ensure(ivfPath)(
+      Similarity.writeIvf(pts, "id", "embedding", 256, ivfPath))
+    ensure(pqPath)(
+      ProductQuant.writePq(pts, "id", "embedding", 8, 16, 1, pqPath))
+    ensure(ivfpqPath)(
+      IvfPq.write(pts, "id", "embedding", 256, coarseIters = 2,
+        m = 8, k = 16, pqIters = 1, path = ivfpqPath))
+    def measure(label: String)(probe: Seq[Double] => DataFrame): Unit = {
+      // warm once (plan + codegen), then one timed probe per query
+      probe(queries.head._2).select("id").collect()
+      var hits = 0L; var secs = 0.0
+      queries.foreach { case (qid, q) =>
         val t0 = System.nanoTime()
-        Dedup.writeEvalStore(evalDf, "vec_id", "embedding", c, dir)
-        val tw = (System.nanoTime() - t0) / 1e9
-        val store = Dedup.openEvalStore(spark, dir)
-        def rep(f: => Long): Double = (1 to 3).map { _ =>
-          val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9
-        }.min
-        val tStore = rep(Dedup.semanticDecontamStore(
-          train, "vec_id", "embedding", store, tau).count())
-        val nStore = Dedup.semanticDecontamStore(
-          train, "vec_id", "embedding", store, tau).count()
-        val tBcast = rep(Dedup.semanticDecontam(
-          train, "vec_id", "embedding",
-          evalDf.select("embedding"), "embedding", tau).count())
-        println(f"E=$e%8d C=$c%6d  " +
-          f"store-probe $tStore%7.2f s  broadcast-sweep $tBcast%7.2f s  " +
-          f"(write $tw%6.1f s, survivors $nStore)")
+        val got = probe(q).select("id").collect().map(_.getLong(0)).toSet
+        secs += (System.nanoTime() - t0) / 1e9
+        hits += got.intersect(truth(qid)).size
       }
-      spark.stop(); return
+      val recall = hits.toDouble / (queries.size * kTop)
+      println(f"$label%-34s recall@10 ${recall}%6.3f   ${secs / queries.size}%7.3f s/probe")
     }
-    if (name == "pprprof") {
-      // q32 round-cost decomposition (judge r14 #7): time
-      // pageRankPersonalized at iterations 0..5 on the staged trade
-      // graph and fit t(i) = fixed + perRound·i — evidence for (or
-      // against) the iteration-bound reading of the sf1 53.8 s mark.
-      // iterations=0 measures the fixed part alone: edge cache build
-      // (distinct + window outdeg + repartition), node relation, seed
-      // join. Three reps per point, min taken (quiet-box protocol).
-      import org.apache.spark.sql.functions._
-      import graft.operators.Graphs
-      val pairs = Tables.lineitem(spark, sfDir)
-        .join(Tables.orders(spark, sfDir),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("l_suppkey") * 2).as("sn"),
-          (col("o_custkey") * 2 + 1).as("cn"))
-        .distinct()
-      val edges = pairs.select(col("sn").as("src"), col("cn").as("dst"))
-        .unionAll(pairs.select(col("cn").as("src"), col("sn").as("dst")))
-        .localCheckpoint()
-      println(s"edges: ${edges.count()}")
-      val seeds = spark.range(3).select((col("id") * 2).as("node"))
-      for (iters <- Seq(0, 1, 2, 3, 5); rep <- 1 to 3) {
-        val t0 = System.nanoTime()
-        val n = Graphs.pageRankPersonalized(edges, seeds,
-          iterations = iters).count()
-        println(f"iters=$iters rep=$rep  ${(System.nanoTime() - t0) / 1e9}%6.2f s  ($n nodes)")
-      }
-      spark.stop(); return
-    }
-    if (name == "p15prof") {
-      // stage timing of the p15 exact-path curation at sfDir
-      import org.apache.spark.sql.functions._
-      import graft.operators.{Dedup, Pipeline}
-      def time(label: String)(f: => Long): Unit = {
-        val t0 = System.nanoTime()
-        val n = f
-        println(f"$label%-18s ${(System.nanoTime() - t0) / 1e9}%6.2f s  ($n rows)")
-      }
-      for (r <- 1 to 2) {
-        println(s"--- rep $r ---")
-        val docs = Tables.documents(spark, sfDir)
-        val ek = Pipeline.exactDedup(docs, "doc_id", "text")
-        time("exactDedup")(ek.count())
-        val pairs = Dedup.ngramJaccardPrefixPairs(ek, "doc_id", "text", 3, 0.6)
-          .select(col("a"), col("b"))
-        time("pairs")(pairs.count())
-        time("curateWith") {
-          Pipeline.curateWith(docs, "doc_id", "text", pairs,
-            evalDocs = Some(docs.filter(col("doc_id") % 23 === 0)),
-            decontamK = 8,
-            domainCol = Some("lang"),
-            rebalanceTargets = QueryConstants.RebalanceTargets).count()
-        }
-      }
-      spark.stop(); return
-    }
-    if (name == "pipedebug") {
-      // stage-count probe for the pipebench corpus: where do the rows go?
-      import org.apache.spark.sql.functions._
-      import graft.operators.{Dedup, Pipeline, TextOps}
-      val sfd = args.drop(1).find(_.startsWith("/"))
-        .getOrElse("/root/testdata/sf0.01")
-      val mult = args.drop(1).find(a => a.nonEmpty && a.forall(_.isDigit))
-        .map(_.toInt).getOrElse(10)
-      val docs1 = Tables.documents(spark, sfd)
-        .select("doc_id", "lang", "text").localCheckpoint()
-      val d = (0 until mult).map { c =>
-        val shuffled =
-          if (c == 0) col("text")
-          else expr(s"""concat_ws(' ', transform(
-            array_sort(transform(split(text, '\\s+'),
-              t -> struct(md5(concat(t, '$c')) AS h, t AS t))),
-            s -> s.t))""")
-        docs1.select((col("doc_id") + lit(c * 10000000L)).as("doc_id"),
-          col("lang"), shuffled.as("text"))
-      }.reduce(_ unionByName _).localCheckpoint()
-      println(s"docs: ${d.count()}")
-      val ek = Pipeline.exactDedup(d, "doc_id", "text").localCheckpoint()
-      println(s"exactDedup: ${ek.count()}")
-      val pairs = Dedup.ngramJaccardPrefixPairs(ek, "doc_id", "text", 3, 0.6)
-        .select(col("a"), col("b")).localCheckpoint()
-      println(s"pairs: ${pairs.count()}")
-      val clusters = Dedup.clusterIds(pairs)
-      val dropped = clusters.filter(col("node") =!= col("cluster"))
-        .select(col("node").as("doc_id"))
-      val deduped = ek.join(dropped, Seq("doc_id"), "left_anti").localCheckpoint()
-      println(s"deduped: ${deduped.count()}")
-      // FIXED eval suite (batch-0 originals): benchmark eval sets do not
-      // grow with the training corpus — a growing eval slice makes
-      // decontamination remove everything (observed 4396 -> 7 at 10x)
-      val ev = docs1.filter(col("doc_id") % 23 === 0)
-      val clean = Dedup.decontaminate(deduped, ev, "doc_id", "text", 3, 1L)
-        .localCheckpoint()
-      println(s"decontaminated: ${clean.count()}")
-      val scored = clean.withColumn("quality",
-        TextOps.qualityScore(col("text"))).filter(col("quality") >= 0.5)
-        .localCheckpoint()
-      println(s"quality>=0.5: ${scored.count()}")
-      scored.groupBy("lang").count().orderBy("lang").show(50, false)
-      spark.stop(); return
-    }
-    if (name == "triebench") {
-      // TrieIndex growth probe (judge r11 #6): the per-partition trie
-      // vicinity join (v13's machinery) vs the brute broadcast scan at
-      // 1M and 10M × 64 float dims. Three readings per scale: brute
-      // anchor, trie with per-call build, and prepared tries probed
-      // warm (the serving shape — build amortized across batches).
-      // Queries are corpus members, so every probe has >= 1 true hit.
-      import org.apache.spark.sql.functions._
-      import graft.operators.{BruteForce, TrieIndex}
-      val dims = 64
-      val radius = 2.0
-      val sizes = args.drop(1).filter(a => a.nonEmpty && a.forall(_.isDigit))
-        .map(_.toLong) match {
-        case Array() => Seq(1000000L, 10000000L)
-        case xs => xs.toSeq
-      }
-      for (n <- sizes) {
-        val pts = graft.sources.Ingest.randomUniform(spark, n, dims)
-          .select(col("id").as("vec_id"),
-            col("vector").cast("array<float>").as("embedding"))
-          .repartition(32).localCheckpoint()
-        val queries = pts.filter(col("vec_id") < 5)
-          .collect().map(r => (r.getLong(0),
-            r.getSeq[Float](1).toArray))
-        def time(label: String)(thunk: => Long): Unit = {
-          val t0 = System.nanoTime()
-          val rows = thunk
-          println(f"$label%-26s n=$n%9d  ${(System.nanoTime() - t0) / 1e9}%8.2f s  ($rows pairs)")
-        }
-        val qdf = pts.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-        time("brute range join")(
-          BruteForce.distanceJoin(pts, "embedding",
-            broadcast(qdf), "qvec", radius).count())
-        time("trie searchJoin (build)")(
-          TrieIndex.searchJoin(pts, "vec_id", "embedding",
-            queries, radius, listThreshold = 10).count())
-        val tries = TrieIndex.prepare(pts, "vec_id", "embedding",
-          listThreshold = 10)
-        tries.count() // materialize the cached tries (the build cost)
-        for (run <- 1 to 3)
-          time(s"trie prepared probe $run")(
-            TrieIndex.searchJoinPrepared(pts, "vec_id", tries,
-              queries, radius).count())
-        tries.unpersist()
-      }
-      spark.stop(); return
-    }
-    if (name == "shinglebench") {
-      // shingling kernel probe: the (doc, shingle) relation underlies
-      // every text-dedup query — time the full tokenize+shingle+explode
-      // pass on a 10x corpus
-      import org.apache.spark.sql.functions._
-      import graft.operators.Dedup
-      val docs0 = Tables.documents(spark, sfDir).select("doc_id", "text")
-      val docs = (0 until 10).map { c =>
-        docs0.select((col("doc_id") + lit(c * 10000000L)).as("doc_id"),
-          col("text"))
-      }.reduce(_ unionByName _).localCheckpoint()
-      println(s"docs=${docs.count()}")
-      for (run <- 1 to 3) {
-        val t0 = System.nanoTime()
-        val n = docs
-          .select(col("doc_id"), Dedup.shinglesOf(
-            split(col("text"), "\\s+"), 3).as("sh"))
-          .select(explode(col("sh"))).count()
-        println(f"run $run: $n shingles in ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      }
-      spark.stop(); return
-    }
-    if (name == "rerankbench") {
-      // two-stage serving growth row (a22 vs a23 at synthetic scale):
-      // the full-corpus MaxSim scan is linear in n; the IVF-candidates
-      // → MaxSim re-rank pays the pruned probe + a CONSTANT 200-row
-      // re-rank, so its growth follows the probed-list fraction, not n
-      import org.apache.spark.sql.functions._
-      import graft.operators.{Retrieval, Similarity}
-      import graft.QueryConstants.Q64
-      val n = args.drop(1).find(_.forall(_.isDigit)).map(_.toLong)
-        .getOrElse(1000000L)
-      for (sz <- Seq(n / 10, n)) {
-        val pts = graft.sources.Ingest.randomUniform(spark, sz, 64)
-          .localCheckpoint()
-        def time(label: String)(thunk: => Long): Unit = {
-          val t0 = System.nanoTime()
-          val r = thunk
-          println(f"n=$sz%9d  $label%-24s ${(System.nanoTime() - t0) / 1e9}%6.2f s  ($r rows)")
-        }
-        time("warmup scan")(pts.count())
-        time("full maxsim scan")(
-          Retrieval.maxSim(pts, "id", "vector", Q64, 8, 10).count())
-        time("ivf cand + maxsim rerank")(
-          Retrieval.maxSim(
-            Similarity.ivfKnn(pts, "id", "vector", 256, 8, Q64, 200),
-            "id", "vector", Q64, 8, 10).count())
-      }
-      spark.stop(); return
-    }
-    if (name == "graphbench") {
-      // PageRank scale-growth probe: the q30 trade graph at 1x and at
-      // m disjoint copies (per-copy node suffix keeps the structure,
-      // multiplies nodes and edges by m). Per-iteration work is two
-      // keyed exchanges over the edge relation, so total time should
-      // grow ~linearly in |E| and stay FLAT per iteration count —
-      // the lineage-breaking checkpoint keeps the plan depth constant.
-      import org.apache.spark.sql.functions._
-      import graft.operators.Graphs
-      val mult = args.drop(1).find(a => a.nonEmpty && a.forall(_.isDigit))
-        .map(_.toInt).getOrElse(10)
-      val pairs = Tables.lineitem(spark, sfDir)
-        .join(Tables.orders(spark, sfDir),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("l_suppkey") * 2).as("sn"),
-          (col("o_custkey") * 2 + 1).as("cn"))
-        .distinct()
-      val base = pairs.select(col("sn").as("src"), col("cn").as("dst"))
-        .unionAll(pairs.select(col("cn").as("src"), col("sn").as("dst")))
-        .localCheckpoint()
-      def edgesAt(m: Int) =
-        if (m == 1) base
-        else (0 until m).map { c =>
-          base.select((col("src") + lit(c * 1000000000L)).as("src"),
-            (col("dst") + lit(c * 1000000000L)).as("dst"))
-        }.reduce(_ unionByName _).localCheckpoint()
-      def time(label: String, e: org.apache.spark.sql.DataFrame,
-               iters: Int): Double = {
-        val t0 = System.nanoTime()
-        val n = Graphs.pageRank(e, iterations = iters).count()
-        val s = (System.nanoTime() - t0) / 1e9
-        println(f"$label%-28s $s%8.2f s  ($n nodes)")
-        s
-      }
-      val e1 = edgesAt(1); val em = edgesAt(mult)
-      println(s"edges 1x=${e1.count()} ${mult}x=${em.count()}")
-      time("warmup 1it 1x", e1, 1) // JIT + broadcast infra, untimed row
-      val a = time("pagerank 5it 1x", e1, 5)
-      val b = time(s"pagerank 5it ${mult}x", em, 5)
-      val c = time("pagerank 10it 1x", e1, 10)
-      println(f"growth ${mult}x: x${b / a}%.2f  (iters 2x: x${c / a}%.2f)")
-      // q34 closure growth: the DISTRIBUTED min-label + pointer-jump
-      // connected components (localBudget = 0 forces past the local
-      // union-find) over the repeat-trade pair graph at 1x and m
-      // disjoint copies — rounds stay O(log n), per-round work should
-      // scale ~linearly in the pair count
-      import graft.operators.Dedup
-      val rp = Tables.lineitem(spark, sfDir)
-        .join(Tables.orders(spark, sfDir),
-          col("l_orderkey") === col("o_orderkey"))
-        .select((col("l_suppkey") * 2).as("a"),
-          (col("o_custkey") * 2 + 1).as("b"), col("l_orderkey"))
-        .groupBy(col("a"), col("b"))
-        .agg(countDistinct(col("l_orderkey")).as("n"))
-        .filter(col("n") >= 3).select(col("a"), col("b"))
-        .localCheckpoint()
-      def rpAt(m: Int) =
-        if (m == 1) rp
-        else (0 until m).map { cc =>
-          rp.select((col("a") + lit(cc * 1000000000L)).as("a"),
-            (col("b") + lit(cc * 1000000000L)).as("b"))
-        }.reduce(_ unionByName _).localCheckpoint()
-      def timeCc(label: String, p: org.apache.spark.sql.DataFrame): Double = {
-        val t0 = System.nanoTime()
-        val n = Dedup.clusterIds(p, localBudget = 0L).count()
-        val s = (System.nanoTime() - t0) / 1e9
-        println(f"$label%-28s $s%8.2f s  ($n nodes)")
-        s
-      }
-      println(s"repeat-trade pairs 1x=${rp.count()}")
-      val ca = timeCc("cc distributed 1x", rpAt(1))
-      val cb = timeCc(s"cc distributed ${mult}x", rpAt(mult))
-      println(f"cc growth ${mult}x: x${cb / ca}%.2f")
-      // q44 LPA growth: per round the work is one broadcast label join
-      // + two aggs reusing the edge partitioning, so time should be
-      // ~linear in |E| and ~linear in rounds (no closure shortcut —
-      // LPA's round count is part of the contract, not a convergence
-      // race)
-      def timeLpa(label: String, p: org.apache.spark.sql.DataFrame,
-                  iters: Int): Double = {
-        val t0 = System.nanoTime()
-        val n = Graphs.labelPropagation(p, iterations = iters).count()
-        val s = (System.nanoTime() - t0) / 1e9
-        println(f"$label%-28s $s%8.2f s  ($n nodes)")
-        s
-      }
-      val la = timeLpa("lpa 4it 1x", rpAt(1), 4)
-      val lb = timeLpa(s"lpa 4it ${mult}x", rpAt(mult), 4)
-      val lc = timeLpa("lpa 8it 1x", rpAt(1), 8)
-      println(f"lpa growth ${mult}x: x${lb / la}%.2f  (iters 2x: x${lc / la}%.2f)")
-      // q55 k-core growth, on the FULL trade pair graph (the repeat-
-      // trade subgraph's 3-core is empty at sf0.1): per peel round one
-      // endpoint-count exchange + two semi joins; disjoint copies
-      // preserve the cascade depth, so time should be ~linear in |E|
-      // at fixed rounds
-      val fp = pairs.select(col("sn").as("a"), col("cn").as("b"))
-        .localCheckpoint()
-      def fpAt(m: Int) =
-        if (m == 1) fp
-        else (0 until m).map { cc =>
-          fp.select((col("a") + lit(cc * 1000000000L)).as("a"),
-            (col("b") + lit(cc * 1000000000L)).as("b"))
-        }.reduce(_ unionByName _).localCheckpoint()
-      def timeKc(label: String, p: org.apache.spark.sql.DataFrame): Double = {
-        val t0 = System.nanoTime()
-        val n = Graphs.kCore(p, 3, 6).count()
-        val s = (System.nanoTime() - t0) / 1e9
-        println(f"$label%-28s $s%8.2f s  ($n nodes)")
-        s
-      }
-      println(s"full trade pairs 1x=${fp.count()}")
-      val ka = timeKc("kcore k3 1x", fpAt(1))
-      val kb = timeKc(s"kcore k3 ${mult}x", fpAt(mult))
-      println(f"kcore growth ${mult}x: x${kb / ka}%.2f")
-      spark.stop(); return
-    }
-    if (name == "probebench") {
-      // probe-table construction A/B at corpus-scale C: the pre-round-10
-      // Q×C LITERAL explode (C·dim doubles in the expression tree, every
-      // Catalyst pass walking them) vs the broadcast-RELATION join
-      // (probeListsJoin — centroids are broadcast data, plan is O(1) in
-      // C). Both compute the same Q×nprobe probe table; the literal form
-      // is reconstructed inline because the library no longer has it.
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.expressions.Window
-      import graft.functions.VectorFunctions.{dist, doubleVec}
-      import graft.operators.Similarity
-      val nums = args.drop(1).filter(_.forall(_.isDigit))
-      val d = nums.headOption.map(_.toInt).getOrElse(64)
-      val qn = nums.lift(1).map(_.toInt).getOrElse(64)
-      val nprobe = 4
-      val queries = graft.sources.Ingest
-        .randomUniform(spark, qn.toLong, d, seed = 9L)
-        .select(col("id").as("qid0"), col("vector").as("qv0"))
-        .localCheckpoint()
-      // the literal side is capped at 16384 unless "lit" is passed: at
-      // C=65536×d64 the 4.2M-literal expression tree OOMs the whole
-      // SparkContext (measured — that IS the cliff), which would kill
-      // the relation-side curve too
-      var litViable = true
-      val litCap = if (args.contains("lit")) Int.MaxValue else 16384
-      for (c <- Seq(4096, 16384, 65536, 262144)) {
-        if (c > litCap && litViable) {
-          litViable = false
-          println(s"literal  side capped at C=$litCap (OOMs the JVM beyond; pass 'lit' to force)")
-        }
-        val cents: Array[(Long, Array[Double])] = graft.sources.Ingest
-          .randomUniform(spark, c.toLong, d, seed = 5L)
-          .select(col("id"), col("vector").cast("array<double>"))
-          .collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-        val t0 = System.nanoTime()
-        val relRows = Similarity.probeListsJoin(queries, "qid0", "qv0",
-          Similarity.centroidRelation(spark, cents), nprobe).count()
-        println(f"relation C=$c%-7d ${(System.nanoTime() - t0) / 1e9}%8.2f s ($relRows rows)")
-        if (litViable) {
-          val t1 = System.nanoTime()
-          try {
-            val centStructs = array(cents.sortBy(_._1).map { case (lid, cv) =>
-              struct(lit(lid).as("list_id"), doubleVec(cv.toIndexedSeq).as("cv"))
-            }.toIndexedSeq: _*)
-            val litRows = queries
-              .select(col("qid0").cast("long").as("qid"),
-                col("qv0").cast("array<double>").as("qv"))
-              .withColumn("c", explode(centStructs))
-              .select(col("qid"), col("qv"), col("c.list_id").as("list_id"),
-                dist(col("qv"), col("c.cv")).as("cd"))
-              .withColumn("rn", row_number().over(
-                Window.partitionBy(col("qid")).orderBy(col("cd"), col("list_id"))))
-              .filter(col("rn") <= nprobe)
-              .count()
-            val dt = (System.nanoTime() - t1) / 1e9
-            println(f"literal  C=$c%-7d $dt%8.2f s ($litRows rows)")
-            if (litRows != relRows) println(s"MISMATCH: $litRows vs $relRows")
-            if (dt > 180) {
-              litViable = false
-              println("literal form past 180 s — skipping larger C")
-            }
-          } catch {
-            case e: Throwable =>
-              litViable = false
-              println(f"literal  C=$c%-7d FAILED after " +
-                f"${(System.nanoTime() - t1) / 1e9}%.1f s: " +
-                s"${e.getClass.getSimpleName} ${Option(e.getMessage).getOrElse("")}")
-          }
-        } else println(s"literal  C=$c SKIPPED (past the cliff at smaller C)")
-      }
-      spark.stop(); return
-    }
-    if (name == "routebench") {
-      // routed-assignment PREP cost at corpus-scale C: building the
-      // two-level routing tables is O(C·S·dim) — a serial driver loop
-      // by default, a Spark job via routeSpark (Similarity.routeCentroids).
-      // This measures both at the C where the serial loop stops being
-      // viable, and cross-checks the resulting assignments bit-for-bit.
-      import org.apache.spark.sql.functions._
-      import graft.operators.Similarity
-      val nums = args.drop(1).filter(_.forall(_.isDigit))
-      val d = nums.headOption.map(_.toInt).getOrElse(64)
-      val pts = graft.sources.Ingest.randomUniform(spark, 100000L, d)
-        .withColumnRenamed("vector", "embedding").localCheckpoint()
-      val cs = if (args.contains("big")) Seq(262144, 1048576)
-               else Seq(16384, 65536, 262144)
-      for (c <- cs) {
-        val cents: Array[(Long, Array[Double])] = graft.sources.Ingest
-          .randomUniform(spark, c.toLong, d, seed = 5L)
-          .select(col("id"), col("vector").cast("array<double>"))
-          .collect()
-          .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-        def prep(label: String,
-                 mk: () => org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-          val t0 = System.nanoTime()
-          val col = mk()
-          println(f"$label C=$c%-7d prep ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-          col
-        }
-        val serial = prep("serial ", () => Similarity.ivfListIdRouted(
-          col("embedding"), cents))
-        val dist = prep("spark  ", () => Similarity.ivfListIdRouted(
-          col("embedding"), cents, routeSpark = Some(spark)))
-        // identical routing contract: same assignment for every row
-        val diff = pts.select(serial.as("a"), dist.as("b"))
-          .filter(col("a") =!= col("b")).count()
-        println(s"assignment diff rows: $diff (must be 0)")
-      }
-      spark.stop(); return
-    }
-    if (name == "assignbench") {
-      // pure nearest-centroid assignment cost, flat O(C) vs routed
-      // O(sqrt C) per row — the term that dominates semDedupAuto and
-      // IVF writes once C reaches corpus scale (C = N/listSize).
-      import org.apache.spark.sql.functions._
-      import graft.operators.Similarity
-      val nums = args.drop(1).filter(_.forall(_.isDigit))
-      val n = nums.headOption.map(_.toLong).getOrElse(200000L)
-      val d = nums.lift(1).map(_.toInt).getOrElse(64)
-      val pts = graft.sources.Ingest.randomUniform(spark, n, d)
-        .withColumnRenamed("vector", "embedding").localCheckpoint()
-      for (c <- Seq(256, 2048, 16384)) {
-        val cents = Similarity.ivfCentroids(pts, "id", "embedding", c)
-        def run(label: String, assignCol: org.apache.spark.sql.Column): Unit = {
-          // warm once (codegen/JIT), then time 2 passes over all rows
-          pts.select(assignCol.as("l")).agg(max("l")).collect()
-          val t0 = System.nanoTime()
-          (1 to 2).foreach(_ =>
-            pts.select(assignCol.as("l")).agg(max("l")).collect())
-          println(f"$label C=$c%-6d ${(System.nanoTime() - t0) / 2e9}%8.2f s/pass")
-        }
-        run("flat  ", Similarity.ivfListId(col("embedding"), cents))
-        run("routed", Similarity.ivfListIdRouted(col("embedding"), cents))
-      }
-      spark.stop(); return
-    }
-    if (name == "ivfpqbench") {
-      // IVFADC serving-latency probe at scale (judge r6 #5 / r7 #3):
-      // write the narrow (id, codes) store once over n x d synthetic
-      // vectors, then time probes at nprobe 1/4/16. Run at n and 10n
-      // for the growth row; the probed read should scale with
-      // nprobe/numLists of the store, not with n.
-      import org.apache.spark.sql.functions._
-      import graft.operators.{IvfPq, Similarity}
-      val nums = args.drop(1).filter(_.forall(_.isDigit))
-      val n = nums.headOption.map(_.toLong).getOrElse(1000000L)
-      val d = nums.lift(1).map(_.toInt).getOrElse(64)
-      val numLists = nums.lift(2).map(_.toInt).getOrElse(256)
-      // "routed": O(sqrt C) two-level coarse assignment for the encode
-      // pass — the corpus-scale configuration (numLists >= ~4096, where
-      // the flat O(C)-per-row argmin dominates the write)
-      val routed = args.contains("routed")
-      // "clustered": points drawn around 4*numLists seeded centers — the
-      // realistic embedding-corpus shape and the one where a recall
-      // floor is meaningful (uniform high-d data has no neighborhood
-      // structure: true neighbors scatter over ~all lists and recall
-      // under ANY pruned probe collapses by construction)
-      val clustered = args.contains("clustered")
-      // coarse Lloyd refinement: each iter costs one full assignment
-      // pass — O(n·C)/row flat, O(n·√C)/row routed. Routed makes
-      // refinement affordable at corpus-scale C, and refinement is what
-      // makes the stride-init quantizer's residuals small enough for
-      // the PQ to rank (measured at 1M×96×4096: recall@10 saturated at
-      // 0.19 unrefined; see BASELINE.md)
-      val coarseIters = if (numLists >= 4096 && !routed) 0 else 2
-      // corpus-scale quantizer: 256 words/subspace (the standard IVFADC
-      // configuration) — at k=16 the ADC cut is too lossy to rank
-      // intra-cluster neighbors and recall saturates below any useful
-      // floor regardless of nprobe (measured: 0.19 at both 4 and 16)
-      val pqK = if (numLists >= 4096) 256 else 16
-      // re-rank pool: the exact re-rank can only recover what the ADC
-      // cut keeps, and within a cluster the ADC orders near-duplicates
-      // ~randomly (residual noise below quantization error), so topN
-      // must cover the query's expected CLUSTER OCCUPANCY (n/centers),
-      // not a fixed constant — measured at 10M×96×4096: topN=256 <
-      // 610-point clusters → recall@10 saturates at 0.54 at BOTH
-      // nprobe 4 and 16; topN ≳ 2× occupancy restores it. Cost is only
-      // topN·Q re-rank join rows. Override: topn=<int>.
-      val topN = args.collectFirst { case a if a.startsWith("topn=") =>
-        a.drop(5).toInt
-      }.getOrElse(if (numLists >= 4096) 256 else 100)
-      val pts = (if (clustered)
-          graft.sources.Ingest.randomClustered(spark, n, d, centers = 4 * numLists)
-        else graft.sources.Ingest.randomUniform(spark, n, d))
-        .withColumnRenamed("vector", "embedding").persist()
-      val path = s"/tmp/graft-ivfpq-bench-$n-$d-$numLists" +
-        (if (routed) "-routed" else "") + (if (clustered) "-clu" else "")
+    measure("brute force (exact baseline)")(q =>
+      BruteForce.knn(pts, "embedding", "id", q, kTop))
+    measure("a1 LSH bucket (8 planes)")(q =>
+      Similarity.probeBucketed(spark, lshPath, "id", "embedding", planes, q, kTop))
+    measure("a1 LSH multi-probe (1-bit)")(q =>
+      Similarity.probeBucketedMulti(spark, lshPath, "id", "embedding", planes, q, kTop))
+    for (np <- Seq(1, 4, 16))
+      measure(s"a2 IVF lists=256 nprobe=$np")(q =>
+        Similarity.probeIvf(spark, ivfPath, "id", "embedding", q, np, kTop))
+    for (topN <- Seq(100, 1000))
+      measure(s"a4 PQ ADC m=8 k=16 topN=$topN")(q =>
+        ProductQuant.probePq(spark, pqPath, pts, "id", "embedding", q, topN, kTop))
+    for (np <- Seq(1, 4, 16); topN <- Seq(100, 1000))
+      measure(s"a5 IVFADC nprobe=$np topN=$topN")(q =>
+        IvfPq.probe(spark, ivfpqPath, pts, "id", "embedding", q, np, topN, kTop))
+    if (graph) {
+      // list cap ~256 members: candidate volume = nprobe·cap per node.
+      // Serving is pinned in memory, so s/probe is the beam walk.
+      val lists = math.max(16, (n / 256L).toInt)
       var t0 = System.nanoTime()
-      // "reuse": skip the (deterministic) store build when it already
-      // exists — lets re-rank/probe knob sweeps iterate without paying
-      // the encode each time
-      if (args.contains("reuse") &&
-          new java.io.File(path + ".codebook").exists()) {
-        println(s"reusing store at $path")
-      } else {
-        IvfPq.write(pts, "id", "embedding", numLists, coarseIters = coarseIters,
-          m = 8, k = pqK, pqIters = 1, path = path, routed = routed)
-        println(f"write(n=$n d=$d lists=$numLists routed=$routed pqK=$pqK): ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      }
-      val q = (0 until d).map(i => (i % 7) * 0.1 - 0.3)
-      // open ONCE — the serving protocol. At C=4096 the open itself
-      // (partition listing + sidecars) measured 7–8 s, dominating every
-      // probe that re-opened; a serving process pays it once.
+      val (built, seeds) = GraphAnn.build(pts, "id", "embedding",
+        numLists = lists, nprobe = 2, k = 12, alpha = 1.2, maxDegree = 24)
+      val g = built.localCheckpoint()
+      val deg = g.select(avg(size(col("nbrs")))).head().getDouble(0)
+      println(f"graph build (lists=$lists nprobe=2 k=12 R=24): " +
+        f"${(System.nanoTime() - t0) / 1e9}%.1f s, avg degree $deg%.1f")
       t0 = System.nanoTime()
-      val store = IvfPq.open(spark, path)
-      println(f"open: ${(System.nanoTime() - t0) / 1e9}%.2f s " +
-        f"(${store.centroids.length} lists, m=${store.cb.length})")
-      for (nprobe <- Seq(1, 4, 16); run <- 1 to 3) {
-        t0 = System.nanoTime()
-        val rows = IvfPq.probe(store, pts, "id", "embedding", q,
-          nprobe = nprobe, topN = topN, k = 10).count()
-        println(f"probe nprobe=$nprobe%2d run $run: ${(System.nanoTime() - t0) / 1e9}%6.2f s  ($rows rows)")
-      }
-      // scan-cost accounting: rows living in the probed partitions —
-      // the claim under test is scanned ∝ n * nprobe / numLists
-      for (nprobe <- Seq(1, 4, 16)) {
-        val lists = Similarity.ivfProbeLists(store.centroids, q, nprobe)
-        t0 = System.nanoTime()
-        val scanned = store.codes
-          .filter(col("list_id").isin(lists: _*)).count()
-        println(f"scan nprobe=$nprobe%2d: $scanned%9d of $n rows " +
-          f"(${100.0 * scanned / n}%.2f%% vs expected ${100.0 * nprobe / numLists}%.2f%%) " +
-          f"in ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
-      // batch ADC join: 64 queries in ONE wave — one pruned codes scan
-      // serves the whole relation; compare against 64x the single-probe
-      // row above
-      val queries = pts.filter(col("id") % (n / 64).max(1) === 0)
-        .select(col("id").as("qid0"), col("embedding").as("qv0"))
-        .localCheckpoint()
-      val qn = queries.count()
-      for (nprobe <- Seq(4, 16); run <- 1 to 3) {
-        t0 = System.nanoTime()
-        val rows = IvfPq.probeBatch(store, pts, "id", "embedding",
-          queries, "qid0", "qv0", nprobe = nprobe, topN = topN, k = 10).count()
-        println(f"batch($qn queries) nprobe=$nprobe%2d run $run: " +
-          f"${(System.nanoTime() - t0) / 1e9}%6.2f s  ($rows rows)")
-      }
-      // recall@10 vs exact brute force over the same query batch — the
-      // floor the growth row must hold. Brute side is ONE broadcast-NLJ
-      // scan computing all query distances per row (not per-query scans).
-      for (nprobe <- Seq(4, 16)) {
-        val approx = IvfPq.probeBatch(store, pts, "id", "embedding",
-            queries, "qid0", "qv0", nprobe = nprobe, topN = topN, k = 10)
-          .select(col("qid"), col("id"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        val exact = graft.operators.BruteForce.knnJoin(pts, "embedding", "id",
-            queries, "qid0", "qv0", 10)
-          .select(col("qid0"), col("id"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        val recall = exact.count(approx.contains).toDouble / exact.size
-        println(f"recall@10 nprobe=$nprobe%2d: $recall%.3f " +
-          f"(${exact.count(approx.contains)} of ${exact.size})")
-      }
-      spark.stop(); return
+      val pinned = GraphAnn.pin(g, seeds)
+      println(f"pin: ${(System.nanoTime() - t0) / 1e9}%.1f s " +
+        f"(${pinned.size} nodes, ${seeds.length} seeds)")
+      for (ef <- Seq(32, 128))
+        measure(s"graph ANN beam ef=$ef")(q =>
+          GraphAnn.graphKnn(spark, pinned, q, kTop, ef))
     }
-    if (name == "ivfsqbench") {
-      // IVF-SQ8 twin of ivfpqbench (same protocol/corpus): the codes
-      // store is the same list-partitioned narrow layout, but scoring
-      // is the global bin-center decode — no per-list state, so the
-      // probe is one codegen projection. topN sizing follows the same
-      // cluster-occupancy rule (BASELINE.md round-11).
-      import org.apache.spark.sql.functions._
-      import graft.operators.{IvfSq, Similarity}
-      val nums = args.drop(1).filter(_.forall(_.isDigit))
-      val n = nums.headOption.map(_.toLong).getOrElse(1000000L)
-      val d = nums.lift(1).map(_.toInt).getOrElse(96)
-      val numLists = nums.lift(2).map(_.toInt).getOrElse(4096)
-      val routed = args.contains("routed")
-      val coarseIters = if (numLists >= 4096 && !routed) 0 else 2
-      val topN = args.collectFirst { case a if a.startsWith("topn=") =>
-        a.drop(5).toInt
-      }.getOrElse(2048)
-      val pts = graft.sources.Ingest
-        .randomClustered(spark, n, d, centers = 4 * numLists)
-        .withColumnRenamed("vector", "embedding").persist()
-      val path = s"/tmp/graft-ivfsq-bench-$n-$d-$numLists"
-      var t0 = System.nanoTime()
-      if (args.contains("reuse") && new java.io.File(path + ".extent").exists())
-        println(s"reusing store at $path")
-      else {
-        IvfSq.write(pts, "id", "embedding", numLists, coarseIters, path,
-          routed = routed)
-        println(f"write(n=$n d=$d lists=$numLists routed=$routed): ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      }
-      val q = (0 until d).map(i => (i % 7) * 0.1 - 0.3)
-      t0 = System.nanoTime()
-      val store = IvfSq.open(spark, path)
-      println(f"open: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      for (nprobe <- Seq(1, 4, 16); run <- 1 to 3) {
-        t0 = System.nanoTime()
-        val rows = IvfSq.probe(store, pts, "id", "embedding", q,
-          nprobe = nprobe, topN = topN, k = 10).count()
-        println(f"probe nprobe=$nprobe%2d run $run: ${(System.nanoTime() - t0) / 1e9}%6.2f s  ($rows rows)")
-      }
-      val queries = pts.filter(col("id") % (n / 64).max(1) === 0)
-        .select(col("id").as("qid0"), col("embedding").as("qv0"))
-        .localCheckpoint()
-      val qn = queries.count()
-      for (nprobe <- Seq(4, 16); run <- 1 to 3) {
-        t0 = System.nanoTime()
-        val rows = IvfSq.probeBatch(store, pts, "id", "embedding",
-          queries, "qid0", "qv0", nprobe = nprobe, topN = topN, k = 10).count()
-        println(f"batch($qn queries) nprobe=$nprobe%2d run $run: " +
-          f"${(System.nanoTime() - t0) / 1e9}%6.2f s  ($rows rows)")
-      }
-      for (nprobe <- Seq(4, 16)) {
-        val approx = IvfSq.probeBatch(store, pts, "id", "embedding",
-            queries, "qid0", "qv0", nprobe = nprobe, topN = topN, k = 10)
-          .select(col("qid"), col("id"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        val exact = graft.operators.BruteForce.knnJoin(pts, "embedding", "id",
-            queries, "qid0", "qv0", 10)
-          .select(col("qid0"), col("id"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        val recall = exact.count(approx.contains).toDouble / exact.size
-        println(f"recall@10 nprobe=$nprobe%2d: $recall%.3f " +
-          f"(${exact.count(approx.contains)} of ${exact.size})")
-      }
-      spark.stop(); return
+  }
+
+  /** Stage decomposition of `GraphAnn.buildAndWriteMerged` on a
+    * clustered n x d corpus: the `stageProbe` hook forces every stage
+    * boundary, and each stage's wall time is appended to
+    * /tmp/graft_mergedprof.log as it completes, so the table survives a
+    * killed JVM. `k = 0` runs the route + shuffle + member-sort
+    * skeleton with no within-list kNN or prune, so (k = 12 run) − (k = 0
+    * run) isolates the local kNN + prune CPU from the list shuffle. */
+  private def mergedProf(spark: SparkSession, nums: Seq[String],
+                         cpus: String): Unit = {
+    val n = nums.headOption.map(_.toLong).getOrElse(2000000L)
+    val d = nums.lift(1).map(_.toInt).getOrElse(96)
+    val listDiv = nums.lift(2).map(_.toInt).getOrElse(250)
+    val kk = nums.lift(3).map(_.toInt).getOrElse(12)
+    val lists = math.max(64, (n / listDiv).toInt)
+    val log = java.nio.file.Paths.get("/tmp/graft_mergedprof.log")
+    def emit(line: String): Unit = {
+      println(line)
+      java.nio.file.Files.write(log, (line + "\n").getBytes("UTF-8"),
+        java.nio.file.StandardOpenOption.CREATE,
+        java.nio.file.StandardOpenOption.APPEND)
     }
-    if (name == "binbench") {
-      // binary-store scan bench — the bandwidth play measured: codes
-      // store (d bits/row) over the same clustered corpus/protocol as
-      // ivfsqbench, warm single probes at two re-rank pools, the float
-      // brute scan as the bandwidth reference, 64-query batch join,
-      // recall@10 vs the exact join.
-      import org.apache.spark.sql.functions._
-      import graft.operators.BinaryIndex
-      val nums = args.drop(1).filter(_.forall(_.isDigit))
-      val n = nums.headOption.map(_.toLong).getOrElse(1000000L)
-      val d = nums.lift(1).map(_.toInt).getOrElse(96)
-      val pts = graft.sources.Ingest
-        .randomClustered(spark, n, d, centers = 16384)
-        .withColumnRenamed("vector", "embedding").persist()
-      val path = s"/tmp/graft-bin-bench-$n-$d"
-      var t0 = System.nanoTime()
-      if (args.contains("reuse") && new java.io.File(path + ".thr").exists())
-        println(s"reusing store at $path")
-      else {
-        BinaryIndex.write(pts, "id", "embedding", d, path)
-        println(f"write(n=$n d=$d): ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      }
-      t0 = System.nanoTime()
-      val store = BinaryIndex.open(spark, path)
-      println(f"open: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      val q = (0 until d).map(i => (i % 7) * 0.1 - 0.3)
-      for (rerank <- Seq(256, 2048); run <- 1 to 3) {
-        t0 = System.nanoTime()
-        val rows = BinaryIndex.probe(store, pts, "id", "embedding", q, 10,
-          rerank).count()
-        println(f"probe rerank=$rerank%4d run $run: " +
-          f"${(System.nanoTime() - t0) / 1e9}%6.2f s  ($rows rows)")
-      }
-      for (run <- 1 to 3) {
-        t0 = System.nanoTime()
-        graft.operators.BruteForce.knn(pts, "embedding", "id", q, 10).count()
-        println(f"brute float scan run $run: ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      }
-      val queries = pts.filter(col("id") % (n / 64).max(1) === 0)
-        .select(col("id").as("qid0"), col("embedding").as("qv0"))
-        .localCheckpoint()
-      val qn = queries.count()
-      for (run <- 1 to 3) {
-        t0 = System.nanoTime()
-        val rows = BinaryIndex.probeBatch(store, pts, "id", "embedding",
-          queries, "qid0", "qv0", 10, 2048).count()
-        println(f"batch($qn queries) rerank=2048 run $run: " +
-          f"${(System.nanoTime() - t0) / 1e9}%6.2f s  ($rows rows)")
-      }
-      for (rerank <- Seq(256, 2048)) {
-        val approx = BinaryIndex.probeBatch(store, pts, "id", "embedding",
-            queries, "qid0", "qv0", 10, rerank)
-          .select(col("qid"), col("id"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        val exact = graft.operators.BruteForce.knnJoin(pts, "embedding",
-            "id", queries, "qid0", "qv0", 10)
-          .select(col("qid0"), col("id"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        val recall = exact.count(approx.contains).toDouble / exact.size
-        println(f"recall@10 rerank=$rerank%4d: $recall%.3f " +
-          f"(${exact.count(approx.contains)} of ${exact.size})")
-      }
-      spark.stop(); return
-    }
-    if (name == "knnrule") {
-      // kNN access-path rule probe: ORDER BY dist LIMIT k over a
-      // serving-registered table vs the brute TakeOrdered scan. The
-      // rewrite conjoins an id-INSET candidate filter under the sort
-      // (pushed to the parquet scan), so the indexed plan reads only the
-      // candidate row groups.
-      import org.apache.spark.sql.functions._
-      import graft.functions.VectorFunctions.{dist, doubleVec}
-      import graft.plans.VectorIndexCatalog
-      spark.stop()
-      SparkSession.clearDefaultSession(); SparkSession.clearActiveSession()
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        // plain FileSourceScanExec nodes so the probe can read scan
-        // metrics directly (this is a scan->sort->limit plan; AQE has
-        // nothing to re-plan here anyway)
-        .config("spark.sql.adaptive.enabled", "false")
-        .withExtensions(new graft.plans.GraftExtensions)
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      val nums = args.drop(1).filter(_.forall(_.isDigit))
-      val n = nums.headOption.map(_.toLong).getOrElse(1000000L)
-      val d = nums.lift(1).map(_.toInt).getOrElse(8)
-      val k = nums.lift(2).map(_.toInt).getOrElse(10)
-      // "grid": spatially-clustered layout — row-major grid ids, so the
-      // candidate InSet spans a narrow id range and parquet row-group
-      // stats skip most of the file (the Z-order/insertion-order case a
-      // real serving table has)
-      val grid = args.contains("grid")
-      val path = if (grid) s"/tmp/graft-knnrule-grid-$n"
-                 else s"/tmp/graft-knnrule-$n-$d"
-      if (!new java.io.File(path, "_SUCCESS").exists()) {
-        val df = if (grid)
-          graft.sources.Ingest.grid(s, math.sqrt(n.toDouble).toInt)
-        else graft.sources.Ingest.randomUniform(s, n, d)
-        // sortWithinPartitions(id): row groups hold contiguous id ranges
-        df.repartitionByRange(32, col("id")).sortWithinPartitions("id")
-          .write.mode("overwrite").parquet(path)
-      }
-      val pts = s.read.parquet(path)
-      val q = if (grid) Seq(0.1, 0.1)
-              else (0 until d).map(i => (i % 7) * 0.1 - 0.3)
-      var t0 = System.nanoTime()
-      val index = operators.IndexBuild.buildIndex(pts, "id", "vector")
-        .localCheckpoint()
-      println(f"index build: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      t0 = System.nanoTime()
-      VectorIndexCatalog.registerServing(path, "id", index, pts, "vector")
-      println(f"registerServing (pin tree+vectors): ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      def knnQ = s.read.parquet(path)
-        .orderBy(dist(col("vector"), doubleVec(q)), col("id")).limit(k)
-      if (explain) knnQ.explain("formatted")
-      val sizes = knnQ.queryExecution.optimizedPlan.collect {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-          f.condition.collect {
-            case i: org.apache.spark.sql.catalyst.expressions.InSet => i.hset.size }
-      }.flatten
-      println(s"candidate InSet size: $sizes of $n")
-      def scanRows(df: org.apache.spark.sql.DataFrame): Long =
-        df.queryExecution.executedPlan.collect {
-          case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-            f.metrics.get("numOutputRows").map(_.value).getOrElse(0L)
-        }.sum
-      for (run <- 1 to 3) {
-        val kdf = knnQ
-        t0 = System.nanoTime()
-        val rows = kdf.collect().length
-        println(f"indexed knn run $run: ${(System.nanoTime() - t0) / 1e9}%6.3f s  " +
-          f"($rows rows, scan emitted ${scanRows(kdf)})")
-      }
-      VectorIndexCatalog.clear()
-      for (run <- 1 to 3) {
-        val bdf = operators.BruteForce.knn(s.read.parquet(path), "vector", "id", q, k)
-        t0 = System.nanoTime()
-        val rows = bdf.collect().length
-        println(f"brute   knn run $run: ${(System.nanoTime() - t0) / 1e9}%6.3f s  " +
-          f"($rows rows, scan emitted ${scanRows(bdf)})")
-      }
-      s.stop(); return
-    }
-    val df = SparkEntry.queries(name)(spark, sfDir)
-    if (explain) df.explain("formatted")
-    else {
-      // warm
-      spark.range(10).selectExpr("sum(id)").collect()
-      (1 to 3).foreach { i =>
-        val t0 = System.nanoTime()
-        val n = SparkEntry.queries(name)(spark, sfDir).count()
-        println(f"run $i: ${(System.nanoTime() - t0) / 1e9}%.2f s  ($n rows)")
-      }
-    }
-    spark.stop()
+    emit(s"=== mergedprof n=$n d=$d lists=$lists (div=$listDiv) k=$kk " +
+      s"nprobe=2 maxDegree=24 cpus=$cpus ===")
+    val centers = graft.sources.Ingest.randomUniform(spark, lists, d, seed = 7L)
+      .select(col("id").as("cid"), col("vector").as("cvec"))
+    val all = graft.sources.Ingest.randomUniform(spark, n, d)
+      .withColumn("cid", col("id") % lists)
+      .join(broadcast(centers), "cid")
+      .select(col("id"), expr(
+        "CAST(zip_with(vector, cvec, (a, b) -> a * 0.15D + b) AS ARRAY<FLOAT>)")
+        .as("embedding"))
+      .localCheckpoint()
+    val dir = java.nio.file.Files
+      .createTempDirectory("mergedprof").resolve("g").toString
+    val buckets = math.max(64, (n / 10000).toInt)
+    val t0 = System.nanoTime()
+    GraphAnn.buildAndWriteMerged(all, "id", "embedding",
+      numLists = lists, nprobe = 2, k = kk, alpha = 1.2, maxDegree = 24,
+      path = dir, buckets = buckets,
+      stageProbe = Some((l, sec) => emit(f"  $l%-45s $sec%9.1f s")))
+    emit(f"  TOTAL build+write ${(System.nanoTime() - t0) / 1e9}%9.1f s")
   }
 }

@@ -459,7 +459,7 @@ object Dedup {
           col("x.sz").cast("double") >= lit(threshold) * col("y.sz"))
       .select(col("x.doc").as("a"), col("y.doc").as("b")).distinct()
     val sizesA = pref.select(col("doc"), col("sz")).distinct()
-    // Verify shape note (round 18, Tools d29prof): the d27-style
+    // Verify shape note (round 18, d29 stage profile): the d27-style
     // pair-local array_intersect verify was BUILT AND MEASURED here and
     // is SLOWER (5.8 vs 4.2 s warm at sf0.1) — at this path's candidate
     // selectivity (186k candidate pairs → 57 true pairs; hot store docs
@@ -570,7 +570,7 @@ object Dedup {
       store.post.queryExecution.optimizedPlan.stats.sizeInBytes
     val storeRowsEst = storeBytes / 10
     val exceedsBroadcast = thr <= 0 || batchBytes > thr
-    // session kill-switch (also the A/B lever for Tools bloomprof):
+    // session kill-switch (also the A/B lever for the prefilter):
     // graft.dedup.bloomPrefilter=false forces the unfiltered join
     val enabled = spark.conf
       .getOption("graft.dedup.bloomPrefilter").forall(_.toBoolean)
@@ -606,27 +606,6 @@ object Dedup {
       .select(col(idCol))
   }
 
-  /** The candidate stage of [[ngramJaccardPairsAgainstStore]] in
-    * isolation — a PROFILING surface (Tools d29prof): lets the stage
-    * table split candidate generation from the verify re-join. Same
-    * construction as the full path's `cand`. */
-  private[graft] def storePrefixCandidates(probe: DataFrame,
-                                           store: ShingleStore,
-                                           idCol: String, textCol: String,
-                                           threshold: Double): DataFrame = {
-    val shA = shingleRows(probe, idCol, textCol, store.k).localCheckpoint()
-    val bucketOf = (c: Column) =>
-      pmod(xxhash64(c), lit(store.buckets.toLong)).cast("int")
-    val pref = prefixRelation(shA, threshold, materialize = false)
-      .withColumn("pb", bucketOf(col("shingle")))
-    pref.as("x").join(store.post.as("y"),
-        col("x.pb") === col("y.pb") &&
-          col("x.shingle") === col("y.shingle") &&
-          col("y.sz").cast("double") >= lit(threshold) * col("x.sz") &&
-          col("x.sz").cast("double") >= lit(threshold) * col("y.sz"))
-      .select(col("x.doc").as("a"), col("y.doc").as("b")).distinct()
-  }
-
   /** The candidate pairs the prefix filter admits for
     * [[ngramJaccardPrefixPairs]] — exposed so the pruning ratio vs the
     * quadratic n·(n−1)/2 is itself testable/benchable. Guaranteed a
@@ -653,8 +632,8 @@ object Dedup {
   // consumer (d27/d28's candidate join) the checkpoint is pure
   // overhead: it pays an extra materialization job and severs the chain
   // the planner would otherwise fuse into the candidate join (measured
-  // round 18, Tools contprof: d27 5.7 s materialized vs 2.5–3.4 s
-  // lazy, identical 512 rows).
+  // round 18: d27 5.7 s materialized vs 2.5–3.4 s lazy, identical 512
+  // rows).
   private def prefixRelation(sh: DataFrame, threshold: Double,
                              materialize: Boolean = true): DataFrame = {
     val dfc = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))

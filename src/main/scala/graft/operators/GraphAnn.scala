@@ -218,8 +218,8 @@ object GraphAnn {
     * pair's d² is bit-equal between the bounded and unbounded
     * branches (RecallSpec determinism + recall floors pin both; the
     * lane split moves last-ulp rounding vs the r16 chain — same
-    * metric, same exactness contract, Tools knnkernel measures the
-    * two kernels head-to-head in one JVM). */
+    * metric, same exactness contract; the two kernels were measured
+    * head-to-head in one JVM by a probe now in git history). */
   private[graft] def listKnn(flat: Array[Float], dim: Int, m: Int,
                              kk: Int): (Array[Double], Array[Int]) = {
     // SQUARED space throughout (round 17): insertion order under
@@ -969,9 +969,9 @@ object GraphAnn {
     //    the same bound as the InSet/semi-join switch above): the
     //    map-only constant-table kernel, a bounded collect of
     //    min(C, 65536)·d·8 bytes. It stays because it is ~3× cheaper
-    //    per (query, seed) pair than any row-at-a-time form (measured,
-    //    Tools seedbench) and every gate fixture plus the 10M config
-    //    (C = 4·10⁴) sits under the ceiling.
+    //    per (query, seed) pair than any row-at-a-time form (measured
+    //    by a seedbench probe now in git history) and every gate
+    //    fixture plus the 10M config (C = 4·10⁴) sits under the ceiling.
     //  * C > seedKernelMax: the exact per-query top-m runs as a chunked
     //    shuffle join + the bounded [[graft.functions.TopMByDist]] hash
     //    aggregate. Queries replicate over seed CHUNKS (≤8192 seeds
@@ -1154,7 +1154,9 @@ object GraphAnn {
       round += 1
     }
     // the final checkpoint stays alive under the returned plan (the
-    // old closing window over it is now just this rank filter)
+    // old closing window over it is now just this rank filter); the
+    // pinned queries are not read by it
+    IndexBuild.freeCheckpoint(qs)
     visited.filter(notTomb(col("id")) && col("rn") <= k)
       .select(col("qid").as(qIdCol), col("id"), col("dist"))
   }
@@ -1278,49 +1280,51 @@ object GraphAnn {
     // occupies its store row, so re-adding it needs consolidateGraph
     // first — the FreshDiskANN delete-then-reinsert contract.
     // out-edges: distributed greedy search + prune per new point
-    val newRows = newPts
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
-      .dropDuplicates(Seq(idCol))
-      .as[(Long, Array[Float])]
-      .filter(t => !pinB.value.vecs.contains(t._1))
-      .map { case (id, vec) =>
-        val p = pinB.value
-        val pool = p.knn(vec.map(_.toDouble).toSeq, ef, ef)
-        val cands = pool.map { case (cid, d) => (cid, p.vecs(cid), d) }
-        (id, vec, robustPrune(cands.toArray, alpha, maxDeg))
-      }
-      .toDF("id", "vec", "nbrs")
-      .localCheckpoint()
-    if (newRows.isEmpty) return // pure replay — nothing left to insert
-    // back-edges grouped per target, repaired executor-locally: the
-    // target's old row rides the pinned broadcast, the new vectors ride
-    // the (batch-bounded) rows themselves
-    val updated = newRows
-      .select(col("id").as("n"), col("vec").as("nvec"),
-        explode(col("nbrs")).as("b"))
-      .as[(Long, Array[Float], Long)]
-      .groupByKey(_._3)
-      .mapGroups { (b, it) =>
-        val p = pinB.value
-        val bv = p.vecs(b)
-        val adds = it.map(t => (t._1, t._2)).toArray.sortBy(_._1)
-        val old = p.nbrs.getOrElse(b, Array.emptyLongArray)
-        val merged = old ++ adds.map(_._1).filterNot(old.contains)
-        if (merged.length <= maxDeg) (b, merged)
-        else {
-          val vecOf = adds.toMap
-          val cands = merged.map { m =>
-            val mv = vecOf.getOrElse(m, p.vecs(m))
-            (m, mv, l2(bv, mv))
-          }
-          (b, robustPrune(cands, alpha, maxDeg))
+    Pins.scope { pins =>
+      val newRows = pins(newPts
+        .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
+        .dropDuplicates(Seq(idCol))
+        .as[(Long, Array[Float])]
+        .filter(t => !pinB.value.vecs.contains(t._1))
+        .map { case (id, vec) =>
+          val p = pinB.value
+          val pool = p.knn(vec.map(_.toDouble).toSeq, ef, ef)
+          val cands = pool.map { case (cid, d) => (cid, p.vecs(cid), d) }
+          (id, vec, robustPrune(cands.toArray, alpha, maxDeg))
         }
+        .toDF("id", "vec", "nbrs"))
+      // an empty batch is a pure replay: nothing left to insert
+      if (!newRows.isEmpty) {
+        // back-edges grouped per target, repaired executor-locally: the
+        // target's old row rides the pinned broadcast, the new vectors ride
+        // the (batch-bounded) rows themselves
+        val updated = pins(newRows
+          .select(col("id").as("n"), col("vec").as("nvec"),
+            explode(col("nbrs")).as("b"))
+          .as[(Long, Array[Float], Long)]
+          .groupByKey(_._3)
+          .mapGroups { (b, it) =>
+            val p = pinB.value
+            val bv = p.vecs(b)
+            val adds = it.map(t => (t._1, t._2)).toArray.sortBy(_._1)
+            val old = p.nbrs.getOrElse(b, Array.emptyLongArray)
+            val merged = old ++ adds.map(_._1).filterNot(old.contains)
+            if (merged.length <= maxDeg) (b, merged)
+            else {
+              val vecOf = adds.toMap
+              val cands = merged.map { m =>
+                val mv = vecOf.getOrElse(m, p.vecs(m))
+                (m, mv, l2(bv, mv))
+              }
+              (b, robustPrune(cands, alpha, maxDeg))
+            }
+          }
+          .toDF("id", "nbrs2"))
+        val patched = repairOrphans(spark, pins, newRows, updated, maxDeg,
+          ids => ids.iterator.map(i => i -> pinB.value.vecs(i)).toMap)
+        writeAppendTail(store, path, pins, newRows, patched)
       }
-      .toDF("id", "nbrs2")
-      .localCheckpoint()
-    val patched = repairOrphans(spark, newRows, updated, maxDeg,
-      ids => ids.iterator.map(i => i -> pinB.value.vecs(i)).toMap)
-    writeAppendTail(store, path, newRows, patched)
+    }
   }
 
   /** REACHABILITY GUARANTEE (in-degree ≥ 1) for an append batch: in a
@@ -1351,8 +1355,9 @@ object GraphAnn {
     * path: the pin map; distributed path: a gb-pruned filtered collect
     * — per pass the needed set is (patched lists ∪ their members),
     * bounded by O(batch · maxDegree), never the corpus). */
-  private def repairOrphans(spark: SparkSession, newRows: DataFrame,
-                            updated: DataFrame, maxDeg: Int,
+  private def repairOrphans(spark: SparkSession, pins: Pins,
+                            newRows: DataFrame, updated: DataFrame,
+                            maxDeg: Int,
                             resolveVecs: Seq[Long] => Map[Long, Array[Float]])
       : DataFrame = {
     import spark.implicits._
@@ -1411,7 +1416,7 @@ object GraphAnn {
         val needed: Seq[Long] = (keys ++ members.flatMap(_._2.toSeq)).distinct
           .filterNot(id => newVecMap.contains(id))
         val oldVecB = spark.sparkContext.broadcast(resolveVecs(needed))
-        patched = updated.as[(Long, Array[Long])].map { case (b, nbrs2) =>
+        patched = pins(updated.as[(Long, Array[Long])].map { case (b, nbrs2) =>
           byBB.value.get(b) match {
             case None => (b, nbrs2)
             case Some(os) =>
@@ -1440,7 +1445,7 @@ object GraphAnn {
                   byDist(olds).take(room - newbies.length)
               (b, forced ++ keep)
           }
-        }.toDF("id", "nbrs2").localCheckpoint()
+        }.toDF("id", "nbrs2"))
       }
     }
     patched
@@ -1451,7 +1456,7 @@ object GraphAnn {
     * adjacency spliced in plus the new rows landing there — and
     * untouched partitions take a pure file append. I/O is O(touched gb
     * partitions), never the store. */
-  private def writeAppendTail(store: GraphStore, path: String,
+  private def writeAppendTail(store: GraphStore, path: String, pins: Pins,
                               newRows: DataFrame, patched: DataFrame): Unit = {
     val buckets = store.buckets
     val touched = patched.select(gbOf(col("id"), buckets)).distinct()
@@ -1459,13 +1464,13 @@ object GraphAnn {
     if (touched.nonEmpty) {
       val newTouched = newRows
         .filter(gbOf(col("id"), buckets).isInCollection(touched))
-      val rewritten = store.rows
+      // pinned: the write must never read the files it is replacing
+      val rewritten = pins(store.rows
         .filter(col("gb").isInCollection(touched))
         .join(patched, Seq("id"), "left")
         .select(col("id"), col("vec"),
           coalesce(col("nbrs2"), col("nbrs")).as("nbrs"), col("gb"))
-        .unionByName(newTouched.withColumn("gb", gbOf(col("id"), buckets)))
-        .localCheckpoint() // never read the files being replaced
+        .unionByName(newTouched.withColumn("gb", gbOf(col("id"), buckets))))
       rewritten.repartition(col("gb"))
         // per-writer option, not session conf: a leaked session-level
         // dynamic mode breaks writeGraph's full-replace contract
@@ -1517,77 +1522,78 @@ object GraphAnn {
     val store = openGraph(spark, path)
     val (alpha, maxDeg, buckets) = (store.alpha, store.maxDegree, store.buckets)
     // idempotent replay filter without the pin: anti-join the store
-    val incoming = newPts
-      .select(col(idCol).cast("long").as("id"),
-        col(vecCol).cast("array<float>").as("vec"))
-      .dropDuplicates(Seq("id"))
-      .join(store.rows.select(col("id")), Seq("id"), "left_anti")
-      .localCheckpoint()
-    if (incoming.isEmpty) return
-    // out-edges: beam pool per new point (tombstoned excluded, as in
-    // the pinned search), candidate vectors joined, per-point prune
-    val pools = graphKnnDistributed(store,
-      incoming.select(col("id").as("nid"), col("vec")), "nid", "vec",
-      k = ef, ef = ef, maxRounds = maxRounds, visitedCap = 8 * ef)
-    val prunedOut = pools
-      .join(store.rows.select(col("id"), col("vec").as("cvec")), Seq("id"))
-      .select(col("nid"), col("id").as("cid"), col("cvec"), col("dist"))
-      .as[(Long, Long, Array[Float], Double)]
-      .groupByKey(_._1)
-      .mapGroups { (nid, it) =>
-        (nid, robustPrune(it.map(t => (t._2, t._3, t._4)).toArray,
-          alpha, maxDeg))
+    Pins.scope { pins =>
+      val incoming = pins(newPts
+        .select(col(idCol).cast("long").as("id"),
+          col(vecCol).cast("array<float>").as("vec"))
+        .dropDuplicates(Seq("id"))
+        .join(store.rows.select(col("id")), Seq("id"), "left_anti"))
+      if (!incoming.isEmpty) {
+        // out-edges: beam pool per new point (tombstoned excluded, as in
+        // the pinned search), candidate vectors joined, per-point prune;
+        // the pools read the search's final checkpoint
+        val pools = pins.own(graphKnnDistributed(store,
+          incoming.select(col("id").as("nid"), col("vec")), "nid", "vec",
+          k = ef, ef = ef, maxRounds = maxRounds, visitedCap = 8 * ef))
+        val prunedOut = pools
+          .join(store.rows.select(col("id"), col("vec").as("cvec")), Seq("id"))
+          .select(col("nid"), col("id").as("cid"), col("cvec"), col("dist"))
+          .as[(Long, Long, Array[Float], Double)]
+          .groupByKey(_._1)
+          .mapGroups { (nid, it) =>
+            (nid, robustPrune(it.map(t => (t._2, t._3, t._4)).toArray,
+              alpha, maxDeg))
+          }
+          .toDF("id", "outnbrs")
+        val newRows = pins(incoming
+          .join(prunedOut, Seq("id"), "left")
+          .select(col("id"), col("vec"),
+            coalesce(col("outnbrs"), array().cast("array<long>")).as("nbrs")))
+        // back-edges: merge adds into each target's old adjacency; only
+        // over-degree targets pay the member-explode re-prune
+        val withOld = pins(newRows
+          .select(explode(col("nbrs")).as("b"), col("id").as("n"))
+          .groupBy(col("b"))
+          .agg(sort_array(collect_set(col("n"))).as("adds"))
+          .join(store.rows.select(col("id").as("b"), col("vec").as("bvec"),
+            col("nbrs").as("old")), Seq("b"))
+          .withColumn("merged",
+            concat(col("old"), array_except(col("adds"), col("old")))))
+        val fits = withOld.filter(size(col("merged")) <= maxDeg)
+          .select(col("b").as("id"), col("merged").as("nbrs2"))
+        val over = withOld.filter(size(col("merged")) > maxDeg)
+        val overPruned = over
+          .select(col("b"), col("bvec"), explode(col("merged")).as("m"))
+          .join(store.rows.select(col("id").as("m"), col("vec").as("mvec"))
+            .unionByName(newRows.select(col("id").as("m"),
+              col("vec").as("mvec"))), Seq("m"))
+          .select(col("b"), col("m"), col("mvec"),
+            dist(col("bvec"), col("mvec")).as("d"))
+          .as[(Long, Long, Array[Float], Double)]
+          .groupByKey(_._1)
+          .mapGroups { (b, it) =>
+            (b, robustPrune(it.map(t => (t._2, t._3, t._4)).toArray,
+              alpha, maxDeg))
+          }
+          .toDF("id", "nbrs2")
+        val updated = pins(fits.unionByName(overPruned))
+        val patched = repairOrphans(spark, pins, newRows, updated, maxDeg,
+          ids =>
+            if (ids.isEmpty) Map.empty
+            else {
+              // gb-pruned bounded collect: O(batch·maxDegree) ids, never
+              // the corpus (the same PartitionFilters trick as the
+              // serving path)
+              val gbs = ids.map(i => (((i % buckets) + buckets) % buckets).toInt)
+                .distinct // pmod, matching gbOf
+              store.rows.filter(col("gb").isInCollection(gbs))
+                .filter(col("id").isInCollection(ids))
+                .select(col("id"), col("vec"))
+                .as[(Long, Array[Float])].collect().toMap
+            })
+        writeAppendTail(store, path, pins, newRows, patched)
       }
-      .toDF("id", "outnbrs")
-    val newRows = incoming
-      .join(prunedOut, Seq("id"), "left")
-      .select(col("id"), col("vec"),
-        coalesce(col("outnbrs"), array().cast("array<long>")).as("nbrs"))
-      .localCheckpoint()
-    // back-edges: merge adds into each target's old adjacency; only
-    // over-degree targets pay the member-explode re-prune
-    val withOld = newRows
-      .select(explode(col("nbrs")).as("b"), col("id").as("n"))
-      .groupBy(col("b"))
-      .agg(sort_array(collect_set(col("n"))).as("adds"))
-      .join(store.rows.select(col("id").as("b"), col("vec").as("bvec"),
-        col("nbrs").as("old")), Seq("b"))
-      .withColumn("merged",
-        concat(col("old"), array_except(col("adds"), col("old"))))
-      .localCheckpoint()
-    val fits = withOld.filter(size(col("merged")) <= maxDeg)
-      .select(col("b").as("id"), col("merged").as("nbrs2"))
-    val over = withOld.filter(size(col("merged")) > maxDeg)
-    val updated = {
-      val overPruned = over
-        .select(col("b"), col("bvec"), explode(col("merged")).as("m"))
-        .join(store.rows.select(col("id").as("m"), col("vec").as("mvec"))
-          .unionByName(newRows.select(col("id").as("m"),
-            col("vec").as("mvec"))), Seq("m"))
-        .select(col("b"), col("m"), col("mvec"),
-          dist(col("bvec"), col("mvec")).as("d"))
-        .as[(Long, Long, Array[Float], Double)]
-        .groupByKey(_._1)
-        .mapGroups { (b, it) =>
-          (b, robustPrune(it.map(t => (t._2, t._3, t._4)).toArray,
-            alpha, maxDeg))
-        }
-        .toDF("id", "nbrs2")
-      fits.unionByName(overPruned).localCheckpoint()
     }
-    val patched = repairOrphans(spark, newRows, updated, maxDeg, ids =>
-      if (ids.isEmpty) Map.empty
-      else {
-        // gb-pruned bounded collect: O(batch·maxDegree) ids, never the
-        // corpus (the same PartitionFilters trick as the serving path)
-        val gbs = ids.map(i => (((i % buckets) + buckets) % buckets).toInt)
-          .distinct // pmod, matching gbOf
-        store.rows.filter(col("gb").isInCollection(gbs))
-          .filter(col("id").isInCollection(ids))
-          .select(col("id"), col("vec"))
-          .as[(Long, Array[Float])].collect().toMap
-      })
-    writeAppendTail(store, path, newRows, patched)
   }
 
   /** Lazy delete: tombstone the ids (O(batch) sidecar append — no graph
@@ -1629,9 +1635,9 @@ object GraphAnn {
     * neighbour's kept neighbours) — the connect-through repair that
     * preserves local reachability. Unaffected rows are copied verbatim
     * (RobustPrune is idempotent on its own output, so re-pruning them
-    * would be a no-op anyway). Seeds drop their doomed members (medoid
-    * of the survivors if none remain); the tombstone sidecar is
-    * cleared. Full-store rewrite by design — the amortized counterpart
+    * would be a no-op anyway). Each doomed seed hands its place to the
+    * nearest surviving non-seed row (medoid of the survivors if none
+    * remain); the tombstone sidecar is cleared. Full-store rewrite by design — the amortized counterpart
     * of O(batch) removeGraph. */
   def consolidateGraph(spark: SparkSession, path: String): Unit =
     consolidateGraph(spark, path, openGraph(spark, path))
@@ -1649,46 +1655,77 @@ object GraphAnn {
       .filter(col("id").isInCollection(doomed))
       .select(col("id").as("d"), explode(col("nbrs")).as("nb2"))
       .filter(!col("nb2").isInCollection(doomed))
-    val affected = survivors
-      .filter(arrays_overlap(col("nbrs"),
-        lit(store.tombstones).cast("array<long>")))
-      .select(col("id"), col("vec"), col("nbrs"))
-      .localCheckpoint()
-    // candidate edges: kept direct neighbours ∪ connect-through
-    val direct = affected
-      .select(col("id"), explode(col("nbrs")).as("cand"))
-      .filter(!col("cand").isInCollection(doomed))
-    val through = affected
-      .select(col("id"), explode(col("nbrs")).as("d"))
-      .join(doomedAdj, Seq("d"))
-      .select(col("id"), col("nb2").as("cand"))
-      .filter(col("cand") =!= col("id"))
-    val cands = direct.unionByName(through).distinct()
-    val repruned = cands
-      .join(store.rows.select(col("id").as("cand"),
-        col("vec").as("cvec")), Seq("cand"))
-      .join(affected.select(col("id"), col("vec").as("svec")), Seq("id"))
-      .withColumn("d", dist(col("svec"), col("cvec")))
-      .select(col("id"), col("cand"), col("cvec"), col("d"))
-      .as[(Long, Long, Array[Float], Double)]
-      .groupByKey(_._1)
-      .mapGroups { (id, it) =>
-        (id, robustPrune(it.map(t => (t._2, t._3, t._4)).toArray,
-          store.alpha, store.maxDegree))
+    Pins.scope { pins =>
+      val affected = pins(survivors
+        .filter(arrays_overlap(col("nbrs"),
+          lit(store.tombstones).cast("array<long>")))
+        .select(col("id"), col("vec"), col("nbrs")))
+      // candidate edges: kept direct neighbours ∪ connect-through
+      val direct = affected
+        .select(col("id"), explode(col("nbrs")).as("cand"))
+        .filter(!col("cand").isInCollection(doomed))
+      val through = affected
+        .select(col("id"), explode(col("nbrs")).as("d"))
+        .join(doomedAdj, Seq("d"))
+        .select(col("id"), col("nb2").as("cand"))
+        .filter(col("cand") =!= col("id"))
+      val cands = direct.unionByName(through).distinct()
+      val repruned = cands
+        .join(store.rows.select(col("id").as("cand"),
+          col("vec").as("cvec")), Seq("cand"))
+        .join(affected.select(col("id"), col("vec").as("svec")), Seq("id"))
+        .withColumn("d", dist(col("svec"), col("cvec")))
+        .select(col("id"), col("cand"), col("cvec"), col("d"))
+        .as[(Long, Long, Array[Float], Double)]
+        .groupByKey(_._1)
+        .mapGroups { (id, it) =>
+          (id, robustPrune(it.map(t => (t._2, t._3, t._4)).toArray,
+            store.alpha, store.maxDegree))
+        }
+        .toDF("id", "nbrs2")
+      val merged = pins(survivors
+        .join(repruned, Seq("id"), "left")
+        .select(col("id"), col("vec"),
+          when(col("nbrs2").isNotNull, col("nbrs2"))
+            .otherwise(filter(col("nbrs"),
+              n => !n.isInCollection(doomed))).as("nbrs")))
+      val seeds = replaceDoomedSeeds(store, merged) match {
+        case s if s.nonEmpty => s
+        case _ => Array(medoid(merged.select(col("id"), col("vec"))))
       }
-      .toDF("id", "nbrs2")
-    val merged = survivors
-      .join(repruned, Seq("id"), "left")
-      .select(col("id"), col("vec"),
-        when(col("nbrs2").isNotNull, col("nbrs2"))
-          .otherwise(filter(col("nbrs"),
-            n => !n.isInCollection(doomed))).as("nbrs"))
-      .localCheckpoint()
-    val seeds = store.seeds.filterNot(doomed) match {
-      case s if s.nonEmpty => s
-      case _ => Array(medoid(merged.select(col("id"), col("vec"))))
+      writeGraph(merged, seeds, path, store.alpha, store.maxDegree,
+        store.buckets)
     }
-    writeGraph(merged, seeds, path, store.alpha, store.maxDegree,
-      store.buckets)
+  }
+
+  /** The store's seeds with each tombstoned one replaced by the
+    * surviving non-seed row of `merged` nearest its vector (ties to the
+    * smaller id; no two seeds take the same row). Seeds are the only
+    * routes between the graph's per-list components, so dropping a
+    * doomed list leader without a successor strands its cluster. When
+    * no seed is doomed this runs no job. */
+  private def replaceDoomedSeeds(store: GraphStore,
+                                 merged: DataFrame): Array[Long] = {
+    val doomed = store.tombstones.toSet
+    val lost = store.seeds.filter(doomed)
+    if (lost.isEmpty) return store.seeds
+    val spark = merged.sparkSession
+    import spark.implicits._
+    val lostVecs = store.rows.filter(col("id").isInCollection(lost.toSeq))
+      .select(col("id").as("sid"), col("vec").as("svec"))
+    // each lost seed's |lost| nearest candidates, so the greedy pass
+    // below always finds one not already taken
+    val near = merged.filter(!col("id").isInCollection(store.seeds.toSeq))
+      .crossJoin(broadcast(lostVecs))
+      .groupBy(col("sid"))
+      .agg(graft.functions.TopMByDist.topM(col("id"),
+        dist(col("vec"), col("svec")), lost.length).as("top"))
+      .select(col("sid"), col("top.id"))
+      .as[(Long, Array[Long])].collect().toMap
+    val taken = mutable.HashSet.empty[Long]
+    store.seeds.flatMap { s =>
+      if (!doomed(s)) Some(s)
+      else near.getOrElse(s, Array.emptyLongArray).find(taken.add)
+    }
   }
 }

@@ -106,7 +106,7 @@ object Graphs {
         .withColumn("lab", col("node"))
         .localCheckpoint()
       for (_ <- 1 to iterations) {
-        lab = e
+        val next = e
           .join(lab.select(col("node").as("y"), col("lab")), Seq("y"))
           .groupBy(col("x"), col("lab")).agg(count(lit(1)).as("c"))
           .groupBy(col("x"))
@@ -114,6 +114,8 @@ object Graphs {
             struct((-col("c")).as("nc"), col("lab").as("l"))).as("lab"))
           .select(col("x").as("node"), col("lab"))
           .localCheckpoint()
+        IndexBuild.freeCheckpoint(lab)
+        lab = next
       }
       lab.select(col("node"), col("lab").as("community"))
     } finally {
@@ -167,12 +169,12 @@ object Graphs {
         if (nNodes <= broadcastMaxNodes) broadcast(df) else df
       var pr = nodes.withColumn("pr",
         when(col("seed"), lit(unit / nSeeds)).otherwise(lit(0L)))
-      for (_ <- 1 to iterations) {
+      for (round <- 1 to iterations) {
         val contrib = ew
           .join(maybeB(pr.select(col("node").as("src"), col("pr"))), Seq("src"))
           .select(col("dst").as("node"), expr("pr div outdeg").as("share"))
           .groupBy(col("node")).agg(sum(col("share")).as("contrib"))
-        pr = nodes
+        val next = nodes
           .join(maybeB(contrib), Seq("node"), "left_outer")
           .select(col("node"), col("seed"),
             (when(col("seed"), lit(base)).otherwise(lit(0L)) +
@@ -181,7 +183,12 @@ object Graphs {
           // the same plan-verified reason as pageRank: the lazy chain
           // re-shuffles the cached graph twice per round
           .localCheckpoint()
+        // round 1's input reads `nodes`, which every round still joins
+        if (round > 1) IndexBuild.freeCheckpoint(pr)
+        pr = next
       }
+      // with no rounds the result still reads `nodes`
+      if (iterations > 0) IndexBuild.freeCheckpoint(nodes)
       pr.select(col("node"), col("pr"))
     } finally {
       // pr is checkpointed; drop the cache even when the seed check or
@@ -264,12 +271,12 @@ object Graphs {
       val maybeB = (df: DataFrame) =>
         if (n <= broadcastMaxNodes) broadcast(df) else df
       var pr = nodes.withColumn("pr", lit(unit / n))
-      for (_ <- 1 to iterations) {
+      for (round <- 1 to iterations) {
         val contrib = ew
           .join(maybeB(pr.withColumnRenamed("node", "src")), Seq("src"))
           .select(col("dst").as("node"), expr("pr div outdeg").as("share"))
           .groupBy(col("node")).agg(sum(col("share")).as("contrib"))
-        pr = nodes
+        val next = nodes
           .join(maybeB(contrib), Seq("node"), "left_outer")
           .select(col("node"),
             (lit(base) + expr("(17 * coalesce(contrib, 0L)) div 20")).as("pr"))
@@ -292,7 +299,12 @@ object Graphs {
           // the price, and it also bounds plan depth at any iteration
           // count (ADVICE r17).
           .localCheckpoint()
+        // round 1's input reads `nodes`, which every round still joins
+        if (round > 1) IndexBuild.freeCheckpoint(pr)
+        pr = next
       }
+      // with no rounds the result still reads `nodes`
+      if (iterations > 0) IndexBuild.freeCheckpoint(nodes)
       pr
     } finally {
       // pr is checkpointed; drop the cache even when a round throws,
@@ -360,6 +372,7 @@ object Graphs {
       val nn = Observe.value(obs, "n").asInstanceOf[Long]
       // edge sets only shrink: same count == same set == fixpoint
       converged = nn == n
+      IndexBuild.freeCheckpoint(e)
       e = ne
       n = nn
       round += 1

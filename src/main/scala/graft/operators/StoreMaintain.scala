@@ -45,15 +45,16 @@ object StoreMaintain {
     // surviving rows of the touched partitions, lineage BROKEN before
     // the in-place write (the write must never read the files it is
     // replacing — same contract as IndexStore.maintainDocument)
-    val remaining = store
-      .filter(col(partCol).isInCollection(touched))
-      .join(broadcast(idRel), Seq(idCol), "left_anti")
-      .localCheckpoint()
-    val kept = remaining.select(col(partCol)).distinct()
-      .collect().map(_.get(0)).toSet
-    // per-writer option: the session's overwrite mode stays as it was
-    remaining.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partCol).parquet(path)
+    val kept = Pins.scope { pins =>
+      val remaining = pins(store
+        .filter(col(partCol).isInCollection(touched))
+        .join(broadcast(idRel), Seq(idCol), "left_anti"))
+      // per-writer option: the session's overwrite mode stays as it was
+      remaining.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partCol).parquet(path)
+      remaining.select(col(partCol)).distinct()
+        .collect().map(_.get(0)).toSet
+    }
     // dynamic overwrite replaces only partitions PRESENT in `remaining`;
     // a partition the delete emptied has no rows to carry it — drop it
     val hPath = new org.apache.hadoop.fs.Path(path)

@@ -75,8 +75,9 @@ object IndexStore {
     // staging order — a commit-time failure could lose the only copy of
     // the doc's partition. localCheckpoint materializes the maintained
     // index first so the write never touches its own input.
-    replaceDocs(added.withColumn("docId", lit(docId)).localCheckpoint(),
-      path)
+    graft.operators.Pins.scope { pins =>
+      replaceDocs(pins(added.withColumn("docId", lit(docId))), path)
+    }
   }
 
   /** ONE-WAVE orchestration of [[indexDocument]] for every document in

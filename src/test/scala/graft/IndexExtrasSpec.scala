@@ -421,6 +421,53 @@ class IndexExtrasSpec extends SparkSpec {
       s"$call: $got, brute force $want" }.mkString("; "))
   }
 
+  test("store writers free the checkpoints they make") {
+    val sc = spark.sparkContext
+    def newPins(writer: => Unit): collection.Set[Int] = {
+      val before = sc.getPersistentRDDs.keySet
+      writer
+      sc.getPersistentRDDs.keySet -- before
+    }
+    val dir = tmpDir("graftwpins")
+    val pts = Ingest.randomClustered(spark, 520, 8, 4)
+      .withColumnRenamed("vector", "embedding").localCheckpoint()
+    def batch(lo: Long, hi: Long) =
+      pts.filter(col("id") >= lo && col("id") < hi).localCheckpoint()
+    val (base, adds, addsDist) = (batch(0, 440), batch(440, 480), batch(480, 520))
+    GraphAnn.buildAndWrite(base, "id", "embedding", numLists = 4, nprobe = 2,
+      k = 8, alpha = 1.2, maxDegree = 8, path = s"$dir/g")
+    Similarity.writeIvf(base, "id", "embedding", 4, s"$dir/ivf")
+    val doomed = base.filter(col("id") % 7 === 0).select("id").localCheckpoint()
+    val e = Tables.embeddings(spark, sf0001)
+    IndexStore.replaceDocs(
+      IndexBuild.buildIndexPerDoc(e, "label", "vec_id", "embedding"), s"$dir/idx")
+    val doc = e.select(col("label").cast("long")).as[Long].collect().min
+    val docPts = e.filter(col("label") === doc).localCheckpoint()
+    val drop = docPts.orderBy("vec_id").limit(3).select("vec_id").localCheckpoint()
+    val leaks = Seq[(String, () => Unit)](
+      "appendGraph" -> (() =>
+        GraphAnn.appendGraph(spark, s"$dir/g", adds, "id", "embedding")),
+      "appendGraphDistributed" -> (() => GraphAnn.appendGraphDistributed(
+        spark, s"$dir/g", addsDist, "id", "embedding")),
+      "consolidateGraph" -> { () =>
+        GraphAnn.removeGraph(spark, s"$dir/g",
+          doomed.as[Long].collect().toSeq)
+        GraphAnn.consolidateGraph(spark, s"$dir/g")
+      },
+      "removeFromStore" -> (() => StoreMaintain.removeFromStore(
+        spark, s"$dir/ivf", doomed, "id", "list_id")),
+      "maintainDocument" -> (() => IndexStore.maintainDocument(spark,
+        s"$dir/idx", doc, docPts, "vec_id", "embedding", remove = Some(drop)))
+    ).map { case (name, writer) => name -> newPins(writer()) }
+      .filter(_._2.nonEmpty)
+    assert(leaks.isEmpty, leaks.map { case (w, ids) =>
+      s"$w left ${ids.size} pinned" }.mkString("; "))
+    // the writes landed
+    assert(GraphAnn.openGraph(spark, s"$dir/g").rows.count() ==
+      520 - doomed.count())
+    assert(spark.read.parquet(s"$dir/ivf").count() == 440 - doomed.count())
+  }
+
   test("store writers leave the session's partitionOverwriteMode as it was") {
     val key = "spark.sql.sources.partitionOverwriteMode"
     val before = spark.conf.getOption(key)

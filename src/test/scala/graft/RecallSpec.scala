@@ -417,6 +417,54 @@ class RecallSpec extends SparkSpec {
     intercept[Exception](GraphAnn.consolidateGraphIfNeeded(spark, dir, 0.01))
   }
 
+  test("consolidateGraph hands a doomed list leader's place to its nearest survivor") {
+    // 8 planted clusters x ~150 points in 8-d over 8 IVF lists: the
+    // graph is disconnected across lists, so a cluster whose only seed
+    // is deleted is reachable again only through a replacement. The
+    // cluster is picked by its seed count: IVF training leaves one of
+    // them with no seed at all, which this spec does not cover.
+    val dir = java.nio.file.Files.createTempDirectory("graftgseed")
+      .resolve("g").toString
+    val fx = graft.sources.Ingest.randomClustered(spark, 1200, 8, 8)
+      .select(col("id"), col("vector").as("embedding"),
+        pmod(xxhash64(col("id"), lit(42L)), lit(8L)).as("cluster"))
+      .localCheckpoint()
+    val (graph, seeds) = GraphAnn.build(fx, "id", "embedding", numLists = 8,
+      nprobe = 1, k = 8, alpha = 1.2, maxDegree = 16)
+    GraphAnn.writeGraph(graph, seeds, dir, 1.2, 16)
+    val clusterOf = fx.select("id", "cluster").as[(Long, Long)].collect().toMap
+    val (cluster, leader) = seeds.groupBy(clusterOf).toSeq.sortBy(_._1)
+      .collectFirst { case (c, Array(s)) => (c, s) }
+      .getOrElse(fail("no cluster with exactly one seed"))
+    val qrows = fx.filter(col("cluster") === cluster && col("id") =!= leader)
+      .orderBy("id").limit(5)
+      .select(col("id").as("qid"), col("embedding").cast("array<double>").as("qv"))
+      .localCheckpoint()
+    val qs = qrows.as[(Long, Seq[Double])].collect().toSeq
+    // recall@10 of the pinned and the distributed search against brute
+    // force over the points not removed
+    def recalls(removed: Long*): (Double, Double) = {
+      val store = GraphAnn.openGraph(spark, dir)
+      val live = fx.filter(!col("id").isInCollection(removed))
+      val truth = qs.map { case (qid, q) => qid -> BruteForce.knn(live,
+        "embedding", "id", q, K).select("id").as[Long].collect().toSet }.toMap
+      val pinned = GraphAnn.pinStore(store)
+      val pinHits = qs.map { case (qid, q) =>
+        pinned.knn(q, K, 64).map(_._1).toSet.intersect(truth(qid)).size }.sum
+      val distHits = GraphAnn.graphKnnDistributed(store, qrows, "qid", "qv", K, 64)
+        .select("qid", "id").as[(Long, Long)].collect()
+        .count { case (qid, id) => truth(qid)(id) }
+      (pinHits.toDouble / (qs.size * K), distHits.toDouble / (qs.size * K))
+    }
+    assert(recalls() == ((1.0, 1.0)), s"cluster $cluster before the removal")
+    GraphAnn.removeGraph(spark, dir, Seq(leader))
+    GraphAnn.consolidateGraph(spark, dir)
+    assert(recalls(leader) == ((1.0, 1.0)), s"cluster $cluster after consolidation")
+    val after = GraphAnn.openGraph(spark, dir)
+    assert(after.seeds.length == seeds.length, after.seeds.mkString(","))
+    assert(!after.seeds.contains(leader))
+  }
+
   test("distributed beam search over the store: recall, pinned parity, tombstones") {
     // the de-pinned serving path (judge r15): same store, no driver pin
     val dir = java.nio.file.Files.createTempDirectory("graftgdist")

@@ -165,6 +165,34 @@ class RetrievalSpec extends SparkSpec {
     }
   }
 
+  test("fixpoint operators keep only the checkpoints their result reads") {
+    val sc = spark.sparkContext
+    // 600 edges: 200 nodes, each pointing at its next three
+    val e = (0 until 200).flatMap(i => (1 to 3).map(j => (i.toLong,
+      ((i + j * 7) % 200).toLong))).toDF("src", "dst").localCheckpoint()
+    val undirected = e.select(least(col("src"), col("dst")).as("a"),
+      greatest(col("src"), col("dst")).as("b")).distinct().localCheckpoint()
+    val leftovers = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "pageRank" -> (() => Graphs.pageRank(e, iterations = 5)),
+      "pageRank 0 rounds" -> (() => Graphs.pageRank(e, iterations = 0)),
+      "pageRankPersonalized" -> (() => Graphs.pageRankPersonalized(e,
+        Seq(1L, 2L).toDF("node"), iterations = 5)),
+      "labelPropagation" -> (() => Graphs.labelPropagation(undirected,
+        iterations = 4)),
+      "kCore" -> (() => Graphs.kCore(undirected, 3, 6))
+    ).map { case (name, op) =>
+      val before = sc.getPersistentRDDs.keySet
+      val out = op()
+      val reads = out.queryExecution.analyzed.collectLeaves().collect {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+      }.toSet
+      assert(out.count() > 0, name) // the result still reads its pins
+      name -> (sc.getPersistentRDDs.keySet -- before -- reads)
+    }.filter(_._2.nonEmpty)
+    assert(leftovers.isEmpty, leftovers.map { case (op, ids) =>
+      s"$op left ${ids.size} unread" }.mkString("; "))
+  }
+
   test("maxSim rerank: stage-2 scores equal the full-scan scores on the candidate set") {
     val e = Tables.embeddings(spark, sf0001)
     val q = QueryConstants.Q64
