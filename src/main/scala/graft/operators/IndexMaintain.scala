@@ -165,6 +165,7 @@ object IndexMaintain {
           col("uid") === col("suid"), "left_anti")
         .localCheckpoint()
       if (!done.isEmpty) arrived ::= done
+      else IndexBuild.freeCheckpoint(done)
       IndexBuild.freeCheckpoint(inFlight)
       inFlight = stepped
     }

@@ -1,14 +1,17 @@
 package graft.operators
 
 import java.lang.ref.SoftReference
-import java.util.concurrent.atomic.AtomicReference
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.AttributeReference
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.functions.VectorFunctions._
 import graft.plans.IndexedVicinityRule
@@ -28,20 +31,34 @@ import graft.plans.IndexedVicinityRule
   *    in ONE job and pinned ([[PinnedIndex]]), and the descent is the
   *    pinned tree's in-memory walk — the index is ~2N tiny rows, and the
   *    reference's SQL recursive CTE also runs on one node.
-  *  - pinned once per file snapshot: when the index is a bare file scan
-  *    (column selections over a parquet read), the last pin is kept,
-  *    softly held, under the relation's schema and the sorted (path,
-  *    length, modification time) of its listed files — the files a query
-  *    over that DataFrame reads. Repeat queries walk it with no job while
-  *    its row count fits `localNodeLimit`. A rewritten directory, read
-  *    back, lists new files and pins afresh; an old DataFrame keeps its
-  *    old listing, as any Spark read does. Other plans (filters, joins,
-  *    computed columns, in-memory or checkpointed relations) pin on
-  *    every call.
-  *  - `searchExact` re-checks candidates as an id semi-join in the same
-  *    job as the exact predicate: an id IN-set filter on `points` (the
-  *    vicinity rule's form and cap), or a left semi-join past the cap
-  *    and on the distributed path — each `points` row comes out once.
+  *  - pinned once per file snapshot: a bare file scan (column selections
+  *    over a parquet read) has a snapshot — the relation's schema and the
+  *    sorted (path, length, modification time) of its listed files, the
+  *    files a query over that DataFrame reads. A small registry keeps
+  *    pins under their snapshots in a few softly held slots, least
+  *    recently used evicted first, within an eighth of the driver heap.
+  *    A tree pin is kept on its first collect; repeat queries walk it
+  *    with no job while its row count fits `localNodeLimit`.
+  *  - `searchExact` with both `index` and `points` bare file scans and a
+  *    `Long` id: the first query against a `points` snapshot records it
+  *    as seen and re-checks by job (below), so a one-off query pays no
+  *    full collect; the second collects the `points` rows once, keyed by
+  *    the snapshot, the projection's schema and `idCol`, while the listed
+  *    bytes are at most a sixteenth of the heap. From then on the
+  *    candidates' rows are looked up by id on the driver and returned as
+  *    a `LocalRelation` under the same exact predicate, which the
+  *    optimizer folds (`ConvertToLocalRelation`): collecting the answer
+  *    runs no job. Null ids are not pinned and never match.
+  *  - staleness, for both directories: a rewritten directory, read back,
+  *    lists new files, so its snapshot is new and pins afresh; an old
+  *    DataFrame keeps its old listing, as any Spark read does. Other
+  *    plans (filters, joins, computed columns, in-memory or checkpointed
+  *    relations) pin the tree on every call and keep the job re-check.
+  *  - otherwise `searchExact` re-checks candidates as an id semi-join in
+  *    the same job as the exact predicate: an id IN-set filter on
+  *    `points` (the vicinity rule's form and cap), or a left semi-join
+  *    past the cap and on the distributed path. On every path each
+  *    `points` row comes out once, `idCol` first.
   *  - distributed ([[frontierSearch]]): past the limit, an iterative
   *    frontier loop — per level, join the (tiny) frontier against the
   *    index relation. Survives indexes too large for any single node;
@@ -61,19 +78,66 @@ object IndexSearch {
     if (rows.length <= limit) Some(rows) else None
   }
 
-  /** The files a bare file-scan index reads: its relation's schema and
-    * the sorted (path, length, modification time) of every listed file. */
-  private final case class Snapshot(schema: StructType, files: Seq[(String, Long, Long)])
+  /** The files a bare file scan reads: its relation's schema and the
+    * sorted (path, length, modification time) of every listed file. */
+  private final case class Snapshot(schema: StructType, files: Seq[(String, Long, Long)]) {
+    def bytes: Long = files.map(_._2).sum
+  }
 
-  /** The last tree pinned from a file snapshot, with its node-row count. */
-  private final case class Pin(snapshot: Snapshot, rows: Long, tree: SoftReference[PinnedIndex])
+  /** A tree pinned from a file snapshot, with its node-row count. */
+  private final case class Tree(rows: Long, tree: PinnedIndex)
 
-  private val lastPin = new AtomicReference[Pin]()
+  /** A `points` pin's key: its file snapshot, the projection read from it
+    * and the id column. */
+  private final case class RowsKey(snapshot: Snapshot, schema: StructType, idCol: String)
 
-  /** The snapshot of `index` when its plan is column selections over one
+  /** A `points` snapshot queried once and not pinned yet. */
+  private case object Seen
+
+  /** `points` rows pinned on the driver: compact row copies sorted by id
+    * (null ids dropped), with each id's first row index. */
+  private final class Rows(rows: Array[UnsafeRow], idAt: Int) {
+    private val first = mutable.LongMap.empty[Int]
+    rows.indices.reverseIterator.foreach(i => first(rows(i).getLong(idAt)) = i)
+    val bytes: Long = rows.iterator.map(_.getSizeInBytes + 32L).sum
+
+    /** Every row with id `id`, once each. */
+    def of(id: Long): Iterator[UnsafeRow] = first.get(id).iterator.flatMap(i =>
+      Iterator.from(i).takeWhile(j => j < rows.length && rows(j).getLong(idAt) == id).map(rows))
+  }
+
+  /** The pins kept per snapshot key, softly held: a few slots under a
+    * byte budget of an eighth of the driver heap, the least recently
+    * used evicted first. */
+  private object Kept {
+    private final class Slot(val pin: SoftReference[AnyRef], val bytes: Long)
+    private val MaxSlots = 8
+    private val slots = new java.util.LinkedHashMap[AnyRef, Slot](16, 0.75f, true)
+
+    def get(key: AnyRef): Option[AnyRef] = synchronized {
+      Option(slots.get(key)).flatMap { slot =>
+        val pin = Option(slot.pin.get)
+        if (pin.isEmpty) slots.remove(key)
+        pin
+      }
+    }
+
+    def put(key: AnyRef, pin: AnyRef, bytes: Long): Unit = synchronized {
+      slots.put(key, new Slot(new SoftReference(pin), bytes))
+      var total = 0L
+      slots.values.forEach(s => total += s.bytes)
+      val lru = slots.entrySet.iterator
+      while ((slots.size > MaxSlots || total > Runtime.getRuntime.maxMemory / 8) && lru.hasNext) {
+        val e = lru.next()
+        if (e.getKey != key) { total -= e.getValue.bytes; lru.remove() }
+      }
+    }
+  }
+
+  /** The snapshot of `df` when its plan is column selections over one
     * file relation (as `VectorIndexCatalog` reads source paths); None
     * otherwise. */
-  private def snapshotOf(index: DataFrame): Option[Snapshot] = {
+  private def snapshotOf(df: DataFrame): Option[Snapshot] = {
     def scan(plan: LogicalPlan): Option[HadoopFsRelation] = plan match {
       case Project(list, child) if list.forall(_.isInstanceOf[AttributeReference]) =>
         scan(child)
@@ -83,27 +147,57 @@ object IndexSearch {
       }
       case _ => None
     }
-    scan(index.queryExecution.analyzed).map { h =>
+    scan(df.queryExecution.analyzed).map { h =>
       Snapshot(h.schema, h.location.listFiles(Nil, Nil).flatMap(_.files)
         .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted)
     }
   }
 
   /** The index pinned, if it fits `localNodeLimit` rows: the kept pin of
-    * the same file snapshot (no job), else collected in one job. */
-  private def pinWithin(index: DataFrame, localNodeLimit: Long): Option[PinnedIndex] = {
-    val snapshot = snapshotOf(index)
-    val kept = Option(lastPin.get).filter(p => snapshot.contains(p.snapshot))
-      .flatMap(p => Option(p.tree.get).map(tree => (p.rows, tree)))
-    kept match {
-      case Some((rows, tree)) => Option.when(rows <= localNodeLimit)(tree)
-      case None =>
+    * its file snapshot (no job), else collected in one job and kept. */
+  private def pinWithin(index: DataFrame, snapshot: Option[Snapshot],
+                        localNodeLimit: Long): Option[PinnedIndex] =
+    snapshot.flatMap(Kept.get) match {
+      case Some(Tree(rows, tree)) => Option.when(rows <= localNodeLimit)(tree)
+      case _ =>
         collectWithin(index.select(PinnedIndex.NodeCols.map(col): _*), localNodeLimit)
           .map { rows =>
             val tree = PinnedIndex.fromRows(rows)
-            snapshot.foreach(s => lastPin.set(Pin(s, rows.length, new SoftReference(tree))))
+            snapshot.foreach(Kept.put(_, Tree(rows.length, tree), 48L * rows.length))
             tree
           }
+    }
+
+  /** The name `idCol` resolves to among `cols`: exact, else ignoring case. */
+  private def idName(cols: Seq[String], idCol: String): String =
+    cols.find(_ == idCol).orElse(cols.find(_.equalsIgnoreCase(idCol))).getOrElse(idCol)
+
+  /** The `points` rows pinned on the driver, when `points` is a bare file
+    * scan with a `Long` id column and listed bytes within a sixteenth of
+    * the heap: the kept pin of its snapshot; else, on the snapshot's
+    * second query, collected in one job and kept; on its first, None
+    * (the snapshot is recorded as seen). */
+  private def rowsWithin(points: DataFrame, idCol: String): Option[Rows] = {
+    val schema = points.schema
+    val idAt = schema.fieldNames.indexOf(idName(schema.fieldNames.toSeq, idCol))
+    if (idAt < 0 || schema(idAt).dataType != LongType) None
+    else snapshotOf(points).filter(_.bytes <= Runtime.getRuntime.maxMemory / 16).flatMap { s =>
+      val key = RowsKey(s, schema, idCol)
+      Kept.get(key) match {
+        case Some(rows: Rows) => Some(rows)
+        case Some(Seen) =>
+          val qe = points.queryExecution
+          val toUnsafe = UnsafeProjection.create(schema)
+          val rows = new Rows(
+            SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect())
+              .filterNot(_.isNullAt(idAt)).map(r => toUnsafe(r).copy()).sortBy(_.getLong(idAt)),
+            idAt)
+          Kept.put(key, rows, rows.bytes)
+          Some(rows)
+        case _ =>
+          Kept.put(key, Seen, 0L)
+          None
+      }
     }
   }
 
@@ -112,7 +206,7 @@ object IndexSearch {
                 localNodeLimit: Long = DefaultNodeLimit): DataFrame = {
     val spark = index.sparkSession
     import spark.implicits._
-    pinWithin(index, localNodeLimit) match {
+    pinWithin(index, snapshotOf(index), localNodeLimit) match {
       case Some(tree) => tree.candidates(q, domain).toDF("id")
       case None => frontierSearch(index, doubleVec(q), domain, Nil, None, hint = true)
     }
@@ -131,18 +225,23 @@ object IndexSearch {
     def semi(cands: DataFrame): DataFrame =
       points.join(cands.withColumnRenamed("id", idCol), Seq(idCol), "left_semi")
         .filter(exact)
-    val hits = pinWithin(index, DefaultNodeLimit) match {
+    val snapshot = snapshotOf(index)
+    val hits = pinWithin(index, snapshot, DefaultNodeLimit) match {
       case Some(tree) =>
         val ids = tree.candidatesL2(q, radius).distinct
-        if (ids.size <= IndexedVicinityRule.DefaultMaxCandidates)
-          points.filter(col(idCol).isInCollection(ids) && exact)
-        else semi(ids.toDF("id"))
+        snapshot.flatMap(_ => rowsWithin(points, idCol)) match {
+          case Some(rows) =>
+            GraftSqlShim.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(points.schema),
+              ids.iterator.flatMap(rows.of).toIndexedSeq)).filter(exact)
+          case None if ids.size <= IndexedVicinityRule.DefaultMaxCandidates =>
+            points.filter(col(idCol).isInCollection(ids) && exact)
+          case None => semi(ids.toDF("id"))
+        }
       case None => semi(frontierSearch(index, doubleVec(q), radius, Nil, None, hint = true))
     }
     // output columns: `idCol` first, then the rest of `points` in order
-    val cols = hits.columns
-    val key = cols.find(_ == idCol).orElse(cols.find(_.equalsIgnoreCase(idCol)))
-      .getOrElse(idCol)
+    val cols = hits.columns.toSeq
+    val key = idName(cols, idCol)
     hits.select((key +: cols.filterNot(_ == key))
       .map(c => col("`" + c.replace("`", "``") + "`")): _*)
   }
@@ -158,7 +257,7 @@ object IndexSearch {
                  localNodeLimit: Long = DefaultNodeLimit): DataFrame = {
     val spark = index.sparkSession
     import spark.implicits._
-    pinWithin(index, localNodeLimit) match {
+    pinWithin(index, snapshotOf(index), localNodeLimit) match {
       case Some(tree) => tree.candidatesL2(q, radius).toDF("id")
       case None => frontierSearch(index, doubleVec(q), radius, Nil, None, hint = true)
     }
@@ -236,7 +335,7 @@ object IndexSearch {
                        vecCol: String, queries: DataFrame, qidCol: String,
                        qvecCol: String, radius: Double,
                        localNodeLimit: Long = DefaultNodeLimit): DataFrame = {
-    val cands = pinWithin(index, localNodeLimit) match {
+    val cands = pinWithin(index, snapshotOf(index), localNodeLimit) match {
       case Some(tree) =>
         PinnedIndex.candidatePairs(tree, queries, qidCol, qvecCol, radius)
       // distinct: an id held by two leaves reaches a query twice

@@ -372,6 +372,110 @@ class IndexExtrasSpec extends SparkSpec {
     assert(ids(IndexSearch.searchExact(rewritten, e, "vec_id", "embedding", q, r)) == wantEven)
   }
 
+  /** A parquet copy of `df` under a fresh directory, read back. */
+  private def parquet(df: DataFrame, prefix: String): DataFrame = {
+    val dir = tmpDir(prefix) + "/data"
+    df.write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  test("a third searchExact on the same parquet DataFrames runs no job") {
+    val e = Tables.embeddings(spark, sf0001)
+    val q = QueryConstants.Q64
+    val r = QueryConstants.Radius
+    val index = parquet(IndexBuild.buildIndex(e, "vec_id", "embedding"), "graftpin3")
+    def ids() = IndexSearch.searchExact(index, e, "vec_id", "embedding", q, r)
+      .select("vec_id").as[Long].collect().sorted.toSeq
+    val want = BruteForce.rangeSearch(e, "embedding", q, r)
+      .select("vec_id").as[Long].collect().sorted.toSeq
+    assert(ids() == want && ids() == want && want.nonEmpty)
+    val (third, jobs) = jobsOf(ids())
+    assert(third == want)
+    assert(jobs == 0, s"third searchExact ran $jobs jobs")
+  }
+
+  test("a rewritten points directory, read back, is re-checked afresh") {
+    val e = Tables.embeddings(spark, sf0001)
+    val q = QueryConstants.Q64
+    val r = QueryConstants.Radius
+    val index = parquet(IndexBuild.buildIndex(e, "vec_id", "embedding"), "graftptsidx")
+    val dir = tmpDir("graftpts") + "/points"
+    def ids(pts: DataFrame) = IndexSearch.searchExact(index, pts, "vec_id", "embedding", q, r)
+      .select("vec_id").as[Long].collect().sorted.toSeq
+    def brute(pts: DataFrame) = BruteForce.rangeSearch(pts, "embedding", q, r)
+      .select("vec_id").as[Long].collect().sorted.toSeq
+    e.select("vec_id", "embedding").write.parquet(dir)
+    val before = spark.read.parquet(dir)
+    assert(ids(before) == brute(e) && ids(before) == brute(e))
+    assert(jobsOf(ids(before))._2 == 0, "the points rows were not pinned")
+    // fewer vectors under the same directory: a stale pin would still
+    // return the odd ids
+    e.filter(col("vec_id") % 2 === 0).select("vec_id", "embedding")
+      .write.mode("overwrite").parquet(dir)
+    val after = spark.read.parquet(dir)
+    assert(brute(after) != brute(e), "the rewrite must change the answer")
+    assert(ids(after) == brute(after))
+  }
+
+  test("points that are not a bare file scan keep the one-job re-check") {
+    val e = Tables.embeddings(spark, sf0001)
+    val q = QueryConstants.Q64
+    val r = QueryConstants.Radius
+    val index = parquet(IndexBuild.buildIndex(e, "vec_id", "embedding"), "graftptsfilter")
+    val even = e.filter(col("vec_id") % 2 === 0)
+    def ids() = IndexSearch.searchExact(index, even, "vec_id", "embedding", q, r)
+      .select("vec_id").as[Long].collect().sorted.toSeq
+    val want = BruteForce.rangeSearch(even, "embedding", q, r)
+      .select("vec_id").as[Long].collect().sorted.toSeq
+    assert(ids() == want && want.nonEmpty)
+    (1 to 3).foreach { call =>
+      val (got, jobs) = jobsOf(ids())
+      assert(got == want, s"call $call")
+      assert(jobs == 1, s"call $call ran $jobs jobs")
+    }
+  }
+
+  test("alternating queries on two parquet indexes keep both pins") {
+    val e = Tables.embeddings(spark, sf0001)
+    val q = QueryConstants.Q64
+    val r = QueryConstants.Radius
+    val even = e.filter(col("vec_id") % 2 === 0)
+    val all = parquet(IndexBuild.buildIndex(e, "vec_id", "embedding"), "graftalt")
+    val halves = parquet(IndexBuild.buildIndex(even, "vec_id", "embedding"), "graftalt")
+    def ids(index: DataFrame) = IndexSearch.searchExact(index, e, "vec_id", "embedding", q, r)
+      .select("vec_id").as[Long].collect().sorted.toSeq
+    def brute(pts: DataFrame) = BruteForce.rangeSearch(pts, "embedding", q, r)
+      .select("vec_id").as[Long].collect().sorted.toSeq
+    val want = Seq(all -> brute(e), halves -> brute(even))
+    assert(want(0)._2 != want(1)._2, "the two trees must answer differently")
+    (1 to 2).foreach(_ => want.foreach { case (index, w) => assert(ids(index) == w) })
+    (1 to 2).foreach(_ => want.zipWithIndex.foreach { case ((index, w), i) =>
+      val (got, jobs) = jobsOf(ids(index))
+      assert(got == w, s"index $i")
+      assert(jobs == 0, s"index $i ran $jobs jobs once warm")
+    })
+  }
+
+  test("pinned parquet points: a duplicated id comes out once per row, a null id never") {
+    // ids 1 (twice) and 3 and the null id lie inside the ball; a null id
+    // is no point of the index, so brute force runs over identified rows
+    val rows = Seq[(Option[Long], Seq[Float])]((Some(1L), Seq(0.0f)), (Some(1L), Seq(0.1f)),
+      (Some(2L), Seq(1.0f)), (Some(3L), Seq(0.15f)), (None, Seq(0.05f))).toDF("id", "vector")
+    val pts = parquet(rows, "graftptsdup")
+    val index = parquet(IndexBuild.buildIndex(rows.filter(col("id").isNotNull), "id", "vector"),
+      "graftptsdupidx")
+    val q = Seq(0.05)
+    val r = 0.2
+    def sorted(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val want = sorted(BruteForce.rangeSearch(pts.filter(col("id").isNotNull), "vector", q, r)
+      .select("id", "vector"))
+    assert(want.size == 3)
+    val calls = (1 to 3).map(_ =>
+      jobsOf(sorted(IndexSearch.searchExact(index, pts, "id", "vector", q, r))))
+    calls.zipWithIndex.foreach { case ((got, _), i) => assert(got == want, s"call ${i + 1}") }
+    assert(calls.last._2 == 0, s"the third call ran ${calls.last._2} jobs")
+  }
+
   test("localNodeLimit = 0 after a kept pin still runs the frontier search") {
     val e = Tables.embeddings(spark, sf0001)
     val q = QueryConstants.Q64
@@ -466,6 +570,25 @@ class IndexExtrasSpec extends SparkSpec {
     assert(GraphAnn.openGraph(spark, s"$dir/g").rows.count() ==
       520 - doomed.count())
     assert(spark.read.parquet(s"$dir/ivf").count() == 440 - doomed.count())
+  }
+
+  test("distributed addPoints pins only the leaves of the relation it returns") {
+    val sc = spark.sparkContext
+    val base = Ingest.randomUniform(spark, 500, 4, seed = 7L).localCheckpoint()
+    val adds = Ingest.randomUniform(spark, 20, 4, seed = 8L)
+      .select((col("id") + 1000L).as("id"), col("vector")).localCheckpoint()
+    val index = IndexBuild.buildIndex(base, "id", "vector").localCheckpoint()
+    val before = sc.getPersistentRDDs.keySet
+    val routed = IndexMaintain.addPoints(index, base, adds, "id", "vector",
+      localNodeLimit = 0L)
+    val leaves = routed.queryExecution.analyzed.collectLeaves().collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+    }.toSet
+    val stray = sc.getPersistentRDDs.keySet -- before -- leaves
+    assert(stray.isEmpty, s"${stray.size} pinned RDDs outside the returned plan")
+    def rows(df: DataFrame) = df.select(PinnedIndex.NodeCols.map(col): _*)
+      .collect().map(_.toString).sorted.toSeq
+    assert(rows(routed) == rows(IndexMaintain.addPoints(index, base, adds, "id", "vector")))
   }
 
   test("store writers leave the session's partitionOverwriteMode as it was") {
