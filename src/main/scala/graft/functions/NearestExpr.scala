@@ -1,11 +1,24 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftSqlShim}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
+
+/* Native nearest-centroid kernels over CONSTANT centroid tables.
+ *
+ * ONE COPY OF EACH KERNEL: every loop lives once, as a static function
+ * of NearestKernels (every full distance through its one d² loop).
+ * `nullSafeEval` calls it, and `doGenCode` is one generated call to the
+ * same function — tables ride as reference objects, the element-type
+ * and sqrt flags as literals. The two paths are reached by different
+ * checks: specs build rows with `Seq.toDF`, which the optimizer folds
+ * through the interpreted projection (eval), while the oracle gates
+ * and the benchmark run whole-stage codegen. A templated second copy
+ * of a loop would be checked by neither against the other;
+ * KernelParitySpec pins eval ≡ codegen for every kernel expression.
+ */
 
 /** Native nearest-centroid argmin over a CONSTANT centroid table.
   *
@@ -16,8 +29,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * to interpreted evaluation — measured in the round-8 `ivfpqbench`
   * (lists=256 write) and the d14 semDedupAuto growth probe (C=160,
   * 30.7 s at 10×). Here the table rides along as ONE reference object
-  * (`ctx.addReferenceObj`) and the generated code is a fixed-size tight
-  * loop: O(1) code size for ANY C, fully inside whole-stage codegen.
+  * (`ctx.addReferenceObj`) and the generated code is one kernel call:
+  * O(1) code size for ANY C, fully inside whole-stage codegen.
   *
   * Semantics are IDENTICAL to the struct-argmin form so every DuckDB
   * oracle still hash-matches: distances accumulate left-to-right in
@@ -31,119 +44,24 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * entry, matching array_min's NaN ordering. */
 case class NearestIdExpr(child: Expression, ids: Array[Long],
                          cents: Array[Array[Double]], sqrtCompare: Boolean)
-    extends UnaryExpression {
+    extends UnaryExpression with VectorInput {
   require(ids.length == cents.length && ids.nonEmpty,
     "NearestIdExpr needs one id per centroid")
 
   override def dataType: DataType = LongType
   override def prettyName: String = "vec_nearest"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a float/double array input")
-  }
+  override def nullSafeEval(input: Any): Any =
+    NearestKernels.nearestId(input.asInstanceOf[ArrayData], elemIsFloat, ids,
+      cents, sqrtCompare)
 
-  private def elemIsFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    NearestIdExpr.nearest(v, elemIsFloat, ids, cents, sqrtCompare)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val get = if (elemIsFloat) "getFloat" else "getDouble"
-    val idsRef = ctx.addReferenceObj("nearestIds", ids, "long[]")
-    val centsRef = ctx.addReferenceObj("nearestCents", cents, "double[][]")
-    val cd = if (sqrtCompare) "java.lang.Math.sqrt(acc)" else "acc"
-    nullSafeCodeGen(ctx, ev, v => {
-      val best = ctx.freshName("best")
-      val bestId = ctx.freshName("bestId")
-      val ci = ctx.freshName("ci")
-      val k = ctx.freshName("k")
-      s"""
-        double $best = Double.POSITIVE_INFINITY;
-        long $bestId = $idsRef[0];
-        for (int $ci = 0; $ci < $centsRef.length; $ci++) {
-          double[] cv = $centsRef[$ci];
-          if ($v.numElements() != cv.length) {
-            throw new IllegalArgumentException(
-              "vector length mismatch: " + $v.numElements() + " vs " + cv.length);
-          }
-          double acc = 0.0;
-          for (int $k = 0; $k < cv.length; $k++) {
-            double diff = (double) $v.$get($k) - cv[$k];
-            acc += diff * diff;
-          }
-          double cd = $cd;
-          if (cd < $best) { $best = cd; $bestId = $idsRef[$ci]; }
-        }
-        ${ev.value} = $bestId;
-      """
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    callKernel(ctx, ev, "NearestKernels.nearestId", elemIsFloat,
+      ctx.addReferenceObj("nearestIds", ids, "long[]"),
+      ctx.addReferenceObj("nearestCents", cents, "double[][]"), sqrtCompare)
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
-}
-
-object NearestIdExpr {
-  /** Shared interpreted kernel (also the routed expression's inner
-    * loop): earliest entry wins ties, matching sorted-by-id tables. */
-  private[functions] def nearest(v: ArrayData, isFloat: Boolean,
-                                 ids: Array[Long], cents: Array[Array[Double]],
-                                 sqrtCompare: Boolean): Long = {
-    var best = Double.PositiveInfinity
-    var bestId = ids(0)
-    var ci = 0
-    while (ci < cents.length) {
-      val cv = cents(ci)
-      if (v.numElements() != cv.length)
-        throw new IllegalArgumentException(
-          s"vector length mismatch: ${v.numElements()} vs ${cv.length}")
-      var acc = 0.0d
-      var k = 0
-      while (k < cv.length) {
-        val diff = (if (isFloat) v.getFloat(k).toDouble else v.getDouble(k)) - cv(k)
-        acc += diff * diff
-        k += 1
-      }
-      val cd = if (sqrtCompare) math.sqrt(acc) else acc
-      if (cd < best) { best = cd; bestId = ids(ci) }
-      ci += 1
-    }
-    bestId
-  }
-
-  /** Index (NOT id) of the nearest row in `cents` — the routing step. */
-  private[functions] def nearestIdx(v: ArrayData, isFloat: Boolean,
-                                    cents: Array[Array[Double]]): Int = {
-    var best = Double.PositiveInfinity
-    var bestIdx = 0
-    var ci = 0
-    while (ci < cents.length) {
-      val cv = cents(ci)
-      // same guard as the member loop: without it a short input would
-      // read past its UnsafeArrayData buffer before the member-loop
-      // check ever runs
-      if (v.numElements() != cv.length)
-        throw new IllegalArgumentException(
-          s"vector length mismatch: ${v.numElements()} vs ${cv.length}")
-      var acc = 0.0d
-      var k = 0
-      while (k < cv.length) {
-        val diff = (if (isFloat) v.getFloat(k).toDouble else v.getDouble(k)) - cv(k)
-        acc += diff * diff
-        k += 1
-      }
-      if (acc < best) { best = acc; bestIdx = ci }
-      ci += 1
-    }
-    bestIdx
-  }
 }
 
 /** Minimum SQUARED euclidean distance to any row of a constant centroid
@@ -154,72 +72,18 @@ object NearestIdExpr {
   * finding, which applies to the cost probe exactly as it did to
   * assignment). */
 case class NearestDistSqExpr(child: Expression, cents: Array[Array[Double]])
-    extends UnaryExpression {
+    extends UnaryExpression with VectorInput {
   require(cents.nonEmpty, "NearestDistSqExpr needs at least one centroid")
 
   override def dataType: DataType = DoubleType
   override def prettyName: String = "vec_nearest_distsq"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a float/double array input")
-  }
+  override def nullSafeEval(input: Any): Any =
+    NearestKernels.minDistSq(input.asInstanceOf[ArrayData], elemIsFloat, cents)
 
-  private def elemIsFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val isFloat = elemIsFloat
-    var best = Double.PositiveInfinity
-    var ci = 0
-    while (ci < cents.length) {
-      val cv = cents(ci)
-      if (v.numElements() != cv.length)
-        throw new IllegalArgumentException(
-          s"vector length mismatch: ${v.numElements()} vs ${cv.length}")
-      var acc = 0.0d
-      var k = 0
-      while (k < cv.length) {
-        val diff = (if (isFloat) v.getFloat(k).toDouble else v.getDouble(k)) - cv(k)
-        acc += diff * diff
-        k += 1
-      }
-      if (acc < best) best = acc
-      ci += 1
-    }
-    best
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val get = if (elemIsFloat) "getFloat" else "getDouble"
-    val centsRef = ctx.addReferenceObj("nearestCostCents", cents, "double[][]")
-    nullSafeCodeGen(ctx, ev, v => {
-      val best = ctx.freshName("best")
-      val ci = ctx.freshName("ci")
-      val k = ctx.freshName("k")
-      s"""
-        double $best = Double.POSITIVE_INFINITY;
-        for (int $ci = 0; $ci < $centsRef.length; $ci++) {
-          double[] cv = $centsRef[$ci];
-          if ($v.numElements() != cv.length) {
-            throw new IllegalArgumentException(
-              "vector length mismatch: " + $v.numElements() + " vs " + cv.length);
-          }
-          double acc = 0.0;
-          for (int $k = 0; $k < cv.length; $k++) {
-            double diff = (double) $v.$get($k) - cv[$k];
-            acc += diff * diff;
-          }
-          if (acc < $best) { $best = acc; }
-        }
-        ${ev.value} = $best;
-      """
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    callKernel(ctx, ev, "NearestKernels.minDistSq", elemIsFloat,
+      ctx.addReferenceObj("nearestCostCents", cents, "double[][]"))
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -241,7 +105,7 @@ case class NearestRoutedExpr(child: Expression,
                              memberIds: Array[Array[Long]],
                              memberCents: Array[Array[Array[Double]]],
                              sqrtCompare: Boolean)
-    extends UnaryExpression {
+    extends UnaryExpression with VectorInput {
   require(superCents.length == memberIds.length &&
     memberIds.length == memberCents.length && superCents.nonEmpty,
     "NearestRoutedExpr needs aligned super/member tables")
@@ -250,79 +114,16 @@ case class NearestRoutedExpr(child: Expression,
   override def dataType: DataType = LongType
   override def prettyName: String = "vec_nearest_routed"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a float/double array input")
-  }
+  override def nullSafeEval(input: Any): Any =
+    NearestKernels.routedId(input.asInstanceOf[ArrayData], elemIsFloat,
+      superCents, memberIds, memberCents, sqrtCompare)
 
-  private def elemIsFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val s = NearestIdExpr.nearestIdx(v, elemIsFloat, superCents)
-    NearestIdExpr.nearest(v, elemIsFloat, memberIds(s), memberCents(s),
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    callKernel(ctx, ev, "NearestKernels.routedId", elemIsFloat,
+      ctx.addReferenceObj("routedSupers", superCents, "double[][]"),
+      ctx.addReferenceObj("routedMemberIds", memberIds, "long[][]"),
+      ctx.addReferenceObj("routedMemberCents", memberCents, "double[][][]"),
       sqrtCompare)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val get = if (elemIsFloat) "getFloat" else "getDouble"
-    val supersRef = ctx.addReferenceObj("routedSupers", superCents, "double[][]")
-    val idsRef = ctx.addReferenceObj("routedMemberIds", memberIds, "long[][]")
-    val centsRef = ctx.addReferenceObj("routedMemberCents", memberCents,
-      "double[][][]")
-    val cd = if (sqrtCompare) "java.lang.Math.sqrt(acc)" else "acc"
-    nullSafeCodeGen(ctx, ev, v => {
-      val sBest = ctx.freshName("sBest")
-      val sIdx = ctx.freshName("sIdx")
-      val si = ctx.freshName("si")
-      val best = ctx.freshName("best")
-      val bestId = ctx.freshName("bestId")
-      val ci = ctx.freshName("ci")
-      val k = ctx.freshName("k")
-      val mids = ctx.freshName("mids")
-      val mcents = ctx.freshName("mcents")
-      s"""
-        double $sBest = Double.POSITIVE_INFINITY;
-        int $sIdx = 0;
-        for (int $si = 0; $si < $supersRef.length; $si++) {
-          double[] sv = $supersRef[$si];
-          if ($v.numElements() != sv.length) {
-            throw new IllegalArgumentException(
-              "vector length mismatch: " + $v.numElements() + " vs " + sv.length);
-          }
-          double acc = 0.0;
-          for (int $k = 0; $k < sv.length; $k++) {
-            double diff = (double) $v.$get($k) - sv[$k];
-            acc += diff * diff;
-          }
-          if (acc < $sBest) { $sBest = acc; $sIdx = $si; }
-        }
-        long[] $mids = $idsRef[$sIdx];
-        double[][] $mcents = $centsRef[$sIdx];
-        double $best = Double.POSITIVE_INFINITY;
-        long $bestId = $mids[0];
-        for (int $ci = 0; $ci < $mcents.length; $ci++) {
-          double[] cv = $mcents[$ci];
-          if ($v.numElements() != cv.length) {
-            throw new IllegalArgumentException(
-              "vector length mismatch: " + $v.numElements() + " vs " + cv.length);
-          }
-          double acc = 0.0;
-          for (int $k = 0; $k < cv.length; $k++) {
-            double diff = (double) $v.$get($k) - cv[$k];
-            acc += diff * diff;
-          }
-          double cd = $cd;
-          if (cd < $best) { $best = cd; $bestId = $mids[$ci]; }
-        }
-        ${ev.value} = $bestId;
-      """
-    })
-  }
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -340,7 +141,7 @@ case class NearestRoutedExpr(child: Expression,
 case class NearestTopIdsExpr(child: Expression, ids: Array[Long],
                              cents: Array[Array[Double]], n: Int,
                              sqrtCompare: Boolean)
-    extends UnaryExpression {
+    extends UnaryExpression with VectorInput {
   require(ids.length == cents.length && ids.nonEmpty,
     "NearestTopIdsExpr needs one id per centroid")
   require(n >= 1, "need n >= 1 nearest ids")
@@ -348,88 +149,14 @@ case class NearestTopIdsExpr(child: Expression, ids: Array[Long],
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "vec_nearest_top"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a float/double array input")
-  }
+  override def nullSafeEval(input: Any): Any =
+    NearestKernels.topIds(input.asInstanceOf[ArrayData], elemIsFloat, ids,
+      cents, n, sqrtCompare)
 
-  private def elemIsFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val isFloat = elemIsFloat
-    val m = math.min(n, cents.length)
-    val bd = Array.fill(m)(Double.PositiveInfinity)
-    val bi = new Array[Long](m)
-    var ci = 0
-    while (ci < cents.length) {
-      val cv = cents(ci)
-      if (v.numElements() != cv.length)
-        throw new IllegalArgumentException(
-          s"vector length mismatch: ${v.numElements()} vs ${cv.length}")
-      var acc = 0.0d
-      var k = 0
-      while (k < cv.length) {
-        val diff = (if (isFloat) v.getFloat(k).toDouble else v.getDouble(k)) - cv(k)
-        acc += diff * diff
-        k += 1
-      }
-      val cd = if (sqrtCompare) math.sqrt(acc) else acc
-      if (cd < bd(m - 1)) {
-        var j = m - 1
-        while (j > 0 && cd < bd(j - 1)) { bd(j) = bd(j - 1); bi(j) = bi(j - 1); j -= 1 }
-        bd(j) = cd; bi(j) = ids(ci)
-      }
-      ci += 1
-    }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(bi)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val get = if (elemIsFloat) "getFloat" else "getDouble"
-    val idsRef = ctx.addReferenceObj("topIds", ids, "long[]")
-    val centsRef = ctx.addReferenceObj("topCents", cents, "double[][]")
-    val cd = if (sqrtCompare) "java.lang.Math.sqrt(acc)" else "acc"
-    val m = math.min(n, cents.length)
-    nullSafeCodeGen(ctx, ev, v => {
-      val bd = ctx.freshName("bd")
-      val bi = ctx.freshName("bi")
-      val ci = ctx.freshName("ci")
-      val k = ctx.freshName("k")
-      val j = ctx.freshName("j")
-      s"""
-        double[] $bd = new double[$m];
-        long[] $bi = new long[$m];
-        java.util.Arrays.fill($bd, Double.POSITIVE_INFINITY);
-        for (int $ci = 0; $ci < $centsRef.length; $ci++) {
-          double[] cv = $centsRef[$ci];
-          if ($v.numElements() != cv.length) {
-            throw new IllegalArgumentException(
-              "vector length mismatch: " + $v.numElements() + " vs " + cv.length);
-          }
-          double acc = 0.0;
-          for (int $k = 0; $k < cv.length; $k++) {
-            double diff = (double) $v.$get($k) - cv[$k];
-            acc += diff * diff;
-          }
-          double cd = $cd;
-          if (cd < $bd[$m - 1]) {
-            int $j = $m - 1;
-            while ($j > 0 && cd < $bd[$j - 1]) {
-              $bd[$j] = $bd[$j - 1]; $bi[$j] = $bi[$j - 1]; $j--;
-            }
-            $bd[$j] = cd; $bi[$j] = $idsRef[$ci];
-          }
-        }
-        ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-          .fromPrimitiveArray($bi);
-      """
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    callKernel(ctx, ev, "NearestKernels.topIds", elemIsFloat,
+      ctx.addReferenceObj("topIds", ids, "long[]"),
+      ctx.addReferenceObj("topCents", cents, "double[][]"), n, sqrtCompare)
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -453,82 +180,22 @@ case class NearestTopIdsExpr(child: Expression, ids: Array[Long],
 case class WithinBoundIdsExpr(child: Expression, ids: Array[Long],
                               cents: Array[Array[Double]],
                               thrSq: Array[Double])
-    extends UnaryExpression {
+    extends UnaryExpression with VectorInput {
   require(ids.length == cents.length && ids.length == thrSq.length &&
     ids.nonEmpty, "WithinBoundIdsExpr needs aligned id/centroid/threshold tables")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "vec_within_bound"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a float/double array input")
-  }
+  override def nullSafeEval(input: Any): Any =
+    NearestKernels.withinBound(input.asInstanceOf[ArrayData], elemIsFloat, ids,
+      cents, thrSq)
 
-  private def elemIsFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val isFloat = elemIsFloat
-    val out = new Array[Long](ids.length)
-    var n = 0
-    var ci = 0
-    while (ci < cents.length) {
-      val cv = cents(ci)
-      if (v.numElements() != cv.length)
-        throw new IllegalArgumentException(
-          s"vector length mismatch: ${v.numElements()} vs ${cv.length}")
-      val thr = thrSq(ci)
-      var acc = 0.0d
-      var k = 0
-      while (k < cv.length && acc <= thr) {
-        val diff = (if (isFloat) v.getFloat(k).toDouble else v.getDouble(k)) - cv(k)
-        acc += diff * diff
-        k += 1
-      }
-      if (acc <= thr) { out(n) = ids(ci); n += 1 }
-      ci += 1
-    }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(java.util.Arrays.copyOf(out, n))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val get = if (elemIsFloat) "getFloat" else "getDouble"
-    val idsRef = ctx.addReferenceObj("boundIds", ids, "long[]")
-    val centsRef = ctx.addReferenceObj("boundCents", cents, "double[][]")
-    val thrRef = ctx.addReferenceObj("boundThr", thrSq, "double[]")
-    nullSafeCodeGen(ctx, ev, v => {
-      val out = ctx.freshName("out")
-      val n = ctx.freshName("n")
-      val ci = ctx.freshName("ci")
-      val k = ctx.freshName("k")
-      s"""
-        long[] $out = new long[$idsRef.length];
-        int $n = 0;
-        for (int $ci = 0; $ci < $centsRef.length; $ci++) {
-          double[] cv = $centsRef[$ci];
-          if ($v.numElements() != cv.length) {
-            throw new IllegalArgumentException(
-              "vector length mismatch: " + $v.numElements() + " vs " + cv.length);
-          }
-          double thr = $thrRef[$ci];
-          double acc = 0.0;
-          for (int $k = 0; $k < cv.length && acc <= thr; $k++) {
-            double diff = (double) $v.$get($k) - cv[$k];
-            acc += diff * diff;
-          }
-          if (acc <= thr) { $out[$n] = $idsRef[$ci]; $n++; }
-        }
-        ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-          .fromPrimitiveArray(java.util.Arrays.copyOf($out, $n));
-      """
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    callKernel(ctx, ev, "NearestKernels.withinBound", elemIsFloat,
+      ctx.addReferenceObj("boundIds", ids, "long[]"),
+      ctx.addReferenceObj("boundCents", cents, "double[][]"),
+      ctx.addReferenceObj("boundThr", thrSq, "double[]"))
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -546,7 +213,7 @@ case class NearestTopIdsRoutedExpr(child: Expression,
                                    memberCents: Array[Array[Array[Double]]],
                                    n: Int, supersProbed: Int,
                                    sqrtCompare: Boolean)
-    extends UnaryExpression {
+    extends UnaryExpression with VectorInput {
   require(superCents.length == memberIds.length &&
     memberIds.length == memberCents.length && superCents.nonEmpty,
     "NearestTopIdsRoutedExpr needs aligned super/member tables")
@@ -557,78 +224,147 @@ case class NearestTopIdsRoutedExpr(child: Expression,
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "vec_nearest_top_routed"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case _ => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a float/double array input")
-  }
+  override def nullSafeEval(input: Any): Any =
+    NearestKernels.topIdsRouted(input.asInstanceOf[ArrayData], elemIsFloat,
+      superCents, memberIds, memberCents, n, supersProbed, sqrtCompare)
 
-  private def elemIsFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(NearestTopIdsRoutedExpr.topIdsRouted(
-        v, elemIsFloat, superCents, memberIds, memberCents, n,
-        supersProbed, sqrtCompare))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // the kernel lives in ONE static helper shared with nullSafeEval —
-    // the generated call stays inside whole-stage codegen (a static
-    // invoke, no virtual dispatch) and the top-n/selection logic isn't
-    // duplicated as string-templated Java
-    val supersRef = ctx.addReferenceObj("rtSupers", superCents, "double[][]")
-    val idsRef = ctx.addReferenceObj("rtMemberIds", memberIds, "long[][]")
-    val centsRef = ctx.addReferenceObj("rtMemberCents", memberCents,
-      "double[][][]")
-    val isFloat = elemIsFloat
-    nullSafeCodeGen(ctx, ev, v => {
-      s"""
-        ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-          .fromPrimitiveArray(
-            graft.functions.NearestTopIdsRoutedExpr.topIdsRouted(
-              $v, $isFloat, $supersRef, $idsRef, $centsRef, $n,
-              $supersProbed, $sqrtCompare));
-      """
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    callKernel(ctx, ev, "NearestKernels.topIdsRouted", elemIsFloat,
+      ctx.addReferenceObj("rtSupers", superCents, "double[][]"),
+      ctx.addReferenceObj("rtMemberIds", memberIds, "long[][]"),
+      ctx.addReferenceObj("rtMemberCents", memberCents, "double[][][]"),
+      n, supersProbed, sqrtCompare)
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }
 
-object NearestTopIdsRoutedExpr {
-  /** The routed top-n kernel (called from both eval and codegen). */
+/** The nearest-centroid kernels, each called from both its
+  * expression's `nullSafeEval` and its generated code. Every distance
+  * is [[d2]]: a left-to-right float64 fold, compared raw or sqrt'd. */
+object NearestKernels {
+  import VectorKernels.elem
+
+  /** Σ (v_k − cv_k)² in float64 — the one d² inner loop. */
+  def d2(v: ArrayData, isFloat: Boolean, cv: Array[Double]): Double = {
+    if (v.numElements() != cv.length)
+      throw new IllegalArgumentException(
+        s"vector length mismatch: ${v.numElements()} vs ${cv.length}")
+    var acc = 0.0d
+    var k = 0
+    while (k < cv.length) {
+      val diff = elem(v, isFloat, k) - cv(k)
+      acc += diff * diff
+      k += 1
+    }
+    acc
+  }
+
+  /** Index of the nearest row of `cents`: the earliest row wins ties,
+    * and a row whose every distance is NaN resolves to index 0. */
+  def nearestIdx(v: ArrayData, isFloat: Boolean, cents: Array[Array[Double]],
+                 sqrtCompare: Boolean): Int = {
+    var best = Double.PositiveInfinity
+    var bestIdx = 0
+    var ci = 0
+    while (ci < cents.length) {
+      val acc = d2(v, isFloat, cents(ci))
+      val cd = if (sqrtCompare) math.sqrt(acc) else acc
+      if (cd < best) { best = cd; bestIdx = ci }
+      ci += 1
+    }
+    bestIdx
+  }
+
+  def nearestId(v: ArrayData, isFloat: Boolean, ids: Array[Long],
+                cents: Array[Array[Double]], sqrtCompare: Boolean): Long =
+    ids(nearestIdx(v, isFloat, cents, sqrtCompare))
+
+  /** Route to the nearest super by raw d², then the nearest member. */
+  def routedId(v: ArrayData, isFloat: Boolean, supers: Array[Array[Double]],
+               memberIds: Array[Array[Long]],
+               memberCents: Array[Array[Array[Double]]],
+               sqrtCompare: Boolean): Long = {
+    val s = nearestIdx(v, isFloat, supers, sqrtCompare = false)
+    nearestId(v, isFloat, memberIds(s), memberCents(s), sqrtCompare)
+  }
+
+  /** Min raw d² over `cents` (+∞ when every distance is NaN). */
+  def minDistSq(v: ArrayData, isFloat: Boolean,
+                cents: Array[Array[Double]]): Double = {
+    var best = Double.PositiveInfinity
+    var ci = 0
+    while (ci < cents.length) {
+      val acc = d2(v, isFloat, cents(ci))
+      if (acc < best) best = acc
+      ci += 1
+    }
+    best
+  }
+
+  /** The min(n, C) nearest ids, nearest first, by strict-< insertion. */
+  def topIds(v: ArrayData, isFloat: Boolean, ids: Array[Long],
+             cents: Array[Array[Double]], n: Int,
+             sqrtCompare: Boolean): ArrayData = {
+    val m = math.min(n, cents.length)
+    val bd = Array.fill(m)(Double.PositiveInfinity)
+    val bi = new Array[Long](m)
+    var ci = 0
+    while (ci < cents.length) {
+      val acc = d2(v, isFloat, cents(ci))
+      val cd = if (sqrtCompare) math.sqrt(acc) else acc
+      if (cd < bd(m - 1)) {
+        var j = m - 1
+        while (j > 0 && cd < bd(j - 1)) { bd(j) = bd(j - 1); bi(j) = bi(j - 1); j -= 1 }
+        bd(j) = cd; bi(j) = ids(ci)
+      }
+      ci += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(bi)
+  }
+
+  /** Ids of the entries with d² ≤ their own threshold, in table order.
+    * The fold stops once it crosses the threshold: it only grows, so the
+    * admit decision is the full fold's. */
+  def withinBound(v: ArrayData, isFloat: Boolean, ids: Array[Long],
+                  cents: Array[Array[Double]], thrSq: Array[Double]): ArrayData = {
+    val out = new Array[Long](ids.length)
+    var n = 0
+    var ci = 0
+    while (ci < cents.length) {
+      val cv = cents(ci)
+      if (v.numElements() != cv.length)
+        throw new IllegalArgumentException(
+          s"vector length mismatch: ${v.numElements()} vs ${cv.length}")
+      val thr = thrSq(ci)
+      var acc = 0.0d
+      var k = 0
+      while (k < cv.length && acc <= thr) {
+        val diff = elem(v, isFloat, k) - cv(k)
+        acc += diff * diff
+        k += 1
+      }
+      if (acc <= thr) { out(n) = ids(ci); n += 1 }
+      ci += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(out, n))
+  }
+
+  /** The routed top-n: rank the supers by raw d², then exact top-n over
+    * the members of the `supersProbed` nearest. */
   def topIdsRouted(v: ArrayData, isFloat: Boolean,
                    supers: Array[Array[Double]],
                    memberIds: Array[Array[Long]],
                    memberCents: Array[Array[Array[Double]]],
                    n: Int, supersProbed: Int,
-                   sqrtCompare: Boolean): Array[Long] = {
-    def d2To(cv: Array[Double]): Double = {
-      if (v.numElements() != cv.length)
-        throw new IllegalArgumentException(
-          s"vector length mismatch: ${v.numElements()} vs ${cv.length}")
-      var acc = 0.0d
-      var k = 0
-      while (k < cv.length) {
-        val diff = (if (isFloat) v.getFloat(k).toDouble else v.getDouble(k)) - cv(k)
-        acc += diff * diff
-        k += 1
-      }
-      acc
-    }
+                   sqrtCompare: Boolean): ArrayData = {
     // rank the supers: top-supersProbed by raw d2, strict-< insertion
     val sp = supersProbed
     val sd = Array.fill(sp)(Double.PositiveInfinity)
     val sidx = new Array[Int](sp)
     var si = 0
     while (si < supers.length) {
-      val dd = d2To(supers(si))
+      val dd = d2(v, isFloat, supers(si))
       if (dd < sd(sp - 1)) {
         var j = sp - 1
         while (j > 0 && dd < sd(j - 1)) { sd(j) = sd(j - 1); sidx(j) = sidx(j - 1); j -= 1 }
@@ -650,7 +386,7 @@ object NearestTopIdsRoutedExpr {
         val mcents = memberCents(sidx(p))
         var ci = 0
         while (ci < mcents.length) {
-          val acc = d2To(mcents(ci))
+          val acc = d2(v, isFloat, mcents(ci))
           val cd = if (sqrtCompare) math.sqrt(acc) else acc
           if (cd < bd(m - 1)) {
             // DEDUP BY ID (ADVICE r15): routedTables' empty-super
@@ -681,7 +417,8 @@ object NearestTopIdsRoutedExpr {
     // fallback copy); trim so no +inf/id-0 garbage row is ever emitted
     var filled = m
     while (filled > 0 && bd(filled - 1) == Double.PositiveInfinity) filled -= 1
-    if (filled == m) bi else java.util.Arrays.copyOf(bi, filled)
+    UnsafeArrayData.fromPrimitiveArray(
+      if (filled == m) bi else java.util.Arrays.copyOf(bi, filled))
   }
 }
 

@@ -1,13 +1,15 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftSqlShim}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
-/** Native Catalyst expressions for the hot vector kernels (dot product and
-  * squared euclidean distance over ARRAY<FLOAT>/ARRAY<DOUBLE>).
+/** Native Catalyst expressions for the hot vector kernels (dot product,
+  * squared euclidean distance, Hamming, MaxSim, phrase count), plus the
+  * text kernels below.
   *
   * Semantics are IDENTICAL to the declarative forms in VectorFunctions
   * (left-to-right float64 fold over element-wise products/squared
@@ -17,84 +19,51 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * intermediate zip arrays, no per-element boxing. On the all-pairs
   * cosine join this is a ~10x kernel win (SURVEY.md §4's "custom
   * Expression with codegen if it shows up hot" — it does).
+  *
+  * ONE COPY OF EACH KERNEL: every loop lives once, as a static function
+  * of [[VectorKernels]] or [[TextKernels]]. `nullSafeEval` calls it, and
+  * `doGenCode` is one generated call to the same function (constant
+  * tables ride as reference objects, element-type flags as literals).
+  * The two paths are reached by different checks — specs build rows
+  * with `Seq.toDF`, which the optimizer folds through the interpreted
+  * projection (eval), while the oracle gates and the benchmark run
+  * whole-stage codegen — so a second, templated copy of a loop would be
+  * checked by neither against the other. KernelParitySpec pins
+  * eval ≡ codegen for every expression here and in NearestExpr.scala.
   */
 abstract class VectorBinaryFold extends BinaryExpression {
   override def dataType: DataType = DoubleType
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType | DoubleType, _), ArrayType(FloatType | DoubleType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires float/double array inputs")
-    }
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (VectorInput.isVector(left.dataType) && VectorInput.isVector(right.dataType))
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires float/double array inputs")
 
-  protected def elemIsFloat(dt: DataType): Boolean = dt match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
+  /** Name of the [[VectorKernels]] function computing this fold. */
+  protected def kernel: String
 
-  /** java source computing the fold body given element accessors. */
-  protected def foldBody(a: String, b: String, i: String, sum: String): String
+  /** That same function, for the interpreted path. */
+  protected def fold(a: ArrayData, aFloat: Boolean, b: ArrayData, bFloat: Boolean): Double
 
-  protected def combine(x: Double, y: Double): Double
+  override def nullSafeEval(l: Any, r: Any): Any =
+    fold(l.asInstanceOf[ArrayData], VectorInput.isFloat(left.dataType),
+      r.asInstanceOf[ArrayData], VectorInput.isFloat(right.dataType))
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val la = elemIsFloat(left.dataType)
-    val rb = elemIsFloat(right.dataType)
-    if (a.numElements() != b.numElements())
-      throw new IllegalArgumentException(
-        s"vector length mismatch: ${a.numElements()} vs ${b.numElements()}")
-    val n = a.numElements()
-    var sum = 0.0d
-    var i = 0
-    while (i < n) {
-      val x = if (la) a.getFloat(i).toDouble else a.getDouble(i)
-      val y = if (rb) b.getFloat(i).toDouble else b.getDouble(i)
-      sum += combine(x, y)
-      i += 1
-    }
-    sum
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val aGet = if (elemIsFloat(left.dataType)) "getFloat" else "getDouble"
-    val bGet = if (elemIsFloat(right.dataType)) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val sum = ctx.freshName("sum")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      s"""
-        if ($a.numElements() != $b.numElements()) {
-          throw new IllegalArgumentException(
-            "vector length mismatch: " + $a.numElements() + " vs " + $b.numElements());
-        }
-        int $n = $a.numElements();
-        double $sum = 0.0;
-        for (int $i = 0; $i < $n; $i++) {
-          double $x = (double) $a.$aGet($i);
-          double $y = (double) $b.$bGet($i);
-          ${foldBody(x, y, i, sum)}
-        }
-        ${ev.value} = $sum;
-      """
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.VectorKernels.$kernel($a, " +
+        s"${VectorInput.isFloat(left.dataType)}, $b, ${VectorInput.isFloat(right.dataType)});")
 }
 
 /** Σ a_i * b_i in float64. */
 case class DotProductExpr(left: Expression, right: Expression)
     extends VectorBinaryFold {
   override def prettyName: String = "vec_dot"
-  override protected def foldBody(x: String, y: String, i: String, sum: String): String =
-    s"$sum += $x * $y;"
-  override protected def combine(x: Double, y: Double): Double = x * y
+  override protected def kernel: String = "dot"
+  override protected def fold(a: ArrayData, aFloat: Boolean, b: ArrayData,
+                              bFloat: Boolean): Double =
+    VectorKernels.dot(a, aFloat, b, bFloat)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
@@ -103,9 +72,10 @@ case class DotProductExpr(left: Expression, right: Expression)
 case class DistSqExpr(left: Expression, right: Expression)
     extends VectorBinaryFold {
   override def prettyName: String = "vec_distsq"
-  override protected def foldBody(x: String, y: String, i: String, sum: String): String =
-    s"$sum += ($x - $y) * ($x - $y);"
-  override protected def combine(x: Double, y: Double): Double = (x - y) * (x - y)
+  override protected def kernel: String = "distSq"
+  override protected def fold(a: ArrayData, aFloat: Boolean, b: ArrayData,
+                              bFloat: Boolean): Double =
+    VectorKernels.distSq(a, aFloat, b, bFloat)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
@@ -122,49 +92,21 @@ case class HammingExpr(left: Expression, right: Expression)
   override def dataType: DataType = IntegerType
   override def prettyName: String = "vec_hamming"
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+  override def checkInputDataTypes(): TypeCheckResult = {
     (left.dataType, right.dataType) match {
       case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+        TypeCheckResult.TypeCheckSuccess
       case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires bigint array inputs")
+        TypeCheckResult.TypeCheckFailure(s"$prettyName requires bigint array inputs")
     }
   }
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    if (a.numElements() != b.numElements())
-      throw new IllegalArgumentException(
-        s"code length mismatch: ${a.numElements()} vs ${b.numElements()}")
-    var sum = 0
-    var i = 0
-    while (i < a.numElements()) {
-      sum += java.lang.Long.bitCount(a.getLong(i) ^ b.getLong(i))
-      i += 1
-    }
-    sum
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    VectorKernels.hamming(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val sum = ctx.freshName("sum")
-      s"""
-        if ($a.numElements() != $b.numElements()) {
-          throw new IllegalArgumentException(
-            "code length mismatch: " + $a.numElements() + " vs " + $b.numElements());
-        }
-        int $n = $a.numElements();
-        int $sum = 0;
-        for (int $i = 0; $i < $n; $i++) {
-          $sum += java.lang.Long.bitCount($a.getLong($i) ^ $b.getLong($i));
-        }
-        ${ev.value} = $sum;
-      """
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.VectorKernels.hamming($a, $b);")
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
@@ -184,95 +126,20 @@ case class HammingExpr(left: Expression, right: Expression)
   * the plan stays O(1) in query size (the same literal-vs-relation
   * lesson as the probe tables). */
 case class MaxSimExpr(child: Expression, query: Array[Array[Double]])
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+    extends UnaryExpression with VectorInput {
   override def dataType: DataType = DoubleType
   override def prettyName: String = "vec_maxsim"
 
   private def subDim: Int = query(0).length
-  private def totalDim: Int = query.map(_.length).sum
+  @transient private lazy val totalDim: Int = query.map(_.length).sum
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires a float/double array input")
-    }
+  override def nullSafeEval(input: Any): Any =
+    VectorKernels.maxSim(input.asInstanceOf[ArrayData], elemIsFloat, query,
+      subDim, totalDim)
 
-  private def elemIsFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    if (v.numElements() != totalDim)
-      throw new IllegalArgumentException(
-        s"vector length mismatch: ${v.numElements()} vs $totalDim")
-    val isF = elemIsFloat
-    val nSub = v.numElements() / subDim
-    var total = 0.0d
-    var qi = 0
-    while (qi < query.length) {
-      val q = query(qi)
-      var best = Double.NegativeInfinity
-      var j = 0
-      while (j < nSub) {
-        var dot = 0.0d
-        var k = 0
-        while (k < subDim) {
-          val x = if (isF) v.getFloat(j * subDim + k).toDouble
-                  else v.getDouble(j * subDim + k)
-          dot += x * q(k)
-          k += 1
-        }
-        if (dot > best) best = dot
-        j += 1
-      }
-      total += best
-      qi += 1
-    }
-    total
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val qRef = ctx.addReferenceObj("maxsimQuery", query, "double[][]")
-    val get = if (elemIsFloat) "getFloat" else "getDouble"
-    val sub = subDim
-    val total = totalDim
-    nullSafeCodeGen(ctx, ev, v => {
-      val t = ctx.freshName("total")
-      val qi = ctx.freshName("qi")
-      val q = ctx.freshName("q")
-      val best = ctx.freshName("best")
-      val j = ctx.freshName("j")
-      val k = ctx.freshName("k")
-      val dot = ctx.freshName("dot")
-      val nSub = ctx.freshName("nSub")
-      s"""
-        if ($v.numElements() != $total) {
-          throw new IllegalArgumentException(
-            "vector length mismatch: " + $v.numElements() + " vs " + $total);
-        }
-        int $nSub = $v.numElements() / $sub;
-        double $t = 0.0;
-        for (int $qi = 0; $qi < $qRef.length; $qi++) {
-          double[] $q = $qRef[$qi];
-          double $best = Double.NEGATIVE_INFINITY;
-          for (int $j = 0; $j < $nSub; $j++) {
-            double $dot = 0.0;
-            for (int $k = 0; $k < $sub; $k++) {
-              $dot += ((double) $v.$get($j * $sub + $k)) * $q[$k];
-            }
-            if ($dot > $best) $best = $dot;
-          }
-          $t += $best;
-        }
-        ${ev.value} = $t;
-      """
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    callKernel(ctx, ev, "VectorKernels.maxSim", elemIsFloat,
+      ctx.addReferenceObj("maxsimQuery", query, "double[][]"), subDim, totalDim)
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -289,75 +156,150 @@ case class MaxSimExpr(child: Expression, query: Array[Array[Double]])
   * it skips ahead on first mismatch instead of materializing an index
   * sequence. Int result, matching `size(...)`. */
 case class PhraseCountExpr(child: Expression, phrase: Array[String])
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+    extends UnaryExpression {
   import org.apache.spark.sql.types.{IntegerType, StringType}
   import org.apache.spark.unsafe.types.UTF8String
 
   override def dataType: DataType = IntegerType
   override def prettyName: String = "phrase_count"
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+  override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires a string array input")
+      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+      case _ => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires a string array input")
     }
 
   @transient private lazy val needle: Array[UTF8String] =
     phrase.map(UTF8String.fromString)
 
-  override def nullSafeEval(input: Any): Any = {
-    val ts = input.asInstanceOf[ArrayData]
-    val n = ts.numElements()
-    val m = needle.length
-    var hits = 0
-    var i = 0
-    while (i <= n - m) {
-      var k = 0
-      var ok = true
-      while (ok && k < m) {
-        val t = ts.getUTF8String(i + k)
-        if (t == null || !t.equals(needle(k))) ok = false
-        k += 1
-      }
-      if (ok) hits += 1
-      i += 1
-    }
-    hits
-  }
+  override def nullSafeEval(input: Any): Any =
+    TextKernels.phraseCount(input.asInstanceOf[ArrayData], needle)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val needleRef = ctx.addReferenceObj("phraseNeedle", needle,
       "org.apache.spark.unsafe.types.UTF8String[]")
-    nullSafeCodeGen(ctx, ev, ts => {
-      val n = ctx.freshName("n")
-      val m = ctx.freshName("m")
-      val hits = ctx.freshName("hits")
-      val i = ctx.freshName("i")
-      val k = ctx.freshName("k")
-      val ok = ctx.freshName("ok")
-      val t = ctx.freshName("t")
-      s"""
-        int $n = $ts.numElements();
-        int $m = $needleRef.length;
-        int $hits = 0;
-        for (int $i = 0; $i <= $n - $m; $i++) {
-          boolean $ok = true;
-          for (int $k = 0; $ok && $k < $m; $k++) {
-            org.apache.spark.unsafe.types.UTF8String $t = $ts.getUTF8String($i + $k);
-            if ($t == null || !$t.equals($needleRef[$k])) $ok = false;
-          }
-          if ($ok) $hits++;
-        }
-        ${ev.value} = $hits;
-      """
-    })
+    nullSafeCodeGen(ctx, ev, ts =>
+      s"${ev.value} = graft.functions.TextKernels.phraseCount($ts, $needleRef);")
   }
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
+}
+
+/** The input contract of every kernel over ONE float/double vector
+  * child: the type check, the element-type flag the kernel takes, and
+  * the one-call generated code. */
+trait VectorInput extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (VectorInput.isVector(child.dataType)) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires a float/double array input")
+
+  protected def elemIsFloat: Boolean = VectorInput.isFloat(child.dataType)
+
+  /** `value = graft.functions.<kernel>(child, args…)` — the whole
+    * generated code of a kernel expression; `args` are Java literals
+    * (Int/Boolean) or reference-object names. */
+  protected def callKernel(ctx: CodegenContext, ev: ExprCode, kernel: String,
+                           args: Any*): ExprCode =
+    nullSafeCodeGen(ctx, ev, v =>
+      s"${ev.value} = graft.functions.$kernel(${(v +: args).mkString(", ")});")
+}
+
+object VectorInput {
+  def isVector(dt: DataType): Boolean = dt match {
+    case ArrayType(FloatType | DoubleType, _) => true
+    case _ => false
+  }
+
+  def isFloat(dt: DataType): Boolean = dt match {
+    case ArrayType(FloatType, _) => true
+    case _ => false
+  }
+}
+
+/** The vector kernels, each called from both its expression's
+  * `nullSafeEval` and its generated code. */
+object VectorKernels {
+  /** Element `i` widened to float64. */
+  def elem(v: ArrayData, isFloat: Boolean, i: Int): Double =
+    if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)
+
+  private def sameLength(a: ArrayData, b: ArrayData, what: String): Int = {
+    if (a.numElements() != b.numElements())
+      throw new IllegalArgumentException(
+        s"$what length mismatch: ${a.numElements()} vs ${b.numElements()}")
+    a.numElements()
+  }
+
+  /** Σ a_i * b_i, left to right in float64. */
+  def dot(a: ArrayData, aFloat: Boolean, b: ArrayData, bFloat: Boolean): Double = {
+    val n = sameLength(a, b, "vector")
+    var sum = 0.0d
+    var i = 0
+    while (i < n) {
+      sum += elem(a, aFloat, i) * elem(b, bFloat, i)
+      i += 1
+    }
+    sum
+  }
+
+  /** Σ (a_i - b_i)², left to right in float64. */
+  def distSq(a: ArrayData, aFloat: Boolean, b: ArrayData, bFloat: Boolean): Double = {
+    val n = sameLength(a, b, "vector")
+    var sum = 0.0d
+    var i = 0
+    while (i < n) {
+      val x = elem(a, aFloat, i)
+      val y = elem(b, bFloat, i)
+      sum += (x - y) * (x - y)
+      i += 1
+    }
+    sum
+  }
+
+  /** Σ bitCount(a_i ^ b_i) over packed-word codes. */
+  def hamming(a: ArrayData, b: ArrayData): Int = {
+    val n = sameLength(a, b, "code")
+    var sum = 0
+    var i = 0
+    while (i < n) {
+      sum += java.lang.Long.bitCount(a.getLong(i) ^ b.getLong(i))
+      i += 1
+    }
+    sum
+  }
+
+  /** Σ over query chunks of the max dot against each `subDim` slice of
+    * `v`; `v` must hold exactly `totalDim` elements. */
+  def maxSim(v: ArrayData, isFloat: Boolean, query: Array[Array[Double]],
+             subDim: Int, totalDim: Int): Double = {
+    if (v.numElements() != totalDim)
+      throw new IllegalArgumentException(
+        s"vector length mismatch: ${v.numElements()} vs $totalDim")
+    val nSub = v.numElements() / subDim
+    var total = 0.0d
+    var qi = 0
+    while (qi < query.length) {
+      val q = query(qi)
+      var best = Double.NegativeInfinity
+      var j = 0
+      while (j < nSub) {
+        var dot = 0.0d
+        var k = 0
+        while (k < subDim) {
+          dot += elem(v, isFloat, j * subDim + k) * q(k)
+          k += 1
+        }
+        if (dot > best) best = dot
+        j += 1
+      }
+      total += best
+      qi += 1
+    }
+    total
+  }
 }
 
 /** Static kernels callable from generated code (one invocation per
@@ -398,6 +340,27 @@ object TextKernels {
       i += 1
     }
     new GenericArrayData(out)
+  }
+
+  /** Count of start positions where `needle` matches `ts` token for
+    * token; a null token never matches. */
+  def phraseCount(ts: ArrayData, needle: Array[UTF8String]): Int = {
+    val n = ts.numElements()
+    val m = needle.length
+    var hits = 0
+    var i = 0
+    while (i <= n - m) {
+      var k = 0
+      var ok = true
+      while (ok && k < m) {
+        val t = ts.getUTF8String(i + k)
+        if (t == null || !t.equals(needle(k))) ok = false
+        k += 1
+      }
+      if (ok) hits += 1
+      i += 1
+    }
+    hits
   }
 
   /** Sliding-window minimum: out(p) = min(xs[p .. p+w)) for p in
@@ -462,7 +425,7 @@ object TextKernels {
   * [[TextKernels.md5PrefixLongs]]; the composed transform ran the md5
   * + conv + substring chain through an interpreted lambda per gram). */
 case class Md5PrefixLongsExpr(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+    extends UnaryExpression {
   import org.apache.spark.sql.types.{LongType, StringType}
   // null elements map to null (md5(null) is null) — carry the child's
   // element nullability through
@@ -472,12 +435,12 @@ case class Md5PrefixLongsExpr(child: Expression)
   }
   override def prettyName: String = "md5_prefix_longs"
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+  override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
       case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+        TypeCheckResult.TypeCheckSuccess
       case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        TypeCheckResult.TypeCheckFailure(
           s"$prettyName requires a string array input")
     }
 
@@ -496,17 +459,17 @@ case class Md5PrefixLongsExpr(child: Expression)
   * selection, natively (the composed form allocated a slice per
   * window position under an interpreted lambda). */
 case class SlidingMinExpr(child: Expression, w: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+    extends UnaryExpression {
   import org.apache.spark.sql.types.LongType
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
   override def prettyName: String = "sliding_min"
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+  override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
       case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+        TypeCheckResult.TypeCheckSuccess
       case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        TypeCheckResult.TypeCheckFailure(
           s"$prettyName requires a bigint array input")
     }
 
@@ -529,18 +492,18 @@ case class SlidingMinExpr(child: Expression, w: Int)
   * measured 7.8 s for a 2.6M-shingle pass at 50k docs; the kernel
   * does one primitive loop per row (shinglebench A/B in BASELINE.md). */
 case class ShinglesExpr(child: Expression, k: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+    extends UnaryExpression {
   import org.apache.spark.sql.types.StringType
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "shingles"
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+  override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
       case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+        TypeCheckResult.TypeCheckSuccess
       case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        TypeCheckResult.TypeCheckFailure(
           s"$prettyName requires a string array input")
     }
 

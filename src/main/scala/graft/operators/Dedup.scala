@@ -570,11 +570,7 @@ object Dedup {
       store.post.queryExecution.optimizedPlan.stats.sizeInBytes
     val storeRowsEst = storeBytes / 10
     val exceedsBroadcast = thr <= 0 || batchBytes > thr
-    // session kill-switch (also the A/B lever for the prefilter):
-    // graft.dedup.bloomPrefilter=false forces the unfiltered join
-    val enabled = spark.conf
-      .getOption("graft.dedup.bloomPrefilter").forall(_.toBoolean)
-    if (!enabled || !exceedsBroadcast || BigInt(nRows * 8) >= storeRowsEst)
+    if (!exceedsBroadcast || BigInt(nRows * 8) >= storeRowsEst)
       post
     else {
       val bf = shA.stat.bloomFilter("shingle", math.max(nRows, 1L), 0.01)

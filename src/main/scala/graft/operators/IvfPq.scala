@@ -104,9 +104,7 @@ object IvfPq {
       // listing alone). After: one file per list per owning task.
       .repartition(col("list_id"))
       .write.mode("overwrite").partitionBy("list_id").parquet(path)
-    centroids.map { case (lid, cv) => (lid, cv.toSeq) }.toSeq
-      .toDF("list_id", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(path + ".centroids")
+    Similarity.writeIvfCentroids(spark, centroids, path)
     cb.zipWithIndex.flatMap { case (words, j) =>
       words.zipWithIndex.map { case (w, c) => (j, c, w.toSeq) }
     }.toSeq.toDF("j", "code", "word")
@@ -135,16 +133,8 @@ object IvfPq {
   /** Open a persisted IVFADC store once: one partition listing, one
     * read of each sidecar. */
   def open(spark: SparkSession, path: String): Store =
-    Store(spark.read.parquet(path), readCentroids(spark, path),
+    Store(spark.read.parquet(path), Similarity.readIvfCentroids(spark, path),
       readCodebook(spark, path))
-
-  /** The store's frozen coarse-centroid set, from its sidecar. */
-  def readCentroids(spark: SparkSession,
-                    path: String): Array[(Long, Array[Double])] =
-    spark.read.parquet(path + ".centroids")
-      .select(col("list_id").cast("long"), col("centroid"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
 
   /** The store's frozen residual codebook, from its sidecar. */
   def readCodebook(spark: SparkSession, path: String): Codebook =
@@ -162,8 +152,11 @@ object IvfPq {
     * touched partitions gain files; probes see old ∪ new rows. */
   def append(spark: SparkSession, path: String, newVecs: DataFrame,
              idCol: String, vecCol: String): Unit =
-    assign(newVecs, vecCol, readCentroids(spark, path), readCodebook(spark, path))
+    assign(newVecs, vecCol, Similarity.readIvfCentroids(spark, path),
+        readCodebook(spark, path))
       .select(col(idCol), col("list_id"), col("codes"))
+      // one file per touched list, not one per upstream task (see write)
+      .repartition(col("list_id"))
       .write.mode("append").partitionBy("list_id").parquet(path)
 
   /** Probe an IVFADC store: read ONLY the nprobe nearest list partitions

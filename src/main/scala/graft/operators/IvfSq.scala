@@ -60,7 +60,6 @@ object IvfSq {
             numLists: Int, coarseIters: Int, path: String,
             levels: Int = 256, routed: Boolean = false): Unit = {
     val spark = emb.sparkSession
-    import spark.implicits._
     // routed: the O(√C) two-level coarse kernel for corpus-scale C
     // (same trade as IvfPq.write — see listIdCol there)
     val assignFn: (Column, Array[(Long, Array[Double])]) => Column =
@@ -75,9 +74,7 @@ object IvfSq {
       // one file per list per owning task (see IvfPq.write's note)
       .repartition(col("list_id"))
       .write.mode("overwrite").partitionBy("list_id").parquet(path)
-    centroids.map { case (lid, cv) => (lid, cv.toSeq) }.toSeq
-      .toDF("list_id", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(path + ".centroids")
+    Similarity.writeIvfCentroids(spark, centroids, path)
     // extent sidecar: one row per dim (idx, mn, ex) + the level count
     VectorStats.sqExtent(emb, idCol, vecCol)
       .select(explode(map_entries(col("_qmins"))).as("m"), col("_qexts"))
@@ -120,6 +117,8 @@ object IvfSq {
               element_at(extsL, i + 1) * st.levels)).cast("int"),
           lit(st.levels - 1))))
       .select(col(idCol), col("list_id"), col("codes"))
+      // one file per touched list, not one per upstream task
+      .repartition(col("list_id"))
       .write.mode("append").partitionBy("list_id").parquet(path)
   }
 

@@ -560,14 +560,21 @@ object Similarity {
     * next to the store so probes don't need the original table. */
   def writeIvf(emb: DataFrame, idCol: String, vecCol: String,
                numLists: Int, path: String): Unit = {
-    val spark = emb.sparkSession
-    import spark.implicits._
     val centroids = ivfCentroids(emb, idCol, vecCol, numLists)
     emb.withColumn("list_id", ivfListId(col(vecCol), centroids))
       // one file per list per owning task, not one per upstream task
       // per list (see IvfPq.write's measured note)
       .repartition(col("list_id"))
       .write.mode("overwrite").partitionBy("list_id").parquet(path)
+    writeIvfCentroids(emb.sparkSession, centroids, path)
+  }
+
+  /** Persist a store's coarse-centroid set as its `.centroids` sidecar
+    * (the IVF, IVF-PQ and IVF-SQ8 stores share the format). */
+  def writeIvfCentroids(spark: org.apache.spark.sql.SparkSession,
+                        centroids: Array[(Long, Array[Double])],
+                        path: String): Unit = {
+    import spark.implicits._
     centroids.map { case (lid, cv) => (lid, cv.toSeq) }.toSeq
       .toDF("list_id", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(path + ".centroids")

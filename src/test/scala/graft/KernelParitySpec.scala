@@ -354,4 +354,164 @@ class KernelParitySpec extends SparkSpec {
     assert(got.toSeq == oldSeeds.toSeq,
       s"seed selection diverged: got=${got.toSeq} want=${oldSeeds.toSeq}")
   }
+
+  // --- eval ≡ codegen: both paths of every kernel expression ---
+
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression,
+    UnsafeArrayData}
+  import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+  import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+  import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType,
+    LongType, StringType}
+  import org.apache.spark.unsafe.types.UTF8String
+  import graft.functions.NearestExpr
+
+  /** A kernel value as a comparable Scala value: doubles by their bits,
+    * arrays element by element (nulls kept). */
+  private def norm(v: Any, dt: DataType): Any = (v, dt) match {
+    case (null, _) => null
+    case (d: Double, DoubleType) => ("bits", java.lang.Double.doubleToLongBits(d))
+    case (a: ArrayData, ArrayType(et, _)) =>
+      (0 until a.numElements()).map(i =>
+        if (a.isNullAt(i)) null else norm(a.get(i, et), et))
+    case (u: UTF8String, StringType) => u.toString
+    case (x, _) => x
+  }
+
+  /** `c` (a Column-API kernel call) with its inputs rebound to row
+    * ordinals 0, 1, … */
+  private def bound(c: org.apache.spark.sql.Column, inputs: DataType*): Expression =
+    org.apache.spark.sql.GraftSqlShim.toExpression(c).withNewChildren(
+      inputs.zipWithIndex.map { case (dt, i) => BoundReference(i, dt, nullable = true) })
+
+  /** Evaluates `e` interpreted (`eval`) and through a generated
+    * projection (compiled, never the interpreted fallback) on every row:
+    * the results must be bit-identical, and a row that throws must throw
+    * the same IllegalArgumentException on both paths. */
+  private def assertEvalEqualsCodegen(e: Expression, rows: Seq[InternalRow]): Unit = {
+    import scala.util.{Failure, Success, Try}
+    val proj = GenerateUnsafeProjection.generate(Seq(e))
+    val inputs = e.collect { case b: BoundReference => b }.distinct
+    rows.foreach { row =>
+      val shown = inputs.map(b => norm(row.get(b.ordinal, b.dataType), b.dataType))
+        .mkString("(", ", ", ")")
+      val interpreted = Try(norm(e.eval(row), e.dataType))
+      val generated = Try {
+        val out = proj(row)
+        if (out.isNullAt(0)) null else norm(out.get(0, e.dataType), e.dataType)
+      }
+      (interpreted, generated) match {
+        case (Success(a), Success(b)) =>
+          assert(a == b, s"${e.prettyName} on $shown: eval $a, codegen $b")
+        case (Failure(a: IllegalArgumentException), Failure(b: IllegalArgumentException)) =>
+          assert(a.getMessage == b.getMessage,
+            s"${e.prettyName} on $shown: ${a.getMessage} vs ${b.getMessage}")
+        case (a, b) => fail(s"${e.prettyName} on $shown: eval $a, codegen $b")
+      }
+    }
+  }
+
+  private val Dim = 4
+  /** Query vectors as float values: a coarse grid (distance ties with
+    * the grid tables below), random values, all-NaN, one NaN, a short
+    * and a long vector (length mismatch). */
+  private val queries: Seq[Array[Float]] = {
+    val rnd = new scala.util.Random(17)
+    val grid = Seq(-1f, -0.5f, 0f, 0.5f, 1f, 1.5f)
+    Seq.fill(40)(Array.fill(Dim)(grid(rnd.nextInt(grid.length)))) ++
+      Seq.fill(20)(Array.fill(Dim)(rnd.nextGaussian().toFloat)) ++
+      Seq(Array.fill(Dim)(Float.NaN), Array(0.5f, Float.NaN, 0f, 1f),
+        Array(0f, 1f, 0.5f), Array.fill(Dim + 1)(0.5f))
+  }
+
+  private def vecRows(asFloat: Boolean): Seq[InternalRow] =
+    queries.map(q => InternalRow(
+      if (asFloat) UnsafeArrayData.fromPrimitiveArray(q)
+      else UnsafeArrayData.fromPrimitiveArray(q.map(_.toDouble)))) :+
+      InternalRow(null)
+
+  private def vecType(asFloat: Boolean): DataType =
+    ArrayType(if (asFloat) FloatType else DoubleType, containsNull = false)
+
+  /** Grid centroids with a duplicated vector under two ids, two
+    * entries equidistant from the origin, and a random tail. */
+  private val table: Array[(Long, Array[Double])] = {
+    val rnd = new scala.util.Random(19)
+    val grid = Array(
+      Array(0.0, 0.0, 0.0, 0.0), Array(0.0, 0.0, 0.0, 0.0),
+      Array(1.0, 0.0, 0.0, 0.0), Array(0.0, 1.0, 0.0, 0.0),
+      Array(0.5, 0.5, -0.5, 1.0), Array(1.0, 1.0, 1.0, 1.0))
+    val tail = Array.fill(10)(Array.fill(Dim)(rnd.nextInt(7) / 2.0 - 1.0))
+    (grid ++ tail).zipWithIndex.map { case (cv, i) => ((i * 3 + 5).toLong, cv) }
+  }
+
+  test("every nearest-centroid kernel: eval == codegen, float and double") {
+    val v = col("v")
+    for (asFloat <- Seq(true, false); sqrt <- Seq(true, false)) {
+      val t = vecType(asFloat)
+      val rows = vecRows(asFloat)
+      for (c <- Seq(
+          NearestExpr.nearestId(v, table, sqrt),
+          NearestExpr.nearestDistSq(v, table.map(_._2)),
+          NearestExpr.nearestTopIds(v, table, 3, sqrt),
+          NearestExpr.nearestTopIds(v, table, table.length + 2, sqrt),
+          // thresholds (r + 0.5)² ∈ {0.25, 1, 2.25} equal grid d² values
+          NearestExpr.withinBoundIds(v,
+            table.map { case (id, cv) => (id, cv, (id % 3).toDouble / 2) }, 0.5),
+          NearestExpr.nearestIdRouted(v, table, sqrt, fanout = 4),
+          NearestExpr.nearestTopIdsRouted(v, table, 4, sqrt, fanout = 4),
+          // identical vectors: the routed tables hand a twin to the second super
+          NearestExpr.nearestTopIdsRouted(v, Array((0L, table(0)._2), (1L, table(0)._2)),
+            3, sqrt, fanout = 2)))
+        assertEvalEqualsCodegen(bound(c, t), rows)
+    }
+  }
+
+  test("vector-pair, Hamming and MaxSim kernels: eval == codegen") {
+    for (fa <- Seq(true, false); fb <- Seq(true, false)) {
+      val pairs = vecRows(fa).zip(vecRows(fb).reverse).map { case (a, b) =>
+        InternalRow(a.get(0, vecType(fa)), b.get(0, vecType(fb)))
+      }
+      for (c <- Seq(VectorExpressions.vecDot(col("a"), col("b")),
+                    VectorExpressions.vecDistSq(col("a"), col("b"))))
+        assertEvalEqualsCodegen(bound(c, vecType(fa), vecType(fb)), pairs)
+    }
+    for (asFloat <- Seq(true, false))
+      assertEvalEqualsCodegen(
+        bound(VectorExpressions.vecMaxSim(col("v"), Seq(Seq(1.0, -0.5), Seq(0.25, 2.0))),
+          vecType(asFloat)),
+        vecRows(asFloat))
+    val rnd = new scala.util.Random(23)
+    val codes = Seq.fill(30)(InternalRow(
+        UnsafeArrayData.fromPrimitiveArray(Array.fill(3)(rnd.nextLong())),
+        UnsafeArrayData.fromPrimitiveArray(Array.fill(3)(rnd.nextLong())))) ++
+      Seq(InternalRow(UnsafeArrayData.fromPrimitiveArray(Array(1L, 2L)),
+          UnsafeArrayData.fromPrimitiveArray(Array(1L))),
+        InternalRow(null, UnsafeArrayData.fromPrimitiveArray(Array(1L))))
+    val longs = ArrayType(LongType, containsNull = false)
+    assertEvalEqualsCodegen(
+      bound(VectorExpressions.vecHamming(col("a"), col("b")), longs, longs), codes)
+  }
+
+  test("text kernels: eval == codegen on arrays with null elements") {
+    val rnd = new scala.util.Random(29)
+    val words = Seq("a", "bb", "ccc")
+    val strs = Seq.fill(60)(InternalRow(new GenericArrayData(
+      Array.fill[Any](rnd.nextInt(9))(
+        if (rnd.nextInt(5) == 0) null else UTF8String.fromString(words(rnd.nextInt(3))))))) :+
+      InternalRow(null)
+    val strType = ArrayType(StringType, containsNull = true)
+    for (c <- Seq(VectorExpressions.phraseCount(col("t"), Seq("a", "bb")),
+                  VectorExpressions.shingleArray(col("t"), 3),
+                  VectorExpressions.md5PrefixLongs(col("t"))))
+      assertEvalEqualsCodegen(bound(c, strType), strs)
+    val hs = Seq.fill(60)(InternalRow(new GenericArrayData(
+      Array.fill[Any](rnd.nextInt(9))(
+        if (rnd.nextInt(4) == 0) null else rnd.nextInt(100).toLong)))) :+
+      InternalRow(null)
+    assertEvalEqualsCodegen(
+      bound(VectorExpressions.slidingMin(col("h"), 3), ArrayType(LongType, containsNull = true)),
+      hs)
+  }
 }

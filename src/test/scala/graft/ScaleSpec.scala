@@ -190,7 +190,7 @@ class ScaleSpec extends SparkSpec {
     IvfPq.append(spark, s"$base/store", fresh, "vec_id", "embedding")
     // reference: assign the WHOLE corpus with the old store's frozen
     // centroid + codebook sidecars (a full re-write would re-train)
-    val cents = IvfPq.readCentroids(spark, s"$base/store")
+    val cents = Similarity.readIvfCentroids(spark, s"$base/store")
     val cb = IvfPq.readCodebook(spark, s"$base/store")
     def key(df: org.apache.spark.sql.DataFrame) = df
       .select(col("vec_id"), col("list_id").cast("long"),
@@ -210,6 +210,32 @@ class ScaleSpec extends SparkSpec {
         queries, "qid0", "qv0", nprobe = 4, topN = 50, k = 10)
       .select("vec_id").as[Long].collect()
     assert(got.nonEmpty && got.forall(_ % 7 != 0))
+  }
+
+  test("IVF-PQ and IVF-SQ8 appends write one file per touched list") {
+    val base = java.nio.file.Files.createTempDirectory("graftivfappfiles").toString
+    val e = Tables.embeddings(spark, sf0001)
+    val old = e.filter(col("vec_id") % 5 =!= 0)
+    // the batch arrives spread over 8 input partitions
+    val fresh = e.filter(col("vec_id") % 5 === 0).repartition(8)
+    def dataFiles(store: String): Map[String, Int] =
+      new java.io.File(store).listFiles().filter(_.getName.startsWith("list_id="))
+        .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet")))
+        .toMap
+    IvfPq.write(old, "vec_id", "embedding", numLists = 4, coarseIters = 0,
+      m = 8, k = 16, pqIters = 0, s"$base/pq")
+    operators.IvfSq.write(old, "vec_id", "embedding", 4, 0, s"$base/sq")
+    val gained = Seq[(String, () => Unit)](
+        "pq" -> (() => IvfPq.append(spark, s"$base/pq", fresh, "vec_id", "embedding")),
+        "sq" -> (() => operators.IvfSq.append(spark, s"$base/sq", fresh, "vec_id",
+          "embedding"))).map { case (store, append) =>
+      val before = dataFiles(s"$base/$store")
+      append()
+      store -> dataFiles(s"$base/$store")
+        .map { case (d, n) => d -> (n - before.getOrElse(d, 0)) }.filter(_._2 != 0)
+    }
+    assert(gained.forall { case (_, g) => g.nonEmpty && g.values.forall(_ == 1) },
+      s"files gained per list dir: $gained")
   }
 
   test("store remove drops partitions the delete emptied") {
