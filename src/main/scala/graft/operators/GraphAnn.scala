@@ -1,8 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.functions.VectorFunctions._
 import scala.collection.mutable
@@ -387,6 +389,17 @@ object GraphAnn {
                   // default) leaves the plan fully lazy and unchanged.
                   stageProbe: Option[(String, Double) => Unit] = None)
       : (DataFrame, Array[Long]) = {
+    val (graph, seeds, _) = mergedBuild(emb, idCol, vecCol, numLists, nprobe, k,
+      alpha, maxDegree, stageProbe)
+    (graph, seeds)
+  }
+
+  /** [[buildMerged]], with the merge checkpoint the graph reads. */
+  private def mergedBuild(emb: DataFrame, idCol: String, vecCol: String,
+                          numLists: Int, nprobe: Int, k: Int,
+                          alpha: Double, maxDegree: Int,
+                          stageProbe: Option[(String, Double) => Unit])
+      : (DataFrame, Array[Long], DataFrame) = {
     val spark = emb.sparkSession
     import spark.implicits._
     def tstage[T](label: String)(f: => T): T = stageProbe match {
@@ -599,7 +612,7 @@ object GraphAnn {
     val graph = pts.join(mergedNbrs, Seq("id"), "left")
       .select(col("id"), col("vec"),
         coalesce(col("nbrs"), array().cast("array<long>")).as("nbrs"))
-    (graph, seeds)
+    (graph, seeds, mergedNbrs)
   }
 
   /** Execution conf for a corpus-scale merged build (the unit of work
@@ -655,22 +668,23 @@ object GraphAnn {
     }
   }
 
-  /** [[buildMerged]] + [[writeGraph]]. */
+  /** [[buildMerged]] + [[writeGraph]]. The merge checkpoint is freed
+    * once the store is written; `emb`'s own pins are the caller's. */
   def buildAndWriteMerged(emb: DataFrame, idCol: String, vecCol: String,
                           numLists: Int, nprobe: Int, k: Int,
                           alpha: Double, maxDegree: Int, path: String,
                           buckets: Int = 16,
                           stageProbe: Option[(String, Double) => Unit] = None)
       : Unit = withMergedBuildConf(emb.sparkSession, numLists) {
-    val (graph, seeds) = buildMerged(emb, idCol, vecCol, numLists, nprobe,
+    val (graph, seeds, merge) = mergedBuild(emb, idCol, vecCol, numLists, nprobe,
       k, alpha, maxDegree, stageProbe)
-    stageProbe match {
+    try stageProbe match {
       case None => writeGraph(graph, seeds, path, alpha, maxDegree, buckets)
       case Some(p) =>
         val t0 = System.nanoTime()
         writeGraph(graph, seeds, path, alpha, maxDegree, buckets)
         p("write: gb repartition + parquet", (System.nanoTime() - t0) / 1e9)
-    }
+    } finally IndexBuild.freeCheckpoint(merge)
   }
 
   /** Seed set = per-list leaders (each coarse list's member nearest
@@ -837,12 +851,12 @@ object GraphAnn {
   }
 
   /** Single-query serving as a relation (the v2/a2 result shape):
-    * (id, dist) rows from the pinned greedy search. */
+    * (id long, dist double) rows from the pinned greedy search, wrapped
+    * as driver-built rows (no encoder derived per call). */
   def graphKnn(spark: SparkSession, pinned: PinnedGraph,
-               q: Seq[Double], k: Int, ef: Int): DataFrame = {
-    import spark.implicits._
-    pinned.knn(q, k, ef).toDF("id", "dist")
-  }
+               q: Seq[Double], k: Int, ef: Int): DataFrame =
+    IndexSearch.localRows(spark, Seq("id" -> LongType, "dist" -> DoubleType),
+      pinned.knn(q, k, ef).map { case (id, d) => InternalRow(id, d) })
 
   /** Batch serving — every row of a query relation through one
     * distributed flatMap with the pinned graph broadcast (the
@@ -1229,16 +1243,24 @@ object GraphAnn {
     writeGraph(graph, seeds, path, alpha, maxDegree, buckets)
   }
 
+  /** The store files' schemas, as [[writeGraph]], [[removeGraph]] and the
+    * append writers lay them out: read with them, no sidecar or row read
+    * runs a schema-inference job. */
+  private val RowsSchema = "id long, vec array<float>, nbrs array<long>, gb int"
+  private val MetaSchema = "alpha double, max_degree int, buckets int, seeds array<long>"
+
+  /** Open a graph store: one job for the `.meta` row, one more for the
+    * tombstones when the sidecar exists (deduplicated on the driver). */
   def openGraph(spark: SparkSession, path: String): GraphStore = {
-    val m = spark.read.parquet(path + ".meta").head()
+    val m = spark.read.schema(MetaSchema).parquet(path + ".meta").head()
     val tombPath = new org.apache.hadoop.fs.Path(path + ".tomb")
     val fs = tombPath.getFileSystem(spark.sessionState.newHadoopConf())
     val tomb =
       if (fs.exists(tombPath))
-        spark.read.parquet(path + ".tomb").select(col("id").cast("long"))
-          .distinct().collect().map(_.getLong(0))
+        spark.read.schema("id long").parquet(path + ".tomb").collect()
+          .map(_.getLong(0)).distinct
       else Array.empty[Long]
-    GraphStore(spark.read.parquet(path), m.getSeq[Long](3).toArray,
+    GraphStore(spark.read.schema(RowsSchema).parquet(path), m.getSeq[Long](3).toArray,
       m.getDouble(0), m.getInt(1), m.getInt(2), tomb)
   }
 

@@ -5,14 +5,19 @@ import java.lang.ref.SoftReference
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BindReferences,
+  LessThanOrEqual, Literal, Predicate, Sqrt, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StructType}
 
+import graft.functions.DistSqExpr
 import graft.functions.VectorFunctions._
 import graft.plans.IndexedVicinityRule
 
@@ -45,10 +50,17 @@ import graft.plans.IndexedVicinityRule
   *    full collect; the second collects the `points` rows once, keyed by
   *    the snapshot, the projection's schema and `idCol`, while the listed
   *    bytes are at most a sixteenth of the heap. From then on the
-  *    candidates' rows are looked up by id on the driver and returned as
-  *    a `LocalRelation` under the same exact predicate, which the
-  *    optimizer folds (`ConvertToLocalRelation`): collecting the answer
-  *    runs no job. Null ids are not pinned and never match.
+  *    candidates' rows are looked up by id on the driver and re-checked
+  *    there by the exact predicate's own Catalyst tree, bound to the rows
+  *    and interpreted as `ConvertToLocalRelation` would fold the filter;
+  *    the matches come back as one bare `LocalRelation`, `idCol` first,
+  *    with no filter or projection left for the optimizer, and
+  *    collecting the answer runs no job. Null ids are not pinned and
+  *    never match. A `vecCol` that names no one top-level column keeps
+  *    the filter over the `LocalRelation`.
+  *  - `searchBox`/`searchBall` on a pinned tree and
+  *    [[GraphAnn.graphKnn]] wrap their driver-built answers the same way
+  *    ([[localRows]]): no encoder is derived per call.
   *  - staleness, for both directories: a rewritten directory, read back,
   *    lists new files, so its snapshot is new and pins afresh; an old
   *    DataFrame keeps its old listing, as any Spark read does. Other
@@ -203,14 +215,11 @@ object IndexSearch {
 
   /** Candidate leaf ids within the box (auto local/distributed). */
   def searchBox(index: DataFrame, q: Seq[Double], domain: Double,
-                localNodeLimit: Long = DefaultNodeLimit): DataFrame = {
-    val spark = index.sparkSession
-    import spark.implicits._
+                localNodeLimit: Long = DefaultNodeLimit): DataFrame =
     pinWithin(index, snapshotOf(index), localNodeLimit) match {
-      case Some(tree) => tree.candidates(q, domain).toDF("id")
+      case Some(tree) => idRows(index.sparkSession, tree.candidates(q, domain))
       case None => frontierSearch(index, doubleVec(q), domain, Nil, None, hint = true)
     }
-  }
 
   /** Exact vicinity search: candidate ids from the L2 budget descent
     * (strictly tighter than the box test for ball queries), re-checked
@@ -225,26 +234,79 @@ object IndexSearch {
     def semi(cands: DataFrame): DataFrame =
       points.join(cands.withColumnRenamed("id", idCol), Seq(idCol), "left_semi")
         .filter(exact)
+    // output columns: `idCol` first, then the rest of `points` in order
+    def idFirst(hits: DataFrame): DataFrame = {
+      val cols = hits.columns.toSeq
+      val key = idName(cols, idCol)
+      hits.select((key +: cols.filterNot(_ == key))
+        .map(c => col("`" + c.replace("`", "``") + "`")): _*)
+    }
     val snapshot = snapshotOf(index)
-    val hits = pinWithin(index, snapshot, DefaultNodeLimit) match {
+    pinWithin(index, snapshot, DefaultNodeLimit) match {
       case Some(tree) =>
         val ids = tree.candidatesL2(q, radius).distinct
         snapshot.flatMap(_ => rowsWithin(points, idCol)) match {
           case Some(rows) =>
-            GraftSqlShim.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(points.schema),
-              ids.iterator.flatMap(rows.of).toIndexedSeq)).filter(exact)
+            val attrs = DataTypeUtils.toAttributes(points.schema)
+            def cands = ids.iterator.flatMap(rows.of)
+            matching(spark, attrs, idCol, vecCol, q, radius, cands).getOrElse(
+              idFirst(GraftSqlShim.ofRows(spark, LocalRelation(attrs, cands.toIndexedSeq))
+                .filter(exact)))
           case None if ids.size <= IndexedVicinityRule.DefaultMaxCandidates =>
-            points.filter(col(idCol).isInCollection(ids) && exact)
-          case None => semi(ids.toDF("id"))
+            idFirst(points.filter(col(idCol).isInCollection(ids) && exact))
+          case None => idFirst(semi(ids.toDF("id")))
         }
-      case None => semi(frontierSearch(index, doubleVec(q), radius, Nil, None, hint = true))
+      case None =>
+        idFirst(semi(frontierSearch(index, doubleVec(q), radius, Nil, None, hint = true)))
     }
-    // output columns: `idCol` first, then the rest of `points` in order
-    val cols = hits.columns.toSeq
-    val key = idName(cols, idCol)
-    hits.select((key +: cols.filterNot(_ == key))
-      .map(c => col("`" + c.replace("`", "``") + "`")): _*)
   }
+
+  /** The rows among `cands` (over `attrs`) within `radius` of `q`,
+    * `idCol` first, as a bare `LocalRelation`. The predicate is the other
+    * paths' `dist(col(vecCol), doubleVec(q)) <= radius` as the optimizer
+    * leaves it, `Sqrt(DistSqExpr(vec, q)) <= radius` with `q` folded to
+    * one literal, bound to `attrs` and run by Catalyst's interpreted
+    * predicate on the driver: what `ConvertToLocalRelation` does to that
+    * filter over driver-held rows. None when `vecCol` names no one
+    * top-level attribute, or the tree does not type-check there. */
+  private def matching(spark: SparkSession, attrs: Seq[Attribute], idCol: String,
+                       vecCol: String, q: Seq[Double], radius: Double,
+                       cands: Iterator[InternalRow]): Option[DataFrame] = {
+    val resolver = spark.sessionState.conf.resolver
+    val vec = UnresolvedAttribute.quotedString(vecCol).nameParts match {
+      case Seq(name) => attrs.filter(a => resolver(a.name, name)) match {
+        case Seq(a) => Some(a)
+        case _ => None
+      }
+      case _ => None
+    }
+    val qVec = Literal(ArrayData.toArrayData(q.toArray),
+      ArrayType(DoubleType, containsNull = false))
+    vec.map(v => LessThanOrEqual(Sqrt(DistSqExpr(v, qVec)), Literal(radius)))
+      .filter(_.resolved).map { exact =>
+        val test = Predicate.createInterpreted(BindReferences.bindReference(exact, attrs))
+        test.initialize(0)
+        val key = idName(attrs.map(_.name), idCol)
+        val out = attrs.filter(_.name == key) ++ attrs.filterNot(_.name == key)
+        val hits = cands.filter(test.eval)
+        val rows = if (out == attrs) hits.toIndexedSeq else {
+          val reorder = UnsafeProjection.create(out, attrs)
+          hits.map(r => reorder(r).copy()).toIndexedSeq
+        }
+        GraftSqlShim.ofRows(spark, LocalRelation(out, rows))
+      }
+  }
+
+  /** Rows the driver built, as a DataFrame over a bare `LocalRelation` of
+    * non-null `cols`: no encoder derived, no plan above the rows. */
+  private[graft] def localRows(spark: SparkSession, cols: Seq[(String, DataType)],
+                               rows: Seq[InternalRow]): DataFrame =
+    GraftSqlShim.ofRows(spark, LocalRelation(
+      cols.map { case (name, t) => AttributeReference(name, t, nullable = false)() }, rows))
+
+  /** Leaf ids as an `(id long not null)` relation. */
+  private def idRows(spark: SparkSession, ids: Seq[Long]): DataFrame =
+    localRows(spark, Seq("id" -> LongType), ids.map(InternalRow(_)))
 
   /** Candidate leaf ids for an L2 ball query: the local path uses the
     * reference's squared-distance-budget pruning
@@ -254,14 +316,11 @@ object IndexSearch {
     * too large to collect fall back to the distributed box descent (a
     * looser superset). */
   def searchBall(index: DataFrame, q: Seq[Double], radius: Double,
-                 localNodeLimit: Long = DefaultNodeLimit): DataFrame = {
-    val spark = index.sparkSession
-    import spark.implicits._
+                 localNodeLimit: Long = DefaultNodeLimit): DataFrame =
     pinWithin(index, snapshotOf(index), localNodeLimit) match {
-      case Some(tree) => tree.candidatesL2(q, radius).toDF("id")
+      case Some(tree) => idRows(index.sparkSession, tree.candidatesL2(q, radius))
       case None => frontierSearch(index, doubleVec(q), radius, Nil, None, hint = true)
     }
-  }
 
   /** Per-document box search over a (docId, ...) index built by
     * buildIndexPerDoc — mirrors dbo.Search's optional @docId

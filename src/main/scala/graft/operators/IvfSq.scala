@@ -51,6 +51,23 @@ object IvfSq {
           (c.cast("double") + lit(0.5d)) * element_at(extsL, i + 1) / levels))
   }
 
+  /** SQ8 encode of a vector column against driver-held extents:
+    * code_i = floor((x_i − min_i)/ext_i·levels), clamped to levels−1;
+    * constant dims (ext 0) encode to 0. [[decodeCol]]'s inverse, and the
+    * one encode [[write]] and [[append]] share, so appended rows decode
+    * like written ones; op for op [[VectorStats.sqCode]]'s formula. */
+  private def encodeCol(vec: Column, mins: Array[Double],
+                        exts: Array[Double], levels: Int): Column = {
+    val minsL = array(mins.map(lit).toIndexedSeq: _*)
+    val extsL = array(exts.map(lit).toIndexedSeq: _*)
+    transform(vec, (x, i) =>
+      least(
+        floor(when(element_at(extsL, i + 1) === 0d, lit(0.0d))
+          .otherwise((x.cast("double") - element_at(minsL, i + 1)) /
+            element_at(extsL, i + 1) * levels)).cast("int"),
+        lit(levels - 1)))
+  }
+
   /** Persist the IVF-SQ8 serving layout: narrow (id, codes) rows
     * partitioned by list_id, with the coarse-centroid set and the
     * per-dim quantization extent as KB-sized sidecars. Centroids are
@@ -60,6 +77,7 @@ object IvfSq {
             numLists: Int, coarseIters: Int, path: String,
             levels: Int = 256, routed: Boolean = false): Unit = {
     val spark = emb.sparkSession
+    import spark.implicits._
     // routed: the O(√C) two-level coarse kernel for corpus-scale C
     // (same trade as IvfPq.write — see listIdCol there)
     val assignFn: (Column, Array[(Long, Array[Double])]) => Column =
@@ -67,20 +85,22 @@ object IvfSq {
       else Similarity.ivfListId
     val centroids =
       Similarity.ivfTrain(emb, idCol, vecCol, numLists, coarseIters, assignFn)
-    emb.crossJoin(broadcast(VectorStats.sqExtent(emb, idCol, vecCol)))
-      .withColumn("list_id", assignFn(col(vecCol), centroids))
-      .withColumn("codes", VectorStats.sqCode(col(vecCol), levels))
+    // the per-dim extent, aggregated once: it encodes the rows and is
+    // the sidecar (d entries, dims 0 until d)
+    val ext = VectorStats.sqExtent(emb, idCol, vecCol).head()
+    val (minOf, extOf) = (ext.getMap[Int, Double](0), ext.getMap[Int, Double](1))
+    val mins = Array.tabulate(minOf.size)(minOf)
+    val exts = Array.tabulate(extOf.size)(extOf)
+    emb.withColumn("list_id", assignFn(col(vecCol), centroids))
+      .withColumn("codes", encodeCol(col(vecCol), mins, exts, levels))
       .select(col(idCol), col("list_id"), col("codes"))
       // one file per list per owning task (see IvfPq.write's note)
       .repartition(col("list_id"))
       .write.mode("overwrite").partitionBy("list_id").parquet(path)
     Similarity.writeIvfCentroids(spark, centroids, path)
     // extent sidecar: one row per dim (idx, mn, ex) + the level count
-    VectorStats.sqExtent(emb, idCol, vecCol)
-      .select(explode(map_entries(col("_qmins"))).as("m"), col("_qexts"))
-      .select(col("m.key").as("idx"), col("m.value").as("mn"),
-        element_at(col("_qexts"), col("m.key")).as("ex"),
-        lit(levels).as("levels"))
+    mins.indices.map(i => (i, mins(i), exts(i), levels))
+      .toDF("idx", "mn", "ex", "levels")
       .coalesce(1).write.mode("overwrite").parquet(path + ".extent")
   }
 
@@ -106,16 +126,9 @@ object IvfSq {
   def append(spark: SparkSession, path: String, newVecs: DataFrame,
              idCol: String, vecCol: String): Unit = {
     val st = open(spark, path)
-    val minsL = array(st.mins.map(lit).toIndexedSeq: _*)
-    val extsL = array(st.exts.map(lit).toIndexedSeq: _*)
     newVecs
       .withColumn("list_id", Similarity.ivfListId(col(vecCol), st.centroids))
-      .withColumn("codes", transform(col(vecCol), (x, i) =>
-        least(
-          floor(when(element_at(extsL, i + 1) === 0d, lit(0.0d))
-            .otherwise((x.cast("double") - element_at(minsL, i + 1)) /
-              element_at(extsL, i + 1) * st.levels)).cast("int"),
-          lit(st.levels - 1))))
+      .withColumn("codes", encodeCol(col(vecCol), st.mins, st.exts, st.levels))
       .select(col(idCol), col("list_id"), col("codes"))
       // one file per touched list, not one per upstream task
       .repartition(col("list_id"))

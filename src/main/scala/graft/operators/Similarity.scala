@@ -583,8 +583,7 @@ object Similarity {
   /** The store's frozen coarse-centroid set, from its sidecar. */
   def readIvfCentroids(spark: org.apache.spark.sql.SparkSession,
                        path: String): Array[(Long, Array[Double])] =
-    spark.read.parquet(path + ".centroids")
-      .select(col("list_id").cast("long"), col("centroid"))
+    spark.read.schema("list_id long, centroid array<double>").parquet(path + ".centroids")
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
 

@@ -476,6 +476,83 @@ class IndexExtrasSpec extends SparkSpec {
     assert(calls.last._2 == 0, s"the third call ran ${calls.last._2} jobs")
   }
 
+  /** Parquet points with a null vector, a NaN element, duplicate ids, a
+    * point exactly on the radius and an `ID` column that is neither first
+    * nor cased as queried, beside a parquet tree over their clean rows;
+    * the query is the origin at radius 5. */
+  private def edgeFixture(prefix: String): (DataFrame, DataFrame) = {
+    val rows = Seq[(String, Option[Seq[Double]], Long)](
+      ("a", Some(Seq(0.0, 0.0)), 1L), ("b", None, 1L), ("g", Some(Seq(0.5, -0.5)), 1L),
+      ("c", Some(Seq(3.0, 4.0)), 2L), ("d", Some(Seq(Double.NaN, 0.0)), 2L),
+      ("e", Some(Seq(1.0, 1.0)), 3L), ("f", Some(Seq(6.0, 0.0)), 4L)).toDF("tag", "vec", "ID")
+    val clean = rows.filter(col("tag").isin("a", "c", "e", "f"))
+    (parquet(IndexBuild.buildIndex(clean, "ID", "vec"), prefix + "idx"),
+      parquet(rows, prefix + "pts"))
+  }
+
+  test("a warm searchExact equals the first, job-path call row for row") {
+    val (index, pts) = edgeFixture("graftwarm")
+    val q = Seq(0.0, 0.0)
+    def call() = IndexSearch.searchExact(index, pts, "id", "vec", q, 5.0)
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val cold = call()
+    val coldRows = rows(cold)
+    assert(coldRows == Seq("[1,a,ArraySeq(0.0, 0.0)]", "[1,g,ArraySeq(0.5, -0.5)]",
+      "[2,c,ArraySeq(3.0, 4.0)]", "[3,e,ArraySeq(1.0, 1.0)]"), "the job path")
+    call().collect()
+    val (warm, jobs) = jobsOf { val df = call(); (df, rows(df)) }
+    assert(jobs == 0, s"the third call ran $jobs jobs")
+    assert(warm._1.schema == cold.schema && warm._1.columns.toSeq == Seq("ID", "tag", "vec"))
+    assert(warm._2 == coldRows)
+  }
+
+  test("a warm searchExact returns a bare LocalRelation") {
+    val (index, pts) = edgeFixture("graftbare")
+    def call() = IndexSearch.searchExact(index, pts, "id", "vec", Seq(0.0, 0.0), 5.0)
+    call().collect()
+    call().collect()
+    val plan = call().queryExecution.logical
+    assert(plan.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+      s"the warm plan is\n$plan")
+  }
+
+  test("graph and IVF sidecars are read without a schema-inference job") {
+    val dir = tmpDir("graftsidecar")
+    val pts = Ingest.randomClustered(spark, 200, 4, 4).localCheckpoint()
+    GraphAnn.buildAndWrite(pts, "id", "vector", numLists = 4, nprobe = 2,
+      k = 6, alpha = 1.2, maxDegree = 6, path = s"$dir/g")
+    Similarity.writeIvf(pts, "id", "vector", 4, s"$dir/ivf")
+    val (fresh, freshJobs) = jobsOf(GraphAnn.openGraph(spark, s"$dir/g"))
+    // the same ids tombstoned twice: the store holds each once
+    GraphAnn.removeGraph(spark, s"$dir/g", Seq(3L, 5L, 7L))
+    GraphAnn.removeGraph(spark, s"$dir/g", Seq(5L, 7L))
+    val (tombed, tombJobs) = jobsOf(GraphAnn.openGraph(spark, s"$dir/g"))
+    val (cents, centJobs) = jobsOf(Similarity.readIvfCentroids(spark, s"$dir/ivf"))
+    assert((freshJobs, tombJobs, centJobs) == ((1, 2, 1)),
+      "jobs to open the graph, open it with tombstones, read the IVF centroids")
+    assert(fresh.tombstones.isEmpty && tombed.tombstones.sorted.toSeq == Seq(3L, 5L, 7L))
+    assert(tombed.rows.count() == 200 && cents.length == 4)
+    assert(tombed.rows.schema.simpleString ==
+      "struct<id:bigint,vec:array<float>,nbrs:array<bigint>,gb:int>")
+  }
+
+  test("buildAndWriteMerged frees its merge checkpoint, not the caller's pins") {
+    val sc = spark.sparkContext
+    val pts = Ingest.randomClustered(spark, 300, 4, 4).localCheckpoint()
+    val ptsRdd = pts.queryExecution.analyzed.collectLeaves().collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+    }
+    val before = sc.getPersistentRDDs.keySet
+    val dir = tmpDir("graftmergedpin")
+    GraphAnn.buildAndWriteMerged(pts, "id", "vector", numLists = 4, nprobe = 2,
+      k = 6, alpha = 1.2, maxDegree = 6, path = s"$dir/g")
+    val stray = sc.getPersistentRDDs.keySet -- before
+    assert(stray.isEmpty, s"${stray.size} pinned RDDs left by the merged build")
+    assert(ptsRdd.nonEmpty && ptsRdd.forall(sc.getPersistentRDDs.contains),
+      "the caller's checkpoint was freed")
+    assert(GraphAnn.openGraph(spark, s"$dir/g").rows.count() == 300)
+  }
+
   test("localNodeLimit = 0 after a kept pin still runs the frontier search") {
     val e = Tables.embeddings(spark, sf0001)
     val q = QueryConstants.Q64

@@ -294,6 +294,24 @@ class RecallSpec extends SparkSpec {
     assert(h1 == h2, "graph build must be deterministic")
   }
 
+  test("graphKnn is the pinned search as a bare (id, dist) relation") {
+    val few = pts.filter(col("id") < 800)
+    val (graph, seeds) = GraphAnn.build(few, "id", "embedding",
+      numLists = 4, nprobe = 2, k = 8, alpha = 1.2, maxDegree = 8)
+    val pinned = GraphAnn.pin(graph, seeds)
+    val schema = Seq.empty[(Long, Double)].toDF("id", "dist").schema
+    (queries.map((_, K)) :+ ((queries.head, 0))).foreach { case (q, k) =>
+      val df = GraphAnn.graphKnn(spark, pinned, q, k, ef = 32)
+      assert(df.schema == schema)
+      assert(df.queryExecution.logical
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+      // distances compared by their bits
+      val got = df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(got.map(t => (t._1, java.lang.Double.doubleToLongBits(t._2))) ==
+        pinned.knn(q, k, 32).map(t => (t._1, java.lang.Double.doubleToLongBits(t._2))))
+    }
+  }
+
   test("merged per-list graph build: recall floor, degree bound, determinism") {
     // buildMerged — the corpus-scale build (vectors shuffled once into
     // nprobe list partitions, local Vamana per list, rank-ordered

@@ -212,6 +212,20 @@ class ScaleSpec extends SparkSpec {
     assert(got.nonEmpty && got.forall(_ % 7 != 0))
   }
 
+  test("IVF-SQ8: appending the written rows again gives bit-identical codes") {
+    val base = java.nio.file.Files.createTempDirectory("graftsqcodes").toString
+    val e = Tables.embeddings(spark, sf0001)
+    operators.IvfSq.write(e, "vec_id", "embedding", 4, 0, base)
+    operators.IvfSq.append(spark, base, e, "vec_id", "embedding")
+    val codes = spark.read.parquet(base).select("vec_id", "list_id", "codes")
+      .as[(Long, Long, Seq[Int])].collect().groupBy(_._1)
+    assert(codes.size == e.count() && codes.values.forall(_.length == 2))
+    val differ = codes.filter { case (_, rows) => rows(0)._2 != rows(1)._2 ||
+      rows(0)._3 != rows(1)._3 }
+    assert(differ.isEmpty, s"${differ.size} ids encode differently on append: " +
+      differ.take(2).map { case (id, rows) => s"$id -> ${rows.toSeq}" }.mkString("; "))
+  }
+
   test("IVF-PQ and IVF-SQ8 appends write one file per touched list") {
     val base = java.nio.file.Files.createTempDirectory("graftivfappfiles").toString
     val e = Tables.embeddings(spark, sf0001)
