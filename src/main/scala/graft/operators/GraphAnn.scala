@@ -1,13 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
 
 import graft.functions.VectorFunctions._
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Graph-based ANN: Vamana-style bounded-degree neighbour graph
   * (Subramanya et al., "DiskANN", NeurIPS 2019 — the α-RobustPrune
@@ -1205,6 +1206,21 @@ object GraphAnn {
   private def gbOf(c: Column, buckets: Int): Column =
     pmod(c, lit(buckets.toLong)).cast("int")
 
+  /** The store files' layouts: [[writeGraph]] and the append writers
+    * lay out the rows by `RowsSchema` and the `.meta` row by
+    * `MetaSchema`, [[removeGraph]] the `.tomb` ids by `TombSchema`.
+    * [[openGraph]] reads each file with its layout, so no read runs a
+    * schema-inference job. */
+  private val RowsSchema =
+    StructType.fromDDL("id long, vec array<float>, nbrs array<long>, gb int")
+  private val MetaSchema =
+    StructType.fromDDL("alpha double, max_degree int, buckets int, seeds array<long>")
+  private val TombSchema = StructType.fromDDL("id long")
+
+  /** `df`'s columns that `layout` names, cast to its types, in its order. */
+  private def laidOut(df: DataFrame, layout: StructType): DataFrame =
+    df.select(layout.map(f => col(f.name).cast(f.dataType)): _*)
+
   /** Persist a built graph ([[build]]'s relation + seeds). `buckets`
     * sizes the maintenance grain: append/consolidate rewrite whole gb
     * partitions, so at corpus scale size it so one partition's rows fit
@@ -1212,10 +1228,7 @@ object GraphAnn {
   def writeGraph(graph: DataFrame, seeds: Array[Long], path: String,
                  alpha: Double, maxDegree: Int, buckets: Int = 16): Unit = {
     val spark = graph.sparkSession
-    import spark.implicits._
-    graph.select(col("id").cast("long"), col("vec").cast("array<float>"),
-        col("nbrs").cast("array<long>"),
-        gbOf(col("id"), buckets).as("gb"))
+    laidOut(graph.withColumn("gb", gbOf(col("id"), buckets)), RowsSchema)
       .repartition(col("gb"))
       // STATIC overwrite pinned per-writer: writeGraph replaces the
       // WHOLE store. Under a session-level dynamic mode (appendGraph's
@@ -1225,8 +1238,7 @@ object GraphAnn {
       // graphmaint growth run)
       .write.mode("overwrite").option("partitionOverwriteMode", "static")
       .partitionBy("gb").parquet(path)
-    Seq((alpha, maxDegree, buckets, seeds.toSeq))
-      .toDF("alpha", "max_degree", "buckets", "seeds")
+    spark.createDataFrame(List(Row(alpha, maxDegree, buckets, seeds.toSeq)).asJava, MetaSchema)
       .coalesce(1).write.mode("overwrite").parquet(path + ".meta")
     val fs = new org.apache.hadoop.fs.Path(path + ".tomb")
       .getFileSystem(spark.sessionState.newHadoopConf())
@@ -1243,12 +1255,6 @@ object GraphAnn {
     writeGraph(graph, seeds, path, alpha, maxDegree, buckets)
   }
 
-  /** The store files' schemas, as [[writeGraph]], [[removeGraph]] and the
-    * append writers lay them out: read with them, no sidecar or row read
-    * runs a schema-inference job. */
-  private val RowsSchema = "id long, vec array<float>, nbrs array<long>, gb int"
-  private val MetaSchema = "alpha double, max_degree int, buckets int, seeds array<long>"
-
   /** Open a graph store: one job for the `.meta` row, one more for the
     * tombstones when the sidecar exists (deduplicated on the driver). */
   def openGraph(spark: SparkSession, path: String): GraphStore = {
@@ -1257,7 +1263,7 @@ object GraphAnn {
     val fs = tombPath.getFileSystem(spark.sessionState.newHadoopConf())
     val tomb =
       if (fs.exists(tombPath))
-        spark.read.schema("id long").parquet(path + ".tomb").collect()
+        spark.read.schema(TombSchema).parquet(path + ".tomb").collect()
           .map(_.getLong(0)).distinct
       else Array.empty[Long]
     GraphStore(spark.read.schema(RowsSchema).parquet(path), m.getSeq[Long](3).toArray,
@@ -1493,7 +1499,7 @@ object GraphAnn {
         .select(col("id"), col("vec"),
           coalesce(col("nbrs2"), col("nbrs")).as("nbrs"), col("gb"))
         .unionByName(newTouched.withColumn("gb", gbOf(col("id"), buckets))))
-      rewritten.repartition(col("gb"))
+      laidOut(rewritten, RowsSchema).repartition(col("gb"))
         // per-writer option, not session conf: a leaked session-level
         // dynamic mode breaks writeGraph's full-replace contract
         .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
@@ -1504,7 +1510,7 @@ object GraphAnn {
       else newRows.filter(!gbOf(col("id"), buckets).isInCollection(touched))
         .withColumn("gb", gbOf(col("id"), buckets))
     if (!newUntouched.isEmpty)
-      newUntouched.repartition(col("gb"))
+      laidOut(newUntouched, RowsSchema).repartition(col("gb"))
         .write.mode("append").partitionBy("gb").parquet(path)
   }
 
@@ -1622,8 +1628,8 @@ object GraphAnn {
     * I/O). Serving excludes them immediately; [[consolidateGraph]]
     * reclaims. */
   def removeGraph(spark: SparkSession, path: String, ids: Seq[Long]): Unit = {
-    import spark.implicits._
-    ids.toDF("id").coalesce(1).write.mode("append").parquet(path + ".tomb")
+    spark.createDataFrame(ids.map(Row(_)).asJava, TombSchema).coalesce(1)
+      .write.mode("append").parquet(path + ".tomb")
   }
 
   /** [[consolidateGraph]] gated on tombstone pressure: runs the

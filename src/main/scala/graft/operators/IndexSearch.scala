@@ -6,18 +6,16 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BindReferences,
-  LessThanOrEqual, Literal, Predicate, Sqrt, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
+  Predicate, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.optimizer.ConstantFolding
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StructType}
 
-import graft.functions.DistSqExpr
 import graft.functions.VectorFunctions._
 import graft.plans.IndexedVicinityRule
 
@@ -51,13 +49,12 @@ import graft.plans.IndexedVicinityRule
   *    the snapshot, the projection's schema and `idCol`, while the listed
   *    bytes are at most a sixteenth of the heap. From then on the
   *    candidates' rows are looked up by id on the driver and re-checked
-  *    there by the exact predicate's own Catalyst tree, bound to the rows
-  *    and interpreted as `ConvertToLocalRelation` would fold the filter;
-  *    the matches come back as one bare `LocalRelation`, `idCol` first,
-  *    with no filter or projection left for the optimizer, and
-  *    collecting the answer runs no job. Null ids are not pinned and
-  *    never match. A `vecCol` that names no one top-level column keeps
-  *    the filter over the `LocalRelation`.
+  *    there by the exact predicate's own Catalyst tree, analyzed over the
+  *    rows' attributes, constant-folded, bound and interpreted as
+  *    `ConvertToLocalRelation` would fold the filter; the matches come
+  *    back as one bare `LocalRelation`, `idCol` first, with no filter or
+  *    projection left for the optimizer, and collecting the answer runs
+  *    no job. Null ids are not pinned and never match.
   *  - `searchBox`/`searchBall` on a pinned tree and
   *    [[GraphAnn.graphKnn]] wrap their driver-built answers the same way
   *    ([[localRows]]): no encoder is derived per call.
@@ -247,11 +244,8 @@ object IndexSearch {
         val ids = tree.candidatesL2(q, radius).distinct
         snapshot.flatMap(_ => rowsWithin(points, idCol)) match {
           case Some(rows) =>
-            val attrs = DataTypeUtils.toAttributes(points.schema)
-            def cands = ids.iterator.flatMap(rows.of)
-            matching(spark, attrs, idCol, vecCol, q, radius, cands).getOrElse(
-              idFirst(GraftSqlShim.ofRows(spark, LocalRelation(attrs, cands.toIndexedSeq))
-                .filter(exact)))
+            matching(spark, DataTypeUtils.toAttributes(points.schema), idCol, exact,
+              ids.iterator.flatMap(rows.of))
           case None if ids.size <= IndexedVicinityRule.DefaultMaxCandidates =>
             idFirst(points.filter(col(idCol).isInCollection(ids) && exact))
           case None => idFirst(semi(ids.toDF("id")))
@@ -261,40 +255,29 @@ object IndexSearch {
     }
   }
 
-  /** The rows among `cands` (over `attrs`) within `radius` of `q`,
-    * `idCol` first, as a bare `LocalRelation`. The predicate is the other
-    * paths' `dist(col(vecCol), doubleVec(q)) <= radius` as the optimizer
-    * leaves it, `Sqrt(DistSqExpr(vec, q)) <= radius` with `q` folded to
-    * one literal, bound to `attrs` and run by Catalyst's interpreted
-    * predicate on the driver: what `ConvertToLocalRelation` does to that
-    * filter over driver-held rows. None when `vecCol` names no one
-    * top-level attribute, or the tree does not type-check there. */
+  /** The rows among `cands` (over `attrs`) that `exact` keeps, `idCol`
+    * first, as a bare `LocalRelation`. `exact` is analyzed over `attrs`,
+    * constant-folded (`q` becomes one literal), bound and run by
+    * Catalyst's interpreted predicate on the driver: what
+    * `ConvertToLocalRelation` does to the same filter over driver-held
+    * rows, without planning the filter per query. */
   private def matching(spark: SparkSession, attrs: Seq[Attribute], idCol: String,
-                       vecCol: String, q: Seq[Double], radius: Double,
-                       cands: Iterator[InternalRow]): Option[DataFrame] = {
-    val resolver = spark.sessionState.conf.resolver
-    val vec = UnresolvedAttribute.quotedString(vecCol).nameParts match {
-      case Seq(name) => attrs.filter(a => resolver(a.name, name)) match {
-        case Seq(a) => Some(a)
-        case _ => None
-      }
-      case _ => None
+                       exact: Column, cands: Iterator[InternalRow]): DataFrame = {
+    val cond = ConstantFolding(GraftSqlShim.ofRows(spark, LocalRelation(attrs))
+        .filter(exact).queryExecution.analyzed) match {
+      case Filter(c, _) => c
+      case other => throw new IllegalStateException(s"not a filter: $other")
     }
-    val qVec = Literal(ArrayData.toArrayData(q.toArray),
-      ArrayType(DoubleType, containsNull = false))
-    vec.map(v => LessThanOrEqual(Sqrt(DistSqExpr(v, qVec)), Literal(radius)))
-      .filter(_.resolved).map { exact =>
-        val test = Predicate.createInterpreted(BindReferences.bindReference(exact, attrs))
-        test.initialize(0)
-        val key = idName(attrs.map(_.name), idCol)
-        val out = attrs.filter(_.name == key) ++ attrs.filterNot(_.name == key)
-        val hits = cands.filter(test.eval)
-        val rows = if (out == attrs) hits.toIndexedSeq else {
-          val reorder = UnsafeProjection.create(out, attrs)
-          hits.map(r => reorder(r).copy()).toIndexedSeq
-        }
-        GraftSqlShim.ofRows(spark, LocalRelation(out, rows))
-      }
+    val test = Predicate.createInterpreted(BindReferences.bindReference(cond, attrs))
+    test.initialize(0)
+    val key = idName(attrs.map(_.name), idCol)
+    val out = attrs.filter(_.name == key) ++ attrs.filterNot(_.name == key)
+    val hits = cands.filter(test.eval)
+    val rows = if (out == attrs) hits.toIndexedSeq else {
+      val reorder = UnsafeProjection.create(out, attrs)
+      hits.map(r => reorder(r).copy()).toIndexedSeq
+    }
+    GraftSqlShim.ofRows(spark, LocalRelation(out, rows))
   }
 
   /** Rows the driver built, as a DataFrame over a bare `LocalRelation` of

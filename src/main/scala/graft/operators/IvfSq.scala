@@ -35,39 +35,6 @@ object IvfSq {
                          mins: Array[Double], exts: Array[Double],
                          levels: Int)
 
-  /** Bin-center decode of a code column against driver-held extents:
-    * x̂_i = min_i + (code_i + 0.5)·ext_i/levels; constant dims (ext 0)
-    * decode to min_i. The extent arrays are d-sized literals — bounded
-    * by dimension, never by corpus or list count. Kept identical, op
-    * for op, to [[VectorStats.sqKnn]]'s decode so one oracle SQL form
-    * covers both. */
-  private def decodeCol(codes: Column, mins: Array[Double],
-                        exts: Array[Double], levels: Int): Column = {
-    val minsL = array(mins.map(lit).toIndexedSeq: _*)
-    val extsL = array(exts.map(lit).toIndexedSeq: _*)
-    transform(codes, (c, i) =>
-      when(element_at(extsL, i + 1) === 0d, element_at(minsL, i + 1))
-        .otherwise(element_at(minsL, i + 1) +
-          (c.cast("double") + lit(0.5d)) * element_at(extsL, i + 1) / levels))
-  }
-
-  /** SQ8 encode of a vector column against driver-held extents:
-    * code_i = floor((x_i − min_i)/ext_i·levels), clamped to levels−1;
-    * constant dims (ext 0) encode to 0. [[decodeCol]]'s inverse, and the
-    * one encode [[write]] and [[append]] share, so appended rows decode
-    * like written ones; op for op [[VectorStats.sqCode]]'s formula. */
-  private def encodeCol(vec: Column, mins: Array[Double],
-                        exts: Array[Double], levels: Int): Column = {
-    val minsL = array(mins.map(lit).toIndexedSeq: _*)
-    val extsL = array(exts.map(lit).toIndexedSeq: _*)
-    transform(vec, (x, i) =>
-      least(
-        floor(when(element_at(extsL, i + 1) === 0d, lit(0.0d))
-          .otherwise((x.cast("double") - element_at(minsL, i + 1)) /
-            element_at(extsL, i + 1) * levels)).cast("int"),
-        lit(levels - 1)))
-  }
-
   /** Persist the IVF-SQ8 serving layout: narrow (id, codes) rows
     * partitioned by list_id, with the coarse-centroid set and the
     * per-dim quantization extent as KB-sized sidecars. Centroids are
@@ -86,13 +53,10 @@ object IvfSq {
     val centroids =
       Similarity.ivfTrain(emb, idCol, vecCol, numLists, coarseIters, assignFn)
     // the per-dim extent, aggregated once: it encodes the rows and is
-    // the sidecar (d entries, dims 0 until d)
-    val ext = VectorStats.sqExtent(emb, idCol, vecCol).head()
-    val (minOf, extOf) = (ext.getMap[Int, Double](0), ext.getMap[Int, Double](1))
-    val mins = Array.tabulate(minOf.size)(minOf)
-    val exts = Array.tabulate(extOf.size)(extOf)
+    // the sidecar
+    val (mins, exts) = VectorStats.sqExtent(emb, idCol, vecCol)
     emb.withColumn("list_id", assignFn(col(vecCol), centroids))
-      .withColumn("codes", encodeCol(col(vecCol), mins, exts, levels))
+      .withColumn("codes", VectorStats.sqEncode(col(vecCol), mins, exts, levels))
       .select(col(idCol), col("list_id"), col("codes"))
       // one file per list per owning task (see IvfPq.write's note)
       .repartition(col("list_id"))
@@ -128,7 +92,7 @@ object IvfSq {
     val st = open(spark, path)
     newVecs
       .withColumn("list_id", Similarity.ivfListId(col(vecCol), st.centroids))
-      .withColumn("codes", encodeCol(col(vecCol), st.mins, st.exts, st.levels))
+      .withColumn("codes", VectorStats.sqEncode(col(vecCol), st.mins, st.exts, st.levels))
       .select(col(idCol), col("list_id"), col("codes"))
       // one file per touched list, not one per upstream task
       .repartition(col("list_id"))
@@ -146,7 +110,7 @@ object IvfSq {
     val cands = store.codes
       .filter(col("list_id").isin(probeLists: _*))
       .withColumn("sq_dist",
-        dist(decodeCol(col("codes"), store.mins, store.exts, store.levels),
+        dist(VectorStats.sqDecode(col("codes"), store.mins, store.exts, store.levels),
           doubleVec(q)))
       .orderBy(col("sq_dist"), col(idCol))
       .limit(topN)
@@ -190,7 +154,7 @@ object IvfSq {
       .filter(col("list_id").isin(lists: _*))
       .join(broadcast(qProbe), Seq("list_id"))
       .withColumn("sq_dist",
-        dist(decodeCol(col("codes"), store.mins, store.exts, store.levels),
+        dist(VectorStats.sqDecode(col("codes"), store.mins, store.exts, store.levels),
           col("qv")))
       .withColumn("rn", row_number().over(Window.partitionBy(col("qid"))
         .orderBy(col("sq_dist"), col(idCol))))

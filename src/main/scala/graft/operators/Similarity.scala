@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.VectorFunctions._
 
@@ -569,21 +572,23 @@ object Similarity {
     writeIvfCentroids(emb.sparkSession, centroids, path)
   }
 
+  /** The `.centroids` sidecar's layout: written and read with it, so
+    * reading runs no schema-inference job. */
+  private val CentroidSchema = StructType.fromDDL("list_id long, centroid array<double>")
+
   /** Persist a store's coarse-centroid set as its `.centroids` sidecar
     * (the IVF, IVF-PQ and IVF-SQ8 stores share the format). */
   def writeIvfCentroids(spark: org.apache.spark.sql.SparkSession,
                         centroids: Array[(Long, Array[Double])],
-                        path: String): Unit = {
-    import spark.implicits._
-    centroids.map { case (lid, cv) => (lid, cv.toSeq) }.toSeq
-      .toDF("list_id", "centroid")
+                        path: String): Unit =
+    spark.createDataFrame(
+        centroids.map { case (lid, cv) => Row(lid, cv.toSeq) }.toSeq.asJava, CentroidSchema)
       .coalesce(1).write.mode("overwrite").parquet(path + ".centroids")
-  }
 
   /** The store's frozen coarse-centroid set, from its sidecar. */
   def readIvfCentroids(spark: org.apache.spark.sql.SparkSession,
                        path: String): Array[(Long, Array[Double])] =
-    spark.read.schema("list_id long, centroid array<double>").parquet(path + ".centroids")
+    spark.read.schema(CentroidSchema).parquet(path + ".centroids")
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
 

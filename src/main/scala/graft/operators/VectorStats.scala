@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Column}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Per-dimension statistics over vector columns — the aggregates that drive
@@ -62,39 +62,58 @@ object VectorStats {
     * levels−1 (so v = max_d lands in the top bucket); constant
     * dimensions quantize to 0. `floor` (not round) keeps every code
     * bit-deterministic across engines — the division and multiply are
-    * single IEEE ops in a fixed order. The extent relation is one row,
-    * broadcast; the quantization itself is a pure projection (no
-    * shuffle beyond the extent aggregation). Returns the input plus an
-    * `array<int>` column `qCol`. */
+    * single IEEE ops in a fixed order. The extent is aggregated and
+    * collected once (d entries, [[sqExtent]]); the quantization itself
+    * is a pure projection over it ([[sqEncode]]). Returns the input plus
+    * an `array<int>` column `qCol`. */
   def quantize(points: DataFrame, idCol: String, vecCol: String,
-               qCol: String, levels: Int = 256): DataFrame =
-    points.crossJoin(broadcast(sqExtent(points, idCol, vecCol)))
-      .withColumn(qCol, sqCode(col(vecCol), levels))
-      .drop("_qmins", "_qexts")
+               qCol: String, levels: Int = 256): DataFrame = {
+    val (mins, exts) = sqExtent(points, idCol, vecCol)
+    points.withColumn(qCol, sqEncode(col(vecCol), mins, exts, levels))
+  }
 
-  /** The one-row (per-dim min map, per-dim extent map) relation the
-    * scalar-quantization family shares — broadcast-joined, never a plan
-    * literal (extent is data, d entries). */
+  /** The per-dim (min, extent = max − min) the scalar-quantization
+    * family shares, collected to the driver in one job: d entries,
+    * dims 0 until d, bounded by dimension, never by corpus size. A dim
+    * with no non-null element gets NaN for both; its elements, all
+    * null, encode to levels−1 (`least` skips the null quotient). */
   private[operators] def sqExtent(points: DataFrame, idCol: String,
-                                  vecCol: String): DataFrame =
-    dimExtent(explodeVectors(points, idCol, vecCol))
-      .agg(collect_list(struct(col("idx"), col("minV"), col("maxV"))).as("dims"))
-      .select(
-        map_from_arrays(
-          transform(col("dims"), d => d("idx")),
-          transform(col("dims"), d => d("minV"))).as("_qmins"),
-        map_from_arrays(
-          transform(col("dims"), d => d("idx")),
-          transform(col("dims"), d => d("maxV") - d("minV"))).as("_qexts"))
+                                  vecCol: String): (Array[Double], Array[Double]) = {
+    val dims = dimExtent(explodeVectors(points, idCol, vecCol)).collect().sortBy(_.getInt(0))
+    def at(r: Row, i: Int) = if (r.isNullAt(i)) Double.NaN else r.getDouble(i)
+    (dims.map(at(_, 1)), dims.map(r => at(r, 2) - at(r, 1)))
+  }
 
-  /** Per-dim SQ code array (expects `_qmins`/`_qexts` in scope). */
-  private[operators] def sqCode(vec: Column, levels: Int): Column =
+  /** SQ code array of `vec` against driver-held extents ([[sqExtent]]):
+    * code_i = floor((x_i − min_i)/ext_i·levels), clamped to levels−1;
+    * constant dims (ext 0) encode to 0. The one SQ encode: [[quantize]],
+    * [[sqKnn]] and the IVF-SQ8 store's write and append all use it. The
+    * extents enter as d-sized literals. */
+  private[operators] def sqEncode(vec: Column, mins: Array[Double],
+                                  exts: Array[Double], levels: Int): Column = {
+    val minsL = array(mins.map(lit).toIndexedSeq: _*)
+    val extsL = array(exts.map(lit).toIndexedSeq: _*)
     transform(vec, (x, i) =>
       least(
-        floor(when(element_at(col("_qexts"), i) === 0d, lit(0.0d))
-          .otherwise((x.cast("double") - element_at(col("_qmins"), i)) /
-            element_at(col("_qexts"), i) * levels)).cast("int"),
+        floor(when(element_at(extsL, i + 1) === 0d, lit(0.0d))
+          .otherwise((x.cast("double") - element_at(minsL, i + 1)) /
+            element_at(extsL, i + 1) * levels)).cast("int"),
         lit(levels - 1)))
+  }
+
+  /** Bin-center decode of an [[sqEncode]] code column:
+    * x̂_i = min_i + (code_i + 0.5)·ext_i/levels; constant dims (ext 0)
+    * decode to min_i. [[sqKnn]] and the IVF-SQ8 probes share it, so one
+    * oracle SQL form covers both. */
+  private[operators] def sqDecode(codes: Column, mins: Array[Double],
+                                  exts: Array[Double], levels: Int): Column = {
+    val minsL = array(mins.map(lit).toIndexedSeq: _*)
+    val extsL = array(exts.map(lit).toIndexedSeq: _*)
+    transform(codes, (c, i) =>
+      when(element_at(extsL, i + 1) === 0d, element_at(minsL, i + 1))
+        .otherwise(element_at(minsL, i + 1) +
+          (c.cast("double") + lit(0.5d)) * element_at(extsL, i + 1) / levels))
+  }
 
   /** SQ8 approximate kNN — the SEARCH side of [[quantize]] (the scalar
     * analog of the ADC probe; faiss's IndexScalarQuantizer query path,
@@ -105,21 +124,17 @@ object VectorStats {
     * With `rerank` > 0, the top `rerank` survivors are re-ranked by
     * EXACT distance to the final k — the standard compressed-scan +
     * re-rank serving shape: at 100 TB the scan touches only the 4×
-    * smaller code column (and the extent sidecar is one broadcast
-    * row); the wide float column is read solely for the rerank pool.
+    * smaller code column (and the extent is d driver-held entries);
+    * the wide float column is read solely for the rerank pool.
     * Every arithmetic step is a fixed-order IEEE op chain, so the
     * DuckDB oracle predicts the ranking bit for bit. */
   def sqKnn(points: DataFrame, idCol: String, vecCol: String,
             q: Seq[Double], k: Int, levels: Int = 256,
             rerank: Int = 0): DataFrame = {
     import graft.functions.VectorFunctions.{dist, doubleVec}
-    val decoded = transform(sqCode(col(vecCol), levels), (c, i) =>
-      when(element_at(col("_qexts"), i) === 0d, element_at(col("_qmins"), i))
-        .otherwise(element_at(col("_qmins"), i) +
-          (c.cast("double") + lit(0.5d)) * element_at(col("_qexts"), i) / levels))
-    val scored = points.crossJoin(broadcast(sqExtent(points, idCol, vecCol)))
-      .withColumn("sq_dist", dist(decoded, doubleVec(q)))
-      .drop("_qmins", "_qexts")
+    val (mins, exts) = sqExtent(points, idCol, vecCol)
+    val decoded = sqDecode(sqEncode(col(vecCol), mins, exts, levels), mins, exts, levels)
+    val scored = points.withColumn("sq_dist", dist(decoded, doubleVec(q)))
     if (rerank <= 0)
       scored.orderBy(col("sq_dist"), col(idCol)).limit(k)
     else

@@ -516,6 +516,21 @@ class IndexExtrasSpec extends SparkSpec {
       s"the warm plan is\n$plan")
   }
 
+  test("a warm searchExact over a nested vector column is a bare LocalRelation") {
+    val flat = Seq((1L, Seq(0.0, 0.0)), (2L, Seq(3.0, 4.0)), (3L, Seq(1.0, 1.0)),
+      (4L, Seq(6.0, 0.0))).toDF("id", "v")
+    val index = parquet(IndexBuild.buildIndex(flat, "id", "v"), "graftnestidx")
+    val pts = parquet(flat.select(col("id"), struct(col("v")).as("s")), "graftnestpts")
+    def call() = IndexSearch.searchExact(index, pts, "id", "s.v", Seq(0.0, 0.0), 5.0)
+    def ids(df: DataFrame) = df.collect().map(_.getLong(0)).sorted.toSeq
+    val cold = ids(call())
+    call().collect()
+    val ((plan, warm), jobs) = jobsOf { val df = call(); (df.queryExecution.logical, ids(df)) }
+    assert(cold == Seq(1L, 2L, 3L) && warm == cold && jobs == 0)
+    assert(plan.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+      s"the warm plan is\n$plan")
+  }
+
   test("graph and IVF sidecars are read without a schema-inference job") {
     val dir = tmpDir("graftsidecar")
     val pts = Ingest.randomClustered(spark, 200, 4, 4).localCheckpoint()
