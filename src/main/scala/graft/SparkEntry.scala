@@ -148,32 +148,16 @@ object SparkEntry {
     }
 
   /** The standing corpus's staged dedup index (d29/d30): postings of
-    * the non-batch documents slice, built once per sfDir. The opened
-    * handle (partition listing + meta sidecar) is cached per session —
-    * the store is immutable per staging version, and d29 + d30 both
-    * probe it. */
-  // cache only the session-free (k, buckets) meta per store dir and
-  // reopen the (lazy) postings DataFrame per call: the previous
-  // WeakHashMap[SparkSession, ...] never evicted because the cached
-  // ShingleStore's DataFrame strongly referenced its session — the
-  // value kept the key reachable (ADVICE r13). The meta is immutable
-  // per staging version (a compile-time constant within a JVM), and
-  // spark.read.parquet is a listing + plan, not a scan.
-  private val shingleMeta =
-    scala.collection.concurrent.TrieMap.empty[String, (Int, Int)]
+    * the non-batch documents slice, built once per sfDir and opened per
+    * call (one `.meta` job; the postings are a listing and a plan). */
   private def shingleStore(s: SparkSession,
-                           d: String): operators.Dedup.ShingleStore = {
-    val dir = stagedStore(d, "shinglestore", version = 1) { dir =>
-      operators.Dedup.writeShingleStore(
-        Tables.documents(s, d).filter(col("doc_id") % 7 =!= 0),
-        "doc_id", "text", 3, dir)
-    }
-    val (k, buckets) = shingleMeta.getOrElseUpdate(dir, {
-      val m = s.read.parquet(dir + ".meta").head()
-      (m.getInt(0), m.getInt(1))
-    })
-    operators.Dedup.ShingleStore(s.read.parquet(dir), k, buckets)
-  }
+                           d: String): operators.Dedup.ShingleStore =
+    operators.Dedup.openShingleStore(s,
+      stagedStore(d, "shinglestore", version = 1) { dir =>
+        operators.Dedup.writeShingleStore(
+          Tables.documents(s, d).filter(col("doc_id") % 7 =!= 0),
+          "doc_id", "text", 3, dir)
+      })
 
   /** Okapi BM25 oracle SQL shared by t7 (inline scan) and t11 (store
     * probe): the two Spark paths produce identical scores, so both
@@ -1485,7 +1469,7 @@ object SparkEntry {
           coarseIters = 0, m = 8, k = 16, pqIters = 0, dir)
       }
       val queries = e.filter(col("vec_id") % 100 === 0)
-      IvfPq.probeBatch(s, dir, e, "vec_id", "embedding",
+      IvfPq.probeBatch(IvfPq.open(s, dir), e, "vec_id", "embedding",
           queries, "vec_id", "embedding", nprobe = 2, topN = 10, k = 5)
         .select(col("qid"), col("vec_id"))
         .orderBy(col("qid"), col("vec_id"))
@@ -1512,7 +1496,7 @@ object SparkEntry {
           e.filter(col("vec_id") % 7 === 0).select("vec_id"),
           "vec_id", "list_id")
       }
-      Similarity.probeIvf(s, dir, "vec_id", "embedding", Q64, 4, 10)
+      Similarity.probeIvf(Similarity.openIvf(s, dir), "vec_id", "embedding", Q64, 4, 10)
         .select(col("vec_id"), col("list_id").cast("long").as("list_id"))
         .orderBy(col("vec_id"))
     }),
@@ -1928,7 +1912,8 @@ object SparkEntry {
         graft.operators.IvfSq.write(e, "vec_id", "embedding",
           numLists = 16, coarseIters = 0, dir)
       }
-      graft.operators.IvfSq.probe(s, dir, e, "vec_id", "embedding", Q64,
+      graft.operators.IvfSq.probe(graft.operators.IvfSq.open(s, dir), e,
+          "vec_id", "embedding", Q64,
           nprobe = 4, topN = 20, k = 10)
         .select(col("vec_id"), round(col("dist"), 6).as("d"))
         .orderBy(col("vec_id"))
@@ -1947,7 +1932,8 @@ object SparkEntry {
       }
       val queries = e.filter(col("vec_id") % 100 === 0)
         .select(col("vec_id").as("qid0"), col("embedding").as("qv0"))
-      graft.operators.IvfSq.probeBatch(s, dir, e, "vec_id", "embedding",
+      graft.operators.IvfSq.probeBatch(graft.operators.IvfSq.open(s, dir), e,
+          "vec_id", "embedding",
           queries, "qid0", "qv0", nprobe = 2, topN = 20, k = 5)
         .select(col("qid"), col("vec_id"))
         .orderBy(col("qid"), col("vec_id"))

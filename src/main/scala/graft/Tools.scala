@@ -143,19 +143,22 @@ object Tools {
     }
     measure("brute force (exact baseline)")(q =>
       BruteForce.knn(pts, "embedding", "id", q, kTop))
+    val lsh = Similarity.openBucketed(spark, lshPath)
     measure("a1 LSH bucket (8 planes)")(q =>
-      Similarity.probeBucketed(spark, lshPath, "id", "embedding", planes, q, kTop))
+      Similarity.probeBucketed(lsh, "id", "embedding", q, kTop))
     measure("a1 LSH multi-probe (1-bit)")(q =>
-      Similarity.probeBucketedMulti(spark, lshPath, "id", "embedding", planes, q, kTop))
+      Similarity.probeBucketedMulti(lsh, "id", "embedding", q, kTop))
+    val ivf = Similarity.openIvf(spark, ivfPath)
     for (np <- Seq(1, 4, 16))
       measure(s"a2 IVF lists=256 nprobe=$np")(q =>
-        Similarity.probeIvf(spark, ivfPath, "id", "embedding", q, np, kTop))
+        Similarity.probeIvf(ivf, "id", "embedding", q, np, kTop))
     for (topN <- Seq(100, 1000))
       measure(s"a4 PQ ADC m=8 k=16 topN=$topN")(q =>
         ProductQuant.probePq(spark, pqPath, pts, "id", "embedding", q, topN, kTop))
+    val ivfpq = IvfPq.open(spark, ivfpqPath)
     for (np <- Seq(1, 4, 16); topN <- Seq(100, 1000))
       measure(s"a5 IVFADC nprobe=$np topN=$topN")(q =>
-        IvfPq.probe(spark, ivfpqPath, pts, "id", "embedding", q, np, topN, kTop))
+        IvfPq.probe(ivfpq, pts, "id", "embedding", q, np, topN, kTop))
     if (graph) {
       // list cap ~256 members: candidate volume = nprobe·cap per node.
       // Serving is pinned in memory, so s/probe is the beam walk.

@@ -31,7 +31,7 @@ import java.nio.ByteBuffer
   * non-minimal scores that lose to the surviving min anyway.
   *
   * Faithfulness to the SQL shape's independent min(rank)/min(dist)
-  * rests on the buildMerged input invariant that `dist` for a given
+  * rests on the GraphAnn.mergedBuild input invariant that `dist` for a given
   * (src, dst) is identical in every list that emits it (the distance
   * is a pure function of the two vectors, computed with one pinned
   * fold order), so the lexicographic min this buffer takes IS the
@@ -101,13 +101,13 @@ final class EdgeMergeBuf(val m: Int) {
   * [[EdgeMergeBuf]].
   *
   * NOT a general-purpose aggregate (judge r16): exactness requires
-  * the buildMerged invariant that every input row for a given
+  * the GraphAnn.mergedBuild invariant that every input row for a given
   * (group, dst) carries the SAME dist — dist is a pure function of
   * (src, dst) there, only rank varies per list. Under per-row-varying
   * dist, eviction of a full buffer followed by the key's reinsert
   * loses the earlier componentwise min, silently diverging from the
   * window-plan semantics (independent min(rank)/min(dist) per key).
-  * Callers outside GraphAnn.buildMerged must re-establish that
+  * Callers outside GraphAnn.mergedBuild must re-establish that
   * invariant or pre-aggregate min(dist) per (group, dst) first. */
 case class TopEdgesByRank(first: Expression, second: Expression,
                           third: Expression, m: Int,

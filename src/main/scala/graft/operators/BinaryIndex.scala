@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.VectorFunctions.{dist, doubleVec}
 
@@ -47,32 +48,37 @@ object BinaryIndex {
   private def hamming(a: Column, b: Column): Column =
     graft.functions.VectorExpressions.vecHamming(a, b)
 
-  /** Maintenance bucket of an id column: a stable hash spread over
-    * `numBuckets` partitions. The buckets exist for MAINTENANCE
-    * locality (append routes new rows to their bucket; removal
-    * rewrites only hit buckets via the shared
-    * [[StoreMaintain.removeFromStore]]) — a Hamming probe scans every
-    * bucket by design, so the layout costs probes nothing. Storage
-    * internal only: no oracle observes the bucket id. */
-  private def bucketOf(id: Column, numBuckets: Int): Column =
-    pmod(hash(id), lit(numBuckets)).cast("int")
+  /** Maintenance buckets: a stable hash of the id spread over 64
+    * partitions. The buckets exist for MAINTENANCE locality (append
+    * routes new rows to their bucket; removal rewrites only hit buckets
+    * via the shared [[StoreMaintain.removeFromStore]]) — a Hamming probe
+    * scans every bucket by design, so the layout costs probes nothing.
+    * Storage internal only: no oracle observes the bucket id. */
+  private val Buckets = 64
+
+  /** The `.thr` sidecar's layout: one row per dim and its threshold. */
+  private val ThrSchema = StructType.fromDDL("idx int, thr double")
+
+  /** (id, code, bucket) rows of `points`: the sign bits of their first
+    * `d` dims against thresholds `thr`. */
+  private def encode(points: DataFrame, idCol: String, vecCol: String,
+                     thr: Array[Double], d: Int): DataFrame =
+    points.select(col(idCol),
+      VectorStats.binCode(col(vecCol), array(thr.toIndexedSeq.map(lit): _*), d)
+        .as("code"),
+      pmod(hash(col(idCol)), lit(Buckets)).cast("int").as("bucket"))
 
   /** Persist the binary serving layout: (id, code) rows bucketed by
-    * hashed id, plus the per-dim threshold sidecar. One pass over the
-    * corpus; the codes write is a pure projection (no shuffle beyond
-    * the one repartition that keeps one file per bucket per task). */
+    * hashed id, plus the per-dim threshold sidecar. The d thresholds
+    * are collected once and encode the rows as a literal, as on
+    * append. `d` is the vector dimension. */
   def write(points: DataFrame, idCol: String, vecCol: String, d: Int,
-            path: String, numBuckets: Int = 64): Unit = {
-    val thrDf = VectorStats.binThreshold(points, idCol, vecCol)
-    points.crossJoin(broadcast(thrDf))
-      .select(col(idCol),
-        VectorStats.binCode(col(vecCol), col("_bthr"), d).as("code"),
-        bucketOf(col(idCol), numBuckets).as("bucket"))
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(path)
-    thrDf.select(posexplode(col("_bthr")).as(Seq("idx", "thr")))
-      .select(col("idx").cast("int"), col("thr").cast("double"))
-      .coalesce(1).write.mode("overwrite").parquet(path + ".thr")
+            path: String): Unit = {
+    val thr = VectorStats.binThreshold(points, idCol, vecCol)
+      .head().getSeq[Double](0).toArray
+    StoreMaintain.write(encode(points, idCol, vecCol, thr, d), path, "bucket")
+    StoreMaintain.writeSidecar(points.sparkSession, path, "thr", ThrSchema,
+      thr.indices.map(i => Row(i, thr(i))))
   }
 
   /** INCREMENTAL append: encode new vectors with the store's FROZEN
@@ -80,16 +86,10 @@ object BinaryIndex {
     * drifted corpus warrants a rewrite) and land them in their hash
     * buckets. Trivially parallel; no read of existing rows. */
   def append(spark: SparkSession, path: String, newVecs: DataFrame,
-             idCol: String, vecCol: String, numBuckets: Int = 64): Unit = {
-    val st = open(spark, path)
-    val d = st.thr.length
-    val thrLit = array(st.thr.toIndexedSeq.map(lit): _*)
-    newVecs
-      .select(col(idCol),
-        VectorStats.binCode(col(vecCol), thrLit, d).as("code"),
-        bucketOf(col(idCol), numBuckets).as("bucket"))
-      .repartition(col("bucket"))
-      .write.mode("append").partitionBy("bucket").parquet(path)
+             idCol: String, vecCol: String): Unit = {
+    val thr = open(spark, path).thr
+    StoreMaintain.append(encode(newVecs, idCol, vecCol, thr, thr.length),
+      path, "bucket")
   }
 
   /** Removal: the shared partition-level batch delete — rewrites only
@@ -100,11 +100,10 @@ object BinaryIndex {
 
   /** Open a persisted binary store once: one file listing, one sidecar
     * read. */
-  def open(spark: SparkSession, path: String): Store = {
-    val thr = spark.read.parquet(path + ".thr")
-      .collect().sortBy(_.getInt(0)).map(_.getDouble(1))
-    Store(spark.read.parquet(path), thr)
-  }
+  def open(spark: SparkSession, path: String): Store =
+    Store(StoreMaintain.read(spark, path),
+      StoreMaintain.readSidecar(spark, path, "thr", ThrSchema)
+        .sortBy(_.getInt(0)).map(_.getDouble(1)))
 
   /** Probe: rank the codes scan by Hamming distance to the
     * driver-encoded query, keep the top `rerank` pool deterministically

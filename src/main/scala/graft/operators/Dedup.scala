@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.VectorFunctions._
 
@@ -370,25 +371,22 @@ object Dedup {
     * hashes into. */
   def writeShingleStore(docs: DataFrame, idCol: String, textCol: String,
                         k: Int, path: String, buckets: Int = 64): Unit = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    writePostings(shingleRows(docs, idCol, textCol, k), path, buckets,
-      overwrite = true)
-    Seq((k, buckets)).toDF("k", "buckets")
-      .coalesce(1).write.mode("overwrite").parquet(path + ".meta")
+    StoreMaintain.write(postings(shingleRows(docs, idCol, textCol, k), buckets),
+      path, "pb")
+    StoreMaintain.writeSidecar(docs.sparkSession, path, "meta", ShingleMetaSchema,
+      Seq(Row(k, buckets)))
   }
 
-  private def writePostings(sh: DataFrame, path: String, buckets: Int,
-                            overwrite: Boolean): Unit = {
+  /** The shingle store's `.meta` sidecar layout: the frozen (k, buckets). */
+  private val ShingleMetaSchema = StructType.fromDDL("k int, buckets int")
+
+  /** (doc, shingle, sz, pb) posting rows: each shingle with its doc's
+    * shingle count and its hash bucket. */
+  private def postings(sh: DataFrame, buckets: Int): DataFrame = {
     val sz = sh.groupBy(col("doc")).agg(count(lit(1)).as("sz"))
     sh.join(sz, "doc")
       .withColumn("pb",
         pmod(xxhash64(col("shingle")), lit(buckets.toLong)).cast("int"))
-      // cluster rows into their bucket first: otherwise every upstream
-      // task writes a file into every bucket dir
-      .repartition(col("pb"))
-      .write.mode(if (overwrite) "overwrite" else "append")
-      .partitionBy("pb").parquet(path)
   }
 
   /** A pre-opened dedup-index handle: posting rows + frozen (k, buckets)
@@ -397,8 +395,8 @@ object Dedup {
 
   def openShingleStore(spark: org.apache.spark.sql.SparkSession,
                        path: String): ShingleStore = {
-    val m = spark.read.parquet(path + ".meta").head()
-    ShingleStore(spark.read.parquet(path), m.getInt(0), m.getInt(1))
+    val m = StoreMaintain.readSidecar(spark, path, "meta", ShingleMetaSchema).head
+    ShingleStore(StoreMaintain.read(spark, path), m.getInt(0), m.getInt(1))
   }
 
   /** INCREMENTAL maintenance: shingle `newDocs` with the store's frozen
@@ -409,8 +407,8 @@ object Dedup {
                          path: String, newDocs: DataFrame, idCol: String,
                          textCol: String): Unit = {
     val s = openShingleStore(spark, path)
-    writePostings(shingleRows(newDocs, idCol, textCol, s.k), path, s.buckets,
-      overwrite = false)
+    StoreMaintain.append(postings(shingleRows(newDocs, idCol, textCol, s.k), s.buckets),
+      path, "pb")
   }
 
   /** [[ngramJaccardPairsAgainst]] with the corpus side served from a
@@ -1778,10 +1776,8 @@ object Dedup {
     val cents = Similarity.ivfCentroids(e0, "eid", "_eh", numLists)
     val assigned = e0.withColumn("list_id",
       Similarity.ivfListId(col("_eh"), cents))
-    assigned.select(col("eid"), col("_ev"), col("_en"), col("_eh"),
-        col("list_id"))
-      .repartition(col("list_id"))
-      .write.mode("overwrite").partitionBy("list_id").parquet(path)
+    StoreMaintain.write(assigned.select(col("eid"), col("_ev"), col("_en"),
+      col("_eh"), col("list_id")), path, "list_id")
     // sidecar: centroid + cover radius per list (empty lists keep
     // radius 0 — the bound may admit them, and the member join then
     // matches nothing)
@@ -1791,20 +1787,22 @@ object Dedup {
       .join(broadcast(centRel), Seq("list_id"))
       .groupBy(col("list_id"))
       .agg(max(dist(col("_eh"), col("cv"))).as("radius"))
-    centRel.join(radii, Seq("list_id"), "left")
-      .select(col("list_id"), col("cv").as("centroid"),
-        coalesce(col("radius"), lit(0d)).as("radius"))
-      .coalesce(1).write.mode("overwrite").parquet(path + ".centroids")
+      .collect().map(r => r.getAs[Number](0).longValue -> r.getDouble(1)).toMap
+    StoreMaintain.writeSidecar(spark, path, "centroids", EvalCentroidSchema,
+      cents.map { case (lid, cv) => Row(lid, cv.toSeq, radii.getOrElse(lid, 0d)) }.toSeq)
   }
+
+  /** The eval store's `.centroids` sidecar layout: each list's
+    * centroid and cover radius. */
+  private val EvalCentroidSchema =
+    StructType.fromDDL("list_id long, centroid array<double>, radius double")
 
   /** Open a persisted eval store once: one partition listing, one
     * sidecar read. */
   def openEvalStore(spark: org.apache.spark.sql.SparkSession,
                     path: String): EvalStore =
-    EvalStore(spark.read.parquet(path),
-      spark.read.parquet(path + ".centroids")
-        .select(col("list_id"), col("centroid"), col("radius"))
-        .collect()
+    EvalStore(StoreMaintain.read(spark, path),
+      StoreMaintain.readSidecar(spark, path, "centroids", EvalCentroidSchema)
         .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2))))
 
   /** [[semanticDecontam]] served from a persisted [[EvalStore]] — the

@@ -8,7 +8,6 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
 
 import graft.functions.VectorFunctions._
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 /** Graph-based ANN: Vamana-style bounded-degree neighbour graph
   * (Subramanya et al., "DiskANN", NeurIPS 2019 — the α-RobustPrune
@@ -65,9 +64,9 @@ object GraphAnn {
                // dominates the (linear, under C ∝ N) candidate volume —
                // the residual superlinear term in the r16 d=96 growth
                // row — so assignment switches to the two-level
-               // O(√C·d) routed kernel, exactly like buildMerged
+               // O(√C·d) routed kernel, exactly like mergedBuild
                // (judge r16 #7). Routing is approximate at super
-               // boundaries (the documented buildMerged trade); every
+               // boundaries (the documented mergedBuild trade); every
                // exact-oracle gate sits well under the default (a25
                // C=64), and a caller pinning exactness at big C can
                // pass Int.MaxValue.
@@ -380,25 +379,14 @@ object GraphAnn {
     * List sizing is the caller's C ∝ N contract — a list's members must
     * fit one task's memory (2·N/C rows × d floats) and its m² local kNN
     * is the dominant compute. */
-  def buildMerged(emb: DataFrame, idCol: String, vecCol: String,
-                  numLists: Int, nprobe: Int, k: Int,
-                  alpha: Double, maxDegree: Int,
-                  // profiling hook (judge r15 #2): when set, stage
-                  // boundaries are FORCED (localCheckpoint) and
-                  // (label, seconds) reported per stage — the 10M×96
-                  // build decomposition (Tools mergedprof). None (the
-                  // default) leaves the plan fully lazy and unchanged.
-                  stageProbe: Option[(String, Double) => Unit] = None)
-      : (DataFrame, Array[Long]) = {
-    val (graph, seeds, _) = mergedBuild(emb, idCol, vecCol, numLists, nprobe, k,
-      alpha, maxDegree, stageProbe)
-    (graph, seeds)
-  }
-
-  /** [[buildMerged]], with the merge checkpoint the graph reads. */
   private def mergedBuild(emb: DataFrame, idCol: String, vecCol: String,
                           numLists: Int, nprobe: Int, k: Int,
                           alpha: Double, maxDegree: Int,
+                          // profiling hook (judge r15 #2): when set, stage
+                          // boundaries are FORCED (localCheckpoint) and
+                          // (label, seconds) reported per stage — the
+                          // 10M×96 build decomposition (Tools mergedprof).
+                          // None leaves the plan lazy and unchanged.
                           stageProbe: Option[(String, Double) => Unit])
       : (DataFrame, Array[Long], DataFrame) = {
     val spark = emb.sparkSession
@@ -426,7 +414,7 @@ object GraphAnn {
     // probed supers — a strictly better-routed assignment than the
     // 1-super ivfListIdRouted the seeds pass previously recomputed;
     // both are the documented approximate-at-super-boundaries class,
-    // and no oracle gate builds on buildMerged). The checkpoint is
+    // and no oracle gate builds on mergedBuild). The checkpoint is
     // freed as soon as the merge output is materialized below.
     val routed = tstage("route: nprobe lists per row")(
       pts.select(col("id"), col("vec"),
@@ -600,6 +588,8 @@ object GraphAnn {
     // FREED before the write join runs
     val mergedNbrs = tstage("merge: dedupe + rank cap + collect_list")(
       mergedNbrs0.localCheckpoint())
+    // the merge is materialized: a forced edges stage is read no more
+    if (stageProbe.isDefined) IndexBuild.freeCheckpoint(edgesF)
     // seeds ride the routed checkpoint's rank-0 assignment — no second
     // O(√C·d) routing pass over the corpus (round 18; was ~200 s of the
     // 10M×96 build)
@@ -626,8 +616,7 @@ object GraphAnn {
     * per-partition sort (whose pointer-array growth OOMs when the
     * edges localCheckpoint holds the storage pool — observed at
     * 2M×96 under the 32-partition session default). Set/restored
-    * around the build's own actions only; tiny direct buildMerged
-    * callers (specs) run under the session conf unchanged.
+    * around the build's own actions only.
     *
     * CONTRACT (judge r16): the set/restore mutates the session-global
     * runtime conf, so run ONE merged build at a time per
@@ -669,7 +658,7 @@ object GraphAnn {
     }
   }
 
-  /** [[buildMerged]] + [[writeGraph]]. The merge checkpoint is freed
+  /** [[mergedBuild]] + [[writeGraph]]. The merge checkpoint is freed
     * once the store is written; `emb`'s own pins are the caller's. */
   def buildAndWriteMerged(emb: DataFrame, idCol: String, vecCol: String,
                           numLists: Int, nprobe: Int, k: Int,
@@ -711,7 +700,7 @@ object GraphAnn {
                       assign: (Column, Array[(Long, Array[Double])]) => Column =
                         Similarity.ivfListId,
                       // round 18: a caller that already computed each
-                      // row's assignment (buildMerged's routed
+                      // row's assignment (mergedBuild's routed
                       // checkpoint) hands it in as (id, vec, list_id)
                       // and skips the per-row re-assignment — selection
                       // over a GIVEN assignment is unchanged (per-list
@@ -1182,8 +1171,8 @@ object GraphAnn {
   // matrix for the graph family (every other serving family has it —
   // StoreMaintain.scala). Layout:
   //   path/           (id, vec, nbrs) partitioned by gb = id mod buckets
-  //   path + ".meta"  frozen (alpha, maxDegree, buckets, seeds)
-  //   path + ".tomb"  lazily-deleted ids (append-only; consolidation
+  //   path.meta       frozen (alpha, maxDegree, buckets, seeds)
+  //   path.tomb       lazily-deleted ids (append-only; consolidation
   //                   clears it)
   // Maintenance semantics follow FreshDiskANN (Singh et al. 2021):
   //   append = per new point, greedy-search the pinned snapshot for its
@@ -1208,9 +1197,8 @@ object GraphAnn {
 
   /** The store files' layouts: [[writeGraph]] and the append writers
     * lay out the rows by `RowsSchema` and the `.meta` row by
-    * `MetaSchema`, [[removeGraph]] the `.tomb` ids by `TombSchema`.
-    * [[openGraph]] reads each file with its layout, so no read runs a
-    * schema-inference job. */
+    * `MetaSchema`, [[removeGraph]] the `.tomb` ids by `TombSchema`;
+    * [[openGraph]] reads the sidecars with theirs. */
   private val RowsSchema =
     StructType.fromDDL("id long, vec array<float>, nbrs array<long>, gb int")
   private val MetaSchema =
@@ -1228,21 +1216,11 @@ object GraphAnn {
   def writeGraph(graph: DataFrame, seeds: Array[Long], path: String,
                  alpha: Double, maxDegree: Int, buckets: Int = 16): Unit = {
     val spark = graph.sparkSession
-    laidOut(graph.withColumn("gb", gbOf(col("id"), buckets)), RowsSchema)
-      .repartition(col("gb"))
-      // STATIC overwrite pinned per-writer: writeGraph replaces the
-      // WHOLE store. Under a session-level dynamic mode (appendGraph's
-      // old conf leak) a gb partition the caller's data emptied — e.g.
-      // consolidate after a partition-aligned tombstone batch — kept
-      // its old files and resurrected every doomed row (found by the
-      // graphmaint growth run)
-      .write.mode("overwrite").option("partitionOverwriteMode", "static")
-      .partitionBy("gb").parquet(path)
-    spark.createDataFrame(List(Row(alpha, maxDegree, buckets, seeds.toSeq)).asJava, MetaSchema)
-      .coalesce(1).write.mode("overwrite").parquet(path + ".meta")
-    val fs = new org.apache.hadoop.fs.Path(path + ".tomb")
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(path + ".tomb"), true)
+    StoreMaintain.write(laidOut(graph.withColumn("gb", gbOf(col("id"), buckets)),
+      RowsSchema), path, "gb")
+    StoreMaintain.writeSidecar(spark, path, "meta", MetaSchema,
+      Seq(Row(alpha, maxDegree, buckets, seeds.toSeq)))
+    StoreMaintain.dropSidecar(spark, path, "tomb")
   }
 
   /** Convenience: [[build]] + [[writeGraph]]. */
@@ -1258,15 +1236,13 @@ object GraphAnn {
   /** Open a graph store: one job for the `.meta` row, one more for the
     * tombstones when the sidecar exists (deduplicated on the driver). */
   def openGraph(spark: SparkSession, path: String): GraphStore = {
-    val m = spark.read.schema(MetaSchema).parquet(path + ".meta").head()
-    val tombPath = new org.apache.hadoop.fs.Path(path + ".tomb")
-    val fs = tombPath.getFileSystem(spark.sessionState.newHadoopConf())
+    val m = StoreMaintain.readSidecar(spark, path, "meta", MetaSchema).head
     val tomb =
-      if (fs.exists(tombPath))
-        spark.read.schema(TombSchema).parquet(path + ".tomb").collect()
+      if (StoreMaintain.hasSidecar(spark, path, "tomb"))
+        StoreMaintain.readSidecar(spark, path, "tomb", TombSchema)
           .map(_.getLong(0)).distinct
       else Array.empty[Long]
-    GraphStore(spark.read.schema(RowsSchema).parquet(path), m.getSeq[Long](3).toArray,
+    GraphStore(StoreMaintain.read(spark, path), m.getSeq[Long](3).toArray,
       m.getDouble(0), m.getInt(1), m.getInt(2), tomb)
   }
 
@@ -1499,19 +1475,15 @@ object GraphAnn {
         .select(col("id"), col("vec"),
           coalesce(col("nbrs2"), col("nbrs")).as("nbrs"), col("gb"))
         .unionByName(newTouched.withColumn("gb", gbOf(col("id"), buckets))))
-      laidOut(rewritten, RowsSchema).repartition(col("gb"))
-        // per-writer option, not session conf: a leaked session-level
-        // dynamic mode breaks writeGraph's full-replace contract
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("gb").parquet(path)
+      StoreMaintain.rewritePartitions(
+        laidOut(rewritten, RowsSchema).repartition(col("gb")), path, "gb")
     }
     val newUntouched =
       if (touched.isEmpty) newRows.withColumn("gb", gbOf(col("id"), buckets))
       else newRows.filter(!gbOf(col("id"), buckets).isInCollection(touched))
         .withColumn("gb", gbOf(col("id"), buckets))
     if (!newUntouched.isEmpty)
-      laidOut(newUntouched, RowsSchema).repartition(col("gb"))
-        .write.mode("append").partitionBy("gb").parquet(path)
+      StoreMaintain.append(laidOut(newUntouched, RowsSchema), path, "gb")
   }
 
   /** [[appendGraph]] WITHOUT the full-store driver pin — the 100 TB
@@ -1627,10 +1599,9 @@ object GraphAnn {
   /** Lazy delete: tombstone the ids (O(batch) sidecar append — no graph
     * I/O). Serving excludes them immediately; [[consolidateGraph]]
     * reclaims. */
-  def removeGraph(spark: SparkSession, path: String, ids: Seq[Long]): Unit = {
-    spark.createDataFrame(ids.map(Row(_)).asJava, TombSchema).coalesce(1)
-      .write.mode("append").parquet(path + ".tomb")
-  }
+  def removeGraph(spark: SparkSession, path: String, ids: Seq[Long]): Unit =
+    StoreMaintain.writeSidecar(spark, path, "tomb", TombSchema, ids.map(Row(_)),
+      append = true)
 
   /** [[consolidateGraph]] gated on tombstone pressure: runs the
     * StreamingMerge only once distinct tombstones reach `ratio` of the
@@ -1646,9 +1617,7 @@ object GraphAnn {
   def consolidateGraphIfNeeded(spark: SparkSession, path: String,
                                ratio: Double): Boolean = {
     require(ratio > 0, "consolidation ratio must be positive")
-    val tombPath = new org.apache.hadoop.fs.Path(path + ".tomb")
-    if (!tombPath.getFileSystem(spark.sessionState.newHadoopConf()).exists(tombPath))
-      return false
+    if (!StoreMaintain.hasSidecar(spark, path, "tomb")) return false
     // opened once: the probe's tombstones and rows are the merge's input
     val store = openGraph(spark, path)
     if (store.tombstones.isEmpty) return false

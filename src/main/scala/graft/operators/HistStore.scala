@@ -1,49 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-
-/** Store replacement shared by the sketch-store compactors: the new
-  * layout is fully written to a scratch dir first, then swapped in with
-  * two filesystem renames; if installing the new layout fails, the old
-  * layout is rolled back into place so the store is never left missing.
-  * Uses the Hadoop FileSystem of the path. The per-rename atomicity
-  * claim holds only on rename-atomic filesystems (local disk, HDFS,
-  * ABFS); on object stores where rename is copy+delete (S3A) the swap
-  * window is neither atomic nor cheap — run compaction against a
-  * rename-atomic scheme or a table format with a transaction log.
-  *
-  * Compaction is a MAINTENANCE-WINDOW operation, stated plainly:
-  * (a) an append that commits while the compactor's read/rewrite job is
-  * running lands in the retired layout and is DROPPED by the swap —
-  * writers must pause during compaction (the same single-writer
-  * discipline every OPTIMIZE-style rewrite requires without a table
-  * transaction log); (b) a probe that resolved its file listing just
-  * before the swap can fail with FileNotFoundException mid-scan and
-  * must be retried — the swap is atomic per rename, not versioned. */
-private[operators] object StoreSwap {
-  def replace(spark: SparkSession, tmp: String, path: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val src = new org.apache.hadoop.fs.Path(tmp)
-    val fs = dst.getFileSystem(conf)
-    val old = new org.apache.hadoop.fs.Path(path + ".old")
-    if (fs.exists(old)) fs.delete(old, true)
-    require(fs.rename(dst, old), s"compact: could not retire $dst")
-    if (!fs.rename(src, dst)) {
-      // roll the previous layout back so the store path never vanishes;
-      // if even the rollback rename fails the store IS gone — say so
-      // distinctly (the retired copy survives at `.old` for manual
-      // recovery) instead of falsely claiming it was restored
-      if (fs.rename(old, dst))
-        sys.error(s"compact: could not install $src — previous layout restored")
-      else
-        sys.error(s"compact: could not install $src AND could not restore " +
-          s"the previous layout — store missing at $dst, retired copy at $old")
-    }
-    fs.delete(old, true)
-  }
-}
+import org.apache.spark.sql.types.StructType
 
 /** Persistent HISTOGRAM-CELL QUANTILE STORE — the quantile member of
   * the sketch-store family ([[SketchStore]] serves distinct counts from
@@ -108,7 +67,6 @@ object HistStore {
             path: String): Unit = {
     require(bins >= 1, s"bins must be >= 1, got $bins")
     val spark = df.sparkSession
-    import spark.implicits._
     // extent over FINITE values only — a single NaN/Inf would
     // otherwise freeze NaN/Inf edges into the sidecar and poison every
     // later bin assignment and probe estimate
@@ -119,27 +77,26 @@ object HistStore {
     require(ext.getLong(2) > 0L,
       "histogram store build needs at least one finite value")
     val (lo, hi) = (ext.getDouble(0), ext.getDouble(1))
-    cellsOf(df, dateCol, valueCol, lo, (hi - lo) / bins, bins)
-      .repartition(col("month"))
-      .write.mode("overwrite").partitionBy("month").parquet(path)
-    Seq((lo, hi, bins)).toDF("lo", "hi", "bins").coalesce(1)
-      .write.mode("overwrite").parquet(path + ".meta")
+    StoreMaintain.write(cellsOf(df, dateCol, valueCol, lo, (hi - lo) / bins, bins),
+      path, "month")
+    StoreMaintain.writeSidecar(spark, path, "meta", MetaSchema, Seq(Row(lo, hi, bins)))
   }
+
+  /** The `.meta` sidecar's layout: the frozen bin edges. */
+  private val MetaSchema = StructType.fromDDL("lo double, hi double, bins int")
 
   /** Append a batch's cells under the FROZEN build edges: touched month
     * partitions gain files, nothing is rewritten. Exactly-once batches
     * required (see object doc — counts add, duplicates double-count). */
   def append(df: DataFrame, dateCol: String, valueCol: String,
              path: String): Unit = {
-    val spark = df.sparkSession
-    val (lo, hi, bins) = readMeta(spark, path)
-    cellsOf(df, dateCol, valueCol, lo, (hi - lo) / bins, bins)
-      .repartition(col("month"))
-      .write.mode("append").partitionBy("month").parquet(path)
+    val (lo, hi, bins) = readMeta(df.sparkSession, path)
+    StoreMaintain.append(cellsOf(df, dateCol, valueCol, lo, (hi - lo) / bins, bins),
+      path, "month")
   }
 
   private def readMeta(spark: SparkSession, path: String): (Double, Double, Int) = {
-    val m = spark.read.parquet(path + ".meta").head()
+    val m = StoreMaintain.readSidecar(spark, path, "meta", MetaSchema).head
     (m.getDouble(0), m.getDouble(1), m.getInt(2))
   }
 
@@ -155,7 +112,7 @@ object HistStore {
     val (lo, hi, bins) = readMeta(spark, path)
     val width = (hi - lo) / bins
     import spark.implicits._
-    val merged = spark.read.parquet(path)
+    val merged = StoreMaintain.read(spark, path)
       .filter(col("month") >= from && col("month") <= to)
       .groupBy(col("bin")).agg(sum(col("n")).as("n"))
     val W = org.apache.spark.sql.expressions.Window
@@ -186,14 +143,10 @@ object HistStore {
     * cell per bin (the count sum of its accumulated append cells).
     * Probe results are unchanged — addition is associative — but a
     * month that took n appends reads back as ≤ bins rows instead of
-    * n × bins. Swap-based via [[StoreSwap]]. */
+    * n × bins. Swap-based via [[StoreMaintain.compact]]. */
   def compact(spark: SparkSession, path: String): Unit = {
-    val tmp = path + ".compacting"
-    spark.read.parquet(path)
+    StoreMaintain.compact(StoreMaintain.read(spark, path)
       .groupBy(col("month"), col("bin"))
-      .agg(sum(col("n")).as("n"))
-      .repartition(col("month"))
-      .write.mode("overwrite").partitionBy("month").parquet(tmp)
-    StoreSwap.replace(spark, tmp, path)
+      .agg(sum(col("n")).as("n")), path, "month")
   }
 }

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.VectorFunctions.{dist, doubleVec}
 import graft.operators.ProductQuant.Codebook
@@ -89,26 +90,15 @@ object IvfPq {
             path: String,
             routed: Boolean = false): (Array[(Long, Array[Double])], Codebook) = {
     val spark = emb.sparkSession
-    import spark.implicits._
     val centroids = Similarity.ivfTrain(emb, idCol, vecCol, numLists, coarseIters,
       assign = if (routed)
         (v, c) => Similarity.ivfListIdRouted(v, c, routeSpark = Some(spark))
       else Similarity.ivfListId)
     val cb = trainResidual(emb, idCol, vecCol, centroids, m, k, pqIters, routed)
-    assign(emb, vecCol, centroids, cb, routed = routed)
-      .select(col(idCol), col("list_id"), col("codes"))
-      // cluster rows into their target partition before the partitioned
-      // write: without this every upstream task writes a file into EVERY
-      // list dir — shuffle.partitions × numLists files (131k at C=4096,
-      // measured: a 5-minute write and multi-second probes from file
-      // listing alone). After: one file per list per owning task.
-      .repartition(col("list_id"))
-      .write.mode("overwrite").partitionBy("list_id").parquet(path)
+    StoreMaintain.write(assign(emb, vecCol, centroids, cb, routed = routed)
+      .select(col(idCol), col("list_id"), col("codes")), path, "list_id")
     Similarity.writeIvfCentroids(spark, centroids, path)
-    cb.zipWithIndex.flatMap { case (words, j) =>
-      words.zipWithIndex.map { case (w, c) => (j, c, w.toSeq) }
-    }.toSeq.toDF("j", "code", "word")
-      .coalesce(1).write.mode("overwrite").parquet(path + ".codebook")
+    ProductQuant.writeCodebook(spark, path, cb)
     (centroids, cb)
   }
 
@@ -133,16 +123,8 @@ object IvfPq {
   /** Open a persisted IVFADC store once: one partition listing, one
     * read of each sidecar. */
   def open(spark: SparkSession, path: String): Store =
-    Store(spark.read.parquet(path), Similarity.readIvfCentroids(spark, path),
-      readCodebook(spark, path))
-
-  /** The store's frozen residual codebook, from its sidecar. */
-  def readCodebook(spark: SparkSession, path: String): Codebook =
-    spark.read.parquet(path + ".codebook")
-      .select(col("j"), col("code"), col("word"))
-      .collect()
-      .groupBy(_.getInt(0)).toArray.sortBy(_._1)
-      .map(_._2.sortBy(_.getInt(1)).map(_.getSeq[Double](2).toArray))
+    Store(StoreMaintain.read(spark, path), Similarity.readIvfCentroids(spark, path),
+      ProductQuant.readCodebook(spark, path))
 
   /** INCREMENTAL maintenance of a persisted IVFADC store — appendIvf's
     * twin for the PQ path: coarse-assign + residual-encode the new
@@ -152,12 +134,9 @@ object IvfPq {
     * touched partitions gain files; probes see old ∪ new rows. */
   def append(spark: SparkSession, path: String, newVecs: DataFrame,
              idCol: String, vecCol: String): Unit =
-    assign(newVecs, vecCol, Similarity.readIvfCentroids(spark, path),
-        readCodebook(spark, path))
-      .select(col(idCol), col("list_id"), col("codes"))
-      // one file per touched list, not one per upstream task (see write)
-      .repartition(col("list_id"))
-      .write.mode("append").partitionBy("list_id").parquet(path)
+    StoreMaintain.append(assign(newVecs, vecCol, Similarity.readIvfCentroids(spark, path),
+        ProductQuant.readCodebook(spark, path))
+      .select(col(idCol), col("list_id"), col("codes")), path, "list_id")
 
   /** Probe an IVFADC store: read ONLY the nprobe nearest list partitions
     * (PartitionFilters on list_id), ADC-score each row against the
@@ -165,13 +144,6 @@ object IvfPq {
     * lists — each list gets its own literal m×k table), take the topN by
     * approximate distance, then fetch those vectors by keyed broadcast
     * join and re-rank exactly. */
-  def probe(spark: SparkSession, path: String, vectors: DataFrame,
-            idCol: String, vecCol: String, q: Seq[Double],
-            nprobe: Int, topN: Int, k: Int): DataFrame =
-    probe(open(spark, path), vectors, idCol, vecCol, q, nprobe, topN, k)
-
-  /** [[probe]] against a pre-opened [[Store]] — the serving form: no
-    * partition re-listing, no sidecar jobs per call. */
   def probe(store: Store, vectors: DataFrame,
             idCol: String, vecCol: String, q: Seq[Double],
             nprobe: Int, topN: Int, k: Int): DataFrame = {
@@ -226,25 +198,24 @@ object IvfPq {
                numLists: Int, coarseIters: Int, m: Int, k: Int,
                pqIters: Int, path: String)
       : (Array[(Long, Array[Double])], Codebook) = {
-    val spark = emb.sparkSession
-    import spark.implicits._
     val (pc, perm, _) = ProductQuant.opqRotation(emb, idCol, vecCol, m)
     val rotated = emb.withColumn("_rotv",
       ProductQuant.opqRotateCol(pc, perm, col(vecCol)))
     val out = write(rotated, idCol, "_rotv", numLists, coarseIters,
       m, k, pqIters, path)
-    pc.zipWithIndex.map { case (row, i) => (i, row.toSeq, perm(i)) }.toSeq
-      .toDF("i", "prow", "permi")
-      .coalesce(1).write.mode("overwrite").parquet(path + ".opq")
+    StoreMaintain.writeSidecar(emb.sparkSession, path, "opq", OpqSchema,
+      pc.zipWithIndex.map { case (row, i) => Row(i, row.toSeq, perm(i)) }.toSeq)
     out
   }
+
+  /** The `.opq` sidecar's layout: row i of the rotation and perm(i). */
+  private val OpqSchema = StructType.fromDDL("i int, prow array<double>, permi int")
 
   /** Open a persisted OPQ-IVFADC store once (plain open + one rotation
     * sidecar read). */
   def openOpq(spark: SparkSession, path: String): OpqStore = {
-    val rows = spark.read.parquet(path + ".opq")
-      .select(col("i"), col("prow"), col("permi"))
-      .collect().sortBy(_.getInt(0))
+    val rows = StoreMaintain.readSidecar(spark, path, "opq", OpqSchema)
+      .sortBy(_.getInt(0))
     OpqStore(open(spark, path),
       rows.map(_.getSeq[Double](1).toArray),
       rows.map(_.getInt(2)))
@@ -387,15 +358,6 @@ object IvfPq {
     * accumulates sub-dimensions ascending (0 + d₀² + d₁² + …), a row's
     * score sums subspaces ascending — exactly what the a8 DuckDB oracle
     * unrolls. Returns (qid, id, dist). */
-  def probeBatch(spark: SparkSession, path: String, vectors: DataFrame,
-                 idCol: String, vecCol: String,
-                 queries: DataFrame, qIdCol: String, qVecCol: String,
-                 nprobe: Int, topN: Int, k: Int): DataFrame =
-    probeBatch(open(spark, path), vectors, idCol, vecCol,
-      queries, qIdCol, qVecCol, nprobe, topN, k)
-
-  /** [[probeBatch]] against a pre-opened [[Store]] — the serving form:
-    * no partition re-listing, no sidecar jobs per call. */
   def probeBatch(store: Store, vectors: DataFrame,
                  idCol: String, vecCol: String,
                  queries: DataFrame, qIdCol: String, qVecCol: String,

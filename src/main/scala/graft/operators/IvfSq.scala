@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.VectorFunctions.{dist, doubleVec}
 
@@ -35,47 +36,47 @@ object IvfSq {
                          mins: Array[Double], exts: Array[Double],
                          levels: Int)
 
+  /** Code levels per dim (int8 storage). */
+  private val Levels = 256
+
+  /** The `.extent` sidecar's layout: one row per dim with its min,
+    * extent and the store's level count. */
+  private val ExtentSchema = StructType.fromDDL("idx int, mn double, ex double, levels int")
+
   /** Persist the IVF-SQ8 serving layout: narrow (id, codes) rows
     * partitioned by list_id, with the coarse-centroid set and the
     * per-dim quantization extent as KB-sized sidecars. Centroids are
     * the deterministic first-numLists seed refined `coarseIters` Lloyd
     * rounds (0 = exact oracle-replayable assignment). */
   def write(emb: DataFrame, idCol: String, vecCol: String,
-            numLists: Int, coarseIters: Int, path: String,
-            levels: Int = 256, routed: Boolean = false): Unit = {
+            numLists: Int, coarseIters: Int, path: String): Unit = {
     val spark = emb.sparkSession
-    import spark.implicits._
-    // routed: the O(√C) two-level coarse kernel for corpus-scale C
-    // (same trade as IvfPq.write — see listIdCol there)
-    val assignFn: (Column, Array[(Long, Array[Double])]) => Column =
-      if (routed) (v, c) => Similarity.ivfListIdRouted(v, c, routeSpark = Some(spark))
-      else Similarity.ivfListId
-    val centroids =
-      Similarity.ivfTrain(emb, idCol, vecCol, numLists, coarseIters, assignFn)
+    val centroids = Similarity.ivfTrain(emb, idCol, vecCol, numLists, coarseIters)
     // the per-dim extent, aggregated once: it encodes the rows and is
     // the sidecar
     val (mins, exts) = VectorStats.sqExtent(emb, idCol, vecCol)
-    emb.withColumn("list_id", assignFn(col(vecCol), centroids))
-      .withColumn("codes", VectorStats.sqEncode(col(vecCol), mins, exts, levels))
-      .select(col(idCol), col("list_id"), col("codes"))
-      // one file per list per owning task (see IvfPq.write's note)
-      .repartition(col("list_id"))
-      .write.mode("overwrite").partitionBy("list_id").parquet(path)
+    StoreMaintain.write(encode(emb, idCol, vecCol, centroids, mins, exts, Levels),
+      path, "list_id")
     Similarity.writeIvfCentroids(spark, centroids, path)
-    // extent sidecar: one row per dim (idx, mn, ex) + the level count
-    mins.indices.map(i => (i, mins(i), exts(i), levels))
-      .toDF("idx", "mn", "ex", "levels")
-      .coalesce(1).write.mode("overwrite").parquet(path + ".extent")
+    StoreMaintain.writeSidecar(spark, path, "extent", ExtentSchema,
+      mins.indices.map(i => Row(i, mins(i), exts(i), Levels)))
   }
+
+  /** (id, list_id, codes): each vector's nearest list and its codes. */
+  private def encode(emb: DataFrame, idCol: String, vecCol: String,
+                     centroids: Array[(Long, Array[Double])],
+                     mins: Array[Double], exts: Array[Double],
+                     levels: Int): DataFrame =
+    emb.select(col(idCol),
+      Similarity.ivfListId(col(vecCol), centroids).as("list_id"),
+      VectorStats.sqEncode(col(vecCol), mins, exts, levels).as("codes"))
 
   /** Open a persisted IVF-SQ8 store once: one partition listing, one
     * read of each sidecar. */
   def open(spark: SparkSession, path: String): Store = {
-    val ext = spark.read.parquet(path + ".extent")
-      .select(col("idx").cast("int"), col("mn").cast("double"),
-        col("ex").cast("double"), col("levels").cast("int"))
-      .collect().sortBy(_.getInt(0))
-    Store(spark.read.parquet(path),
+    val ext = StoreMaintain.readSidecar(spark, path, "extent", ExtentSchema)
+      .sortBy(_.getInt(0))
+    Store(StoreMaintain.read(spark, path),
       Similarity.readIvfCentroids(spark, path),
       ext.map(_.getDouble(1)), ext.map(_.getDouble(2)),
       ext.head.getInt(3))
@@ -90,13 +91,9 @@ object IvfSq {
   def append(spark: SparkSession, path: String, newVecs: DataFrame,
              idCol: String, vecCol: String): Unit = {
     val st = open(spark, path)
-    newVecs
-      .withColumn("list_id", Similarity.ivfListId(col(vecCol), st.centroids))
-      .withColumn("codes", VectorStats.sqEncode(col(vecCol), st.mins, st.exts, st.levels))
-      .select(col(idCol), col("list_id"), col("codes"))
-      // one file per touched list, not one per upstream task
-      .repartition(col("list_id"))
-      .write.mode("append").partitionBy("list_id").parquet(path)
+    StoreMaintain.append(
+      encode(newVecs, idCol, vecCol, st.centroids, st.mins, st.exts, st.levels),
+      path, "list_id")
   }
 
   /** Probe: read ONLY the nprobe nearest list partitions, rank by
@@ -121,13 +118,6 @@ object IvfSq {
       .limit(k)
       .drop("codes", "sq_dist")
   }
-
-  /** One-shot [[probe]] (opens the store per call — serving processes
-    * should hold the [[Store]] handle instead). */
-  def probe(spark: SparkSession, path: String, vectors: DataFrame,
-            idCol: String, vecCol: String, q: Seq[Double],
-            nprobe: Int, topN: Int, k: Int): DataFrame =
-    probe(open(spark, path), vectors, idCol, vecCol, q, nprobe, topN, k)
 
   /** BATCH kNN JOIN over the store — the a6/a8 shape for the SQ8 path,
     * completing the {LSH, IVF, IVFADC, IVF-SQ8} × {single, batch}
@@ -168,12 +158,4 @@ object IvfSq {
       .filter(col("rn") <= k)
       .select(col("qid"), col(idCol), col("dist"))
   }
-
-  /** One-shot [[probeBatch]] (opens the store per call). */
-  def probeBatch(spark: SparkSession, path: String, vectors: DataFrame,
-                 idCol: String, vecCol: String,
-                 queries: DataFrame, qIdCol: String, qVecCol: String,
-                 nprobe: Int, topN: Int, k: Int): DataFrame =
-    probeBatch(open(spark, path), vectors, idCol, vecCol,
-      queries, qIdCol, qVecCol, nprobe, topN, k)
 }

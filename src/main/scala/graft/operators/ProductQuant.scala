@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.VectorFunctions.{dist, distSq, doubleVec}
 
@@ -135,18 +136,28 @@ object ProductQuant {
     * the trained codebook. */
   def writePq(emb: DataFrame, idCol: String, vecCol: String,
               m: Int, k: Int, iters: Int, path: String): Codebook = {
-    val spark = emb.sparkSession
-    import spark.implicits._
     val cb = pqTrain(emb, idCol, vecCol, m, k, iters)
-    pqAssign(emb, vecCol, cb)
-      .select(col(idCol), col("codes"))
-      .write.mode("overwrite").parquet(path)
-    cb.zipWithIndex.flatMap { case (words, j) =>
-      words.zipWithIndex.map { case (w, c) => (j, c, w.toSeq) }
-    }.toSeq.toDF("j", "code", "word")
-      .coalesce(1).write.mode("overwrite").parquet(path + ".codebook")
+    StoreMaintain.write(pqAssign(emb, vecCol, cb).select(col(idCol), col("codes")), path)
+    writeCodebook(emb.sparkSession, path, cb)
     cb
   }
+
+  /** The `.codebook` sidecar's layout (the PQ and IVF-PQ stores share
+    * it): one row per (subspace j, codeword) with its components. */
+  private val CodebookSchema = StructType.fromDDL("j int, code int, word array<double>")
+
+  private[operators] def writeCodebook(spark: org.apache.spark.sql.SparkSession,
+                                       path: String, cb: Codebook): Unit =
+    StoreMaintain.writeSidecar(spark, path, "codebook", CodebookSchema,
+      cb.zipWithIndex.flatMap { case (words, j) =>
+        words.zipWithIndex.map { case (w, c) => Row(j, c, w.toSeq) }
+      }.toSeq)
+
+  /** The store's frozen codebook, from its sidecar. */
+  def readCodebook(spark: org.apache.spark.sql.SparkSession, path: String): Codebook =
+    StoreMaintain.readSidecar(spark, path, "codebook", CodebookSchema)
+      .groupBy(_.getInt(0)).toArray.sortBy(_._1)
+      .map(_._2.sortBy(_.getInt(1)).map(_.getSeq[Double](2).toArray))
 
   /** Probe a PQ store: ADC-rank the narrow codes relation (the only
     * full scan — m ints/row), then fetch vectors for just the topN
@@ -156,12 +167,8 @@ object ProductQuant {
   def probePq(spark: org.apache.spark.sql.SparkSession, path: String,
               vectors: DataFrame, idCol: String, vecCol: String,
               q: Seq[Double], topN: Int, k: Int): DataFrame = {
-    val cb: Codebook = spark.read.parquet(path + ".codebook")
-      .select(col("j"), col("code"), col("word"))
-      .collect()
-      .groupBy(_.getInt(0)).toArray.sortBy(_._1)
-      .map(_._2.sortBy(_.getInt(1)).map(_.getSeq[Double](2).toArray))
-    val cands = spark.read.parquet(path)
+    val cb = readCodebook(spark, path)
+    val cands = StoreMaintain.read(spark, path)
       .withColumn("approx", adcScore(col("codes"), cb, q))
       .orderBy(col("approx"), col(idCol))
       .limit(topN)

@@ -1,7 +1,5 @@
 package graft.operators
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -274,25 +272,19 @@ object Similarity {
     * frozen hash family from the store alone. */
   def writeBucketed(emb: DataFrame, idCol: String, vecCol: String,
                     planes: Array[Array[Double]], path: String): Unit = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    lshAssign(emb, idCol, vecCol, planes)
-      // cluster rows into their target bucket first: otherwise every
-      // upstream task writes into every bucket dir — shuffle.partitions
-      // × 2^numPlanes files (see IvfPq.write's measured note)
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(path)
-    planes.zipWithIndex.map { case (p, i) => (i, p.toSeq) }.toSeq
-      .toDF("plane_id", "components")
-      .coalesce(1).write.mode("overwrite").parquet(path + ".planes")
+    StoreMaintain.write(lshAssign(emb, idCol, vecCol, planes), path, "bucket")
+    StoreMaintain.writeSidecar(emb.sparkSession, path, "planes", PlanesSchema,
+      planes.zipWithIndex.map { case (p, i) => Row(i, p.toSeq) }.toSeq)
   }
+
+  /** The `.planes` sidecar's layout: one row per hyperplane. */
+  private val PlanesSchema = StructType.fromDDL("plane_id int, components array<double>")
 
   /** The store's frozen hyperplane family, from its sidecar. */
   def readPlanes(spark: org.apache.spark.sql.SparkSession,
                  path: String): Array[Array[Double]] =
-    spark.read.parquet(path + ".planes")
-      .select(col("plane_id"), col("components"))
-      .collect().sortBy(_.getInt(0))
+    StoreMaintain.readSidecar(spark, path, "planes", PlanesSchema)
+      .sortBy(_.getInt(0))
       .map(_.getSeq[Double](1).toArray)
 
   /** INCREMENTAL maintenance of a bucketed LSH store — [[appendIvf]]'s
@@ -303,11 +295,8 @@ object Similarity {
     * same data columns as the frame [[writeBucketed]] persisted. */
   def appendBucketed(spark: org.apache.spark.sql.SparkSession, path: String,
                      newVecs: DataFrame, idCol: String, vecCol: String): Unit =
-    lshAssign(newVecs, idCol, vecCol, readPlanes(spark, path))
-      // cluster into target buckets first — writeBucketed's documented
-      // guard against shuffle.partitions x 2^P files per append
-      .repartition(col("bucket"))
-      .write.mode("append").partitionBy("bucket").parquet(path)
+    StoreMaintain.append(lshAssign(newVecs, idCol, vecCol, readPlanes(spark, path)),
+      path, "bucket")
 
   /** A pre-opened bucketed-LSH serving handle: the store DataFrame (its
     * partition file index is built once, at open — `spark.read.parquet`
@@ -321,7 +310,7 @@ object Similarity {
     * sidecar read. */
   def openBucketed(spark: org.apache.spark.sql.SparkSession,
                    path: String): BucketedStore =
-    BucketedStore(spark.read.parquet(path), readPlanes(spark, path))
+    BucketedStore(StoreMaintain.read(spark, path), readPlanes(spark, path))
 
   /** Probe a bucketed store: top-k within the given buckets. The bucket
     * filter prunes at the partition level (visible as PartitionFilters
@@ -336,13 +325,6 @@ object Similarity {
       .limit(k)
 
   /** Top-k within the query's own bucket. */
-  def probeBucketed(spark: org.apache.spark.sql.SparkSession, path: String,
-                    idCol: String, vecCol: String,
-                    planes: Array[Array[Double]], q: Seq[Double], k: Int): DataFrame =
-    probeBuckets(BucketedStore(spark.read.parquet(path), planes),
-      idCol, vecCol, Seq(queryBucket(planes, q)), q, k)
-
-  /** [[probeBucketed]] against a pre-opened handle (serving form). */
   def probeBucketed(store: BucketedStore, idCol: String, vecCol: String,
                     q: Seq[Double], k: Int): DataFrame =
     probeBuckets(store, idCol, vecCol,
@@ -351,13 +333,6 @@ object Similarity {
   /** Multi-probe variant: also visit every bucket at hamming distance 1
     * from the query's (one flipped sign bit) — the standard recall boost;
     * still a partition-pruned IN-filter read of numPlanes+1 buckets. */
-  def probeBucketedMulti(spark: org.apache.spark.sql.SparkSession, path: String,
-                         idCol: String, vecCol: String,
-                         planes: Array[Array[Double]], q: Seq[Double], k: Int): DataFrame =
-    probeBucketedMulti(BucketedStore(spark.read.parquet(path), planes),
-      idCol, vecCol, q, k)
-
-  /** [[probeBucketedMulti]] against a pre-opened handle (serving form). */
   def probeBucketedMulti(store: BucketedStore, idCol: String, vecCol: String,
                          q: Seq[Double], k: Int): DataFrame = {
     val qBucket = queryBucket(store.planes, q)
@@ -374,18 +349,9 @@ object Similarity {
     * broadcast (qid, bucket) join narrows each row to the queries
     * probing its bucket, and one per-query window takes the exact
     * top-k. Returns (qid, id, bucket, dist). */
-  def probeBucketedBatch(spark: org.apache.spark.sql.SparkSession,
-                         path: String, idCol: String, vecCol: String,
-                         queries: DataFrame, qIdCol: String, qVecCol: String,
-                         planes: Array[Array[Double]], k: Int,
-                         multiProbe: Boolean = true): DataFrame =
-    probeBucketedBatch(BucketedStore(spark.read.parquet(path), planes),
-      idCol, vecCol, queries, qIdCol, qVecCol, k, multiProbe)
-
-  /** [[probeBucketedBatch]] against a pre-opened handle (serving form). */
   def probeBucketedBatch(store: BucketedStore, idCol: String, vecCol: String,
                          queries: DataFrame, qIdCol: String, qVecCol: String,
-                         k: Int, multiProbe: Boolean): DataFrame = {
+                         k: Int, multiProbe: Boolean = true): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val planes = store.planes
     // bucket hash materialized once per query row (see lshKnnJoinMulti)
@@ -564,32 +530,26 @@ object Similarity {
   def writeIvf(emb: DataFrame, idCol: String, vecCol: String,
                numLists: Int, path: String): Unit = {
     val centroids = ivfCentroids(emb, idCol, vecCol, numLists)
-    emb.withColumn("list_id", ivfListId(col(vecCol), centroids))
-      // one file per list per owning task, not one per upstream task
-      // per list (see IvfPq.write's measured note)
-      .repartition(col("list_id"))
-      .write.mode("overwrite").partitionBy("list_id").parquet(path)
+    StoreMaintain.write(emb.withColumn("list_id", ivfListId(col(vecCol), centroids)),
+      path, "list_id")
     writeIvfCentroids(emb.sparkSession, centroids, path)
   }
 
-  /** The `.centroids` sidecar's layout: written and read with it, so
-    * reading runs no schema-inference job. */
+  /** The `.centroids` sidecar's layout (the IVF, IVF-PQ and IVF-SQ8
+    * stores share it). */
   private val CentroidSchema = StructType.fromDDL("list_id long, centroid array<double>")
 
-  /** Persist a store's coarse-centroid set as its `.centroids` sidecar
-    * (the IVF, IVF-PQ and IVF-SQ8 stores share the format). */
+  /** Persist a store's coarse-centroid set as its `.centroids` sidecar. */
   def writeIvfCentroids(spark: org.apache.spark.sql.SparkSession,
                         centroids: Array[(Long, Array[Double])],
                         path: String): Unit =
-    spark.createDataFrame(
-        centroids.map { case (lid, cv) => Row(lid, cv.toSeq) }.toSeq.asJava, CentroidSchema)
-      .coalesce(1).write.mode("overwrite").parquet(path + ".centroids")
+    StoreMaintain.writeSidecar(spark, path, "centroids", CentroidSchema,
+      centroids.map { case (lid, cv) => Row(lid, cv.toSeq) }.toSeq)
 
   /** The store's frozen coarse-centroid set, from its sidecar. */
   def readIvfCentroids(spark: org.apache.spark.sql.SparkSession,
                        path: String): Array[(Long, Array[Double])] =
-    spark.read.schema(CentroidSchema).parquet(path + ".centroids")
-      .collect()
+    StoreMaintain.readSidecar(spark, path, "centroids", CentroidSchema)
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
 
   /** INCREMENTAL maintenance of a persisted IVF store: assign the new
@@ -606,10 +566,8 @@ object Similarity {
   def appendIvf(spark: org.apache.spark.sql.SparkSession, path: String,
                 newVecs: DataFrame, vecCol: String): Unit = {
     val centroids = readIvfCentroids(spark, path)
-    newVecs
-      .withColumn("list_id", ivfListId(col(vecCol), centroids))
-      .repartition(col("list_id"))
-      .write.mode("append").partitionBy("list_id").parquet(path)
+    StoreMaintain.append(newVecs.withColumn("list_id", ivfListId(col(vecCol), centroids)),
+      path, "list_id")
   }
 
   /** A pre-opened IVF serving handle: the store DataFrame (partition
@@ -622,16 +580,10 @@ object Similarity {
     * sidecar read. */
   def openIvf(spark: org.apache.spark.sql.SparkSession,
               path: String): IvfStore =
-    IvfStore(spark.read.parquet(path), readIvfCentroids(spark, path))
+    IvfStore(StoreMaintain.read(spark, path), readIvfCentroids(spark, path))
 
   /** Probe an IVF store: top-k within the nprobe nearest lists — a
     * partition-pruned read (PartitionFilters on list_id), no shuffle. */
-  def probeIvf(spark: org.apache.spark.sql.SparkSession, path: String,
-               idCol: String, vecCol: String, q: Seq[Double],
-               nprobe: Int, k: Int): DataFrame =
-    probeIvf(openIvf(spark, path), idCol, vecCol, q, nprobe, k)
-
-  /** [[probeIvf]] against a pre-opened handle (serving form). */
   def probeIvf(store: IvfStore, idCol: String, vecCol: String,
                q: Seq[Double], nprobe: Int, k: Int): DataFrame = {
     val probe = ivfProbeLists(store.centroids, q, nprobe)
@@ -696,14 +648,6 @@ object Similarity {
     * partitions touched), the broadcast (qid, list) join narrows each
     * row to the queries that probed its list, and one per-query window
     * takes the exact top-k. Returns (qid, id, dist). */
-  def probeIvfBatch(spark: org.apache.spark.sql.SparkSession, path: String,
-                    idCol: String, vecCol: String,
-                    queries: DataFrame, qIdCol: String, qVecCol: String,
-                    nprobe: Int, k: Int): DataFrame =
-    probeIvfBatch(openIvf(spark, path), idCol, vecCol,
-      queries, qIdCol, qVecCol, nprobe, k)
-
-  /** [[probeIvfBatch]] against a pre-opened handle (serving form). */
   def probeIvfBatch(store: IvfStore, idCol: String, vecCol: String,
                     queries: DataFrame, qIdCol: String, qVecCol: String,
                     nprobe: Int, k: Int): DataFrame = {

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.functions.{CmsMerge, CmsSketch, HllMerge, HllSketch}
 
 /** Persistent DAILY-SKETCH STORE — the materialized form of the q46
@@ -51,46 +52,40 @@ object SketchStore {
     * register width). */
   def write(events: DataFrame, dayCol: String, keyCol: String, p: Int,
             path: String): Unit = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    cellsOf(events, dayCol, keyCol, p)
-      .repartition(col("day"))
-      .write.mode("overwrite").partitionBy("day").parquet(path)
-    Seq(p).toDF("p").coalesce(1)
-      .write.mode("overwrite").parquet(path + ".meta")
+    StoreMaintain.write(cellsOf(events, dayCol, keyCol, p), path, "day")
+    writeP(events.sparkSession, path, p)
   }
+
+  /** The `.meta` sidecar's layout: the register width p. */
+  private val MetaSchema = StructType.fromDDL("p int")
+
+  private def writeP(spark: SparkSession, path: String, p: Int): Unit =
+    StoreMaintain.writeSidecar(spark, path, "meta", MetaSchema, Seq(Row(p)))
 
   /** Append a new batch's cells: touched day partitions gain files,
     * nothing is rewritten; overlapping days are healed at probe time by
     * the register-max merge (see object doc). */
   def append(events: DataFrame, dayCol: String, keyCol: String,
-             path: String): Unit = {
-    val spark = events.sparkSession
-    cellsOf(events, dayCol, keyCol, readP(spark, path))
-      .repartition(col("day"))
-      .write.mode("append").partitionBy("day").parquet(path)
-  }
+             path: String): Unit =
+    StoreMaintain.append(
+      cellsOf(events, dayCol, keyCol, readP(events.sparkSession, path)), path, "day")
 
   private def readP(spark: SparkSession, path: String): Int =
-    spark.read.parquet(path + ".meta").head().getInt(0)
+    StoreMaintain.readSidecar(spark, path, "meta", MetaSchema).head.getInt(0)
 
   /** OPTIMIZE-style maintenance: rewrite each day partition to ONE
     * canonical cell (the register-max merge of its accumulated append
     * cells). Probe results are unchanged — max is associative — but a
     * day that took n appends is read back as one 2^p-byte row instead
-    * of n. Swap-based via [[StoreSwap]]; see its doc for the
+    * of n. Swap-based via [[StoreMaintain.compact]]; see its doc for the
     * maintenance-window contract (pause writers; retry a probe that
     * raced the swap). */
   def compact(spark: SparkSession, path: String): Unit = {
     val p = readP(spark, path)
-    val tmp = path + ".compacting"
-    spark.read.parquet(path)
+    StoreMaintain.compact(StoreMaintain.read(spark, path)
       .groupBy(col("day"))
       .agg(HllMerge.hllMerge(col("regs"), p).as("s"))
-      .select(col("day"), col("s.regs").as("regs"))
-      .repartition(col("day"))
-      .write.mode("overwrite").partitionBy("day").parquet(tmp)
-    StoreSwap.replace(spark, tmp, path)
+      .select(col("day"), col("s.regs").as("regs")), path, "day")
   }
 
   private def estCols(s: org.apache.spark.sql.Column) = Seq(
@@ -105,7 +100,7 @@ object SketchStore {
   def probeTrailing(spark: SparkSession, path: String,
                     windowDays: Int): DataFrame = {
     require(windowDays >= 1, "windowDays must be >= 1")
-    val cells = spark.read.parquet(path)
+    val cells = StoreMaintain.read(spark, path)
       .select(col("day").cast("date").as("day"), col("regs"))
     val days = cells.select(col("day").as("d0")).distinct()
     days
@@ -121,7 +116,7 @@ object SketchStore {
     * day partitions are read (spec-asserted). */
   def probeRange(spark: SparkSession, path: String,
                  from: String, to: String): DataFrame =
-    spark.read.parquet(path)
+    StoreMaintain.read(spark, path)
       .filter(col("day") >= from && col("day") <= to)
       .agg(HllMerge.hllMerge(col("regs"), readP(spark, path)).as("s"))
       .select(estCols(col("s")): _*)
@@ -148,24 +143,17 @@ object SketchStore {
     * (segments, platforms, event types — not user ids). */
   def writeGrouped(events: DataFrame, dimCol: String, dayCol: String,
                    keyCol: String, p: Int, path: String): Unit = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    groupedCellsOf(events, dimCol, dayCol, keyCol, p)
-      .repartition(col("dim"), col("day"))
-      .write.mode("overwrite").partitionBy("dim", "day").parquet(path)
-    Seq(p).toDF("p").coalesce(1)
-      .write.mode("overwrite").parquet(path + ".meta")
+    StoreMaintain.write(groupedCellsOf(events, dimCol, dayCol, keyCol, p),
+      path, "dim", "day")
+    writeP(events.sparkSession, path, p)
   }
 
   /** Append a batch's grouped cells — same self-healing register-max
     * contract as [[append]]. */
   def appendGrouped(events: DataFrame, dimCol: String, dayCol: String,
-                    keyCol: String, path: String): Unit = {
-    val spark = events.sparkSession
-    groupedCellsOf(events, dimCol, dayCol, keyCol, readP(spark, path))
-      .repartition(col("dim"), col("day"))
-      .write.mode("append").partitionBy("dim", "day").parquet(path)
-  }
+                    keyCol: String, path: String): Unit =
+    StoreMaintain.append(groupedCellsOf(events, dimCol, dayCol, keyCol,
+      readP(events.sparkSession, path)), path, "dim", "day")
 
   /** Per-dimension distinct count over [from, to]: one output row per
     * dimension value present in the window — (dim, v_zero, z_fix,
@@ -175,7 +163,7 @@ object SketchStore {
                         to: String,
                         dims: Option[Seq[String]] = None): DataFrame = {
     val p = readP(spark, path)
-    val cells = spark.read.parquet(path)
+    val cells = StoreMaintain.read(spark, path)
       .filter(col("day") >= from && col("day") <= to)
     val picked = dims.fold(cells)(ds => cells.filter(col("dim").isin(ds: _*)))
     picked
@@ -232,29 +220,25 @@ object FreqStore {
     * slice the hash identically. */
   def write(events: DataFrame, dayCol: String, keyCol: String, d: Int,
             b: Int, path: String): Unit = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    cellsOf(events, dayCol, keyCol, d, b)
-      .repartition(col("day"))
-      .write.mode("overwrite").partitionBy("day").parquet(path)
-    Seq((d, b)).toDF("d", "b").coalesce(1)
-      .write.mode("overwrite").parquet(path + ".meta")
+    StoreMaintain.write(cellsOf(events, dayCol, keyCol, d, b), path, "day")
+    StoreMaintain.writeSidecar(events.sparkSession, path, "meta", MetaSchema,
+      Seq(Row(d, b)))
   }
+
+  /** The `.meta` sidecar's layout: the CMS depth d and width b. */
+  private val MetaSchema = StructType.fromDDL("d int, b int")
 
   /** Append a batch's cells under the frozen (d, b): touched day
     * partitions gain files, nothing is rewritten. Exactly-once batches
     * required (counters add — see object doc). */
   def append(events: DataFrame, dayCol: String, keyCol: String,
              path: String): Unit = {
-    val spark = events.sparkSession
-    val (d, b) = readMeta(spark, path)
-    cellsOf(events, dayCol, keyCol, d, b)
-      .repartition(col("day"))
-      .write.mode("append").partitionBy("day").parquet(path)
+    val (d, b) = readMeta(events.sparkSession, path)
+    StoreMaintain.append(cellsOf(events, dayCol, keyCol, d, b), path, "day")
   }
 
   private def readMeta(spark: SparkSession, path: String): (Int, Int) = {
-    val m = spark.read.parquet(path + ".meta").head()
+    val m = StoreMaintain.readSidecar(spark, path, "meta", MetaSchema).head
     (m.getInt(0), m.getInt(1))
   }
 
@@ -266,7 +250,7 @@ object FreqStore {
                  from: String, to: String): DataFrame = {
     val spark = keys.sparkSession
     val (d, b) = readMeta(spark, path)
-    val merged = spark.read.parquet(path)
+    val merged = StoreMaintain.read(spark, path)
       .filter(col("day") >= from && col("day") <= to)
       .agg(CmsMerge.cmsMerge(col("counters"), d, b).as("s"))
       .select(col("s.n_total").as("n_total"),
@@ -280,17 +264,13 @@ object FreqStore {
   /** OPTIMIZE-style maintenance: rewrite each day partition to ONE
     * canonical cell (the counter sum of its accumulated append cells).
     * Probe results are unchanged — addition is associative. Swap-based
-    * via [[StoreSwap]]. */
+    * via [[StoreMaintain.compact]]. */
   def compact(spark: SparkSession, path: String): Unit = {
     val (d, b) = readMeta(spark, path)
-    val tmp = path + ".compacting"
-    spark.read.parquet(path)
+    StoreMaintain.compact(StoreMaintain.read(spark, path)
       .groupBy(col("day"))
       .agg(CmsMerge.cmsMerge(col("counters"), d, b).as("s"))
       .select(col("day"), col("s.n_total").as("n_total"),
-        col("s.counters").as("counters"))
-      .repartition(col("day"))
-      .write.mode("overwrite").partitionBy("day").parquet(tmp)
-    StoreSwap.replace(spark, tmp, path)
+        col("s.counters").as("counters")), path, "day")
   }
 }

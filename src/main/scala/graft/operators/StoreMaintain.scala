@@ -1,66 +1,229 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
-/** Partition-level DELETE shared by the three persisted ANN serving
-  * stores (LSH-bucketed, IVF, IVFADC): each lays rows out as parquet
-  * partitioned by its routing column (`bucket` / `list_id`), so a batch
-  * remove is the same operation on all three — find the partitions
-  * holding any doomed row, rewrite exactly those partitions without the
-  * doomed rows, and drop the directories the delete emptied. Completes
-  * the serving maintenance matrix next to the append paths
-  * ([[Similarity.appendBucketed]], [[Similarity.appendIvf]],
-  * [[IvfPq.append]]).
+import scala.jdk.CollectionConverters._
+
+/** The on-disk layout every persisted store shares: the LSH-bucketed,
+  * IVF, IVF-PQ/OPQ, IVF-SQ8, binary and PQ serving stores, the
+  * shingle, eval and text stores, the sketch and histogram stores, the
+  * graph store and [[graft.sources.IndexStore]]'s per-document trees.
   *
-  * The reference's remove surface is the in-memory
-  * MemoryVectorIndex.Remove (MemoryVectorIndex.cs:358-489);
-  * [[graft.sources.IndexStore.maintainDocument]] is the per-document
-  * tree-store analog of the same contract — this is its flat-store
-  * counterpart: O(touched partitions) I/O, never a full rewrite.
+  *   `path/`        the rows, parquet partitioned by the family's
+  *                  routing columns (`list_id`, `bucket`, `gb`, `day`,
+  *                  `docId`, …)
+  *   `path.<name>`  sidecars: KB-sized frozen state (centroids,
+  *                  codebooks, thresholds, meta rows) and the
+  *                  tombstone/doclen tables of the lazy-delete stores
   *
-  * At 100 TB the doomed-id relation is the small side (takedowns, a
-  * dedup verdict): it broadcasts into a semi-join that prunes the
-  * touched-partition discovery, and the rewrite reads only those
-  * partitions back. Emptied partitions can't be expressed as a
-  * zero-row dynamic-partition overwrite (no rows → no directory in the
-  * write), so their directories are deleted explicitly afterwards. */
+  * Each family keeps its own assignment and encoding and hands the
+  * finished rows here; this object owns how they reach disk:
+  *   - [[write]] replaces the whole store, [[append]] adds files to the
+  *     touched partitions, both with the rows clustered by their
+  *     partition first (else every upstream task writes a file into
+  *     every partition dir: shuffle.partitions × partitions files —
+  *     131k at C=4096, a 5-minute write and multi-second probes spent
+  *     on file listing);
+  *   - [[rewritePartitions]] replaces only the partitions its rows
+  *     fill, and [[removeFromStore]] is the shared batch delete on it;
+  *   - [[writeSidecar]]/[[readSidecar]] lay each sidecar out by the
+  *     family's fixed `StructType` schema;
+  *   - [[read]] opens rows with the schema of one file footer, read on
+  *     the driver, so neither opening a store nor reading a sidecar runs
+  *     a schema-inference job;
+  *   - [[compact]] rewrites a store beside itself and swaps it in.
+  *
+  * The overwrite mode is always pinned on the writer, never taken from
+  * the session: a session-level `partitionOverwriteMode=dynamic` would
+  * otherwise make a full write keep every old partition its new rows
+  * leave empty. */
 object StoreMaintain {
 
-  /** Remove every row whose `idCol` appears in `ids` from the
-    * partitioned store at `path`. `partCol` is the store's partition
-    * column (`bucket` for LSH, `list_id` for IVF / IVFADC). Sidecars
-    * (centroids / codebook / planes) are untouched — the quantizer
-    * stays frozen across deletes, exactly as on append. */
+  /** Replace the store at `path` with `rows`, partitioned by `partCols`
+    * (none: one unpartitioned relation). */
+  def write(rows: DataFrame, path: String, partCols: String*): Unit =
+    clustered(rows, partCols).mode("overwrite")
+      .option("partitionOverwriteMode", "static").parquet(path)
+
+  /** Add `rows` to the store at `path`: only the partitions they fall in
+    * gain files; existing files are never rewritten. */
+  def append(rows: DataFrame, path: String, partCols: String*): Unit =
+    clustered(rows, partCols).mode("append").parquet(path)
+
+  /** A writer of `rows` clustered by, and partitioned on, `partCols`. */
+  private def clustered(rows: DataFrame, partCols: Seq[String]) =
+    if (partCols.isEmpty) rows.write
+    else rows.repartition(partCols.map(col): _*).write.partitionBy(partCols: _*)
+
+  /** Replace the `partCol` partitions that `rows` fill with exactly
+    * `rows`; other partitions keep their files. Each of `emptiable` that
+    * `rows` holds no row for is deleted (a zero-row dynamic overwrite
+    * writes no directory, so it cannot express an emptied partition);
+    * that check is one job over `rows`. `rows` must read nothing under
+    * `path`: pin them first, so the write never reads the files it
+    * replaces. */
+  def rewritePartitions(rows: DataFrame, path: String, partCol: String,
+                        emptiable: Seq[Any] = Nil): Unit = {
+    rows.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partCol).parquet(path)
+    if (emptiable.nonEmpty) {
+      val kept = rows.select(col(partCol)).distinct()
+        .collect().map(_.get(0)).toSet
+      val root = new Path(path)
+      val fs = fileSystem(rows.sparkSession, root)
+      emptiable.filterNot(kept).foreach { v =>
+        fs.delete(new Path(root,
+          ExternalCatalogUtils.getPartitionPathString(partCol, v.toString)), true)
+      }
+    }
+  }
+
+  /** Remove every row whose `idCol` appears in `ids` from the store at
+    * `path`, partitioned by `partCol`: the partitions holding a doomed
+    * row are rewritten without it, and emptied ones dropped. Sidecars
+    * are untouched: the quantizer stays frozen across deletes, exactly
+    * as on append. The flat-store counterpart of
+    * [[graft.sources.IndexStore.maintainDocument]] (the reference's
+    * MemoryVectorIndex.Remove, MemoryVectorIndex.cs:358-489): O(touched
+    * partitions) I/O, never a full rewrite. The doomed ids broadcast
+    * into a semi-join that finds the touched partitions, and the
+    * rewrite reads only those back. */
   def removeFromStore(spark: SparkSession, path: String, ids: DataFrame,
                       idCol: String, partCol: String): Unit = {
-    val store = spark.read.parquet(path)
+    val store = read(spark, path)
     val idRel = ids.select(col(idCol)).distinct()
-    // partitions holding at least one doomed row — the only ones touched
     val touched: Seq[Any] = store
       .join(broadcast(idRel), Seq(idCol), "left_semi")
       .select(col(partCol)).distinct()
       .collect().map(_.get(0)).toSeq
-    if (touched.isEmpty) return
-    // surviving rows of the touched partitions, lineage BROKEN before
-    // the in-place write (the write must never read the files it is
-    // replacing — same contract as IndexStore.maintainDocument)
-    val kept = Pins.scope { pins =>
+    if (touched.nonEmpty) Pins.scope { pins =>
       val remaining = pins(store
         .filter(col(partCol).isInCollection(touched))
         .join(broadcast(idRel), Seq(idCol), "left_anti"))
-      // per-writer option: the session's overwrite mode stays as it was
-      remaining.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partCol).parquet(path)
-      remaining.select(col(partCol)).distinct()
-        .collect().map(_.get(0)).toSet
-    }
-    // dynamic overwrite replaces only partitions PRESENT in `remaining`;
-    // a partition the delete emptied has no rows to carry it — drop it
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-    touched.filterNot(kept).foreach { v =>
-      fs.delete(new org.apache.hadoop.fs.Path(hPath, s"$partCol=$v"), true)
+      rewritePartitions(remaining, path, partCol, emptiable = touched)
     }
   }
+
+  /** The rows of the store at `path`. Their data schema comes from one
+    * file's footer, read on the driver (a Spark-written file carries its
+    * schema there), so the read runs no schema-inference job; partition
+    * columns are discovered from the directory names, as an inferring
+    * read does. A store with no data file gets Spark's own error. */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val root = new Path(path)
+    val fs = fileSystem(spark, root)
+    val first = if (fs.exists(root)) firstDataFile(fs, root) else None
+    first.fold(spark.read.parquet(path)) { f =>
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(f, spark.sessionState.newHadoopConf()),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      spark.read.schema(ParquetFileFormat.readSchemaFromFooter(
+          new Footer(f.getPath, footer),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+        .parquet(path)
+    }
+  }
+
+  /** Depth-first, the first file an inferring read would also see:
+    * names starting `_` or `.` (commit markers, checksums, staging
+    * dirs) are skipped. */
+  private def firstDataFile(fs: FileSystem, dir: Path): Option[FileStatus] = {
+    val (dirs, files) = fs.listStatus(dir)
+      .filterNot(s => s.getPath.getName.startsWith("_") ||
+        s.getPath.getName.startsWith("."))
+      .sortBy(_.getPath.getName)
+      .partition(_.isDirectory)
+    files.headOption.orElse(
+      dirs.iterator.map(d => firstDataFile(fs, d.getPath)).collectFirst {
+        case Some(f) => f
+      })
+  }
+
+  private def sidecar(path: String, name: String): String = s"$path.$name"
+
+  /** Write the store's `name` sidecar from `rows`, laid out by the
+    * family's `schema`, as one file: overwritten, or one more file when
+    * `append`. */
+  def writeSidecar(spark: SparkSession, path: String, name: String,
+                   schema: StructType, rows: Seq[Row], append: Boolean = false): Unit =
+    writeSidecarRows(spark.createDataFrame(rows.asJava, schema).coalesce(1),
+      path, name, append)
+
+  /** The rows of the store's `name` sidecar, read with its `schema`:
+    * one job, no schema inference. */
+  def readSidecar(spark: SparkSession, path: String, name: String,
+                  schema: StructType): Array[Row] =
+    spark.read.schema(schema).parquet(sidecar(path, name)).collect()
+
+  /** Write a sidecar that is a relation over the store's own ids (its
+    * id column has the store's id type, so it has no fixed schema). */
+  def writeSidecarRows(rows: DataFrame, path: String, name: String,
+                       append: Boolean = false): Unit =
+    rows.write.mode(if (append) "append" else "overwrite")
+      .parquet(sidecar(path, name))
+
+  /** A [[writeSidecarRows]] sidecar, opened like [[read]]. */
+  def readSidecarRows(spark: SparkSession, path: String,
+                      name: String): DataFrame =
+    read(spark, sidecar(path, name))
+
+  /** Whether the store has a `name` sidecar (lazy-delete sidecars are
+    * created by their first write). */
+  def hasSidecar(spark: SparkSession, path: String, name: String): Boolean = {
+    val p = new Path(sidecar(path, name))
+    fileSystem(spark, p).exists(p)
+  }
+
+  /** Delete the store's `name` sidecar, if it has one. */
+  def dropSidecar(spark: SparkSession, path: String, name: String): Unit = {
+    val p = new Path(sidecar(path, name))
+    fileSystem(spark, p).delete(p, true)
+  }
+
+  /** OPTIMIZE-style compaction: `rows` (the store's new contents, read
+    * from it) are fully written beside the store, then swapped in with
+    * two filesystem renames; if installing the new layout fails, the
+    * old one is rolled back so the store is never left missing. The
+    * per-rename atomicity holds only on rename-atomic filesystems
+    * (local disk, HDFS, ABFS); on object stores where rename is
+    * copy+delete (S3A) the swap window is neither atomic nor cheap.
+    *
+    * A MAINTENANCE-WINDOW operation: (a) an append that commits while
+    * the rewrite runs lands in the retired layout and is DROPPED by the
+    * swap, so writers must pause (the single-writer discipline every
+    * OPTIMIZE-style rewrite needs without a transaction log); (b) a
+    * probe that listed its files just before the swap can fail with
+    * FileNotFoundException mid-scan and must be retried. */
+  def compact(rows: DataFrame, path: String, partCols: String*): Unit = {
+    val tmp = sidecar(path, "compacting")
+    write(rows, tmp, partCols: _*)
+    val dst = new Path(path)
+    val src = new Path(tmp)
+    val fs = fileSystem(rows.sparkSession, dst)
+    val old = new Path(sidecar(path, "old"))
+    if (fs.exists(old)) fs.delete(old, true)
+    require(fs.rename(dst, old), s"compact: could not retire $dst")
+    if (!fs.rename(src, dst)) {
+      // if even the rollback rename fails the store IS gone — say so
+      // (the retired copy survives at `.old` for manual recovery)
+      if (fs.rename(old, dst))
+        sys.error(s"compact: could not install $src — previous layout restored")
+      else
+        sys.error(s"compact: could not install $src AND could not restore " +
+          s"the previous layout — store missing at $dst, retired copy at $old")
+    }
+    fs.delete(old, true)
+  }
+
+  private def fileSystem(spark: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(spark.sessionState.newHadoopConf())
 }

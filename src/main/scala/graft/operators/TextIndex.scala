@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.TextOps.tokens
 
@@ -53,28 +54,38 @@ object TextIndex {
         array_sort(collect_list(col("pos") + 1)).as("positions"))
       .withColumn("bucket", bucketOf(col("term"), numBuckets))
 
+  /** The `.stats` sidecar's layout: the BM25 globals and the bucket
+    * count. */
+  private val StatsSchema = StructType.fromDDL("n long, sumdl long, buckets int")
+
+  private def writeStats(spark: SparkSession, path: String, n: Long, sumDl: Long,
+                         numBuckets: Int): Unit =
+    StoreMaintain.writeSidecar(spark, path, "stats", StatsSchema,
+      Seq(Row(n, sumDl, numBuckets)))
+
+  /** (doc, dl) rows of `docs` and their (n, sum dl) totals. */
+  private def docLens(docs: DataFrame, idCol: String,
+                      textCol: String): (DataFrame, Row) = {
+    val toks = docs.select(col(idCol).as("doc"), tokens(col(textCol)).as("ts"))
+    (toks.select(col("doc"), size(col("ts")).as("dl")),
+      toks.agg(count(lit(1)).as("n"), sum(size(col("ts"))).as("sumdl")).head())
+  }
+
   def write(docs: DataFrame, idCol: String, textCol: String,
             numBuckets: Int, path: String): Unit = {
     val spark = docs.sparkSession
-    import spark.implicits._
-    postings(docs, idCol, textCol, numBuckets)
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(path)
-    val toks = docs.select(col(idCol).as("doc"), tokens(col(textCol)).as("ts"))
-    toks.select(col("doc"), size(col("ts")).as("dl"))
-      .write.mode("overwrite").parquet(path + ".doclens")
-    val agg = toks.agg(count(lit(1)).as("n"), sum(size(col("ts"))).as("sumdl"))
-      .head()
-    Seq((agg.getLong(0), agg.getLong(1), numBuckets)).toDF("n", "sumdl", "buckets")
-      .coalesce(1).write.mode("overwrite").parquet(path + ".stats")
-    Seq.empty[Long].toDF("doc")
-      .coalesce(1).write.mode("overwrite").parquet(path + ".tombstones")
+    StoreMaintain.write(postings(docs, idCol, textCol, numBuckets), path, "bucket")
+    val (lens, agg) = docLens(docs, idCol, textCol)
+    StoreMaintain.writeSidecarRows(lens, path, "doclens")
+    writeStats(spark, path, agg.getLong(0), agg.getLong(1), numBuckets)
+    StoreMaintain.writeSidecar(spark, path, "tombstones",
+      StructType.fromDDL("doc long"), Nil)
   }
 
   def open(spark: SparkSession, path: String): TextStore = {
-    val stats = spark.read.parquet(path + ".stats").head()
-    TextStore(spark.read.parquet(path),
-      spark.read.parquet(path + ".tombstones"),
+    val stats = StoreMaintain.readSidecar(spark, path, "stats", StatsSchema).head
+    TextStore(StoreMaintain.read(spark, path),
+      StoreMaintain.readSidecarRows(spark, path, "tombstones"),
       stats.getLong(0), stats.getLong(1), stats.getInt(2))
   }
 
@@ -84,45 +95,33 @@ object TextIndex {
     * scores equal a full rebuild over old ∪ new. */
   def append(spark: SparkSession, path: String, docs: DataFrame,
              idCol: String, textCol: String): Unit = {
-    import spark.implicits._
     val store = open(spark, path)
-    postings(docs, idCol, textCol, store.numBuckets)
-      .repartition(col("bucket"))
-      .write.mode("append").partitionBy("bucket").parquet(path)
-    val toks = docs.select(col(idCol).as("doc"), tokens(col(textCol)).as("ts"))
-    toks.select(col("doc"), size(col("ts")).as("dl"))
-      .write.mode("append").parquet(path + ".doclens")
-    val agg = toks.agg(count(lit(1)).as("n"), sum(size(col("ts"))).as("sumdl"))
-      .head()
-    Seq((store.n + agg.getLong(0), store.sumDl + agg.getLong(1),
-        store.numBuckets))
-      .toDF("n", "sumdl", "buckets")
-      .coalesce(1).write.mode("overwrite").parquet(path + ".stats")
+    StoreMaintain.append(postings(docs, idCol, textCol, store.numBuckets),
+      path, "bucket")
+    val (lens, agg) = docLens(docs, idCol, textCol)
+    StoreMaintain.writeSidecarRows(lens, path, "doclens", append = true)
+    writeStats(spark, path, store.n + agg.getLong(0), store.sumDl + agg.getLong(1),
+      store.numBuckets)
   }
 
   /** REMOVE documents by id: tombstone them (no posting rewrite — the
     * Lucene model) and subtract their exact token counts from the
     * stats sidecar so scores match a rebuild-without. */
   def remove(spark: SparkSession, path: String, ids: DataFrame,
-             idCol: String): Unit = {
-    import spark.implicits._
+             idCol: String): Unit = Pins.scope { pins =>
     val store = open(spark, path)
-    val idRel = ids.select(col(idCol).as("doc")).distinct()
-      .join(store.tombstones, Seq("doc"), "left_anti")
-      .localCheckpoint()
-    val gone = spark.read.parquet(path + ".doclens")
+    val idRel = pins(ids.select(col(idCol).as("doc")).distinct()
+      .join(store.tombstones, Seq("doc"), "left_anti"))
+    val gone = StoreMaintain.readSidecarRows(spark, path, "doclens")
       .join(broadcast(idRel), Seq("doc"), "left_semi")
       .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("sumdl"))
       .head()
-    // lineage broken by the checkpoint, so the overwrite of the
-    // tombstone dir never reads the files it replaces
-    val next = store.tombstones.select(col("doc")).unionAll(idRel)
-      .localCheckpoint()
-    next.coalesce(1).write.mode("overwrite").parquet(path + ".tombstones")
-    Seq((store.n - gone.getLong(0), store.sumDl - gone.getLong(1),
-        store.numBuckets))
-      .toDF("n", "sumdl", "buckets")
-      .coalesce(1).write.mode("overwrite").parquet(path + ".stats")
+    // pinned, so the overwrite of the tombstone sidecar never reads the
+    // files it replaces
+    val next = pins(store.tombstones.select(col("doc")).unionAll(idRel))
+    StoreMaintain.writeSidecarRows(next.coalesce(1), path, "tombstones")
+    writeStats(spark, path, store.n - gone.getLong(0), store.sumDl - gone.getLong(1),
+      store.numBuckets)
   }
 
   /** BM25-ranked top-`topK` for `terms` against an opened store —

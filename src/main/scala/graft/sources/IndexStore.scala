@@ -19,18 +19,13 @@ object IndexStore {
     * a rewrite must never leave a stale candidate snapshot answering
     * vicinity queries (re-register after the write to re-pin). */
   def replaceDocs(index: DataFrame, path: String): Unit = {
-    // per-writer option: the session's overwrite mode stays as it was
-    index.write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("docId")
-      .parquet(path)
+    graft.operators.StoreMaintain.rewritePartitions(index, path, "docId")
     graft.plans.VectorIndexCatalog.invalidateStore(path)
   }
 
   /** Load the whole store or one document's partition (pruned scan). */
   def load(spark: SparkSession, path: String, docId: Option[Long] = None): DataFrame = {
-    val df = spark.read.parquet(path)
+    val df = graft.operators.StoreMaintain.read(spark, path)
     docId.map(d => df.filter(col("docId") === d)).getOrElse(df)
   }
 

@@ -568,6 +568,76 @@ class IndexExtrasSpec extends SparkSpec {
     assert(GraphAnn.openGraph(spark, s"$dir/g").rows.count() == 300)
   }
 
+  test("every store family opens with one job per sidecar and no schema-inference job") {
+    val dir = tmpDir("graftopen")
+    val e = Tables.embeddings(spark, sf0001)
+    val docs = Tables.documents(spark, sf0001)
+    val pts = Ingest.randomClustered(spark, 200, 4, 4).localCheckpoint()
+    Similarity.writeBucketed(pts, "id", "vector", Similarity.hyperplanes(3, 4), s"$dir/lsh")
+    Similarity.writeIvf(pts, "id", "vector", 4, s"$dir/ivf")
+    IvfPq.write(e, "vec_id", "embedding", numLists = 4, coarseIters = 0,
+      m = 8, k = 16, pqIters = 0, s"$dir/pq")
+    IvfPq.writeOpq(e, "vec_id", "embedding", numLists = 4, coarseIters = 0,
+      m = 8, k = 16, pqIters = 0, s"$dir/opq")
+    IvfSq.write(e, "vec_id", "embedding", 4, 0, s"$dir/sq")
+    BinaryIndex.write(e, "vec_id", "embedding", 64, s"$dir/bin")
+    ProductQuant.writePq(e, "vec_id", "embedding", 8, 16, 0, s"$dir/flatpq")
+    Dedup.writeShingleStore(docs, "doc_id", "text", 3, s"$dir/sh", buckets = 16)
+    Dedup.writeEvalStore(e, "vec_id", "embedding", 4, s"$dir/eval")
+    TextIndex.write(docs, "doc_id", "text", 16, s"$dir/txt")
+    SketchStore.write(Tables.events(spark, sf0001), "ts", "user_id", 8, s"$dir/hll")
+    // (family, jobs it may run: one per sidecar read, plus the one
+    // parallel partition listing of a store past 32 partition dirs)
+    val opens: Seq[(String, Int, () => Any)] = Seq(
+      ("lsh", 1, () => Similarity.openBucketed(spark, s"$dir/lsh")),
+      ("ivf", 1, () => Similarity.openIvf(spark, s"$dir/ivf")),
+      ("ivf-pq", 2, () => IvfPq.open(spark, s"$dir/pq")),
+      ("opq", 3, () => IvfPq.openOpq(spark, s"$dir/opq")),
+      ("ivf-sq8", 2, () => IvfSq.open(spark, s"$dir/sq")),
+      ("binary", 2, () => BinaryIndex.open(spark, s"$dir/bin")),
+      ("pq", 1, () => ProductQuant.probePq(spark, s"$dir/flatpq", e, "vec_id",
+        "embedding", QueryConstants.Q64, 10, 5)),
+      ("shingle", 1, () => Dedup.openShingleStore(spark, s"$dir/sh")),
+      ("eval", 1, () => Dedup.openEvalStore(spark, s"$dir/eval")),
+      ("text", 1, () => TextIndex.open(spark, s"$dir/txt")),
+      ("hll", 1, () => SketchStore.probeRange(spark, s"$dir/hll", "1970-01-01", "2100-01-01")))
+    val jobs = opens.map { case (name, _, open) => name -> jobsOf(open())._2 }
+    assert(jobs == opens.map { case (name, n, _) => name -> n })
+    // the footer-schema read still infers partition columns like Spark
+    assert(StoreMaintain.read(spark, s"$dir/hll").schema ==
+      spark.read.parquet(s"$dir/hll").schema)
+    assert(BinaryIndex.open(spark, s"$dir/bin").codes.schema ==
+      spark.read.parquet(s"$dir/bin").schema)
+  }
+
+  test("TextIndex.remove leaves no checkpoint pinned") {
+    val sc = spark.sparkContext
+    val dir = tmpDir("grafttextpin") + "/txt"
+    val docs = Tables.documents(spark, sf0001)
+    TextIndex.write(docs, "doc_id", "text", 4, dir)
+    val before = sc.getPersistentRDDs.keySet
+    TextIndex.remove(spark, dir, docs.filter(col("doc_id") % 5 === 0), "doc_id")
+    val stray = sc.getPersistentRDDs.keySet -- before
+    assert(stray.isEmpty, s"${stray.size} pinned RDDs left by the remove")
+    assert(TextIndex.open(spark, dir).tombstones.count() ==
+      docs.filter(col("doc_id") % 5 === 0).count())
+  }
+
+  test("a stage-probed buildAndWriteMerged leaves no checkpoint pinned") {
+    val sc = spark.sparkContext
+    val pts = Ingest.randomClustered(spark, 300, 4, 4).localCheckpoint()
+    val before = sc.getPersistentRDDs.keySet
+    val dir = tmpDir("graftmergedprobe")
+    val stages = scala.collection.mutable.ArrayBuffer.empty[String]
+    GraphAnn.buildAndWriteMerged(pts, "id", "vector", numLists = 4, nprobe = 2,
+      k = 6, alpha = 1.2, maxDegree = 6, path = s"$dir/g",
+      stageProbe = Some((label: String, _: Double) => stages += label))
+    val stray = sc.getPersistentRDDs.keySet -- before
+    assert(stray.isEmpty, s"${stray.size} pinned RDDs left by the stage-probed build")
+    assert(stages.exists(_.startsWith("edges")))
+    assert(GraphAnn.openGraph(spark, s"$dir/g").rows.count() == 300)
+  }
+
   test("localNodeLimit = 0 after a kept pin still runs the frontier search") {
     val e = Tables.embeddings(spark, sf0001)
     val q = QueryConstants.Q64

@@ -1924,8 +1924,8 @@ class IvfKnnJoinSpec extends SparkSpec {
     Similarity.writeIvf(e, "vec_id", "embedding", 16, s"$dir/store")
     val queries = e.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("qid0"), col("embedding").as("qv0"))
-    val got = Similarity.probeIvfBatch(spark, s"$dir/store", "vec_id",
-        "embedding", queries, "qid0", "qv0", nprobe = 2, k = 5)
+    val got = Similarity.probeIvfBatch(Similarity.openIvf(spark, s"$dir/store"),
+        "vec_id", "embedding", queries, "qid0", "qv0", nprobe = 2, k = 5)
       .select("qid", "vec_id").as[(Long, Long)].collect().toSet
     val want = Similarity.ivfKnnJoin(e, "vec_id", "embedding",
         queries, "qid0", "qv0", numLists = 16, nprobe = 2, k = 5)

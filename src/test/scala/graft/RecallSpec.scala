@@ -146,7 +146,8 @@ class RecallSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graftopq").toString
     IvfPq.write(mixed, "id", "embedding", numLists = 20, coarseIters = 2,
       m = 4, k = 16, pqIters = 1, path = s"$dir/plain")
-    val rPlain = recallM(q => IvfPq.probe(spark, s"$dir/plain", mixed,
+    val plain = IvfPq.open(spark, s"$dir/plain")
+    val rPlain = recallM(q => IvfPq.probe(plain, mixed,
       "id", "embedding", q, nprobe = 6, topN = 100, K))
     IvfPq.writeOpq(mixed, "id", "embedding", numLists = 20,
       coarseIters = 2, m = 4, k = 16, pqIters = 1, path = s"$dir/opq")
@@ -221,7 +222,8 @@ class RecallSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graftrecall").toString
     IvfPq.write(pts, "id", "embedding", numLists = 20, coarseIters = 2,
       m = 4, k = 16, pqIters = 1, path = s"$dir/store")
-    val r = recallOf(q => IvfPq.probe(spark, s"$dir/store", pts, "id",
+    val store = IvfPq.open(spark, s"$dir/store")
+    val r = recallOf(q => IvfPq.probe(store, pts, "id",
       "embedding", q, nprobe = 4, topN = 200, K))
     assert(r >= 0.7, s"IVFADC nprobe=4 topN=200 recall@10 $r below floor 0.7")
   }
@@ -244,8 +246,9 @@ class RecallSpec extends SparkSpec {
     val planes = Similarity.hyperplanes(6, 16)
     val dir = java.nio.file.Files.createTempDirectory("graftrecalllsh").toString
     Similarity.writeBucketed(pts, "id", "embedding", planes, s"$dir/store")
-    val r = recallOf(q => Similarity.probeBucketedMulti(spark, s"$dir/store",
-      "id", "embedding", planes, q, K))
+    val store = Similarity.openBucketed(spark, s"$dir/store")
+    val r = recallOf(q => Similarity.probeBucketedMulti(store,
+      "id", "embedding", q, K))
     assert(r >= 0.5, s"LSH multi-probe recall@10 $r below floor 0.5")
   }
 
@@ -313,31 +316,36 @@ class RecallSpec extends SparkSpec {
   }
 
   test("merged per-list graph build: recall floor, degree bound, determinism") {
-    // buildMerged — the corpus-scale build (vectors shuffled once into
-    // nprobe list partitions, local Vamana per list, rank-ordered
-    // cross-list merge). Same contracts as the flat build, with the
-    // documented merged-index recall trade (floor 0.80 vs flat 0.85).
-    val (graph, seeds) = GraphAnn.buildMerged(pts, "id", "embedding",
-      numLists = 20, nprobe = 3, k = 12, alpha = 1.2, maxDegree = 16)
-    val g = graph.localCheckpoint()
+    // the corpus-scale build (vectors shuffled once into nprobe list
+    // partitions, local Vamana per list, rank-ordered cross-list merge),
+    // written as a store and served from it. Same contracts as the flat
+    // build, with the documented merged-index recall trade (floor 0.80
+    // vs flat 0.85).
+    val dir = java.nio.file.Files.createTempDirectory("graftmerged").toString
+    def buildStore(path: String): GraphAnn.GraphStore = {
+      GraphAnn.buildAndWriteMerged(pts, "id", "embedding", numLists = 20,
+        nprobe = 3, k = 12, alpha = 1.2, maxDegree = 16, path = path)
+      GraphAnn.openGraph(spark, path)
+    }
+    val store = buildStore(s"$dir/a")
+    val g = store.rows
     val maxDeg = g.select(max(size(col("nbrs")))).head().getInt(0)
     assert(maxDeg <= 16, s"merge degree cap violated: $maxDeg > 16")
     val avgDeg = g.select(avg(size(col("nbrs")))).head().getDouble(0)
     assert(avgDeg >= 4, s"merged graph too sparse to serve: avg degree $avgDeg")
-    val pinned = GraphAnn.pin(g, seeds)
+    val pinned = GraphAnn.pinStore(store)
     assert(pinned.size == 4000, s"pin dropped nodes: ${pinned.size}")
     val r = recallOf(q => GraphAnn.graphKnn(spark, pinned, q, K, ef = 64))
     assert(r >= 0.80, s"merged-build ef=64 recall@10 $r below floor 0.80")
     // deterministic replay (routed assignment + local sort + rank merge
     // are all order-pinned)
-    val (graph2, seeds2) = GraphAnn.buildMerged(pts, "id", "embedding",
-      numLists = 20, nprobe = 3, k = 12, alpha = 1.2, maxDegree = 16)
-    assert(seeds2.toSeq == seeds.toSeq, "merged seed set must be deterministic")
-    val h1 = g.select(col("id"), concat_ws(",", col("nbrs")).as("n"))
-      .orderBy(col("id")).collect().map(_.toString).mkString("|").hashCode
-    val h2 = graph2.select(col("id"), concat_ws(",", col("nbrs")).as("n"))
-      .orderBy(col("id")).collect().map(_.toString).mkString("|").hashCode
-    assert(h1 == h2, "merged graph build must be deterministic")
+    val store2 = buildStore(s"$dir/b")
+    assert(store2.seeds.toSeq == store.seeds.toSeq,
+      "merged seed set must be deterministic")
+    def hashOf(rows: org.apache.spark.sql.DataFrame) =
+      rows.select(col("id"), concat_ws(",", col("nbrs")).as("n"))
+        .orderBy(col("id")).collect().map(_.toString).mkString("|").hashCode
+    assert(hashOf(g) == hashOf(store2.rows), "merged graph build must be deterministic")
   }
 
   test("graph store: roundtrip, FreshDiskANN append, tombstone remove + consolidate") {

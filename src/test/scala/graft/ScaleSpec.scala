@@ -19,8 +19,8 @@ class ScaleSpec extends SparkSpec {
     val planes = Similarity.hyperplanes(8, 64)
     Similarity.writeBucketed(e, "vec_id", "embedding", planes, dir)
 
-    val probe = Similarity.probeBucketed(spark, dir, "vec_id", "embedding",
-      planes, QueryConstants.Q64, 10)
+    val probe = Similarity.probeBucketed(Similarity.openBucketed(spark, dir),
+      "vec_id", "embedding", QueryConstants.Q64, 10)
     // partition pruning visible in the scan
     val plan = probe.queryExecution.executedPlan.toString
     assert(prunedOn(plan, "bucket"),
@@ -36,10 +36,10 @@ class ScaleSpec extends SparkSpec {
     val e = Tables.embeddings(spark, sf0001)
     val planes = Similarity.hyperplanes(8, 64)
     Similarity.writeBucketed(e, "vec_id", "embedding", planes, dir)
-    val single = Similarity.probeBucketed(spark, dir, "vec_id", "embedding",
-      planes, QueryConstants.Q64, 10).select("vec_id").as[Long].collect().toSet
-    val multi = Similarity.probeBucketedMulti(spark, dir, "vec_id", "embedding",
-      planes, QueryConstants.Q64, 10).select("vec_id").as[Long].collect().toSet
+    val single = Similarity.probeBucketed(Similarity.openBucketed(spark, dir),
+      "vec_id", "embedding", QueryConstants.Q64, 10).select("vec_id").as[Long].collect().toSet
+    val multi = Similarity.probeBucketedMulti(Similarity.openBucketed(spark, dir),
+      "vec_id", "embedding", QueryConstants.Q64, 10).select("vec_id").as[Long].collect().toSet
     val exact = BruteForce.knn(e, "embedding", "vec_id", QueryConstants.Q64, 10)
       .select("vec_id").as[Long].collect().toSet
     assert(multi.size >= single.size)
@@ -51,7 +51,7 @@ class ScaleSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graftivf").toString + "/store"
     val e = Tables.embeddings(spark, sf0001)
     Similarity.writeIvf(e, "vec_id", "embedding", 16, dir)
-    val probe = Similarity.probeIvf(spark, dir, "vec_id", "embedding",
+    val probe = Similarity.probeIvf(Similarity.openIvf(spark, dir), "vec_id", "embedding",
       QueryConstants.Q64, 4, 10)
     val plan = probe.queryExecution.executedPlan.toString
     assert(prunedOn(plan, "list_id"),
@@ -68,7 +68,7 @@ class ScaleSpec extends SparkSpec {
     Similarity.writeIvf(e, "vec_id", "embedding", 16, dir)
     val queries = e.filter(col("vec_id") % 250 === 0)
       .select(col("vec_id").as("qid0"), col("embedding").as("qv0"))
-    val probe = Similarity.probeIvfBatch(spark, dir, "vec_id", "embedding",
+    val probe = Similarity.probeIvfBatch(Similarity.openIvf(spark, dir), "vec_id", "embedding",
       queries, "qid0", "qv0", nprobe = 2, k = 5)
     val plan = probe.queryExecution.executedPlan.toString
     assert(prunedOn(plan, "list_id"),
@@ -85,7 +85,7 @@ class ScaleSpec extends SparkSpec {
     val e = Tables.embeddings(spark, sf0001)
     IvfPq.write(e, "vec_id", "embedding", numLists = 16, coarseIters = 0,
       m = 8, k = 16, pqIters = 0, dir)
-    val probe = IvfPq.probe(spark, dir, e, "vec_id", "embedding",
+    val probe = IvfPq.probe(IvfPq.open(spark, dir), e, "vec_id", "embedding",
       QueryConstants.Q64, nprobe = 4, topN = 50, k = 10)
     // the codes scan reads only the nprobe list partitions
     val plan = probe.queryExecution.executedPlan.toString
@@ -97,7 +97,7 @@ class ScaleSpec extends SparkSpec {
     assert(got.length == 10)
     assert(got.map(_._2) == got.map(_._2).sorted)
     // probing every list with topN >= n degenerates to exact brute top-k
-    val full = IvfPq.probe(spark, dir, e, "vec_id", "embedding",
+    val full = IvfPq.probe(IvfPq.open(spark, dir), e, "vec_id", "embedding",
         QueryConstants.Q64, nprobe = 16, topN = 1000, k = 10)
       .select("vec_id").as[Long].collect().toSeq
     val brute = BruteForce.knn(e, "embedding", "vec_id", QueryConstants.Q64, 10)
@@ -154,8 +154,8 @@ class ScaleSpec extends SparkSpec {
       "vec_id", "embedding", planes, s"$base/rebuilt")
     assert(rows(s"$base/inc") == rows(s"$base/rebuilt"))
     // probes of the maintained store match the rebuilt store exactly
-    def probe(p: String) = Similarity.probeBucketedMulti(spark, p, "vec_id",
-      "embedding", planes, QueryConstants.Q64, 10)
+    def probe(p: String) = Similarity.probeBucketedMulti(
+      Similarity.openBucketed(spark, p), "vec_id", "embedding", QueryConstants.Q64, 10)
       .select("vec_id").as[Long].collect().toSeq
     assert(probe(s"$base/inc") == probe(s"$base/rebuilt"))
   }
@@ -173,7 +173,7 @@ class ScaleSpec extends SparkSpec {
       e.filter(col("vec_id") % 7 === 0).select("vec_id"), "vec_id", "list_id")
     assert(rows(s"$base/store") == before.filterNot(r => doomedIds(r._1)))
     // the centroid sidecar is untouched: probes still partition-pruned
-    val probe = Similarity.probeIvf(spark, s"$base/store", "vec_id",
+    val probe = Similarity.probeIvf(Similarity.openIvf(spark, s"$base/store"), "vec_id",
       "embedding", QueryConstants.Q64, 4, 10)
     assert(prunedOn(probe.queryExecution.executedPlan.toString, "list_id"))
     assert(probe.select("vec_id").as[Long].collect()
@@ -191,7 +191,7 @@ class ScaleSpec extends SparkSpec {
     // reference: assign the WHOLE corpus with the old store's frozen
     // centroid + codebook sidecars (a full re-write would re-train)
     val cents = Similarity.readIvfCentroids(spark, s"$base/store")
-    val cb = IvfPq.readCodebook(spark, s"$base/store")
+    val cb = operators.ProductQuant.readCodebook(spark, s"$base/store")
     def key(df: org.apache.spark.sql.DataFrame) = df
       .select(col("vec_id"), col("list_id").cast("long"),
         concat_ws(",", col("codes")))
@@ -206,7 +206,7 @@ class ScaleSpec extends SparkSpec {
     assert(after == want.filterNot(_._1 % 7 == 0))
     val queries = e.filter(col("vec_id") % 250 === 0)
       .select(col("vec_id").as("qid0"), col("embedding").as("qv0"))
-    val got = IvfPq.probeBatch(spark, s"$base/store", e, "vec_id", "embedding",
+    val got = IvfPq.probeBatch(IvfPq.open(spark, s"$base/store"), e, "vec_id", "embedding",
         queries, "qid0", "qv0", nprobe = 4, topN = 50, k = 10)
       .select("vec_id").as[Long].collect()
     assert(got.nonEmpty && got.forall(_ % 7 != 0))
@@ -280,8 +280,8 @@ class ScaleSpec extends SparkSpec {
     Similarity.writeBucketed(e, "vec_id", "embedding", planes, dir)
     val queries = e.filter(col("vec_id") % 125 === 0)
       .select(col("vec_id").as("qid0"), col("embedding").as("qv0"))
-    val probe = Similarity.probeBucketedBatch(spark, dir, "vec_id",
-      "embedding", queries, "qid0", "qv0", planes, k = 5)
+    val probe = Similarity.probeBucketedBatch(Similarity.openBucketed(spark, dir),
+      "vec_id", "embedding", queries, "qid0", "qv0", k = 5)
     val plan = probe.queryExecution.executedPlan.toString
     assert(prunedOn(plan, "bucket"),
       "expected PartitionFilters on bucket on the batch bucketed-store read")
@@ -294,8 +294,8 @@ class ScaleSpec extends SparkSpec {
       queries, "qid0", "qv0", planes, 5))
     assert(rows(probe) == want && want.nonEmpty)
     // single-bucket mode matches the a7 join too
-    val single = rows(Similarity.probeBucketedBatch(spark, dir, "vec_id",
-      "embedding", queries, "qid0", "qv0", planes, 5, multiProbe = false))
+    val single = rows(Similarity.probeBucketedBatch(Similarity.openBucketed(spark, dir),
+      "vec_id", "embedding", queries, "qid0", "qv0", 5, multiProbe = false))
     val a7 = rows(Similarity.lshKnnJoin(e, "vec_id", "embedding",
       queries, "qid0", "qv0", planes, 5))
     assert(single == a7)
@@ -308,7 +308,7 @@ class ScaleSpec extends SparkSpec {
       m = 8, k = 16, pqIters = 0, dir)
     val queries = e.filter(col("vec_id") % 125 === 0)
       .select(col("vec_id").as("qid0"), col("embedding").as("qv0"))
-    val batch = IvfPq.probeBatch(spark, dir, e, "vec_id", "embedding",
+    val batch = IvfPq.probeBatch(IvfPq.open(spark, dir), e, "vec_id", "embedding",
       queries, "qid0", "qv0", nprobe = 4, topN = 50, k = 10)
     val plan = batch.queryExecution.executedPlan.toString
     assert(prunedOn(plan, "list_id"),
@@ -323,7 +323,7 @@ class ScaleSpec extends SparkSpec {
       .as[(Long, Seq[Double])].collect()
     assert(qs.nonEmpty)
     qs.foreach { case (qid, qv) =>
-      val single = IvfPq.probe(spark, dir, e, "vec_id", "embedding",
+      val single = IvfPq.probe(IvfPq.open(spark, dir), e, "vec_id", "embedding",
           qv, nprobe = 4, topN = 50, k = 10)
         .select("vec_id").as[Long].collect().toSeq
       assert(got(qid) == single, s"query $qid diverged")
@@ -739,7 +739,7 @@ class ScaleSpec extends SparkSpec {
     assert(got == expected && got.nonEmpty)
   }
 
-  test("serving handles: handle-based probes equal path-based probes") {
+  test("serving handles: a held handle probes like a freshly opened one") {
     val base = java.nio.file.Files.createTempDirectory("grafthandle").toString
     val e = Tables.embeddings(spark, sf0001)
     val q = QueryConstants.Q64
@@ -751,29 +751,29 @@ class ScaleSpec extends SparkSpec {
     val lshStore = Similarity.openBucketed(spark, s"$base/lsh")
     assert(Similarity.probeBucketed(lshStore, "vec_id", "embedding", q, 10)
         .select("vec_id").as[Long].collect().toSeq ==
-      Similarity.probeBucketed(spark, s"$base/lsh", "vec_id", "embedding",
-        planes, q, 10).select("vec_id").as[Long].collect().toSeq)
+      Similarity.probeBucketed(Similarity.openBucketed(spark, s"$base/lsh"),
+        "vec_id", "embedding", q, 10).select("vec_id").as[Long].collect().toSeq)
     assert(Similarity.probeBucketedMulti(lshStore, "vec_id", "embedding", q, 10)
         .select("vec_id").as[Long].collect().toSeq ==
-      Similarity.probeBucketedMulti(spark, s"$base/lsh", "vec_id", "embedding",
-        planes, q, 10).select("vec_id").as[Long].collect().toSeq)
+      Similarity.probeBucketedMulti(Similarity.openBucketed(spark, s"$base/lsh"),
+        "vec_id", "embedding", q, 10).select("vec_id").as[Long].collect().toSeq)
     assert(Similarity.probeBucketedBatch(lshStore, "vec_id", "embedding",
         queries, "qid0", "qv0", k = 5, multiProbe = true)
         .orderBy("qid", "vec_id").as[(Long, Long, Int, Double)].collect().toSeq ==
-      Similarity.probeBucketedBatch(spark, s"$base/lsh", "vec_id", "embedding",
-        queries, "qid0", "qv0", planes, k = 5)
+      Similarity.probeBucketedBatch(Similarity.openBucketed(spark, s"$base/lsh"),
+        "vec_id", "embedding", queries, "qid0", "qv0", k = 5)
         .orderBy("qid", "vec_id").as[(Long, Long, Int, Double)].collect().toSeq)
     // IVF
     Similarity.writeIvf(e, "vec_id", "embedding", 16, s"$base/ivf")
     val ivfStore = Similarity.openIvf(spark, s"$base/ivf")
     assert(Similarity.probeIvf(ivfStore, "vec_id", "embedding", q, 4, 10)
         .select("vec_id").as[Long].collect().toSeq ==
-      Similarity.probeIvf(spark, s"$base/ivf", "vec_id", "embedding", q, 4, 10)
+      Similarity.probeIvf(Similarity.openIvf(spark, s"$base/ivf"), "vec_id", "embedding", q, 4, 10)
         .select("vec_id").as[Long].collect().toSeq)
     assert(Similarity.probeIvfBatch(ivfStore, "vec_id", "embedding",
         queries, "qid0", "qv0", nprobe = 2, k = 5)
         .orderBy("qid", "vec_id").as[(Long, Long, Double)].collect().toSeq ==
-      Similarity.probeIvfBatch(spark, s"$base/ivf", "vec_id", "embedding",
+      Similarity.probeIvfBatch(Similarity.openIvf(spark, s"$base/ivf"), "vec_id", "embedding",
         queries, "qid0", "qv0", nprobe = 2, k = 5)
         .orderBy("qid", "vec_id").as[(Long, Long, Double)].collect().toSeq)
     // IVFADC
@@ -782,12 +782,12 @@ class ScaleSpec extends SparkSpec {
     val adcStore = IvfPq.open(spark, s"$base/adc")
     assert(IvfPq.probe(adcStore, e, "vec_id", "embedding", q, 4, 50, 10)
         .select("vec_id").as[Long].collect().toSeq ==
-      IvfPq.probe(spark, s"$base/adc", e, "vec_id", "embedding", q, 4, 50, 10)
+      IvfPq.probe(IvfPq.open(spark, s"$base/adc"), e, "vec_id", "embedding", q, 4, 50, 10)
         .select("vec_id").as[Long].collect().toSeq)
     assert(IvfPq.probeBatch(adcStore, e, "vec_id", "embedding",
         queries, "qid0", "qv0", nprobe = 2, topN = 50, k = 5)
         .orderBy("qid", "vec_id").as[(Long, Long, Double)].collect().toSeq ==
-      IvfPq.probeBatch(spark, s"$base/adc", e, "vec_id", "embedding",
+      IvfPq.probeBatch(IvfPq.open(spark, s"$base/adc"), e, "vec_id", "embedding",
         queries, "qid0", "qv0", nprobe = 2, topN = 50, k = 5)
         .orderBy("qid", "vec_id").as[(Long, Long, Double)].collect().toSeq)
     // the handle's probe plan must still partition-prune

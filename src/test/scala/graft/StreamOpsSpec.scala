@@ -299,8 +299,9 @@ class StreamOpsSpec extends SparkSpec {
     assert(st.awaitTermination(120000), "stream did not finish in 120 s")
     val got = spark.read.parquet(s"$base/out")
       .select("qid", "vec_id").as[(Long, Long)].collect().toSet
-    val want = operators.Similarity.probeIvfBatch(spark, s"$base/store",
-        "vec_id", "embedding", queries, "qid", "qv", nprobe = 4, k = 5)
+    val want = operators.Similarity.probeIvfBatch(
+        operators.Similarity.openIvf(spark, s"$base/store"), "vec_id", "embedding",
+        queries, "qid", "qv", nprobe = 4, k = 5)
       .select("qid", "vec_id").as[(Long, Long)].collect().toSet
     assert(got == want && got.nonEmpty)
     assert(got.map(_._1) == queries.select("qid").as[Long].collect().toSet,
@@ -378,7 +379,7 @@ class StreamOpsSpec extends SparkSpec {
     assert(st.awaitTermination(120000), "stream did not finish in 120 s")
     val got = spark.read.parquet(s"$base/out")
       .select("qid", "vec_id").as[(Long, Long)].collect().toSet
-    val want = operators.IvfPq.probeBatch(spark, s"$base/store", e,
+    val want = operators.IvfPq.probeBatch(operators.IvfPq.open(spark, s"$base/store"), e,
         "vec_id", "embedding", queries, "qid", "qv",
         nprobe = 2, topN = 10, k = 5)
       .select("qid", "vec_id").as[(Long, Long)].collect().toSet
