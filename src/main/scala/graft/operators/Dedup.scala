@@ -891,25 +891,21 @@ object Dedup {
     Seq.fill(n)((next() % (MinHashP - 1) + 1, next() % MinHashP))
   }
 
-  /** WIDE MinHash signatures (doc, s0..s{n-1}): base integer x =
-    * md5(shingle) hex prefix (15 digits) mod (2^31-1), sig_j = min over
-    * the doc's distinct k-shingles of (a_j·x + b_j) mod (2^31-1) — the
-    * Spark-MLlib-style 2-universal family (see [[MinHashP]] for why
-    * the modulus must be SMALL enough to actually wrap).
+  /** WIDE MinHash signatures (doc, s0..s{n-1}) over an already-built
+    * (doc, shingle) relation — callers that also need the shingles for
+    * verification (d7/d8/d12's `lshVerifiedPairs`) materialize the
+    * relation ONCE instead of re-deriving it from the documents scan.
+    * Base integer x = md5(shingle) hex prefix (15 digits) mod (2^31-1),
+    * sig_j = min over the doc's distinct k-shingles of (a_j·x + b_j) mod
+    * (2^31-1) — the Spark-MLlib-style 2-universal family (see
+    * [[MinHashP]] for why the modulus must be SMALL enough to actually
+    * wrap).
     *
     * Shape: ONE codegen'd md5 per shingle (the hash functions are
     * integer ops), then a single groupBy(doc) computing all n mins as
     * map-side-partial aggregates over ONE row per shingle — the exchange
     * carries one wide row per (doc × map task), never a posexplode'd
     * (shingles × hashes) expansion. */
-  def minHashSignatures(docs: DataFrame, idCol: String, textCol: String,
-                        k: Int, numHashes: Int): DataFrame =
-    minHashSignaturesFrom(shingleRows(docs, idCol, textCol, k), numHashes)
-
-  /** Signature aggregation over an already-built (doc, shingle) relation —
-    * lets callers that also need the shingles for verification (d7/d8/d12's
-    * `lshVerifiedPairs`) materialize the relation ONCE instead of
-    * re-deriving it from the documents scan. */
   private def minHashSignaturesFrom(sh: DataFrame, numHashes: Int): DataFrame = {
     val x30 = (conv(substring(md5(col("shingle").cast("binary")), 1, 15),
       16, 10).cast("long") % MinHashP).as("x30")
@@ -1774,16 +1770,15 @@ object Dedup {
       .withColumn("_eh", transform(col("_ev").cast("array<double>"),
         x => x / col("_en")))
     val cents = Similarity.ivfCentroids(e0, "eid", "_eh", numLists)
-    val assigned = e0.withColumn("list_id",
-      Similarity.ivfListId(col("_eh"), cents))
-    StoreMaintain.write(assigned.select(col("eid"), col("_ev"), col("_en"),
-      col("_eh"), col("list_id")), path, "list_id")
-    // sidecar: centroid + cover radius per list (empty lists keep
+    StoreMaintain.write(e0.select(col("eid"), col("_ev"), col("_en"), col("_eh"),
+      Similarity.ivfListId(col("_eh"), cents).as("list_id")), path, "list_id")
+    // sidecar: centroid + cover radius per list, from the rows just
+    // written, so the O(C·d) assignment runs once (empty lists keep
     // radius 0 — the bound may admit them, and the member join then
     // matches nothing)
     val centRel = Similarity.centroidRelation(spark, cents)
       .select(col("list_id").cast("long"), col("cv"))
-    val radii = assigned
+    val radii = StoreMaintain.read(spark, path)
       .join(broadcast(centRel), Seq("list_id"))
       .groupBy(col("list_id"))
       .agg(max(dist(col("_eh"), col("cv"))).as("radius"))

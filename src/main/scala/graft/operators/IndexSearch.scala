@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.lang.ref.SoftReference
-
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, Row, SparkSession}
@@ -9,10 +7,9 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BindReferences,
   Predicate, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.optimizer.ConstantFolding
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StructType}
 
@@ -35,13 +32,10 @@ import graft.plans.IndexedVicinityRule
   *    pinned tree's in-memory walk — the index is ~2N tiny rows, and the
   *    reference's SQL recursive CTE also runs on one node.
   *  - pinned once per file snapshot: a bare file scan (column selections
-  *    over a parquet read) has a snapshot — the relation's schema and the
-  *    sorted (path, length, modification time) of its listed files, the
-  *    files a query over that DataFrame reads. A small registry keeps
-  *    pins under their snapshots in a few softly held slots, least
-  *    recently used evicted first, within an eighth of the driver heap.
-  *    A tree pin is kept on its first collect; repeat queries walk it
-  *    with no job while its row count fits `localNodeLimit`.
+  *    over a parquet read) is keyed by its schema and sorted file listing,
+  *    and its pins are kept in [[Snapshots]]' small LRU registry. A tree
+  *    pin is kept on its first collect; repeat queries walk it with no
+  *    job while its row count fits `localNodeLimit`.
   *  - `searchExact` with both `index` and `points` bare file scans and a
   *    `Long` id: the first query against a `points` snapshot records it
   *    as seen and re-checks by job (below), so a one-off query pays no
@@ -58,11 +52,10 @@ import graft.plans.IndexedVicinityRule
   *  - `searchBox`/`searchBall` on a pinned tree and
   *    [[GraphAnn.graphKnn]] wrap their driver-built answers the same way
   *    ([[localRows]]): no encoder is derived per call.
-  *  - staleness, for both directories: a rewritten directory, read back,
-  *    lists new files, so its snapshot is new and pins afresh; an old
-  *    DataFrame keeps its old listing, as any Spark read does. Other
-  *    plans (filters, joins, computed columns, in-memory or checkpointed
-  *    relations) pin the tree on every call and keep the job re-check.
+  *  - staleness, for both directories, is the snapshot key's: a
+  *    rewritten directory, read back, pins afresh. Other plans (filters,
+  *    joins, computed columns, in-memory or checkpointed relations) pin
+  *    the tree on every call and keep the job re-check.
   *  - otherwise `searchExact` re-checks candidates as an id semi-join in
   *    the same job as the exact predicate: an id IN-set filter on
   *    `points` (the vicinity rule's form and cap), or a left semi-join
@@ -87,18 +80,12 @@ object IndexSearch {
     if (rows.length <= limit) Some(rows) else None
   }
 
-  /** The files a bare file scan reads: its relation's schema and the
-    * sorted (path, length, modification time) of every listed file. */
-  private final case class Snapshot(schema: StructType, files: Seq[(String, Long, Long)]) {
-    def bytes: Long = files.map(_._2).sum
-  }
-
   /** A tree pinned from a file snapshot, with its node-row count. */
   private final case class Tree(rows: Long, tree: PinnedIndex)
 
   /** A `points` pin's key: its file snapshot, the projection read from it
     * and the id column. */
-  private final case class RowsKey(snapshot: Snapshot, schema: StructType, idCol: String)
+  private final case class RowsKey(snapshot: Snapshots.Snapshot, schema: StructType, idCol: String)
 
   /** A `points` snapshot queried once and not pinned yet. */
   private case object Seen
@@ -115,64 +102,17 @@ object IndexSearch {
       Iterator.from(i).takeWhile(j => j < rows.length && rows(j).getLong(idAt) == id).map(rows))
   }
 
-  /** The pins kept per snapshot key, softly held: a few slots under a
-    * byte budget of an eighth of the driver heap, the least recently
-    * used evicted first. */
-  private object Kept {
-    private final class Slot(val pin: SoftReference[AnyRef], val bytes: Long)
-    private val MaxSlots = 8
-    private val slots = new java.util.LinkedHashMap[AnyRef, Slot](16, 0.75f, true)
-
-    def get(key: AnyRef): Option[AnyRef] = synchronized {
-      Option(slots.get(key)).flatMap { slot =>
-        val pin = Option(slot.pin.get)
-        if (pin.isEmpty) slots.remove(key)
-        pin
-      }
-    }
-
-    def put(key: AnyRef, pin: AnyRef, bytes: Long): Unit = synchronized {
-      slots.put(key, new Slot(new SoftReference(pin), bytes))
-      var total = 0L
-      slots.values.forEach(s => total += s.bytes)
-      val lru = slots.entrySet.iterator
-      while ((slots.size > MaxSlots || total > Runtime.getRuntime.maxMemory / 8) && lru.hasNext) {
-        val e = lru.next()
-        if (e.getKey != key) { total -= e.getValue.bytes; lru.remove() }
-      }
-    }
-  }
-
-  /** The snapshot of `df` when its plan is column selections over one
-    * file relation (as `VectorIndexCatalog` reads source paths); None
-    * otherwise. */
-  private def snapshotOf(df: DataFrame): Option[Snapshot] = {
-    def scan(plan: LogicalPlan): Option[HadoopFsRelation] = plan match {
-      case Project(list, child) if list.forall(_.isInstanceOf[AttributeReference]) =>
-        scan(child)
-      case lr: LogicalRelation => lr.relation match {
-        case h: HadoopFsRelation => Some(h)
-        case _ => None
-      }
-      case _ => None
-    }
-    scan(df.queryExecution.analyzed).map { h =>
-      Snapshot(h.schema, h.location.listFiles(Nil, Nil).flatMap(_.files)
-        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted)
-    }
-  }
-
   /** The index pinned, if it fits `localNodeLimit` rows: the kept pin of
     * its file snapshot (no job), else collected in one job and kept. */
-  private def pinWithin(index: DataFrame, snapshot: Option[Snapshot],
+  private def pinWithin(index: DataFrame, snapshot: Option[Snapshots.Snapshot],
                         localNodeLimit: Long): Option[PinnedIndex] =
-    snapshot.flatMap(Kept.get) match {
+    snapshot.flatMap(Snapshots.get) match {
       case Some(Tree(rows, tree)) => Option.when(rows <= localNodeLimit)(tree)
       case _ =>
         collectWithin(index.select(PinnedIndex.NodeCols.map(col): _*), localNodeLimit)
           .map { rows =>
             val tree = PinnedIndex.fromRows(rows)
-            snapshot.foreach(Kept.put(_, Tree(rows.length, tree), 48L * rows.length))
+            snapshot.foreach(Snapshots.put(_, Tree(rows.length, tree), 48L * rows.length))
             tree
           }
     }
@@ -190,9 +130,9 @@ object IndexSearch {
     val schema = points.schema
     val idAt = schema.fieldNames.indexOf(idName(schema.fieldNames.toSeq, idCol))
     if (idAt < 0 || schema(idAt).dataType != LongType) None
-    else snapshotOf(points).filter(_.bytes <= Runtime.getRuntime.maxMemory / 16).flatMap { s =>
+    else Snapshots.of(points).filter(_.bytes <= Runtime.getRuntime.maxMemory / 16).flatMap { s =>
       val key = RowsKey(s, schema, idCol)
-      Kept.get(key) match {
+      Snapshots.get(key) match {
         case Some(rows: Rows) => Some(rows)
         case Some(Seen) =>
           val qe = points.queryExecution
@@ -201,10 +141,10 @@ object IndexSearch {
             SQLExecution.withNewExecutionId(qe, Some("collect"))(qe.executedPlan.executeCollect())
               .filterNot(_.isNullAt(idAt)).map(r => toUnsafe(r).copy()).sortBy(_.getLong(idAt)),
             idAt)
-          Kept.put(key, rows, rows.bytes)
+          Snapshots.put(key, rows, rows.bytes)
           Some(rows)
         case _ =>
-          Kept.put(key, Seen, 0L)
+          Snapshots.put(key, Seen, 0L)
           None
       }
     }
@@ -213,7 +153,7 @@ object IndexSearch {
   /** Candidate leaf ids within the box (auto local/distributed). */
   def searchBox(index: DataFrame, q: Seq[Double], domain: Double,
                 localNodeLimit: Long = DefaultNodeLimit): DataFrame =
-    pinWithin(index, snapshotOf(index), localNodeLimit) match {
+    pinWithin(index, Snapshots.of(index), localNodeLimit) match {
       case Some(tree) => idRows(index.sparkSession, tree.candidates(q, domain))
       case None => frontierSearch(index, doubleVec(q), domain, Nil, None, hint = true)
     }
@@ -238,7 +178,7 @@ object IndexSearch {
       hits.select((key +: cols.filterNot(_ == key))
         .map(c => col("`" + c.replace("`", "``") + "`")): _*)
     }
-    val snapshot = snapshotOf(index)
+    val snapshot = Snapshots.of(index)
     pinWithin(index, snapshot, DefaultNodeLimit) match {
       case Some(tree) =>
         val ids = tree.candidatesL2(q, radius).distinct
@@ -300,7 +240,7 @@ object IndexSearch {
     * looser superset). */
   def searchBall(index: DataFrame, q: Seq[Double], radius: Double,
                  localNodeLimit: Long = DefaultNodeLimit): DataFrame =
-    pinWithin(index, snapshotOf(index), localNodeLimit) match {
+    pinWithin(index, Snapshots.of(index), localNodeLimit) match {
       case Some(tree) => idRows(index.sparkSession, tree.candidatesL2(q, radius))
       case None => frontierSearch(index, doubleVec(q), radius, Nil, None, hint = true)
     }
@@ -377,7 +317,7 @@ object IndexSearch {
                        vecCol: String, queries: DataFrame, qidCol: String,
                        qvecCol: String, radius: Double,
                        localNodeLimit: Long = DefaultNodeLimit): DataFrame = {
-    val cands = pinWithin(index, snapshotOf(index), localNodeLimit) match {
+    val cands = pinWithin(index, Snapshots.of(index), localNodeLimit) match {
       case Some(tree) =>
         PinnedIndex.candidatePairs(tree, queries, qidCol, qvecCol, radius)
       // distinct: an id held by two leaves reaches a query twice

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -40,14 +40,13 @@ object TextIndex {
   private def bucketOf(term: org.apache.spark.sql.Column, numBuckets: Int) =
     pmod(hash(term), lit(numBuckets))
 
-  /** Tokenize `docs` into the POSITIONAL posting relation (term, doc,
-    * tf, dl, positions) — positions 1-based in token order, the classic
-    * positional-index payload that turns the store phrase-capable
-    * (Lucene's default posting shape) at ~one extra int per token. */
-  private def postings(docs: DataFrame, idCol: String, textCol: String,
-                       numBuckets: Int): DataFrame =
-    docs.select(col(idCol).as("doc"), tokens(col(textCol)).as("ts"))
-      .select(col("doc"), size(col("ts")).as("dl"),
+  /** The POSITIONAL posting relation (term, doc, tf, dl, positions) of
+    * tokenized (doc, ts) rows — positions 1-based in token order, the
+    * classic positional-index payload that turns the store
+    * phrase-capable (Lucene's default posting shape) at ~one extra int
+    * per token. */
+  private def postings(toks: DataFrame, numBuckets: Int): DataFrame =
+    toks.select(col("doc"), size(col("ts")).as("dl"),
         posexplode(col("ts")).as(Seq("pos", "term")))
       .groupBy(col("term"), col("doc"))
       .agg(max(col("dl")).as("dl"), count(lit(1)).as("tf"),
@@ -63,21 +62,28 @@ object TextIndex {
     StoreMaintain.writeSidecar(spark, path, "stats", StatsSchema,
       Seq(Row(n, sumDl, numBuckets)))
 
-  /** (doc, dl) rows of `docs` and their (n, sum dl) totals. */
-  private def docLens(docs: DataFrame, idCol: String,
-                      textCol: String): (DataFrame, Row) = {
-    val toks = docs.select(col(idCol).as("doc"), tokens(col(textCol)).as("ts"))
-    (toks.select(col("doc"), size(col("ts")).as("dl")),
-      toks.agg(count(lit(1)).as("n"), sum(size(col("ts"))).as("sumdl")).head())
-  }
+  /** Tokenize `docs` once, write (`append`: add) their postings and their
+    * (doc, dl) rows, and return their (n, sum dl) totals, observed while
+    * the (doc, dl) rows are written. */
+  private def writeDocs(docs: DataFrame, idCol: String, textCol: String,
+                        numBuckets: Int, path: String, append: Boolean): (Long, Long) =
+    Pins.scope { pins =>
+      val toks = pins(docs.select(col(idCol).as("doc"), tokens(col(textCol)).as("ts")))
+      if (append) StoreMaintain.append(postings(toks, numBuckets), path, "bucket")
+      else StoreMaintain.write(postings(toks, numBuckets), path, "bucket")
+      val totals = Observation("doclens")
+      StoreMaintain.writeSidecarRows(toks.select(col("doc"), size(col("ts")).as("dl"))
+        .observe(totals, count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("sumdl")),
+        path, "doclens", append)
+      val agg = totals.get
+      (agg("n").asInstanceOf[Long], agg("sumdl").asInstanceOf[Long])
+    }
 
   def write(docs: DataFrame, idCol: String, textCol: String,
             numBuckets: Int, path: String): Unit = {
     val spark = docs.sparkSession
-    StoreMaintain.write(postings(docs, idCol, textCol, numBuckets), path, "bucket")
-    val (lens, agg) = docLens(docs, idCol, textCol)
-    StoreMaintain.writeSidecarRows(lens, path, "doclens")
-    writeStats(spark, path, agg.getLong(0), agg.getLong(1), numBuckets)
+    val (n, sumDl) = writeDocs(docs, idCol, textCol, numBuckets, path, append = false)
+    writeStats(spark, path, n, sumDl, numBuckets)
     StoreMaintain.writeSidecar(spark, path, "tombstones",
       StructType.fromDDL("doc long"), Nil)
   }
@@ -96,12 +102,8 @@ object TextIndex {
   def append(spark: SparkSession, path: String, docs: DataFrame,
              idCol: String, textCol: String): Unit = {
     val store = open(spark, path)
-    StoreMaintain.append(postings(docs, idCol, textCol, store.numBuckets),
-      path, "bucket")
-    val (lens, agg) = docLens(docs, idCol, textCol)
-    StoreMaintain.writeSidecarRows(lens, path, "doclens", append = true)
-    writeStats(spark, path, store.n + agg.getLong(0), store.sumDl + agg.getLong(1),
-      store.numBuckets)
+    val (n, sumDl) = writeDocs(docs, idCol, textCol, store.numBuckets, path, append = true)
+    writeStats(spark, path, store.n + n, store.sumDl + sumDl, store.numBuckets)
   }
 
   /** REMOVE documents by id: tombstone them (no posting rewrite — the

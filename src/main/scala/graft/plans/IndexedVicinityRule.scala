@@ -1,15 +1,17 @@
 package graft.plans
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, GlobalLimit, LocalLimit, LogicalPlan, Project, Sort}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex,
+  LogicalRelation}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
 
 import graft.functions.DistSqExpr
-import graft.operators.PinnedIndex
+import graft.operators.{PinnedIndex, Snapshots}
 
 import scala.collection.concurrent.TrieMap
 
@@ -39,11 +41,15 @@ object VectorIndexCatalog {
     * action inside optimization, ever. The pin budget is PinnedIndex's
     * (~48 bytes/node; a 10M point index ≈ 1 GB) — beyond it, don't
     * register: use the library search path (`IndexSearch.searchExact` /
-    * frontier descent). `vecs` holds the point vectors of a
-    * registerServing pin. */
-  case class Entry(idCol: String, vecCol: String, index: DataFrame,
-                   tree: PinnedIndex,
-                   indexSources: Set[String],
+    * frontier descent). `files` is the table's file listing at
+    * registration: the rule uses the entry only while the queried
+    * relation lists exactly those files, so an appended or rewritten
+    * table, read back, runs the exact predicate alone until it is
+    * registered again. A rewrite of the index alone keeps the entry: its
+    * tree still indexes the same rows. `vecs` holds the point vectors of
+    * a registerServing pin. */
+  case class Entry(idCol: String, vecCol: String, tree: PinnedIndex,
+                   files: Snapshots.Listing,
                    vecs: Option[scala.collection.mutable.LongMap[Array[Float]]] = None,
                    hasNullVecs: Boolean = false) {
     /** Memo for the kNN rewrite's driver-side walks, keyed (q, k, cap):
@@ -60,32 +66,18 @@ object VectorIndexCatalog {
   private def norm(p: String): String =
     p.stripPrefix("file:").stripSuffix("/")
 
-  /** File roots backing the index DataFrame (empty for a purely
-    * in-memory index). Recorded so a store rewrite can invalidate the
-    * pins that were read from it — see invalidateStore. */
-  private def sourcePaths(index: DataFrame): Set[String] =
-    index.queryExecution.analyzed.collect {
-      case lr: LogicalRelation => lr.relation match {
-        case h: HadoopFsRelation =>
-          h.location.rootPaths.map(p => norm(p.toString)).toSeq
-        case _ => Nil
-      }
-    }.flatten.toSet
-
-  /** Pin `index` for vicinity queries against the table at `path`.
-    *
-    * STALENESS CONTRACT: the pinned node set is a snapshot. Pins read
-    * from an IndexStore are invalidated automatically when
-    * IndexStore.replaceDocs rewrites that store; any OTHER mutation —
-    * IndexMaintain.addPoints / removePoints outputs, an in-memory
-    * rebuild, a rewrite of the data table itself — must be followed by
-    * re-register (or unregister), or queries keep pruning by the old
-    * snapshot. */
-  def register(path: String, idCol: String, index: DataFrame,
-               vecCol: String = "embedding"): Unit = {
-    entries.put(norm(path),
-      Entry(idCol, vecCol, index, PinnedIndex.pin(index), sourcePaths(index)))
+  /** The file listing of the table at `path`, as a read of it lists. */
+  private def filesAt(spark: SparkSession, path: String): Snapshots.Listing = {
+    val p = new Path(path)
+    val qualified = p.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(p)
+    Snapshots.files(new InMemoryFileIndex(spark, Seq(qualified), Map.empty, None))
   }
+
+  /** Pin `index` for vicinity queries against the table at `path`. */
+  def register(path: String, idCol: String, index: DataFrame,
+               vecCol: String = "embedding"): Unit =
+    entries.put(norm(path), Entry(idCol, vecCol, PinnedIndex.pin(index),
+      filesAt(index.sparkSession, path)))
 
   /** Pin `index` AND the point vectors for serving-mode kNN rewrites:
     * with vectors pinned the rule can answer `ORDER BY dist(vec, q)
@@ -95,34 +87,22 @@ object VectorIndexCatalog {
     * PIN BUDGET: same as PinnedIndex.pinWithVectors — the vector map is
     * N·d·4 bytes (10M × 96 floats ≈ 4 GB); beyond it, register() only:
     * vicinity rewrites keep working and kNN runs the library path
-    * (PinnedIndex.knnDistributed). Same staleness contract as
-    * register(). */
+    * (PinnedIndex.knnDistributed). */
   def registerServing(path: String, idCol: String, index: DataFrame,
                       points: DataFrame, vecCol: String = "embedding"): Unit = {
     val (tree, vecs) = PinnedIndex.pinWithVectors(index, points, idCol, vecCol)
-    // part of the pin snapshot: whether any row has a null vector. Null
-    // distances sort FIRST under the default ascending order, so when
-    // nulls exist the kNN rewrite must keep those rows (an IsNull
-    // disjunct that also disables scan pushdown) — when the snapshot has
-    // none, the rewrite emits the pushable pure-conjunction form. Same
-    // staleness contract as the node pin.
+    // part of the pin: whether any row has a null vector. Null distances
+    // sort FIRST under the default ascending order, so when nulls exist
+    // the kNN rewrite must keep those rows (an IsNull disjunct that also
+    // disables scan pushdown) — when the pin has none, the rewrite emits
+    // the pushable pure-conjunction form.
     val hasNulls = points.filter(
       org.apache.spark.sql.functions.col(vecCol).isNull).head(1).nonEmpty
-    // points sources join the invalidation set: a rewrite of either the
-    // index store or the vector table must drop the pinned snapshot
-    entries.put(norm(path), Entry(idCol, vecCol, index, tree,
-      sourcePaths(index) ++ sourcePaths(points), Some(vecs), hasNulls))
+    entries.put(norm(path), Entry(idCol, vecCol, tree,
+      filesAt(index.sparkSession, path), Some(vecs), hasNulls))
   }
 
   def unregister(path: String): Unit = entries.remove(norm(path))
-
-  /** Drop every registration whose pinned nodes were read from the
-    * store at `storePath` — called by IndexStore.replaceDocs so a store
-    * rewrite can never leave a stale InSet answering queries. */
-  def invalidateStore(storePath: String): Unit = {
-    val p = norm(storePath)
-    entries.filterInPlace { case (_, e) => !e.indexSources.contains(p) }
-  }
 
   def lookup(path: String): Option[Entry] = entries.get(norm(path))
 
@@ -173,12 +153,15 @@ case class IndexedVicinityRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case _ => None
     }
 
+  /** The entry registered for `rel`'s table, while `rel` lists the files
+    * the entry was registered with. */
   private def entryFor(rel: LogicalRelation): Option[VectorIndexCatalog.Entry] =
     rel.relation match {
       case h: HadoopFsRelation =>
         h.location.rootPaths.iterator
           .flatMap(p => VectorIndexCatalog.lookup(p.toString))
           .nextOption()
+          .filter(_.files == Snapshots.files(h.location))
       case _ => None
     }
 
@@ -304,10 +287,10 @@ case class IndexedVicinityRule(spark: SparkSession) extends Rule[LogicalPlan] {
         GreaterThanOrEqual(idAttr, Literal(cands.min)),
         LessThanOrEqual(idAttr, Literal(cands.max))), inSet)
       // ascending NULLS FIRST (the default) ranks null distances ahead of
-      // the candidates — when the pinned snapshot saw null vectors those
+      // the candidates — when the pinned table had null vectors those
       // rows must be kept (at the cost of scan pushdown: an Or can't be
-      // split into pushable conjuncts). A null-free snapshot emits the
-      // pure conjunction — pin staleness contract applies as everywhere.
+      // split into pushable conjuncts). A null-free pin emits the pure
+      // conjunction; entryFor's file check covers a changed table.
       if (so.nullOrdering == NullsFirst && vecAttr.nullable && entry.hasNullVecs)
         Or(cond, IsNull(vecAttr)) else cond
     }

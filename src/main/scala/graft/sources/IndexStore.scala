@@ -14,14 +14,9 @@ import org.apache.spark.sql.functions._
   * `load(docId = Some(x))` scans only that partition's files. */
 object IndexStore {
 
-  /** Write (overwriting only the docIds present in `index`). Any
-    * VectorIndexCatalog pin that was read from this store is dropped —
-    * a rewrite must never leave a stale candidate snapshot answering
-    * vicinity queries (re-register after the write to re-pin). */
-  def replaceDocs(index: DataFrame, path: String): Unit = {
+  /** Write (overwriting only the docIds present in `index`). */
+  def replaceDocs(index: DataFrame, path: String): Unit =
     graft.operators.StoreMaintain.rewritePartitions(index, path, "docId")
-    graft.plans.VectorIndexCatalog.invalidateStore(path)
-  }
 
   /** Load the whole store or one document's partition (pruned scan). */
   def load(spark: SparkSession, path: String, docId: Option[Long] = None): DataFrame = {
@@ -82,9 +77,9 @@ object IndexStore {
     * over its documents), and replace all touched store partitions with
     * ONE dynamic-partition-overwrite write. A serving layout with D
     * documents pays O(1) Spark jobs instead of D × (filter + build loop
-    * + write) — same store contents per document (spec-asserted), same
-    * staleness contract as [[replaceDocs]]. A single out-sized document
-    * should still go through [[indexDocument]] (distributed BFS). */
+    * + write) — same store contents per document (spec-asserted). A
+    * single out-sized document should still go through
+    * [[indexDocument]] (distributed BFS). */
   def indexAllDocuments(spark: SparkSession, texts: DataFrame,
                         idCol: String, jsonVecCol: String, path: String,
                         bucketSize: Int = 1): Unit = {

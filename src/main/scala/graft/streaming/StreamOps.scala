@@ -163,11 +163,6 @@ object StreamOps {
       }
   }
 
-  /** Flush helper for tests: sessions still open in state (the batch twin
-    * reports them; a live stream would emit them on timeout). */
-  def windowedCountsBatchTwin(spark: SparkSession, sfDir: String): DataFrame =
-    graft.operators.Relational.eventWindows(spark, sfDir)
-
   case class FunnelState(timesUs: List[Long])
   case class FunnelOut(user_id: Long, step: Int, ts: Timestamp)
 
@@ -355,26 +350,5 @@ object StreamOps {
             spark, path, consolidateAtRatio)
           ()
         }
-      }
-
-  /** Incremental index maintenance from a stream: every micro-batch of
-    * new points is routed + merged into the index via
-    * IndexMaintain.addPoints (foreachBatch — the reference's add path
-    * R4 run continuously). Returns the started query's name. */
-  def incrementalIndex(newPoints: DataFrame, idCol: String, vecCol: String,
-                       indexHolder: java.util.concurrent.atomic.AtomicReference[DataFrame],
-                       pointsHolder: java.util.concurrent.atomic.AtomicReference[DataFrame])
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    newPoints.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val idx = indexHolder.get()
-        val pts = pointsHolder.get()
-        val newIdx = graft.operators.IndexMaintain
-          .addPoints(idx, pts, batch, idCol, vecCol)
-          .localCheckpoint()
-        indexHolder.set(newIdx)
-        pointsHolder.set(pts.unionByName(
-          batch.select(org.apache.spark.sql.functions.col(idCol),
-            org.apache.spark.sql.functions.col(vecCol))).localCheckpoint())
       }
 }

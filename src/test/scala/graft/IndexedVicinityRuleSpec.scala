@@ -477,4 +477,73 @@ class IndexedVicinityRuleSpec extends SparkSpec {
     SparkSession.setDefaultSession(TestSpark.spark)
     SparkSession.setActiveSession(TestSpark.spark)
   }
+
+  private def inSets(df: org.apache.spark.sql.DataFrame): Seq[Filter] =
+    df.queryExecution.optimizedPlan.collect {
+      case f: Filter if f.condition.exists(_.isInstanceOf[InSet]) => f
+    }
+
+  test("a table appended after registration runs the exact predicate alone") {
+    import extSpark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graftappend").toString + "/grid"
+    graft.sources.Ingest.grid(extSpark, 30).write.parquet(dir)
+    val g = extSpark.read.parquet(dir)
+    VectorIndexCatalog.register(dir, "id",
+      IndexBuild.buildIndex(g, "id", "vector").localCheckpoint(), vecCol = "vector")
+    try {
+      assert(inSets(BruteForce.rangeSearch(extSpark.read.parquet(dir), "vector",
+        Seq(0.1, 0.1), 0.05)).nonEmpty, "expected the pinned rewrite before the append")
+      // one in-radius row with a fresh id; the index is neither rebuilt
+      // nor re-registered
+      Seq((90000L, Array(0.1f, 0.1f))).toDF("id", "vector")
+        .write.mode("append").parquet(dir)
+      val q = BruteForce.rangeSearch(extSpark.read.parquet(dir), "vector",
+        Seq(0.1, 0.1), 0.05)
+      val rewritten = inSets(q)
+      val got = q.select("id").collect().map(_.getLong(0)).toSet
+      VectorIndexCatalog.clear()
+      val want = BruteForce.rangeSearch(extSpark.read.parquet(dir), "vector",
+          Seq(0.1, 0.1), 0.05)
+        .select("id").collect().map(_.getLong(0)).toSet
+      assert(want.contains(90000L) && got == want, s"got $got want $want")
+      assert(rewritten.isEmpty, "the pin outlived the table it was registered with")
+    } finally {
+      VectorIndexCatalog.clear()
+      SparkSession.setDefaultSession(TestSpark.spark)
+      SparkSession.setActiveSession(TestSpark.spark)
+    }
+  }
+
+  test("rewriting only the index store keeps a sound pin") {
+    import org.apache.spark.sql.functions.lit
+    val base = java.nio.file.Files.createTempDirectory("graftidxonly").toString
+    val dataPath = s"$base/data.parquet"
+    val storePath = s"$base/idxstore"
+    graft.sources.Ingest.grid(extSpark, 30).write.parquet(dataPath)
+    val d = extSpark.read.parquet(dataPath)
+    def storeIndex(bucketSize: Int): Unit = graft.sources.IndexStore.replaceDocs(
+      IndexBuild.buildIndex(d, "id", "vector", bucketSize).withColumn("docId", lit(0L)),
+      storePath)
+    storeIndex(1)
+    VectorIndexCatalog.register(dataPath, "id",
+      graft.sources.IndexStore.load(extSpark, storePath), vecCol = "vector")
+    try {
+      // the store is rewritten with a differently shaped tree over the
+      // same rows; the data table is untouched
+      storeIndex(4)
+      val q = BruteForce.rangeSearch(extSpark.read.parquet(dataPath), "vector",
+        Seq(0.1, 0.1), 0.05)
+      assert(inSets(q).nonEmpty, "the data is unchanged, so the pin still prunes")
+      val got = q.select("id").collect().map(_.getLong(0)).toSet
+      VectorIndexCatalog.clear()
+      val want = BruteForce.rangeSearch(extSpark.read.parquet(dataPath), "vector",
+          Seq(0.1, 0.1), 0.05)
+        .select("id").collect().map(_.getLong(0)).toSet
+      assert(got == want && got.nonEmpty, s"got $got want $want")
+    } finally {
+      VectorIndexCatalog.clear()
+      SparkSession.setDefaultSession(TestSpark.spark)
+      SparkSession.setActiveSession(TestSpark.spark)
+    }
+  }
 }
