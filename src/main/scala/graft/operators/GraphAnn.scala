@@ -1,13 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
 
 import graft.functions.VectorFunctions._
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Graph-based ANN: Vamana-style bounded-degree neighbour graph
   * (Subramanya et al., "DiskANN", NeurIPS 2019 — the α-RobustPrune
@@ -825,19 +827,25 @@ object GraphAnn {
   }
 
   /** Collect the graph relation into its pinned form (see PIN BUDGET). */
-  def pin(graph: DataFrame, seeds: Array[Long]): PinnedGraph = {
+  def pin(graph: DataFrame, seeds: Array[Long]): PinnedGraph =
+    pinRows(GraftSqlShim.collectInternal(graph.select(col("id").cast("long"),
+      col("vec").cast("array<float>"), col("nbrs").cast("array<long>"))),
+      seeds, Array.emptyLongArray)
+
+  /** The pinned form of collected rows that start (id, vec, nbrs): a
+    * row with a null id or vector is left out, a null nbrs pins no
+    * list, and a repeated id keeps its last row. */
+  private def pinRows(rows: Array[InternalRow], seeds: Array[Long],
+                      tombstones: Array[Long]): PinnedGraph = {
     val vecs = mutable.LongMap.empty[Array[Float]]
     val nbrs = mutable.LongMap.empty[Array[Long]]
-    graph.select(col("id").cast("long"), col("vec").cast("array<float>"),
-        col("nbrs").cast("array<long>"))
-      .collect()
-      .foreach { r =>
-        if (!r.isNullAt(0) && !r.isNullAt(1)) {
-          vecs.update(r.getLong(0), r.getSeq[Float](1).toArray)
-          if (!r.isNullAt(2)) nbrs.update(r.getLong(0), r.getSeq[Long](2).toArray)
-        }
+    rows.foreach { r =>
+      if (!r.isNullAt(0) && !r.isNullAt(1)) {
+        vecs.update(r.getLong(0), r.getArray(1).toFloatArray)
+        if (!r.isNullAt(2)) nbrs.update(r.getLong(0), r.getArray(2).toLongArray)
       }
-    new PinnedGraph(seeds, vecs, nbrs)
+    }
+    new PinnedGraph(seeds, vecs, nbrs, mutable.HashSet.from(tombstones))
   }
 
   /** Single-query serving as a relation (the v2/a2 result shape):
@@ -1178,13 +1186,29 @@ object GraphAnn {
   //   append = per new point, greedy-search the pinned snapshot for its
   //     candidate pool, α-RobustPrune to ≤ maxDegree out-edges, then add
   //     back-edges with RobustPrune repair on overflow — touched
-  //     partitions rewritten, untouched only appended to.
+  //     partitions rewritten, untouched ones left as they are.
   //   remove = tombstone (lazy delete): the node stays TRAVERSABLE for
   //     routing but never enters a result pool.
   //   consolidate = the StreamingMerge: drop tombstoned rows, and every
   //     survivor that referenced one re-prunes over its kept neighbours
   //     ∪ the doomed neighbour's kept neighbours (connect-through), so
   //     local reachability survives the deletion.
+  // ON THE DRIVER while the store is pin-sized (≤ PinBudgetRows rows,
+  // FreshDiskANN's in-memory TempIndex): the pinned append and the
+  // StreamingMerge collect the store's rows once, compute the insert or
+  // the merge in memory (O(batch·maxDegree) and O(affected·maxDegree²)
+  // work) and write the rows they change with one write job, built from
+  // driver-held rows, so the write reads nothing under `path` and needs
+  // no checkpoint. Above the budget, appendGraphDistributed and the
+  // distributed StreamingMerge keep the store in the cluster; both
+  // paths write the same rows and seeds.
+
+  /** Store rows up to this count are maintained on the driver: the
+    * StreamingMerge collects the store below it, and
+    * [[graft.streaming.StreamOps.graphAppendStream]] uses the pinned
+    * [[appendGraph]] below it (the PIN BUDGET class, N·(d·4 + degree·8)
+    * bytes: about 170 MB at d = 32 and degree 16). */
+  private[graft] val PinBudgetRows: Long = 1L << 20
 
   /** An opened graph store: adjacency relation + frozen build params +
     * seeds + current tombstones — one listing + two sidecar reads. */
@@ -1194,6 +1218,13 @@ object GraphAnn {
 
   private def gbOf(c: Column, buckets: Int): Column =
     pmod(c, lit(buckets.toLong)).cast("int")
+
+  /** An inserted row on the driver: (id, vec, out-edges). */
+  private type NewRow = (Long, Array[Float], Array[Long])
+
+  /** [[gbOf]] of one id, on the driver. */
+  private def gbOfId(id: Long, buckets: Int): Int =
+    Math.floorMod(id, buckets.toLong).toInt
 
   /** The store files' layouts: [[writeGraph]] and the append writers
     * lay out the rows by `RowsSchema` and the `.meta` row by
@@ -1215,9 +1246,15 @@ object GraphAnn {
     * an executor (thousands of buckets at 100 TB; 16 at gate scale). */
   def writeGraph(graph: DataFrame, seeds: Array[Long], path: String,
                  alpha: Double, maxDegree: Int, buckets: Int = 16): Unit = {
-    val spark = graph.sparkSession
     StoreMaintain.write(laidOut(graph.withColumn("gb", gbOf(col("id"), buckets)),
       RowsSchema), path, "gb")
+    writeMeta(graph.sparkSession, path, seeds, alpha, maxDegree, buckets)
+  }
+
+  /** The `.meta` row of a store whose rows were just written in full;
+    * its tombstones are gone with the rows. */
+  private def writeMeta(spark: SparkSession, path: String, seeds: Array[Long],
+                        alpha: Double, maxDegree: Int, buckets: Int): Unit = {
     StoreMaintain.writeSidecar(spark, path, "meta", MetaSchema,
       Seq(Row(alpha, maxDegree, buckets, seeds.toSeq)))
     StoreMaintain.dropSidecar(spark, path, "tomb")
@@ -1248,11 +1285,14 @@ object GraphAnn {
 
   /** Pin an opened store for serving (same PIN BUDGET as [[pin]]);
     * tombstoned nodes route but are never returned. */
-  def pinStore(store: GraphStore): PinnedGraph = {
-    val p = pin(store.rows, store.seeds)
-    new PinnedGraph(p.seeds, p.vecs, p.nbrs,
-      mutable.HashSet.from(store.tombstones))
-  }
+  def pinStore(store: GraphStore): PinnedGraph =
+    pinRows(storeRows(store), store.seeds, store.tombstones)
+
+  /** The store's rows laid out by `RowsSchema`, collected in Spark's
+    * internal form: the one collect of the store that pinning, the
+    * pinned append and the driver merge make. */
+  private def storeRows(store: GraphStore): Array[InternalRow] =
+    GraftSqlShim.collectInternal(laidOut(store.rows, RowsSchema))
 
   /** FreshDiskANN insert of a batch: each new point greedy-searches the
     * PRE-BATCH snapshot (pool of ef candidates; tombstoned nodes are
@@ -1266,69 +1306,87 @@ object GraphAnn {
     * neighbours to ride and stay mutually invisible — split such
     * ingests into sequential sub-batches (each append sees the prior
     * ones; [[graft.streaming.StreamOps.graphAppendStream]] gives this
-    * per micro-batch for free). I/O is O(touched gb partitions):
-    * back-edge partitions rewritten, pure inserts appended. */
+    * per micro-batch for free).
+    *
+    * The whole insert runs on the driver over one collect of the store
+    * (the pin) and one of the batch; the gb partitions it changes (every
+    * list that gained a back-edge, every partition a new row lands in)
+    * are rewritten from the collected rows in one write job. A batch id
+    * given twice keeps its first row. */
   def appendGraph(spark: SparkSession, path: String, newPts: DataFrame,
                   idCol: String, vecCol: String, ef: Int = 64): Unit = {
-    import spark.implicits._
     val store = openGraph(spark, path)
     val (alpha, maxDeg, buckets) = (store.alpha, store.maxDegree, store.buckets)
-    val pinB = spark.sparkContext.broadcast(pinStore(store))
+    val rows = storeRows(store)
+    val p = pinRows(rows, store.seeds, store.tombstones)
     // IDEMPOTENT under at-least-once delivery (ADVICE r14): a retried
-    // micro-batch (graphAppendStream's foreachBatch) or a crash between
-    // the back-edge rewrite and the row append re-runs the whole insert
-    // — ids already present in the store are dropped here (free: the
-    // pin already holds the id set), so a replay inserts only the rows
-    // the failed attempt never landed, and re-applied back-edges are
-    // no-ops (the merge below dedupes). Note a TOMBSTONED id still
-    // occupies its store row, so re-adding it needs consolidateGraph
-    // first — the FreshDiskANN delete-then-reinsert contract.
-    // out-edges: distributed greedy search + prune per new point
-    Pins.scope { pins =>
-      val newRows = pins(newPts
-        .select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
-        .dropDuplicates(Seq(idCol))
-        .as[(Long, Array[Float])]
-        .filter(t => !pinB.value.vecs.contains(t._1))
-        .map { case (id, vec) =>
-          val p = pinB.value
-          val pool = p.knn(vec.map(_.toDouble).toSeq, ef, ef)
-          val cands = pool.map { case (cid, d) => (cid, p.vecs(cid), d) }
-          (id, vec, robustPrune(cands.toArray, alpha, maxDeg))
-        }
-        .toDF("id", "vec", "nbrs"))
-      // an empty batch is a pure replay: nothing left to insert
-      if (!newRows.isEmpty) {
-        // back-edges grouped per target, repaired executor-locally: the
-        // target's old row rides the pinned broadcast, the new vectors ride
-        // the (batch-bounded) rows themselves
-        val updated = pins(newRows
-          .select(col("id").as("n"), col("vec").as("nvec"),
-            explode(col("nbrs")).as("b"))
-          .as[(Long, Array[Float], Long)]
-          .groupByKey(_._3)
-          .mapGroups { (b, it) =>
-            val p = pinB.value
-            val bv = p.vecs(b)
-            val adds = it.map(t => (t._1, t._2)).toArray.sortBy(_._1)
-            val old = p.nbrs.getOrElse(b, Array.emptyLongArray)
-            val merged = old ++ adds.map(_._1).filterNot(old.contains)
-            if (merged.length <= maxDeg) (b, merged)
-            else {
-              val vecOf = adds.toMap
-              val cands = merged.map { m =>
-                val mv = vecOf.getOrElse(m, p.vecs(m))
-                (m, mv, l2(bv, mv))
-              }
-              (b, robustPrune(cands, alpha, maxDeg))
-            }
-          }
-          .toDF("id", "nbrs2"))
-        val patched = repairOrphans(spark, pins, newRows, updated, maxDeg,
-          ids => ids.iterator.map(i => i -> pinB.value.vecs(i)).toMap)
-        writeAppendTail(store, path, pins, newRows, patched)
+    // micro-batch (graphAppendStream's foreachBatch) or a crash before
+    // the write re-runs the whole insert — ids already present in the
+    // store are dropped here (free: the pin already holds the id set),
+    // so a replay inserts only the rows the failed attempt never
+    // landed. Note a TOMBSTONED id still occupies its store row, so
+    // re-adding it needs consolidateGraph first — the FreshDiskANN
+    // delete-then-reinsert contract.
+    val fresh = mutable.LinkedHashMap.empty[Long, Array[Float]]
+    newPts.select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
+      .collect().foreach { r =>
+        require(!r.isNullAt(0) && !r.isNullAt(1),
+          s"appendGraph: a new point has a null $idCol or $vecCol")
+        val id = r.getLong(0)
+        if (!p.vecs.contains(id) && !fresh.contains(id))
+          fresh(id) = r.getSeq[Float](1).toArray
       }
+    // out-edges: greedy search of the snapshot + prune per new point
+    val batch = fresh.iterator.map { case (id, vec) =>
+      val pool = p.knn(vec.map(_.toDouble).toSeq, ef, ef)
+      val cands = pool.map { case (cid, d) => (cid, p.vecs(cid), d) }
+      (id, vec, robustPrune(cands.toArray, alpha, maxDeg))
+    }.toArray
+    // an empty batch is a pure replay: nothing left to insert
+    if (batch.nonEmpty) {
+      val lists = mutable.LongMap.from(repairOrphans(batch,
+        backEdges(p, batch, alpha, maxDeg), maxDeg,
+        ids => ids.iterator.map(i => i -> p.vecs(i)).toMap))
+      val touched = (lists.keysIterator ++ batch.iterator.map(_._1))
+        .map(gbOfId(_, buckets)).toSet
+      val kept = rows.iterator.filter(r => !r.isNullAt(3) && touched(r.getInt(3)))
+        .map { r =>
+          if (r.isNullAt(0) || !lists.contains(r.getLong(0))) r
+          else InternalRow(r.getLong(0), if (r.isNullAt(1)) null else r.getArray(1),
+            UnsafeArrayData.fromPrimitiveArray(lists(r.getLong(0))), r.getInt(3))
+        }
+      val added = batch.iterator.map { case (id, vec, nbrs) =>
+        InternalRow(id, UnsafeArrayData.fromPrimitiveArray(vec),
+          UnsafeArrayData.fromPrimitiveArray(nbrs), gbOfId(id, buckets))
+      }
+      StoreMaintain.rewriteRows(spark, (kept ++ added).toSeq, RowsSchema, path, "gb")
     }
+  }
+
+  /** Back-edges of a batch: every chosen neighbour `b` of a new point
+    * gains it, appended to `b`'s pinned list in new-id order; a list
+    * that overflows `maxDeg` is α-RobustPruned over its members. */
+  private def backEdges(p: PinnedGraph, batch: Array[NewRow],
+                        alpha: Double, maxDeg: Int): Array[(Long, Array[Long])] = {
+    val adds = mutable.LongMap.empty[mutable.ArrayBuffer[(Long, Array[Float])]]
+    batch.foreach { case (n, nvec, nbrs) =>
+      nbrs.foreach(b => adds.getOrElseUpdate(b, mutable.ArrayBuffer.empty) += ((n, nvec)))
+    }
+    adds.iterator.map { case (b, bs) =>
+      val bv = p.vecs(b)
+      val add = bs.toArray.sortBy(_._1)
+      val old = p.nbrs.getOrElse(b, Array.emptyLongArray)
+      val merged = old ++ add.map(_._1).filterNot(old.contains)
+      if (merged.length <= maxDeg) (b, merged)
+      else {
+        val vecOf = add.toMap
+        val cands = merged.map { m =>
+          val mv = vecOf.getOrElse(m, p.vecs(m))
+          (m, mv, l2(bv, mv))
+        }
+        (b, robustPrune(cands, alpha, maxDeg))
+      }
+    }.toArray
   }
 
   /** REACHABILITY GUARANTEE (in-degree ≥ 1) for an append batch: in a
@@ -1338,9 +1396,12 @@ object GraphAnn {
     * fixture before this repair; the standard HNSW/FreshDiskANN-
     * implementation guard). Each orphan is force-kept in its NEAREST
     * chosen neighbour's list; that list keeps its forced orphans plus
-    * its nearest survivors up to maxDegree. Driver state is O(batch) —
-    * the maintenance-batch contract (same class as StoreMaintain's
-    * touched-partition collect).
+    * its nearest survivors up to maxDegree. `batch` holds the new rows
+    * (id, vec, out-edges) and `updated` the lists that gained a
+    * back-edge; the patched lists are returned. Driver state and work
+    * are O(batch · maxDegree) — the maintenance-batch contract (same
+    * class as StoreMaintain's touched-partition collect); both append
+    * paths call this one function.
     *
     * ITERATED repair (ADVICE r14): a single patch pass can itself
     * re-orphan a newbie — when forced orphans crowd a list, `keep`
@@ -1357,32 +1418,23 @@ object GraphAnn {
     *
     * `resolveVecs` supplies vectors of PRE-BATCH nodes by id (pinned
     * path: the pin map; distributed path: a gb-pruned filtered collect
-    * — per pass the needed set is (patched lists ∪ their members),
-    * bounded by O(batch · maxDegree), never the corpus). */
-  private def repairOrphans(spark: SparkSession, pins: Pins,
-                            newRows: DataFrame, updated: DataFrame,
-                            maxDeg: Int,
+    * — per pass the ids not yet resolved among (patched lists ∪ their
+    * members), bounded by O(batch · maxDegree), never the corpus). */
+  private def repairOrphans(batch: Array[NewRow],
+                            updated: Array[(Long, Array[Long])], maxDeg: Int,
                             resolveVecs: Seq[Long] => Map[Long, Array[Float]])
-      : DataFrame = {
-    import spark.implicits._
-    val allNew = newRows
-      .select(col("id"), col("vec"), col("nbrs"))
-      .as[(Long, Array[Float], Array[Long])]
-      .collect() // O(batch) — the maintenance-batch contract
+      : Array[(Long, Array[Long])] = {
     // a patched list can hold OTHER new nodes too — the distance
     // lookup needs the whole batch's vectors (batch-bounded)
-    val newVecMap = allNew.map(t => (t._1, t._2)).toMap
-    val newVecB = spark.sparkContext.broadcast(newVecMap)
+    val newVec = batch.iterator.map(t => (t._1, t._2)).toMap
+    val oldVec = mutable.LongMap.empty[Array[Float]]
     val protectedByList = mutable.Map.empty[Long, Array[(Long, Array[Float])]]
     var patched = updated
     var pass = 0
     var repaired = false
     while (!repaired && pass < 8) {
-      val reached = patched
-        .select(explode(col("nbrs2")).as("n"))
-        .join(newRows.select(col("id").as("n")), Seq("n"), "left_semi")
-        .distinct().as[Long].collect().toSet
-      val orphans = allNew.filter(t => t._3.nonEmpty && !reached.contains(t._1))
+      val reached = patched.iterator.flatMap(_._2).filter(newVec.contains).toSet
+      val orphans = batch.filter(t => t._3.nonEmpty && !reached.contains(t._1))
       if (orphans.isEmpty) repaired = true
       else {
         pass += 1
@@ -1409,25 +1461,21 @@ object GraphAnn {
             os.filterNot(o => prevIds(o._2)).sortBy(_._2)
               .map(o => (o._2, o._3))
         }
-        val byBB = spark.sparkContext.broadcast(protectedByList.toMap)
-        // pre-batch vectors the patch map will need: the patched lists
+        // pre-batch vectors the patch will need: the patched lists
         // themselves + their CURRENT members that aren't batch rows
-        val keys = protectedByList.keySet.toSeq
-        val members = updated
-          .filter(col("id").isInCollection(keys))
-          .select(col("id"), col("nbrs2"))
-          .as[(Long, Array[Long])].collect()
-        val needed: Seq[Long] = (keys ++ members.flatMap(_._2.toSeq)).distinct
-          .filterNot(id => newVecMap.contains(id))
-        val oldVecB = spark.sparkContext.broadcast(resolveVecs(needed))
-        patched = pins(updated.as[(Long, Array[Long])].map { case (b, nbrs2) =>
-          byBB.value.get(b) match {
+        val keys = protectedByList.keySet
+        val needed = (keys.iterator ++
+            updated.iterator.filter(u => keys(u._1)).flatMap(_._2))
+          .filterNot(id => newVec.contains(id) || oldVec.contains(id))
+          .distinct.toSeq
+        if (needed.nonEmpty) oldVec ++= resolveVecs(needed)
+        patched = updated.map { case (b, nbrs2) =>
+          protectedByList.get(b) match {
             case None => (b, nbrs2)
             case Some(os) =>
-              val bv = oldVecB.value(b)
+              val bv = oldVec(b)
               val byDist = (ms: Array[Long]) => ms
-                .map(m => (m, l2(bv, newVecB.value.getOrElse(m,
-                  oldVecB.value(m)))))
+                .map(m => (m, l2(bv, newVec.getOrElse(m, oldVec(m)))))
                 .sortBy(t => (t._2, t._1)).map(_._1)
               // the degree bound is the harder invariant: an over-cap
               // forced set (every orphan sharing one single-entry nbr
@@ -1441,7 +1489,7 @@ object GraphAnn {
               // could orphan IT (its only back-edge may be this list —
               // the iteration above catches and re-forces it)
               val rest = nbrs2.filterNot(forced.contains)
-              val (newbies, olds) = rest.partition(newVecB.value.contains)
+              val (newbies, olds) = rest.partition(newVec.contains)
               val room = math.max(0, maxDeg - forced.length)
               val keep =
                 if (newbies.length >= room) byDist(newbies).take(room)
@@ -1449,41 +1497,42 @@ object GraphAnn {
                   byDist(olds).take(room - newbies.length)
               (b, forced ++ keep)
           }
-        }.toDF("id", "nbrs2"))
+        }
       }
     }
     patched
   }
 
-  /** Shared append write-out: touched partitions (any list whose
-    * adjacency changed) are rewritten whole — old rows with the updated
-    * adjacency spliced in plus the new rows landing there — and
+  /** The distributed append's write-out: touched partitions (any list
+    * whose adjacency changed) are rewritten whole — old rows with the
+    * updated adjacency spliced in plus the new rows landing there — and
     * untouched partitions take a pure file append. I/O is O(touched gb
     * partitions), never the store. */
   private def writeAppendTail(store: GraphStore, path: String, pins: Pins,
-                              newRows: DataFrame, patched: DataFrame): Unit = {
+                              newRows: DataFrame,
+                              batch: Array[NewRow],
+                              patched: Array[(Long, Array[Long])]): Unit = {
+    val spark = newRows.sparkSession
+    import spark.implicits._
     val buckets = store.buckets
-    val touched = patched.select(gbOf(col("id"), buckets)).distinct()
-      .collect().map(_.getInt(0)).toSet
+    val touched = patched.iterator.map(t => gbOfId(t._1, buckets)).toSet
     if (touched.nonEmpty) {
       val newTouched = newRows
         .filter(gbOf(col("id"), buckets).isInCollection(touched))
       // pinned: the write must never read the files it is replacing
       val rewritten = pins(store.rows
         .filter(col("gb").isInCollection(touched))
-        .join(patched, Seq("id"), "left")
+        .join(patched.toSeq.toDF("id", "nbrs2"), Seq("id"), "left")
         .select(col("id"), col("vec"),
           coalesce(col("nbrs2"), col("nbrs")).as("nbrs"), col("gb"))
         .unionByName(newTouched.withColumn("gb", gbOf(col("id"), buckets))))
       StoreMaintain.rewritePartitions(
         laidOut(rewritten, RowsSchema).repartition(col("gb")), path, "gb")
     }
-    val newUntouched =
-      if (touched.isEmpty) newRows.withColumn("gb", gbOf(col("id"), buckets))
-      else newRows.filter(!gbOf(col("id"), buckets).isInCollection(touched))
-        .withColumn("gb", gbOf(col("id"), buckets))
-    if (!newUntouched.isEmpty)
-      StoreMaintain.append(laidOut(newUntouched, RowsSchema), path, "gb")
+    if (batch.exists(t => !touched(gbOfId(t._1, buckets))))
+      StoreMaintain.append(laidOut(newRows
+        .filter(!gbOf(col("id"), buckets).isInCollection(touched))
+        .withColumn("gb", gbOf(col("id"), buckets)), RowsSchema), path, "gb")
   }
 
   /** [[appendGraph]] WITHOUT the full-store driver pin — the 100 TB
@@ -1499,10 +1548,11 @@ object GraphAnn {
     *     JOINED in; only over-degree lists explode their members for
     *     the executor-local re-prune (member vectors joined from
     *     store ∪ batch);
-    *   - orphan repair: the shared iterated pass with pre-batch
-    *     vectors resolved by a gb-pruned filtered collect bounded by
-    *     O(batch·maxDegree) — the maintenance-batch contract, not the
-    *     corpus.
+    *   - orphan repair: the batch rows and the updated lists are
+    *     collected once (O(batch·maxDegree)) for the shared driver
+    *     repair, with pre-batch vectors resolved by a gb-pruned
+    *     filtered collect bounded by O(batch·maxDegree) — the
+    *     maintenance-batch contract, not the corpus.
     * The pinned [[appendGraph]] stays as the low-latency small-index
     * mode (the PinnedIndex precedent); parity between the two paths is
     * spec-gated (RecallSpec). */
@@ -1576,22 +1626,20 @@ object GraphAnn {
               alpha, maxDeg))
           }
           .toDF("id", "nbrs2")
-        val updated = pins(fits.unionByName(overPruned))
-        val patched = repairOrphans(spark, pins, newRows, updated, maxDeg,
-          ids =>
-            if (ids.isEmpty) Map.empty
-            else {
-              // gb-pruned bounded collect: O(batch·maxDegree) ids, never
-              // the corpus (the same PartitionFilters trick as the
-              // serving path)
-              val gbs = ids.map(i => (((i % buckets) + buckets) % buckets).toInt)
-                .distinct // pmod, matching gbOf
-              store.rows.filter(col("gb").isInCollection(gbs))
-                .filter(col("id").isInCollection(ids))
-                .select(col("id"), col("vec"))
-                .as[(Long, Array[Float])].collect().toMap
-            })
-        writeAppendTail(store, path, pins, newRows, patched)
+        val batch = newRows.as[NewRow].collect()
+        val updated = fits.unionByName(overPruned)
+          .as[(Long, Array[Long])].collect()
+        val patched = repairOrphans(batch, updated, maxDeg, ids => {
+          // gb-pruned bounded collect: O(batch·maxDegree) ids, never
+          // the corpus (the same PartitionFilters trick as the
+          // serving path)
+          val gbs = ids.map(gbOfId(_, buckets)).distinct
+          store.rows.filter(col("gb").isInCollection(gbs))
+            .filter(col("id").isInCollection(ids))
+            .select(col("id"), col("vec"))
+            .as[(Long, Array[Float])].collect().toMap
+        })
+        writeAppendTail(store, path, pins, newRows, batch, patched)
       }
     }
   }
@@ -1608,9 +1656,9 @@ object GraphAnn {
     * stored rows (FreshDiskANN's delete amortization — removes stay
     * O(batch) sidecar appends until the lazy-deleted fraction is worth
     * a full rewrite). The probe is [[openGraph]] (no tombstone sidecar:
-    * no merge) plus a footer-metadata row count, and the merge reuses the
-    * opened store; a sidecar that fails to read throws. Returns whether
-    * the merge ran. Deterministic in
+    * no merge) plus a one-job zero-column row count, and the merge reuses
+    * the opened store and the count; a sidecar that fails to read throws.
+    * Returns whether the merge ran. Deterministic in
     * (store state, ratio), so a streaming caller and a batch twin
     * applying the same delete batches consolidate at the same points
     * (StreamOpsSpec pins stream ≡ batch on the full store state). */
@@ -1621,9 +1669,9 @@ object GraphAnn {
     // opened once: the probe's tombstones and rows are the merge's input
     val store = openGraph(spark, path)
     if (store.tombstones.isEmpty) return false
-    val rows = store.rows.count()
+    val rows = StoreMaintain.rowCount(store.rows)
     if (rows > 0 && store.tombstones.length.toDouble / rows >= ratio) {
-      consolidateGraph(spark, path, store); true
+      consolidateGraph(spark, path, store, rows, PinBudgetRows); true
     } else false
   }
 
@@ -1634,16 +1682,117 @@ object GraphAnn {
     * (RobustPrune is idempotent on its own output, so re-pruning them
     * would be a no-op anyway). Each doomed seed hands its place to the
     * nearest surviving non-seed row (medoid of the survivors if none
-    * remain); the tombstone sidecar is cleared. Full-store rewrite by design — the amortized counterpart
-    * of O(batch) removeGraph. */
+    * remain); the tombstone sidecar is cleared. Full-store rewrite by
+    * design — the amortized counterpart of O(batch) removeGraph. A
+    * pin-sized store (≤ [[PinBudgetRows]] rows) is merged on the driver
+    * from one collect of its rows; a larger one by the distributed
+    * merge. Both write the same rows and seeds. */
   def consolidateGraph(spark: SparkSession, path: String): Unit =
-    consolidateGraph(spark, path, openGraph(spark, path))
+    consolidateGraph(spark, path, PinBudgetRows)
 
-  /** [[consolidateGraph]] of `store`, the store at `path` already open. */
+  /** [[consolidateGraph]] merging on the driver only up to
+    * `pinBudgetRows` store rows (a spec passes 0 to run the distributed
+    * merge on a small store). */
+  private[graft] def consolidateGraph(spark: SparkSession, path: String,
+                                      pinBudgetRows: Long): Unit = {
+    val store = openGraph(spark, path)
+    if (store.tombstones.nonEmpty)
+      consolidateGraph(spark, path, store, StoreMaintain.rowCount(store.rows),
+        pinBudgetRows)
+  }
+
+  /** [[consolidateGraph]] of `store`, the store at `path` already open
+    * and holding `rows` rows. */
   private def consolidateGraph(spark: SparkSession, path: String,
+                               store: GraphStore, rows: Long,
+                               pinBudgetRows: Long): Unit = {
+    val merged = if (rows <= pinBudgetRows) mergeOnDriver(spark, store) else None
+    merged match {
+      case Some((out, seeds)) =>
+        StoreMaintain.writeRows(spark, out, RowsSchema, path, "gb")
+        writeMeta(spark, path, seeds, store.alpha, store.maxDegree, store.buckets)
+      case None => mergeDistributed(spark, path, store)
+    }
+  }
+
+  /** The StreamingMerge of `store` computed on the driver from one
+    * collect of its rows: the rows (laid out by `RowsSchema`) and seeds
+    * that [[mergeDistributed]] writes, bit for bit — same candidates,
+    * same `robustPrune` over `l2` (the `dist` kernel's float64 fold),
+    * same seed hand-over. A null id is dropped and a null `nbrs` kept,
+    * as there. None when an id repeats or a row the merge must measure
+    * has a null vector: such a store goes to the distributed merge,
+    * which handles (or rejects) it as before. */
+  private def mergeOnDriver(spark: SparkSession, store: GraphStore)
+      : Option[(Seq[InternalRow], Array[Long])] = {
+    val doomed = store.tombstones.toSet
+    val rows = storeRows(store).filterNot(_.isNullAt(0))
+    val byId = mutable.LongMap.from(rows.iterator.map(r => r.getLong(0) -> r))
+    val vecs = mutable.LongMap.empty[Array[Float]]
+    rows.foreach(r => if (!r.isNullAt(1)) vecs(r.getLong(0)) = r.getArray(1).toFloatArray)
+    // a list's neighbour ids; a null element never survives the merge
+    def nbrsOf(r: InternalRow): Array[Long] =
+      if (r.isNullAt(2)) Array.emptyLongArray
+      else {
+        val a = r.getArray(2)
+        (0 until a.numElements()).iterator.filterNot(a.isNullAt).map(a.getLong).toArray
+      }
+    var measurable = byId.size == rows.length
+    val merged = rows.iterator.filterNot(r => doomed(r.getLong(0))).map { r =>
+      val id = r.getLong(0)
+      val nbrs = nbrsOf(r)
+      val kept = nbrs.filterNot(doomed)
+      val lists =
+        if (r.isNullAt(2)) null
+        else if (kept.length == nbrs.length) kept
+        else {
+          // affected: kept direct neighbours ∪ connect-through, those
+          // with a store row re-pruned; with none, the kept list stays
+          val through = nbrs.iterator.filter(doomed)
+            .flatMap(d => byId.get(d).iterator.flatMap(nbrsOf))
+            .filter(c => !doomed(c) && c != id)
+          val cands = (kept.iterator ++ through).distinct.filter(byId.contains).toArray
+          if (cands.isEmpty) kept
+          else if (!vecs.contains(id) || !cands.forall(vecs.contains)) {
+            measurable = false; kept
+          } else {
+            val v = vecs(id)
+            robustPrune(cands.map(c => (c, vecs(c), l2(v, vecs(c)))),
+              store.alpha, store.maxDegree)
+          }
+        }
+      InternalRow(id, if (r.isNullAt(1)) null else r.getArray(1),
+        if (lists == null) null else UnsafeArrayData.fromPrimitiveArray(lists),
+        gbOfId(id, store.buckets))
+    }.toArray
+    if (!measurable) return None
+    // each doomed seed's |lost| nearest non-seed survivors by
+    // (dist, id), as the distributed top-m aggregate keeps them
+    val lost = store.seeds.filter(doomed)
+    val isSeed = store.seeds.toSet
+    val near = lost.distinct.flatMap(s => vecs.get(s).map { sv =>
+      val top = new graft.functions.TopMBuf(lost.length)
+      merged.foreach { m =>
+        val id = m.getLong(0)
+        if (!isSeed(id) && !m.isNullAt(1)) top.insert(l2(vecs(id), sv), id)
+      }
+      s -> top.ids.take(top.n)
+    }).toMap
+    val seeds = handOverSeeds(store, near) match {
+      case s if s.nonEmpty => s
+      case _ => Array(medoid(spark.createDataFrame(merged.toSeq.map { m =>
+        Row(m.getLong(0), if (m.isNullAt(1)) null else m.getArray(1).toFloatArray.toSeq)
+      }.asJava, StructType(RowsSchema.take(2)))))
+    }
+    Some((merged.toSeq, seeds))
+  }
+
+  /** The distributed StreamingMerge of `store` (see [[consolidateGraph]]):
+    * the affected rows re-prune in one grouped pass over candidate
+    * edges joined with their vectors, and the store is rewritten whole. */
+  private def mergeDistributed(spark: SparkSession, path: String,
                                store: GraphStore): Unit = {
     import spark.implicits._
-    if (store.tombstones.isEmpty) return
     val doomed = store.tombstones.toSet
     val survivors = store.rows
       .filter(!col("id").isInCollection(doomed))
@@ -1703,8 +1852,7 @@ object GraphAnn {
     * no seed is doomed this runs no job. */
   private def replaceDoomedSeeds(store: GraphStore,
                                  merged: DataFrame): Array[Long] = {
-    val doomed = store.tombstones.toSet
-    val lost = store.seeds.filter(doomed)
+    val lost = store.seeds.filter(store.tombstones.toSet)
     if (lost.isEmpty) return store.seeds
     val spark = merged.sparkSession
     import spark.implicits._
@@ -1719,6 +1867,14 @@ object GraphAnn {
         dist(col("vec"), col("svec")), lost.length).as("top"))
       .select(col("sid"), col("top.id"))
       .as[(Long, Array[Long])].collect().toMap
+    handOverSeeds(store, near)
+  }
+
+  /** The store's seeds, each doomed one replaced by the first of its
+    * `near` candidates no earlier seed took (dropped if none is left). */
+  private def handOverSeeds(store: GraphStore,
+                            near: Map[Long, Array[Long]]): Array[Long] = {
+    val doomed = store.tombstones.toSet
     val taken = mutable.HashSet.empty[Long]
     store.seeds.flatMap { s =>
       if (!doomed(s)) Some(s)

@@ -238,19 +238,25 @@ object PinnedIndex {
     * tree budget, use IndexSearch's frontier descent (never collects
     * anything). */
   def pinWithVectors(index: DataFrame, points: DataFrame, idCol: String,
-                     vecCol: String): (PinnedIndex, mutable.LongMap[Array[Float]]) = {
-    val pinned = pin(index)
+                     vecCol: String): (PinnedIndex, mutable.LongMap[Array[Float]]) =
+    (pin(index), pinVectors(points, idCol, vecCol)._1)
+
+  /** The point vectors by id, from one collect of `points`, and whether
+    * that collect saw a null vector. Null vectors are unindexable and
+    * left out (they'd NPE the pin); a caller that must keep their
+    * null-distance ordering reads the flag
+    * (VectorIndexCatalog.registerServing). */
+  private[graft] def pinVectors(points: DataFrame, idCol: String, vecCol: String)
+      : (mutable.LongMap[Array[Float]], Boolean) = {
     val vecs = mutable.LongMap.empty[Array[Float]]
+    var sawNull = false
     points.select(col(idCol).cast("long"), col(vecCol).cast("array<float>"))
       .collect()
       .foreach { r =>
-        // null vectors are unindexable — skip them (they'd NPE the pin);
-        // callers that must preserve null-distance ordering check for
-        // them separately (VectorIndexCatalog.registerServing)
-        if (!r.isNullAt(0) && !r.isNullAt(1))
-          vecs.update(r.getLong(0), r.getSeq[Float](1).toArray)
+        if (r.isNullAt(1)) sawNull = true
+        else if (!r.isNullAt(0)) vecs.update(r.getLong(0), r.getSeq[Float](1).toArray)
       }
-    (pinned, vecs)
+    (vecs, sawNull)
   }
 
   /** Exact kNN with the tree pinned but the VECTORS left distributed —

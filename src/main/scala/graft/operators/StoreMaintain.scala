@@ -4,8 +4,10 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlShim, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
@@ -35,6 +37,9 @@ import scala.jdk.CollectionConverters._
   *     on file listing);
   *   - [[rewritePartitions]] replaces only the partitions its rows
   *     fill, and [[removeFromStore]] is the shared batch delete on it;
+  *   - [[writeRows]] and [[rewriteRows]] are [[write]] and
+  *     [[rewritePartitions]] of rows a maintenance step computed on the
+  *     driver: one write job, no shuffle, no pin;
   *   - [[writeSidecar]]/[[readSidecar]] lay each sidecar out by the
   *     family's fixed `StructType` schema;
   *   - [[read]] opens rows with the schema of one file footer, read on
@@ -65,26 +70,56 @@ object StoreMaintain {
     else rows.repartition(partCols.map(col): _*).write.partitionBy(partCols: _*)
 
   /** Replace the `partCol` partitions that `rows` fill with exactly
-    * `rows`; other partitions keep their files. Each of `emptiable` that
-    * `rows` holds no row for is deleted (a zero-row dynamic overwrite
-    * writes no directory, so it cannot express an emptied partition);
-    * that check is one job over `rows`. `rows` must read nothing under
+    * `rows`; other partitions keep their files. Each of `emptied` is
+    * then deleted: the caller knows `rows` hold none of its rows, and a
+    * zero-row dynamic overwrite writes no directory, so it cannot
+    * express an emptied partition. `rows` must read nothing under
     * `path`: pin them first, so the write never reads the files it
     * replaces. */
   def rewritePartitions(rows: DataFrame, path: String, partCol: String,
-                        emptiable: Seq[Any] = Nil): Unit = {
+                        emptied: Seq[Any] = Nil): Unit = {
     rows.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .partitionBy(partCol).parquet(path)
-    if (emptiable.nonEmpty) {
-      val kept = rows.select(col(partCol)).distinct()
-        .collect().map(_.get(0)).toSet
-      val root = new Path(path)
-      val fs = fileSystem(rows.sparkSession, root)
-      emptiable.filterNot(kept).foreach { v =>
-        fs.delete(new Path(root,
-          ExternalCatalogUtils.getPartitionPathString(partCol, v.toString)), true)
-      }
+    dropPartitions(rows.sparkSession, path, partCol, emptied)
+  }
+
+  private def dropPartitions(spark: SparkSession, path: String, partCol: String,
+                             values: Seq[Any]): Unit = {
+    val root = new Path(path)
+    val fs = fileSystem(spark, root)
+    values.foreach { v =>
+      fs.delete(new Path(root,
+        ExternalCatalogUtils.getPartitionPathString(partCol, v.toString)), true)
     }
+  }
+
+  /** [[write]] of driver-held `rows` (Spark's internal form) laid out
+    * by `schema`: one job, no shuffle, one file per partition. */
+  def writeRows(spark: SparkSession, rows: Seq[InternalRow], schema: StructType,
+                path: String, partCol: String): Unit =
+    byPartition(spark, rows, schema, partCol).write.partitionBy(partCol)
+      .mode("overwrite").option("partitionOverwriteMode", "static").parquet(path)
+
+  /** [[rewritePartitions]] of driver-held `rows` (Spark's internal form)
+    * laid out by `schema`: the partitions they fill are replaced in one
+    * job, and since the rows read nothing under `path` they need no pin. */
+  def rewriteRows(spark: SparkSession, rows: Seq[InternalRow], schema: StructType,
+                  path: String, partCol: String): Unit =
+    rewritePartitions(byPartition(spark, rows, schema, partCol), path, partCol)
+
+  /** Driver-held `rows` as a relation of at most one task per core,
+    * each holding the whole rows of some `partCol` values (so each
+    * partition is written as one file), shipped as unsafe rows. */
+  private def byPartition(spark: SparkSession, rows: Seq[InternalRow],
+                          schema: StructType, partCol: String): DataFrame = {
+    val at = schema.fieldIndex(partCol)
+    val toUnsafe = UnsafeProjection.create(schema)
+    val groups = rows.map(r => toUnsafe(r).copy())
+      .groupBy(_.get(at, schema(at).dataType)).values.toSeq
+    val tasks = math.min(groups.size, spark.sparkContext.defaultParallelism)
+    GraftSqlShim.ofInternalRows(spark, spark.sparkContext
+      .parallelize(groups, math.max(1, tasks))
+      .flatMap[InternalRow](identity), schema)
   }
 
   /** Remove every row whose `idCol` appears in `ids` from the store at
@@ -95,22 +130,28 @@ object StoreMaintain {
     * [[graft.sources.IndexStore.maintainDocument]] (the reference's
     * MemoryVectorIndex.Remove, MemoryVectorIndex.cs:358-489): O(touched
     * partitions) I/O, never a full rewrite. The doomed ids broadcast
-    * into a semi-join that finds the touched partitions, and the
-    * rewrite reads only those back. */
+    * into one scan that counts each partition's rows and doomed rows, so
+    * it finds the touched partitions and the ones the removal empties;
+    * the rewrite reads only the others back. */
   def removeFromStore(spark: SparkSession, path: String, ids: DataFrame,
                       idCol: String, partCol: String): Unit = {
     val store = read(spark, path)
     val idRel = ids.select(col(idCol)).distinct()
-    val touched: Seq[Any] = store
-      .join(broadcast(idRel), Seq(idCol), "left_semi")
-      .select(col(partCol)).distinct()
-      .collect().map(_.get(0)).toSeq
-    if (touched.nonEmpty) Pins.scope { pins =>
+    val counts = store
+      .join(broadcast(idRel.withColumn("_doomed", lit(true))), Seq(idCol), "left")
+      .groupBy(col(partCol))
+      .agg(count(lit(1)).as("_rows"), count(col("_doomed")).as("_doomed"))
+      .filter(col("_doomed") > 0)
+      .collect()
+    val touched: Seq[Any] = counts.map(_.get(0)).toSeq
+    val emptied: Seq[Any] = counts.filter(r => r.getLong(1) == r.getLong(2))
+      .map(_.get(0)).toSeq
+    if (touched.size > emptied.size) Pins.scope { pins =>
       val remaining = pins(store
-        .filter(col(partCol).isInCollection(touched))
+        .filter(col(partCol).isInCollection(touched.diff(emptied)))
         .join(broadcast(idRel), Seq(idCol), "left_anti"))
-      rewritePartitions(remaining, path, partCol, emptiable = touched)
-    }
+      rewritePartitions(remaining, path, partCol, emptied)
+    } else dropPartitions(spark, path, partCol, emptied)
   }
 
   /** The rows of the store at `path`. Their data schema comes from one
@@ -132,6 +173,12 @@ object StoreMaintain {
         .parquet(path)
     }
   }
+
+  /** The number of `rows` (a [[read]] of a store, say) in one job: the
+    * scan counts its rows where it reads them. A Dataset `count()` adds
+    * an exchange, whose map side adaptive execution runs as a job of
+    * its own. */
+  def rowCount(rows: DataFrame): Long = rows.select().queryExecution.toRdd.count()
 
   /** Depth-first, the first file an inferring read would also see:
     * names starting `_` or `.` (commit markers, checksums, staging

@@ -90,15 +90,14 @@ object VectorIndexCatalog {
     * (PinnedIndex.knnDistributed). */
   def registerServing(path: String, idCol: String, index: DataFrame,
                       points: DataFrame, vecCol: String = "embedding"): Unit = {
-    val (tree, vecs) = PinnedIndex.pinWithVectors(index, points, idCol, vecCol)
-    // part of the pin: whether any row has a null vector. Null distances
-    // sort FIRST under the default ascending order, so when nulls exist
-    // the kNN rewrite must keep those rows (an IsNull disjunct that also
-    // disables scan pushdown) — when the pin has none, the rewrite emits
-    // the pushable pure-conjunction form.
-    val hasNulls = points.filter(
-      org.apache.spark.sql.functions.col(vecCol).isNull).head(1).nonEmpty
-    entries.put(norm(path), Entry(idCol, vecCol, tree,
+    // part of the pin: whether any row has a null vector, seen by the
+    // same collect. Null distances sort FIRST under the default
+    // ascending order, so when nulls exist the kNN rewrite must keep
+    // those rows (an IsNull disjunct that also disables scan pushdown) —
+    // when the pin has none, the rewrite emits the pushable
+    // pure-conjunction form.
+    val (vecs, hasNulls) = PinnedIndex.pinVectors(points, idCol, vecCol)
+    entries.put(norm(path), Entry(idCol, vecCol, PinnedIndex.pin(index),
       filesAt(index.sparkSession, path), Some(vecs), hasNulls))
   }
 

@@ -1,7 +1,10 @@
 package org.apache.spark.sql
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.types.StructType
 
 /** Bridge between public `Column`s and Catalyst `Expression`s. Spark 4
   * moved this behind `private[sql] classic.ExpressionUtils`; a same-
@@ -15,6 +18,21 @@ object GraftSqlShim {
     * driver already holds — no re-encoding through external `Row`s. */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** A DataFrame over an RDD of rows already in Spark's internal form,
+    * laid out by `schema`. */
+  def ofInternalRows(spark: SparkSession, rows: RDD[InternalRow],
+                     schema: StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
+
+  /** `df`'s rows in Spark's internal form, collected as `collect()`
+    * collects them but without converting each into an external `Row`
+    * (boxed elements for every array). */
+  def collectInternal(df: DataFrame): Array[InternalRow] = {
+    val qe = df.queryExecution
+    execution.SQLExecution.withNewExecutionId(qe, Some("collect"))(
+      qe.executedPlan.executeCollect())
+  }
 
   /** `AbstractDataType` is `private[sql]` at the Scala level; extensions
     * implementing ExpectsInputTypes need to NAME it in the inputTypes

@@ -303,17 +303,19 @@ object StreamOps {
     * lowest latency — the PIN BUDGET class, N·(d·4 + degree·8) bytes);
     * above it, [[graft.operators.GraphAnn.appendGraphDistributed]] —
     * gb-pruned beam pools, no full-store collect per trigger, the
-    * 100 TB continuous-ingest shape. The row count probe is a
-    * zero-column parquet count (footer metadata, not a data scan). */
+    * 100 TB continuous-ingest shape. The row count probe is one
+    * zero-column scan job over the store opened without a
+    * schema-inference job (StoreMaintain.rowCount). */
   def graphAppendStream(newPoints: DataFrame, path: String,
                         idCol: String, vecCol: String, ef: Int = 64,
-                        pinBudgetRows: Long = 1L << 20)
+                        pinBudgetRows: Long = graft.operators.GraphAnn.PinBudgetRows)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     newPoints.writeStream.outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {
           val spark = batch.sparkSession
-          if (spark.read.parquet(path).count() <= pinBudgetRows)
+          val stored = graft.operators.StoreMaintain.read(spark, path)
+          if (graft.operators.StoreMaintain.rowCount(stored) <= pinBudgetRows)
             graft.operators.GraphAnn.appendGraph(spark, path,
               batch, idCol, vecCol, ef)
           else

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -12,33 +8,6 @@ import graft.sources.{Ingest, IndexStore}
 
 class IndexExtrasSpec extends SparkSpec {
   import spark.implicits._
-
-  /** `f`'s result and the Spark jobs it ran: job starts tagged with a
-    * fresh job group, counted once a later barrier job's start shows the
-    * listener bus has delivered them all. */
-  private def jobsOf[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val tag = s"counted-${java.util.UUID.randomUUID()}"
-    val jobs = new AtomicInteger
-    val delivered = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `tag` => jobs.incrementAndGet()
-          case g if g == tag + "-barrier" => delivered.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(tag, "counted")
-      val out = try f finally sc.clearJobGroup()
-      sc.setJobGroup(tag + "-barrier", "barrier")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(delivered.await(60, TimeUnit.SECONDS), "listener bus never drained")
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString

@@ -359,6 +359,41 @@ class IndexedVicinityRuleSpec extends SparkSpec {
     }
   }
 
+  test("kNN: registerServing learns of null vectors from its one collect") {
+    import org.apache.spark.sql.functions.{col, lit}
+    import graft.functions.VectorFunctions.{dist, doubleVec}
+    val dir = java.nio.file.Files.createTempDirectory("graftknnnull").toString
+    val grid = graft.sources.Ingest.grid(extSpark, 20)
+    grid.unionByName(grid.limit(1).select(lit(90000L).as("id"),
+        lit(null).cast(grid.schema("vector").dataType).as("vector")))
+      .write.mode("overwrite").parquet(dir)
+    val g = extSpark.read.parquet(dir)
+    val index = IndexBuild.buildIndex(g.filter(col("vector").isNotNull), "id", "vector")
+      .localCheckpoint()
+    index.count()
+    // one job pins the tree, one collects the points: no second scan
+    // of the points for null vectors
+    val (_, jobs) = jobsOf(
+      VectorIndexCatalog.registerServing(dir, "id", index, g, vecCol = "vector"))
+    try {
+      assert(jobs == 2, s"registerServing ran $jobs jobs")
+      assert(VectorIndexCatalog.lookup(dir).exists(_.hasNullVecs))
+      val q = Seq(0.1, 0.1)
+      def knn = g.orderBy(dist(col("vector"), doubleVec(q)), col("id")).limit(5)
+      assert(knn.queryExecution.optimizedPlan.collect {
+        case f: Filter if f.condition.exists(_.isInstanceOf[InSet]) => f
+      }.nonEmpty, "expected the kNN rewrite")
+      val got = knn.select("id").collect().map(_.getLong(0)).toSeq
+      VectorIndexCatalog.clear()
+      val want = knn.select("id").collect().map(_.getLong(0)).toSeq
+      assert(got.head == 90000L && got == want, s"got $got want $want")
+    } finally {
+      VectorIndexCatalog.clear()
+      SparkSession.setDefaultSession(TestSpark.spark)
+      SparkSession.setActiveSession(TestSpark.spark)
+    }
+  }
+
   test("kNN: SQL surface — ORDER BY vec_distsq LIMIT k fires and matches brute") {
     val path = s"$sf0001/embeddings.parquet"
     val e = Tables.embeddings(extSpark, sf0001)
