@@ -1193,8 +1193,8 @@ object GraphAnn {
   //     survivor that referenced one re-prunes over its kept neighbours
   //     ∪ the doomed neighbour's kept neighbours (connect-through), so
   //     local reachability survives the deletion.
-  // ON THE DRIVER while the store is pin-sized (≤ PinBudgetRows rows,
-  // FreshDiskANN's in-memory TempIndex): the pinned append and the
+  // ON THE DRIVER while the store is pin-sized (≤ StoreMaintain.PinBudgetRows
+  // rows, FreshDiskANN's in-memory TempIndex): the pinned append and the
   // StreamingMerge collect the store's rows once, compute the insert or
   // the merge in memory (O(batch·maxDegree) and O(affected·maxDegree²)
   // work) and write the rows they change with one write job, built from
@@ -1203,15 +1203,9 @@ object GraphAnn {
   // distributed StreamingMerge keep the store in the cluster; both
   // paths write the same rows and seeds.
 
-  /** Store rows up to this count are maintained on the driver: the
-    * StreamingMerge collects the store below it, and
-    * [[graft.streaming.StreamOps.graphAppendStream]] uses the pinned
-    * [[appendGraph]] below it (the PIN BUDGET class, N·(d·4 + degree·8)
-    * bytes: about 170 MB at d = 32 and degree 16). */
-  private[graft] val PinBudgetRows: Long = 1L << 20
-
   /** An opened graph store: adjacency relation + frozen build params +
-    * seeds + current tombstones — one listing + two sidecar reads. */
+    * seeds + current tombstones — one listing + two driver-side sidecar
+    * reads. */
   final case class GraphStore(rows: DataFrame, seeds: Array[Long],
                               alpha: Double, maxDegree: Int, buckets: Int,
                               tombstones: Array[Long])
@@ -1270,8 +1264,9 @@ object GraphAnn {
     writeGraph(graph, seeds, path, alpha, maxDegree, buckets)
   }
 
-  /** Open a graph store: one job for the `.meta` row, one more for the
-    * tombstones when the sidecar exists (deduplicated on the driver). */
+  /** Open a graph store: the `.meta` row and, when the sidecar exists,
+    * the tombstones (deduplicated) are read on the driver, and the rows
+    * opened without a schema-inference job, so opening runs no job. */
   def openGraph(spark: SparkSession, path: String): GraphStore = {
     val m = StoreMaintain.readSidecar(spark, path, "meta", MetaSchema).head
     val tomb =
@@ -1671,7 +1666,7 @@ object GraphAnn {
     if (store.tombstones.isEmpty) return false
     val rows = StoreMaintain.rowCount(store.rows)
     if (rows > 0 && store.tombstones.length.toDouble / rows >= ratio) {
-      consolidateGraph(spark, path, store, rows, PinBudgetRows); true
+      consolidateGraph(spark, path, store, rows, StoreMaintain.PinBudgetRows); true
     } else false
   }
 
@@ -1684,11 +1679,11 @@ object GraphAnn {
     * nearest surviving non-seed row (medoid of the survivors if none
     * remain); the tombstone sidecar is cleared. Full-store rewrite by
     * design — the amortized counterpart of O(batch) removeGraph. A
-    * pin-sized store (≤ [[PinBudgetRows]] rows) is merged on the driver
-    * from one collect of its rows; a larger one by the distributed
-    * merge. Both write the same rows and seeds. */
+    * pin-sized store (≤ [[StoreMaintain.PinBudgetRows]] rows) is merged
+    * on the driver from one collect of its rows; a larger one by the
+    * distributed merge. Both write the same rows and seeds. */
   def consolidateGraph(spark: SparkSession, path: String): Unit =
-    consolidateGraph(spark, path, PinBudgetRows)
+    consolidateGraph(spark, path, StoreMaintain.PinBudgetRows)
 
   /** [[consolidateGraph]] merging on the driver only up to
     * `pinBudgetRows` store rows (a spec passes 0 to run the distributed

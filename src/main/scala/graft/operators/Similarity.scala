@@ -576,8 +576,8 @@ object Similarity {
   final case class IvfStore(rows: DataFrame,
                             centroids: Array[(Long, Array[Double])])
 
-  /** Open a persisted IVF store once: one partition listing, one
-    * sidecar read. */
+  /** Open a persisted IVF store once: one partition listing and the
+    * centroid sidecar, read on the driver; no Spark job. */
   def openIvf(spark: org.apache.spark.sql.SparkSession,
               path: String): IvfStore =
     IvfStore(StoreMaintain.read(spark, path), readIvfCentroids(spark, path))

@@ -4,15 +4,18 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, GraftSqlShim, Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** The on-disk layout every persisted store shares: the LSH-bucketed,
@@ -36,15 +39,19 @@ import scala.jdk.CollectionConverters._
   *     131k at C=4096, a 5-minute write and multi-second probes spent
   *     on file listing);
   *   - [[rewritePartitions]] replaces only the partitions its rows
-  *     fill, and [[removeFromStore]] is the shared batch delete on it;
+  *     fill;
   *   - [[writeRows]] and [[rewriteRows]] are [[write]] and
   *     [[rewritePartitions]] of rows a maintenance step computed on the
   *     driver: one write job, no shuffle, no pin;
+  *   - [[removeFromStore]] is the shared batch delete: the ids held as a
+  *     driver set, one counting scan, and the touched partitions'
+  *     survivors rewritten from the driver while they fit
+  *     [[PinBudgetRows]];
   *   - [[writeSidecar]]/[[readSidecar]] lay each sidecar out by the
-  *     family's fixed `StructType` schema;
+  *     family's fixed `StructType` schema; [[readSidecar]] reads the
+  *     sidecar's files on the driver, so it runs no job;
   *   - [[read]] opens rows with the schema of one file footer, read on
-  *     the driver, so neither opening a store nor reading a sidecar runs
-  *     a schema-inference job;
+  *     the driver, so opening a store runs no schema-inference job;
   *   - [[compact]] rewrites a store beside itself and swaps it in.
   *
   * The overwrite mode is always pinned on the writer, never taken from
@@ -104,8 +111,8 @@ object StoreMaintain {
     * laid out by `schema`: the partitions they fill are replaced in one
     * job, and since the rows read nothing under `path` they need no pin. */
   def rewriteRows(spark: SparkSession, rows: Seq[InternalRow], schema: StructType,
-                  path: String, partCol: String): Unit =
-    rewritePartitions(byPartition(spark, rows, schema, partCol), path, partCol)
+                  path: String, partCol: String, emptied: Seq[Any] = Nil): Unit =
+    rewritePartitions(byPartition(spark, rows, schema, partCol), path, partCol, emptied)
 
   /** Driver-held `rows` as a relation of at most one task per core,
     * each holding the whole rows of some `partCol` values (so each
@@ -122,6 +129,15 @@ object StoreMaintain {
       .flatMap[InternalRow](identity), schema)
   }
 
+  /** Store rows up to this count may be held on the driver by one
+    * maintenance call: the graph store's StreamingMerge collects the
+    * store below it, [[graft.streaming.StreamOps.graphAppendStream]]
+    * uses the pinned [[GraphAnn.appendGraph]] below it, and
+    * [[removeFromStore]] rewrites the surviving rows below it from the
+    * driver (the PIN BUDGET class, N·(d·4 + degree·8) bytes for a graph:
+    * about 170 MB at d = 32 and degree 16). */
+  private[graft] val PinBudgetRows: Long = 1L << 20
+
   /** Remove every row whose `idCol` appears in `ids` from the store at
     * `path`, partitioned by `partCol`: the partitions holding a doomed
     * row are rewritten without it, and emptied ones dropped. Sidecars
@@ -129,29 +145,57 @@ object StoreMaintain {
     * as on append. The flat-store counterpart of
     * [[graft.sources.IndexStore.maintainDocument]] (the reference's
     * MemoryVectorIndex.Remove, MemoryVectorIndex.cs:358-489): O(touched
-    * partitions) I/O, never a full rewrite. The doomed ids broadcast
-    * into one scan that counts each partition's rows and doomed rows, so
-    * it finds the touched partitions and the ones the removal empties;
-    * the rewrite reads only the others back. */
+    * partitions) I/O, never a full rewrite. `ids` is a batch, collected
+    * as a driver set; one scan counts each partition's rows and doomed
+    * rows, so it finds the touched partitions and the ones the removal
+    * empties. While the touched partitions' surviving rows fit
+    * [[PinBudgetRows]] they are collected and written back from the
+    * driver ([[rewriteRows]]: no pin); above it they are pinned and
+    * rewritten in the cluster. */
   def removeFromStore(spark: SparkSession, path: String, ids: DataFrame,
-                      idCol: String, partCol: String): Unit = {
+                      idCol: String, partCol: String): Unit =
+    removeFromStore(spark, path, ids, idCol, partCol, PinBudgetRows)
+
+  /** [[removeFromStore]] rewriting from the driver only up to
+    * `pinBudgetRows` surviving rows (a spec passes 0 to run the pinned
+    * rewrite on a small store). */
+  private[graft] def removeFromStore(spark: SparkSession, path: String, ids: DataFrame,
+                                     idCol: String, partCol: String,
+                                     pinBudgetRows: Long): Unit = {
+    val doomed = ids.select(col(idCol)).collect().iterator
+      .map(_.get(0)).filter(_ != null).toSet
+    if (doomed.isEmpty) return
     val store = read(spark, path)
-    val idRel = ids.select(col(idCol)).distinct()
-    val counts = store
-      .join(broadcast(idRel.withColumn("_doomed", lit(true))), Seq(idCol), "left")
-      .groupBy(col(partCol))
-      .agg(count(lit(1)).as("_rows"), count(col("_doomed")).as("_doomed"))
-      .filter(col("_doomed") > 0)
-      .collect()
-    val touched: Seq[Any] = counts.map(_.get(0)).toSeq
-    val emptied: Seq[Any] = counts.filter(r => r.getLong(1) == r.getLong(2))
-      .map(_.get(0)).toSeq
-    if (touched.size > emptied.size) Pins.scope { pins =>
-      val remaining = pins(store
-        .filter(col(partCol).isInCollection(touched.diff(emptied)))
-        .join(broadcast(idRel), Seq(idCol), "left_anti"))
-      rewritePartitions(remaining, path, partCol, emptied)
-    } else dropPartitions(spark, path, partCol, emptied)
+    // a null id matches no doomed id, as in an anti-join
+    val isDoomed = coalesce(col(idCol).isInCollection(doomed), lit(false))
+    val partType = store.schema(partCol).dataType
+    // (partition value, rows, doomed rows) per task, summed here
+    val counts = store.select(col(partCol), isDoomed).queryExecution.toRdd
+      .mapPartitions { rows =>
+        val n = mutable.HashMap.empty[Any, Array[Long]]
+        rows.foreach { r =>
+          val v = if (r.isNullAt(0)) null else InternalRow.copyValue(r.get(0, partType))
+          val c = n.getOrElseUpdate(v, new Array[Long](2))
+          c(0) += 1
+          if (r.getBoolean(1)) c(1) += 1
+        }
+        n.iterator.map { case (v, c) => (v, c(0), c(1)) }
+      }.collect()
+      .groupMapReduce(_._1)(c => (c._2, c._3))((a, b) => (a._1 + b._1, a._2 + b._2))
+    val (emptied, kept) = counts.filter(_._2._2 > 0).partition { case (_, (n, d)) => n == d }
+    val toScala = CatalystTypeConverters.createToScalaConverter(partType)
+    val emptiedValues = emptied.keys.map(toScala).toSeq
+    if (kept.isEmpty) dropPartitions(spark, path, partCol, emptiedValues)
+    else {
+      val remaining = store.filter(
+        col(partCol).isInCollection(kept.keys.map(toScala)) && !isDoomed)
+      if (kept.values.map { case (n, d) => n - d }.sum <= pinBudgetRows)
+        rewriteRows(spark, GraftSqlShim.collectInternal(remaining).toSeq,
+          remaining.schema, path, partCol, emptiedValues)
+      else Pins.scope { pins =>
+        rewritePartitions(pins(remaining), path, partCol, emptiedValues)
+      }
+    }
   }
 
   /** The rows of the store at `path`. Their data schema comes from one
@@ -180,20 +224,23 @@ object StoreMaintain {
     * its own. */
   def rowCount(rows: DataFrame): Long = rows.select().queryExecution.toRdd.count()
 
-  /** Depth-first, the first file an inferring read would also see:
-    * names starting `_` or `.` (commit markers, checksums, staging
-    * dirs) are skipped. */
+  /** Depth-first, the first file an inferring read would also see. */
   private def firstDataFile(fs: FileSystem, dir: Path): Option[FileStatus] = {
-    val (dirs, files) = fs.listStatus(dir)
-      .filterNot(s => s.getPath.getName.startsWith("_") ||
-        s.getPath.getName.startsWith("."))
-      .sortBy(_.getPath.getName)
-      .partition(_.isDirectory)
+    val (dirs, files) = listData(fs, dir).partition(_.isDirectory)
     files.headOption.orElse(
       dirs.iterator.map(d => firstDataFile(fs, d.getPath)).collectFirst {
         case Some(f) => f
       })
   }
+
+  /** `dir`'s entries an inferring read would also see, by name: names
+    * starting `_` or `.` (commit markers, checksums, staging dirs) are
+    * skipped. */
+  private def listData(fs: FileSystem, dir: Path): Array[FileStatus] =
+    fs.listStatus(dir)
+      .filterNot(s => s.getPath.getName.startsWith("_") ||
+        s.getPath.getName.startsWith("."))
+      .sortBy(_.getPath.getName)
 
   private def sidecar(path: String, name: String): String = s"$path.$name"
 
@@ -205,11 +252,22 @@ object StoreMaintain {
     writeSidecarRows(spark.createDataFrame(rows.asJava, schema).coalesce(1),
       path, name, append)
 
-  /** The rows of the store's `name` sidecar, read with its `schema`:
-    * one job, no schema inference. */
+  /** The rows of the store's `name` sidecar, read with its `schema`.
+    * Its files are read on the driver by Spark's own parquet reader, so
+    * the read runs no job. */
   def readSidecar(spark: SparkSession, path: String, name: String,
-                  schema: StructType): Array[Row] =
-    spark.read.schema(schema).parquet(sidecar(path, name)).collect()
+                  schema: StructType): Array[Row] = {
+    val dir = new Path(sidecar(path, name))
+    val read = new ParquetFileFormat().buildReaderWithPartitionValues(spark,
+      schema, new StructType(), schema, Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), spark.sessionState.newHadoopConf())
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    listData(fileSystem(spark, dir), dir).filterNot(_.isDirectory).flatMap { f =>
+      read(PartitionedFile(InternalRow.empty, SparkPath.fromPath(f.getPath), 0, f.getLen,
+          modificationTime = f.getModificationTime, fileSize = f.getLen))
+        .map(r => toRow(r).asInstanceOf[Row])
+    }
+  }
 
   /** Write a sidecar that is a relation over the store's own ids (its
     * id column has the store's id type, so it has no fixed schema). */

@@ -308,7 +308,7 @@ object StreamOps {
     * schema-inference job (StoreMaintain.rowCount). */
   def graphAppendStream(newPoints: DataFrame, path: String,
                         idCol: String, vecCol: String, ef: Int = 64,
-                        pinBudgetRows: Long = graft.operators.GraphAnn.PinBudgetRows)
+                        pinBudgetRows: Long = graft.operators.StoreMaintain.PinBudgetRows)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     newPoints.writeStream.outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>

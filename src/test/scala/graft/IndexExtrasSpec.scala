@@ -512,7 +512,7 @@ class IndexExtrasSpec extends SparkSpec {
     GraphAnn.removeGraph(spark, s"$dir/g", Seq(5L, 7L))
     val (tombed, tombJobs) = jobsOf(GraphAnn.openGraph(spark, s"$dir/g"))
     val (cents, centJobs) = jobsOf(Similarity.readIvfCentroids(spark, s"$dir/ivf"))
-    assert((freshJobs, tombJobs, centJobs) == ((1, 2, 1)),
+    assert((freshJobs, tombJobs, centJobs) == ((0, 0, 0)),
       "jobs to open the graph, open it with tombstones, read the IVF centroids")
     assert(fresh.tombstones.isEmpty && tombed.tombstones.sorted.toSeq == Seq(3L, 5L, 7L))
     assert(tombed.rows.count() == 200 && cents.length == 4)
@@ -555,21 +555,21 @@ class IndexExtrasSpec extends SparkSpec {
     Dedup.writeEvalStore(e, "vec_id", "embedding", 4, s"$dir/eval")
     TextIndex.write(docs, "doc_id", "text", 16, s"$dir/txt")
     SketchStore.write(Tables.events(spark, sf0001), "ts", "user_id", 8, s"$dir/hll")
-    // (family, jobs it may run: one per sidecar read, plus the one
-    // parallel partition listing of a store past 32 partition dirs)
+    // (family, jobs it may run: sidecars are read on the driver, so only
+    // the one parallel partition listing of a store past 32 partition dirs)
     val opens: Seq[(String, Int, () => Any)] = Seq(
-      ("lsh", 1, () => Similarity.openBucketed(spark, s"$dir/lsh")),
-      ("ivf", 1, () => Similarity.openIvf(spark, s"$dir/ivf")),
-      ("ivf-pq", 2, () => IvfPq.open(spark, s"$dir/pq")),
-      ("opq", 3, () => IvfPq.openOpq(spark, s"$dir/opq")),
-      ("ivf-sq8", 2, () => IvfSq.open(spark, s"$dir/sq")),
-      ("binary", 2, () => BinaryIndex.open(spark, s"$dir/bin")),
-      ("pq", 1, () => ProductQuant.probePq(spark, s"$dir/flatpq", e, "vec_id",
+      ("lsh", 0, () => Similarity.openBucketed(spark, s"$dir/lsh")),
+      ("ivf", 0, () => Similarity.openIvf(spark, s"$dir/ivf")),
+      ("ivf-pq", 0, () => IvfPq.open(spark, s"$dir/pq")),
+      ("opq", 0, () => IvfPq.openOpq(spark, s"$dir/opq")),
+      ("ivf-sq8", 0, () => IvfSq.open(spark, s"$dir/sq")),
+      ("binary", 1, () => BinaryIndex.open(spark, s"$dir/bin")),
+      ("pq", 0, () => ProductQuant.probePq(spark, s"$dir/flatpq", e, "vec_id",
         "embedding", QueryConstants.Q64, 10, 5)),
-      ("shingle", 1, () => Dedup.openShingleStore(spark, s"$dir/sh")),
-      ("eval", 1, () => Dedup.openEvalStore(spark, s"$dir/eval")),
-      ("text", 1, () => TextIndex.open(spark, s"$dir/txt")),
-      ("hll", 1, () => SketchStore.probeRange(spark, s"$dir/hll", "1970-01-01", "2100-01-01")))
+      ("shingle", 0, () => Dedup.openShingleStore(spark, s"$dir/sh")),
+      ("eval", 0, () => Dedup.openEvalStore(spark, s"$dir/eval")),
+      ("text", 0, () => TextIndex.open(spark, s"$dir/txt")),
+      ("hll", 0, () => SketchStore.probeRange(spark, s"$dir/hll", "1970-01-01", "2100-01-01")))
     val jobs = opens.map { case (name, _, open) => name -> jobsOf(open())._2 }
     assert(jobs == opens.map { case (name, n, _) => name -> n })
     // the footer-schema read still infers partition columns like Spark

@@ -133,6 +133,31 @@ class IndexSpec extends SparkSpec {
     assert(emptyIdx.count() == 0)
   }
 
+  test("maintenance: remove keeps every other leaf and every node with a leaf below") {
+    val pts = Ingest.randomUniform(spark, 300, 4, seed = 11L)
+    val index = IndexBuild.buildIndex(pts, "id", "vector", bucketSize = 4).localCheckpoint()
+    val rows = index.collect()
+    val leaves = rows.filterNot(_.isNullAt(5)).map(r => (r.getLong(0), r.getLong(5)))
+    def parent(r: Long): Long = (r + 1) / 2 - 1
+    def below(node: Long, leaf: Long): Boolean =
+      Iterator.iterate(parent(leaf))(parent).takeWhile(_ >= 0).contains(node)
+    // an internal node below the root's children, all of whose leaves die
+    val emptied = rows.filter(r => r.isNullAt(5) && r.getLong(0) > 2).map(_.getLong(0)).sorted
+      .find(n => leaves.count(l => below(n, l._1)) >= 3).get
+    val emptiedIds = leaves.filter(l => below(emptied, l._1)).map(_._2)
+    // a bucket leaf elsewhere that keeps some of its points
+    val (partLeaf, partIds) = leaves.groupMap(_._1)(_._2)
+      .find { case (r, ids) => ids.length >= 2 && !below(emptied, r) }.get
+    val doomed = (emptiedIds :+ partIds.head :+ 1000000L).toSet
+    val survivors = leaves.filterNot(l => doomed(l._2)).map(_._1)
+    val want = rows.filter(r =>
+      if (r.isNullAt(5)) survivors.exists(below(r.getLong(0), _)) else !doomed(r.getLong(5)))
+    val got = IndexMaintain.removePoints(index, doomed.toSeq.toDF("id")).collect()
+    assert(got.map(_.toString).sorted.toSeq == want.map(_.toString).sorted.toSeq)
+    assert(!got.exists(_.getLong(0) == emptied), "the emptied node survived")
+    assert(got.count(_.getLong(0) == partLeaf) == partIds.length - 1)
+  }
+
   test("maintenance: add then search equals brute force on the union") {
     val g = Ingest.grid(spark, 20)
     val base = g.filter(col("id") % 4 =!= 0)

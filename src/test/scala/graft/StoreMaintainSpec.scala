@@ -2,7 +2,12 @@ package graft
 
 import java.io.File
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.RDDBlockId
 
 import graft.operators._
 import graft.sources.Ingest
@@ -31,6 +36,47 @@ class StoreMaintainSpec extends SparkSpec {
 
   private def partitionDirs(path: String): Int =
     new File(path).list().count(_.contains("="))
+
+  /** The data files of one partition directory. */
+  private def dataFiles(dir: String): Int =
+    new File(dir).list().count(n => !n.startsWith(".") && !n.startsWith("_"))
+
+  /** The RDDs pinned while `f` runs: each RDD a block was stored for, and
+    * each RDD persisted at a job start that was not persisted before. */
+  private def pinnedDuring(f: => Unit): Set[Int] = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        (sc.getPersistentRDDs.keySet -- before).foreach(seen.add)
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit =
+        e.blockUpdatedInfo.blockId match {
+          case RDDBlockId(rdd, _) if e.blockUpdatedInfo.storageLevel.isValid => seen.add(rdd)
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      f
+      (sc.getPersistentRDDs.keySet -- before).foreach(seen.add)
+      jobsOf(()) // its barrier job drains the listener bus
+    } finally sc.removeSparkListener(listener)
+    seen.asScala.toSet
+  }
+
+  /** An IVF store at `dir` over 200 clustered points in 4 lists, with a
+    * second file in one list (10 appended rows, one with a null id).
+    * Returns that list. */
+  private def layeredIvf(dir: String): Int = {
+    val pts = Ingest.randomClustered(spark, 200, 4, 4).localCheckpoint()
+    Similarity.writeIvf(pts, "id", "vector", 4, dir)
+    val extra = Ingest.randomClustered(spark, 10, 4, 4, seed = 7L)
+      .select(when(col("id") =!= 0, col("id") + 1000L).as("id"), col("vector"))
+    Similarity.appendIvf(spark, dir, extra.coalesce(1), "vector")
+    StoreMaintain.read(spark, dir).filter(col("id").isNull)
+      .select("list_id").as[Int].head()
+  }
 
   test("a full store write replaces every partition under a session-level dynamic mode") {
     val dir = tmpDir("graftfullwrite")
@@ -92,5 +138,81 @@ class StoreMaintainSpec extends SparkSpec {
     assert(!new File(s"$dir/list_id=$doomedList").exists())
     assert(spark.read.parquet(dir).select("id").as[Long].collect().sorted.toSeq ==
       survivors)
+  }
+
+  test("the driver removeFromStore writes the same rows as the pinned rewrite") {
+    val root = tmpDir("graftremoveeq")
+    val (driver, pinned) = (s"$root/driver", s"$root/pinned")
+    val layered = layeredIvf(driver)
+    FileUtils.copyDirectory(new File(driver), new File(pinned))
+    assert(dataFiles(s"$driver/list_id=$layered") >= 2, "the null-id row's list has one file")
+    val store = StoreMaintain.read(spark, driver)
+    val emptiedList = (0 until 4).find(_ != layered).get
+    // every row of one list; in the layered list, one written row and an
+    // appended one if it holds one; and an id the store does not hold
+    val doomed = (store.filter(col("list_id") === emptiedList).select("id").as[Long]
+        .collect() ++
+      store.filter(col("list_id") === layered && col("id") < 1000).select("id").as[Long]
+        .take(1) ++
+      store.filter(col("list_id") === layered && col("id") > 1000).select("id").as[Long]
+        .take(1) :+ 99999L).toSeq
+    val want = rowsOf(driver).filterNot(r => doomed.exists(id => r.startsWith(s"$id|")))
+    StoreMaintain.removeFromStore(spark, driver, doomed.toDF("id"), "id", "list_id")
+    StoreMaintain.removeFromStore(spark, pinned, doomed.toDF("id"), "id", "list_id",
+      pinBudgetRows = 0L)
+    assert(!new File(s"$driver/list_id=$emptiedList").exists())
+    assert(partitionDirs(driver) == partitionDirs(pinned))
+    val (got, pinnedRows) = (rowsOf(driver), rowsOf(pinned))
+    assert(got.exists(_.startsWith("null|")), "the null-id row was dropped")
+    assert(got == pinnedRows && got == want)
+  }
+
+  test("removeFromStore within the budget pins nothing while it runs") {
+    val root = tmpDir("graftremovepins")
+    val (driver, pinned) = (s"$root/driver", s"$root/pinned")
+    Seq(driver, pinned).foreach(layeredIvf)
+    val doomed = Seq(3L, 4L, 5L, 99999L).toDF("id")
+    assert(pinnedDuring(
+      StoreMaintain.removeFromStore(spark, driver, doomed, "id", "list_id")).isEmpty)
+    // the probe sees the checkpoint the rewrite above the budget takes
+    assert(pinnedDuring(StoreMaintain.removeFromStore(spark, pinned, doomed, "id",
+      "list_id", pinBudgetRows = 0L)).nonEmpty)
+    assert(rowsOf(driver) == rowsOf(pinned))
+  }
+
+  test("batch maintenance of the IVF store and the tree runs a handful of jobs per call") {
+    val dir = tmpDir("graftmaintainjobs")
+    val all = Ingest.randomClustered(spark, 1230, 8, 8).localCheckpoint()
+    Similarity.writeIvf(all.filter(col("id") < 1200), "id", "vector", 8, s"$dir/ivf")
+    IndexBuild.buildIndex(all.filter(col("id") < 1200), "id", "vector")
+      .write.parquet(s"$dir/tree0")
+    val batch = all.filter(col("id") >= 1200).as[(Long, Array[Float])].collect().toSeq
+    // the batch as a caller holds it: a small relation in one partition
+    val adds = batch.toDF("id", "vector").coalesce(1)
+    val doomed = (0L until 1200L by 40L).toDF("id")
+    // the churn round's order: append to the tree, then remove. Each
+    // relation is read before its count starts: Spark's own parquet read
+    // runs a schema-inference job of its own.
+    val (points, tree0) = (spark.read.parquet(s"$dir/ivf"), spark.read.parquet(s"$dir/tree0"))
+    val (_, addJobs) = jobsOf(IndexMaintain.addPoints(tree0, points, adds, "id", "vector")
+      .write.parquet(s"$dir/tree1"))
+    val (_, removeJobs) = jobsOf(
+      StoreMaintain.removeFromStore(spark, s"$dir/ivf", doomed, "id", "list_id"))
+    val tree1 = spark.read.parquet(s"$dir/tree1")
+    val (_, dropJobs) = jobsOf(IndexMaintain.removePoints(tree1, doomed)
+      .write.parquet(s"$dir/tree2"))
+    val (cents, sidecarJobs) = jobsOf(Similarity.readIvfCentroids(spark, s"$dir/ivf"))
+    val counts = s"removeFromStore $removeJobs, addPoints $addJobs, " +
+      s"removePoints $dropJobs, readSidecar $sidecarJobs jobs"
+    assert(removeJobs <= 3 && addJobs <= 6 && dropJobs <= 3 && sidecarJobs == 0, counts)
+    info(counts)
+    // the driver-side sidecar read holds what Spark's reader reads
+    assert(cents.map { case (l, c) => (l, c.toSeq) }.toSeq ==
+      spark.read.parquet(s"$dir/ivf.centroids").as[(Long, Seq[Double])].collect().toSeq)
+    val live = (0L until 1200L).filterNot(_ % 40 == 0)
+    assert(spark.read.parquet(s"$dir/ivf").select("id").as[Long].collect().sorted.toSeq == live)
+    assert(spark.read.parquet(s"$dir/tree2").filter(col("id").isNotNull)
+      .select("id").as[Long].collect().sorted.toSeq ==
+      (live ++ (1200L until 1230L)).sorted)
   }
 }
