@@ -977,7 +977,10 @@ object SparkEntry {
         // band = true: the crawl re-admits the WHOLE corpus against the
         // store, so the one-pass size-banded probe wins over the
         // narrow-batch prefix path (11.5 -> 1.8 s warm at sf0.1,
-        // identical pair set — see ngramJaccardPairsAgainstStoreBand)
+        // identical pair set — see ngramJaccardPairsAgainstStoreBand).
+        // While the probe's shingles and their postings fit the driver
+        // budget (the small scale factors) the driver path answers
+        // instead and `band` is not consulted
         Dedup.admitNewAgainstStore(qualified, shingleStore(s, d),
           "doc_id", "text", 0.3, band = true),
         Seq("doc_id"))
@@ -1318,7 +1321,9 @@ object SparkEntry {
       // band = true: even on the narrow batch the one-pass size-banded
       // probe wins on this dense-vocabulary corpus (4.8 -> 0.8 s warm at
       // sf0.1, identical rows); the prefix path stays hash-gated via d29
-      // as the Zipfian-store default
+      // as the Zipfian-store default. While the batch's shingles and their
+      // postings fit the driver budget (the small scale factors) the
+      // driver path answers instead and `band` is not consulted
       val docs = Tables.documents(s, d)
       Dedup.admitNewAgainstStore(
           docs.filter(col("doc_id") % 7 === 0), shingleStore(s, d),

@@ -1,9 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.VectorFunctions._
 
@@ -384,10 +390,12 @@ object Dedup {
     * shingle count and its hash bucket. */
   private def postings(sh: DataFrame, buckets: Int): DataFrame = {
     val sz = sh.groupBy(col("doc")).agg(count(lit(1)).as("sz"))
-    sh.join(sz, "doc")
-      .withColumn("pb",
-        pmod(xxhash64(col("shingle")), lit(buckets.toLong)).cast("int"))
+    sh.join(sz, "doc").withColumn("pb", bucketOf(col("shingle"), buckets))
   }
+
+  /** A shingle's hash bucket: the store's partition key `pb`. */
+  private def bucketOf(shingle: Column, buckets: Int): Column =
+    pmod(xxhash64(shingle), lit(buckets.toLong)).cast("int")
 
   /** A pre-opened dedup-index handle: posting rows + frozen (k, buckets)
     * — one partition listing, one sidecar read. */
@@ -425,13 +433,11 @@ object Dedup {
                                     threshold: Double,
                                     pruneBuckets: Boolean = false): DataFrame = {
     val shA = shingleRows(probe, idCol, textCol, store.k).localCheckpoint()
-    val bucketOf = (c: Column) =>
-      pmod(xxhash64(c), lit(store.buckets.toLong)).cast("int")
     // materialized: pref feeds the candidate join AND sizesA (two
     // consumers; the lazy form re-measured SLOWER in round 18 —
     // 4.7–5.6 vs 3.8–4.7 s warm — the df aggregation re-runs per branch)
     val pref = prefixRelation(shA, threshold)
-      .withColumn("pb", bucketOf(col("shingle")))
+      .withColumn("pb", bucketOf(col("shingle"), store.buckets))
     // pruneBuckets: pin the probe's bucket set as a LITERAL partition
     // filter (pb IN ...) — a bounded driver-side set (≤ buckets ints,
     // from the already-checkpointed batch shingles), lossless because
@@ -441,7 +447,7 @@ object Dedup {
     // narrow batch probing a wide store — the 100 TB admission shape.
     val pruned =
       if (pruneBuckets) {
-        val pbs = shA.select(bucketOf(col("shingle")).as("pb"))
+        val pbs = shA.select(bucketOf(col("shingle"), store.buckets).as("pb"))
           .distinct().collect().map(_.getInt(0)).toSeq
         store.post.filter(col("pb").isin(pbs: _*))
       } else store.post
@@ -467,7 +473,7 @@ object Dedup {
     // right verify at store-probe selectivity; the real lever on this
     // path is candidate REDUCTION (positional prefixes in the store
     // layout), not verify mechanics.
-    val shAp = shA.withColumn("pb", bucketOf(col("shingle")))
+    val shAp = shA.withColumn("pb", bucketOf(col("shingle"), store.buckets))
     val inter = cand
       .join(shAp.as("l"), col("a") === col("l.doc"))
       .join(post.as("r"),
@@ -511,8 +517,7 @@ object Dedup {
         array_distinct(shinglesOf(tokens(col(textCol)), store.k)).as("arr"))
       .select(col("doc"), size(col("arr")).as("sza"),
         explode(col("arr")).as("shingle"))
-      .withColumn("pb",
-        pmod(xxhash64(col("shingle")), lit(store.buckets.toLong)).cast("int"))
+      .withColumn("pb", bucketOf(col("shingle"), store.buckets))
       .localCheckpoint()
     val pruned =
       if (pruneBuckets) {
@@ -554,7 +559,8 @@ object Dedup {
     * (store rows estimated from its parquet bytes at the measured
     * ~10 B/posting-row — comparing rows to rows, not in-memory bytes
     * to compressed bytes). Filter size is ~10 bits per batch shingle
-    * row at fpp 1%, broadcast once per probe. */
+    * row at fpp 1%, over each shingle's `xxhash64`, shipped as one binary
+    * literal that Catalyst's native `might_contain` tests per posting. */
   private def bloomPrefilterPost(shA: DataFrame, post: DataFrame,
                                  store: ShingleStore): DataFrame = {
     val spark = shA.sparkSession
@@ -571,34 +577,126 @@ object Dedup {
     if (!exceedsBroadcast || BigInt(nRows * 8) >= storeRowsEst)
       post
     else {
-      val bf = shA.stat.bloomFilter("shingle", math.max(nRows, 1L), 0.01)
-      val bfB = spark.sparkContext.broadcast(bf)
-      val mightContain =
-        udf((s: String) => s != null && bfB.value.mightContainString(s))
-      post.filter(mightContain(col("shingle")))
+      val hash = xxhash64(col("shingle"))
+      val bytes = new java.io.ByteArrayOutputStream
+      shA.stat.bloomFilter(hash, math.max(nRows, 1L), 0.01).writeTo(bytes)
+      post.filter(col("shingle").isNotNull && GraftSqlShim.toColumn(
+        BloomFilterMightContain(Literal(bytes.toByteArray), GraftSqlShim.toExpression(hash))))
     }
   }
 
   /** [[admitNew]] probing a persisted [[ShingleStore]] — the production
     * admission loop is openShingleStore → admitNewAgainstStore →
-    * appendShingleStore(admitted). `band = true` selects the one-pass
-    * size-banded probe ([[ngramJaccardPairsAgainstStoreBand]]) — the
-    * right strategy when the probe is corpus-scale (see its doc). */
+    * appendShingleStore(admitted).
+    *
+    * Which path runs: while the probe's shingles and the store postings
+    * they match both fit [[StoreMaintain.PinBudgetRows]] rows (the
+    * incremental-batch shape), the batch is answered on the driver
+    * ([[admitOnDriver]]): one collect of the probe (no job when it is
+    * driver-held rows), one job reading the matching postings, the
+    * Jaccard test on the driver, and a `LocalRelation` of the admitted
+    * ids — no checkpoint, no exchange. Past the budget the distributed
+    * pair relation runs: `band = true` selects the one-pass size-banded
+    * probe ([[ngramJaccardPairsAgainstStoreBand]]) — the right strategy
+    * when the probe is corpus-scale (see its doc) — and `band = false`
+    * the prefix probe ([[ngramJaccardPairsAgainstStore]]); `pruneBuckets`
+    * is theirs. Every path returns the same ids. */
   def admitNewAgainstStore(probe: DataFrame, store: ShingleStore,
                            idCol: String, textCol: String,
                            threshold: Double,
                            pruneBuckets: Boolean = false,
-                           band: Boolean = false): DataFrame = {
-    val pairs =
-      if (band) ngramJaccardPairsAgainstStoreBand(probe, store, idCol,
-        textCol, threshold, pruneBuckets)
-      else ngramJaccardPairsAgainstStore(probe, store, idCol, textCol,
-        threshold, pruneBuckets)
-    probe.join(
-        pairs.select(col("a").as(idCol)).distinct(),
-        Seq(idCol), "left_anti")
-      .select(col(idCol))
+                           band: Boolean = false): DataFrame =
+    admitNewAgainstStore(probe, store, idCol, textCol, threshold, pruneBuckets, band,
+      StoreMaintain.PinBudgetRows)
+
+  /** [[admitNewAgainstStore]] answering on the driver only up to
+    * `pinBudgetRows` rows (a spec passes 0 to run the distributed path on
+    * a small store). */
+  private[graft] def admitNewAgainstStore(probe: DataFrame, store: ShingleStore,
+                                          idCol: String, textCol: String,
+                                          threshold: Double, pruneBuckets: Boolean,
+                                          band: Boolean, pinBudgetRows: Long): DataFrame =
+    admitOnDriver(probe, store, idCol, textCol, threshold, pinBudgetRows).getOrElse {
+      val pairs =
+        if (band) ngramJaccardPairsAgainstStoreBand(probe, store, idCol,
+          textCol, threshold, pruneBuckets)
+        else ngramJaccardPairsAgainstStore(probe, store, idCol, textCol,
+          threshold, pruneBuckets)
+      probe.join(
+          pairs.select(col("a").as(idCol)).distinct(),
+          Seq(idCol), "left_anti")
+        .select(col(idCol))
+    }
+
+  /** The admitted probe ids, computed on the driver — None when the
+    * probe's shingles or the postings they match pass `budget` rows.
+    *  1. One collect of each probe row's id, distinct shingles and their
+    *     buckets (the buckets through [[bucketOf]], as the postings).
+    *  2. One job: the postings in the probe's buckets (a literal
+    *     partition filter), semi-joined with the probe's shingles as a
+    *     broadcast `LocalRelation`, collected as (doc, shingle, sz).
+    *  3. Per probe row, shared shingles counted per store doc under the
+    *     distributed paths' size band, then their exact
+    *     `inter / (sza + szb − inter) ≥ τ` test in the same double
+    *     arithmetic. A row whose id has such a pair is dropped; a null-id
+    *     row is always kept, as by the anti-join. */
+  private def admitOnDriver(probe: DataFrame, store: ShingleStore, idCol: String,
+                            textCol: String, threshold: Double,
+                            budget: Long): Option[DataFrame] = {
+    val spark = probe.sparkSession
+    val idField = probe.select(col(idCol)).schema.head
+    val arrs = probe.select(col(idCol).as("doc"),
+      array_distinct(shinglesOf(tokens(col(textCol)), store.k)).as("arr"))
+    val docs = arrs.select(col("doc"), col("arr"),
+      array_distinct(transform(col("arr"), bucketOf(_, store.buckets))).as("pbs"))
+    val shingleCount = (r: InternalRow) =>
+      if (r.isNullAt(1)) 0L else r.getArray(1).numElements().toLong
+    for {
+      rows <- IndexSearch.collectInternalWithin(docs, budget, shingleCount)
+      live = rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+      shingles = live.flatMap(r => strings(r.getArray(1))).distinct
+      posts <- if (shingles.isEmpty) Some(Array.empty[InternalRow]) else {
+        val pbs = live.flatMap { r =>
+          val a = r.getArray(2); (0 until a.numElements()).map(a.getInt) }.distinct
+        val probeShingles = GraftSqlShim.localRelation(spark,
+          StructType.fromDDL("shingle string"), shingles.map(InternalRow(_)).toSeq)
+        IndexSearch.collectInternalWithin(
+          store.post.filter(col("pb").isInCollection(pbs))
+            .join(broadcast(probeShingles), Seq("shingle"), "left_semi")
+            .select(col("doc"), col("shingle"), col("sz")),
+          budget)
+      }
+    } yield {
+      val docType = store.post.schema("doc").dataType
+      val postsOf = mutable.HashMap.empty[UTF8String, mutable.ArrayBuffer[(Any, Long)]]
+      posts.foreach { p =>
+        if (!p.isNullAt(0)) postsOf.getOrElseUpdate(p.getUTF8String(1),
+          mutable.ArrayBuffer.empty) += ((p.get(0, docType), p.getLong(2)))
+      }
+      val idType = idField.dataType
+      val dropped = live.filter { r =>
+        val arr = strings(r.getArray(1))
+        val sza = arr.length
+        // store doc -> (shared shingles, its size)
+        val inter = mutable.HashMap.empty[Any, (Long, Long)]
+        for {
+          s <- arr
+          (b, szb) <- postsOf.getOrElse(s, Nil)
+          if szb.toDouble >= threshold * sza && sza.toDouble >= threshold * szb
+        } inter(b) = (inter.get(b).fold(0L)(_._1) + 1, szb)
+        inter.valuesIterator.exists { case (n, szb) =>
+          n.toDouble / (sza + szb - n) >= threshold }
+      }.map(_.get(0, idType)).toSet
+      GraftSqlShim.localRelation(spark, StructType(Seq(idField)),
+        rows.iterator.map(_.get(0, idType))
+          .filter(id => id == null || !dropped(id))
+          .map(id => InternalRow(InternalRow.copyValue(id))).toSeq)
+    }
   }
+
+  /** The strings of a collected string array. */
+  private def strings(a: ArrayData): Array[UTF8String] =
+    Array.tabulate(a.numElements())(a.getUTF8String)
 
   /** The candidate pairs the prefix filter admits for
     * [[ngramJaccardPrefixPairs]] — exposed so the pruning ratio vs the

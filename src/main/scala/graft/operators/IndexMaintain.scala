@@ -2,8 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, GraftSqlShim, Row}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 
 import scala.collection.mutable
@@ -164,8 +162,7 @@ object IndexMaintain {
     }.toIndexedSeq
     // the rebuilt rows as one partition: a caller's write adds one file
     index.filter(!col("rangeId").isInCollection(touched)).unionByName(
-      GraftSqlShim.ofRows(index.sparkSession,
-        LocalRelation(DataTypeUtils.toAttributes(IndexBuild.indexSchema), rebuilt))
+      GraftSqlShim.localRelation(index.sparkSession, IndexBuild.indexSchema, rebuilt)
         .coalesce(1))
   }
 

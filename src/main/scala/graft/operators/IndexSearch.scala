@@ -3,13 +3,13 @@ package graft.operators
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BindReferences,
   Predicate, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.optimizer.ConstantFolding
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.{LocalTableScanExec, SQLExecution}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StructType}
 
@@ -73,11 +73,44 @@ object IndexSearch {
 
   /** Collect `df` if it has at most `limit` rows — None when the limit
     * overflowed (the caller then takes its distributed path). The size
-    * probe and the collect are one job: the rows that prove the index
-    * fits are the rows the local path uses. */
+    * probe and the collect are one job, whatever the partition count:
+    * the rows that prove the index fits are the rows the local path uses. */
   private[graft] def collectWithin(df: DataFrame, limit: Long): Option[Array[Row]] = {
-    val rows = df.limit(math.min(limit + 1, Int.MaxValue.toLong - 1).toInt).collect()
-    if (rows.length <= limit) Some(rows) else None
+    val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+    collectInternalWithin(df, limit).map(_.map(toRow(_).asInstanceOf[Row]))
+  }
+
+  /** [[collectWithin]] in Spark's internal row form, each row counting
+    * `weight(row)` (at least 1) against `limit`. Rows the optimizer folds
+    * onto the driver are taken with no job; otherwise one job runs every
+    * partition at once, each task stopping at the row whose weight passes
+    * `limit`. The driver drops what it holds as soon as the total passes
+    * `limit`, so it never keeps more than about twice `limit` at once.
+    * Rows come back in partition order, as a `collect()` returns them. */
+  private[graft] def collectInternalWithin(df: DataFrame, limit: Long,
+                                           weight: InternalRow => Long = _ => 1L)
+      : Option[Array[InternalRow]] = {
+    val qe = df.queryExecution
+    val cost = (r: InternalRow) => math.max(1L, weight(r))
+    def fits(rows: Array[InternalRow]) = rows.iterator.map(cost).sum <= limit
+    qe.executedPlan match {
+      case _: LocalTableScanExec => Some(GraftSqlShim.collectInternal(df)).filter(fits)
+      case _ => SQLExecution.withNewExecutionId(qe, Some("collectWithin")) {
+        val rdd = qe.toRdd
+        val parts = new Array[Array[InternalRow]](rdd.getNumPartitions)
+        var total = 0L
+        df.sparkSession.sparkContext.runJob(rdd, (rows: Iterator[InternalRow]) => {
+            var w = 0L
+            rows.takeWhile(_ => w <= limit)
+              .map { r => w += cost(r); r.copy() }.toArray
+          },
+          (i: Int, part: Array[InternalRow]) => if (total <= limit) {
+            total += part.iterator.map(cost).sum
+            if (total <= limit) parts(i) = part else parts.indices.foreach(parts(_) = null)
+          })
+        Option.when(total <= limit)(parts.flatten)
+      }
+    }
   }
 
   /** A tree pinned from a file snapshot, with its node-row count. */

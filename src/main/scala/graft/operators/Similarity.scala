@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -340,6 +340,16 @@ object Similarity {
       qBucket +: store.planes.indices.map(j => qBucket ^ (1 << j)), q, k)
   }
 
+  /** A batch probe's per-query rows collected once: the distinct values
+    * of their partition column `key` and the rows as a relation to
+    * broadcast, which takes no pin. */
+  private def collectProbes(probes: DataFrame, key: String): (Seq[Any], DataFrame) = {
+    val rows = GraftSqlShim.collectInternal(probes)
+    val at = probes.schema.fieldIndex(key)
+    (rows.map(_.get(at, probes.schema(at).dataType)).distinct.toSeq,
+      GraftSqlShim.localRelation(probes.sparkSession, probes.schema, rows.toSeq))
+  }
+
   /** BATCH probe of a persisted LSH-bucketed store — [[lshKnnJoinMulti]]
     * against the serving layout (completing the {LSH, IVF, IVFADC} ×
     * {single, batch} probe matrix): each query row probes its own
@@ -359,15 +369,13 @@ object Similarity {
       if (multiProbe) array((col("_b0") +: planes.indices.map(j =>
         col("_b0").bitwiseXOR(lit(1 << j)))): _*)
       else array(col("_b0"))
-    val qB = queries
+    val probes = queries
       .select(col(qIdCol).cast("long").as("qid"), col(qVecCol).as("qv"))
       .withColumn("_b0", lshBucket(col("qv"), planes))
       .withColumn("bucket", explode(probed))
       .drop("_b0")
-      .localCheckpoint()
     // the touched-bucket union prunes the store read at partition level
-    val buckets = qB.select("bucket").distinct()
-      .collect().map(_.getInt(0)).toSeq
+    val (buckets, qB) = collectProbes(probes, "bucket")
     store.rows
       .filter(col("bucket").isin(buckets: _*))
       .join(broadcast(qB), Seq("bucket"))
@@ -653,11 +661,9 @@ object Similarity {
                     nprobe: Int, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val centRel = centroidRelation(store.rows.sparkSession, store.centroids)
-    val qProbe = probeListsJoin(queries, qIdCol, qVecCol, centRel, nprobe)
-      .localCheckpoint()
+    val probes = probeListsJoin(queries, qIdCol, qVecCol, centRel, nprobe)
     // the touched-list union prunes the parquet read at partition level
-    val lists = qProbe.select("list_id").distinct()
-      .collect().map(_.getLong(0)).toSeq
+    val (lists, qProbe) = collectProbes(probes, "list_id")
     store.rows
       .filter(col("list_id").isin(lists: _*))
       .join(broadcast(qProbe), Seq("list_id"))

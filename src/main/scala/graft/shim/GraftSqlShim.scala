@@ -3,7 +3,8 @@ package org.apache.spark.sql
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.types.StructType
 
 /** Bridge between public `Column`s and Catalyst `Expression`s. Spark 4
@@ -18,6 +19,12 @@ object GraftSqlShim {
     * driver already holds — no re-encoding through external `Row`s. */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Rows the driver holds, laid out by `schema`, as a DataFrame over a
+    * bare `LocalRelation`: it runs no job and takes no pin. */
+  def localRelation(spark: SparkSession, schema: StructType,
+                    rows: Seq[InternalRow]): DataFrame =
+    ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
 
   /** A DataFrame over an RDD of rows already in Spark's internal form,
     * laid out by `schema`. */

@@ -607,6 +607,27 @@ class IndexExtrasSpec extends SparkSpec {
     assert(GraphAnn.openGraph(spark, s"$dir/g").rows.count() == 300)
   }
 
+  test("collectWithin takes a multi-file input in one job, in collect order") {
+    val dir = tmpDir("graftwithin") + "/rows"
+    spark.range(0, 400, 1, 8).write.parquet(dir)
+    // read before counting: Spark's own read runs a schema-inference job
+    val rows = spark.read.parquet(dir)
+    assert(rows.rdd.getNumPartitions > 1)
+    val all = rows.collect().map(_.getLong(0)).toSeq
+    val (fits, fitJobs) = jobsOf(IndexSearch.collectWithin(rows, 1000))
+    val (exact, exactJobs) = jobsOf(IndexSearch.collectWithin(rows, 400))
+    val (over, overJobs) = jobsOf(IndexSearch.collectWithin(rows, 399))
+    assert((fitJobs, exactJobs, overJobs) == (1, 1, 1))
+    assert(fits.map(_.map(_.getLong(0)).toSeq).contains(all))
+    assert(exact.map(_.length).contains(400) && over.isEmpty)
+    // weighted: a row counts its weight against the limit
+    assert(IndexSearch.collectInternalWithin(rows, 799, _ => 2L).isEmpty)
+    assert(IndexSearch.collectInternalWithin(rows, 800, _ => 2L).map(_.length).contains(400))
+    // rows already on the driver are taken without a job
+    val (local, localJobs) = jobsOf(IndexSearch.collectWithin(Seq(1L, 2L).toDF("id"), 2))
+    assert(localJobs == 0 && local.map(_.map(_.getLong(0)).toSeq).contains(Seq(1L, 2L)))
+  }
+
   test("localNodeLimit = 0 after a kept pin still runs the frontier search") {
     val e = Tables.embeddings(spark, sf0001)
     val q = QueryConstants.Q64

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators._
@@ -378,10 +379,13 @@ class DedupSpec extends SparkSpec {
     try {
       val band = Dedup.ngramJaccardPairsAgainstStoreBand(probe, store,
         "doc_id", "text", 0.3)
-      // the filter must actually be IN the forced plan (a scalar-udf
-      // Filter over the store scan), not just not break anything
-      assert(band.queryExecution.executedPlan.toString.contains("UDF("),
+      // the filter must actually be IN the forced plan (a native
+      // might_contain Filter over the store scan, no UDF), not just not
+      // break anything
+      val plan = band.queryExecution.executedPlan.toString
+      assert(plan.contains("might_contain("),
         "forced Bloom prefilter missing from the band probe plan")
+      assert(!plan.contains("UDF("), s"Bloom prefilter runs a UDF:\n$plan")
       assert(band.select("a", "b", "jaccard")
         .as[(Long, Long, Double)].collect().toSet == inline, "band+bloom")
       val pref = Dedup.ngramJaccardPairsAgainstStore(probe, store,
@@ -389,6 +393,78 @@ class DedupSpec extends SparkSpec {
         .select("a", "b", "jaccard").as[(Long, Long, Double)].collect().toSet
       assert(pref == inline, "prefix+bloom")
     } finally spark.conf.set(key, prev)
+  }
+
+  /** A shingle store over the sf0.001 corpus (docs not ≡ 0 mod 7) plus
+    * planted docs, written in two files per bucket, and a probe of the
+    * other docs plus edge rows. k = 3: `plant(t, n)` is n tokens, n − 2
+    * shingles. Planted, probe against store:
+    *  - 1 vs 2: 8 and 8 shingles, 6 shared, J = 6 / 10 = 0.6 exactly;
+    *  - 3 vs 4: 5 and 8 shingles, 3 shared, J = 3 / 10 = 0.3 exactly;
+    *  - 5: an empty string, its one shingle "" also in the store (J = 1);
+    *  - 6: null text; 7: no shingle in the store;
+    *  - a null id with the text of a store doc. */
+  private def admissionFixture(prefix: String): (DataFrame, Dedup.ShingleStore) = {
+    val corpus = Tables.documents(spark, sf0001).select("doc_id", "text")
+    def plant(t: String, n: Int) = (1 to n).map(i => s"$t$i").mkString(" ")
+    val planted = Seq[(java.lang.Long, String)](
+      (900001L, plant("p", 10)), (900003L, plant("q", 10)), (900005L, ""))
+      .toDF("doc_id", "text")
+    val probeRows = Seq[(java.lang.Long, String)](
+      (800001L, plant("p", 8) + " x1 x2"), (800003L, plant("q", 5) + " z1 z2"),
+      (800005L, ""), (800006L, null), (800007L, "never seen words in this store"),
+      (null, plant("p", 10))).toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory(prefix).resolve("store").toString
+    Dedup.writeShingleStore(corpus.filter(col("doc_id") % 7 =!= 0 && col("doc_id") % 2 === 0),
+      "doc_id", "text", 3, dir, buckets = 16)
+    Dedup.appendShingleStore(spark, dir,
+      corpus.filter(col("doc_id") % 7 =!= 0 && col("doc_id") % 2 =!= 0).union(planted),
+      "doc_id", "text")
+    (corpus.filter(col("doc_id") % 7 === 0).union(probeRows), Dedup.openShingleStore(spark, dir))
+  }
+
+  /** Admitted ids as sorted strings, null ids included. */
+  private def admittedIds(df: DataFrame): Seq[String] =
+    df.collect().map(r => String.valueOf(r.get(0))).sorted.toSeq
+
+  test("store admission on the driver equals the distributed paths") {
+    val (probe, store) = admissionFixture("graftadmit")
+    val filesPerBucket = store.post.inputFiles.groupBy(f => f.take(f.lastIndexOf('/')))
+    assert(filesPerBucket.size == 16 && filesPerBucket.values.forall(_.length >= 2),
+      "a bucket lacks its appended file")
+    for (tau <- Seq(0.3, 0.6); band <- Seq(false, true)) {
+      val onDriver = Dedup.admitNewAgainstStore(probe, store, "doc_id", "text", tau, band = band)
+      assert(onDriver.queryExecution.analyzed
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+        s"tau=$tau band=$band: the batch was not answered on the driver")
+      val distributed = Dedup.admitNewAgainstStore(probe, store, "doc_id", "text", tau,
+        pruneBuckets = false, band = band, pinBudgetRows = 0L)
+      val got = admittedIds(onDriver)
+      assert(got == admittedIds(distributed), s"tau=$tau band=$band")
+      // the planted rows: exact-τ pairs drop, null text, unseen shingles
+      // and a null id are admitted, the empty string meets its twin
+      assert(got.contains("null") && got.contains("800006") && got.contains("800007") &&
+        !got.contains("800005") && !got.contains("800001"), s"tau=$tau band=$band")
+      assert(got.contains("800003") == (tau > 0.3), s"tau=$tau band=$band")
+    }
+  }
+
+  test("store admission of a small batch runs at most 2 jobs and pins nothing") {
+    val (probe, store) = admissionFixture("graftadmitjobs")
+    // the batch as an ingest holds it: rows on the driver
+    val batch = probe.collect().map(r => (r.getAs[java.lang.Long](0), r.getString(1)))
+      .toSeq.toDF("doc_id", "text")
+    var out = Seq.empty[String]
+    val pinned = pinnedDuring {
+      val (ids, jobs) = jobsOf(admittedIds(
+        Dedup.admitNewAgainstStore(batch, store, "doc_id", "text", 0.3)))
+      assert(jobs <= 2, s"$jobs jobs")
+      info(s"$jobs jobs")
+      out = ids
+    }
+    assert(pinned.isEmpty, s"pinned RDDs $pinned")
+    assert(out == admittedIds(Dedup.admitNewAgainstStore(batch, store, "doc_id", "text", 0.3,
+      pruneBuckets = false, band = false, pinBudgetRows = 0L)))
   }
 
   test("prefix-filtered jaccard candidate volume stays below quadratic") {
@@ -1931,6 +2007,28 @@ class IvfKnnJoinSpec extends SparkSpec {
         queries, "qid0", "qv0", numLists = 16, nprobe = 2, k = 5)
       .select("qid", "vec_id").as[(Long, Long)].collect().toSet
     assert(got == want && got.nonEmpty)
+  }
+
+  test("batch IVF and LSH store probes leave no checkpoint pinned") {
+    val e = Tables.embeddings(spark, sf0001)
+    val dir = java.nio.file.Files.createTempDirectory("graftprobepins").toString
+    Similarity.writeIvf(e, "vec_id", "embedding", 16, s"$dir/ivf")
+    Similarity.writeBucketed(e, "vec_id", "embedding", Similarity.hyperplanes(8, 64), s"$dir/lsh")
+    val (ivf, lsh) = (Similarity.openIvf(spark, s"$dir/ivf"),
+      Similarity.openBucketed(spark, s"$dir/lsh"))
+    val queries = e.filter(col("vec_id") % 100 === 0)
+      .select(col("vec_id").as("qid0"), col("embedding").as("qv0"))
+    // the answers stay referenced, so a pin they read could not be cleaned
+    var answers = Seq.empty[DataFrame]
+    val pinned = pinnedDuring {
+      answers = Seq(
+        Similarity.probeIvfBatch(ivf, "vec_id", "embedding", queries, "qid0", "qv0",
+          nprobe = 2, k = 5),
+        Similarity.probeBucketedBatch(lsh, "vec_id", "embedding", queries, "qid0", "qv0", k = 5))
+      assert(answers.forall(_.collect().nonEmpty))
+    }
+    assert(pinned.isEmpty, s"pinned RDDs $pinned")
+    assert(answers.nonEmpty)
   }
 
   test("lshKnnJoin equals the single-query lshKnn per query") {

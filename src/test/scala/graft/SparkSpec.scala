@@ -3,8 +3,11 @@ package graft
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.storage.RDDBlockId
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM, one session). */
@@ -51,5 +54,29 @@ abstract class SparkSpec extends AnyFunSuite {
       assert(delivered.await(60, TimeUnit.SECONDS), "listener bus never drained")
       (out, jobs.get)
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** The RDDs pinned while `f` runs: each RDD a block was stored for, and
+    * each RDD persisted at a job start that was not persisted before. */
+  protected def pinnedDuring(f: => Unit): Set[Int] = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        (sc.getPersistentRDDs.keySet -- before).foreach(seen.add)
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit =
+        e.blockUpdatedInfo.blockId match {
+          case RDDBlockId(rdd, _) if e.blockUpdatedInfo.storageLevel.isValid => seen.add(rdd)
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      f
+      (sc.getPersistentRDDs.keySet -- before).foreach(seen.add)
+      jobsOf(()) // its barrier job drains the listener bus
+    } finally sc.removeSparkListener(listener)
+    seen.asScala.toSet
   }
 }

@@ -2,12 +2,8 @@ package graft
 
 import java.io.File
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.commons.io.FileUtils
-import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.RDDBlockId
 
 import graft.operators._
 import graft.sources.Ingest
@@ -40,30 +36,6 @@ class StoreMaintainSpec extends SparkSpec {
   /** The data files of one partition directory. */
   private def dataFiles(dir: String): Int =
     new File(dir).list().count(n => !n.startsWith(".") && !n.startsWith("_"))
-
-  /** The RDDs pinned while `f` runs: each RDD a block was stored for, and
-    * each RDD persisted at a job start that was not persisted before. */
-  private def pinnedDuring(f: => Unit): Set[Int] = {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        (sc.getPersistentRDDs.keySet -- before).foreach(seen.add)
-      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit =
-        e.blockUpdatedInfo.blockId match {
-          case RDDBlockId(rdd, _) if e.blockUpdatedInfo.storageLevel.isValid => seen.add(rdd)
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      f
-      (sc.getPersistentRDDs.keySet -- before).foreach(seen.add)
-      jobsOf(()) // its barrier job drains the listener bus
-    } finally sc.removeSparkListener(listener)
-    seen.asScala.toSet
-  }
 
   /** An IVF store at `dir` over 200 clustered points in 4 lists, with a
     * second file in one list (10 appended rows, one with a null id).
@@ -182,13 +154,14 @@ class StoreMaintainSpec extends SparkSpec {
 
   test("batch maintenance of the IVF store and the tree runs a handful of jobs per call") {
     val dir = tmpDir("graftmaintainjobs")
-    val all = Ingest.randomClustered(spark, 1230, 8, 8).localCheckpoint()
+    val all = Ingest.randomClustered(spark, 1260, 8, 8).localCheckpoint()
     Similarity.writeIvf(all.filter(col("id") < 1200), "id", "vector", 8, s"$dir/ivf")
     IndexBuild.buildIndex(all.filter(col("id") < 1200), "id", "vector")
       .write.parquet(s"$dir/tree0")
-    val batch = all.filter(col("id") >= 1200).as[(Long, Array[Float])].collect().toSeq
-    // the batch as a caller holds it: a small relation in one partition
-    val adds = batch.toDF("id", "vector").coalesce(1)
+    // a batch as a caller holds it: a small relation in one partition
+    val Seq(adds, addsAgain) = Seq(1200L, 1230L).map(from =>
+      all.filter(col("id") >= from && col("id") < from + 30)
+        .as[(Long, Array[Float])].collect().toSeq.toDF("id", "vector").coalesce(1))
     val doomed = (0L until 1200L by 40L).toDF("id")
     // the churn round's order: append to the tree, then remove. Each
     // relation is read before its count starts: Spark's own parquet read
@@ -201,18 +174,28 @@ class StoreMaintainSpec extends SparkSpec {
     val tree1 = spark.read.parquet(s"$dir/tree1")
     val (_, dropJobs) = jobsOf(IndexMaintain.removePoints(tree1, doomed)
       .write.parquet(s"$dir/tree2"))
+    // the second round appends to a tree of several files
+    val tree2 = spark.read.parquet(s"$dir/tree2")
+    assert(tree2.inputFiles.length > 1)
+    val points2 = spark.read.parquet(s"$dir/ivf").select("id", "vector").union(adds)
+    val (_, addAgainJobs) = jobsOf(IndexMaintain.addPoints(tree2, points2, addsAgain, "id",
+      "vector").write.parquet(s"$dir/tree3"))
     val (cents, sidecarJobs) = jobsOf(Similarity.readIvfCentroids(spark, s"$dir/ivf"))
-    val counts = s"removeFromStore $removeJobs, addPoints $addJobs, " +
+    val counts = s"removeFromStore $removeJobs, addPoints $addJobs then $addAgainJobs, " +
       s"removePoints $dropJobs, readSidecar $sidecarJobs jobs"
-    assert(removeJobs <= 3 && addJobs <= 6 && dropJobs <= 3 && sidecarJobs == 0, counts)
+    assert(removeJobs <= 3 && addJobs <= 4 && addAgainJobs <= 4 && dropJobs <= 3 &&
+      sidecarJobs == 0, counts)
     info(counts)
     // the driver-side sidecar read holds what Spark's reader reads
     assert(cents.map { case (l, c) => (l, c.toSeq) }.toSeq ==
       spark.read.parquet(s"$dir/ivf.centroids").as[(Long, Seq[Double])].collect().toSeq)
     val live = (0L until 1200L).filterNot(_ % 40 == 0)
     assert(spark.read.parquet(s"$dir/ivf").select("id").as[Long].collect().sorted.toSeq == live)
-    assert(spark.read.parquet(s"$dir/tree2").filter(col("id").isNotNull)
+    assert(tree2.filter(col("id").isNotNull)
       .select("id").as[Long].collect().sorted.toSeq ==
       (live ++ (1200L until 1230L)).sorted)
+    assert(spark.read.parquet(s"$dir/tree3").filter(col("id").isNotNull)
+      .select("id").as[Long].collect().sorted.toSeq ==
+      (live ++ (1200L until 1260L)).sorted)
   }
 }
