@@ -979,8 +979,8 @@ object SparkEntry {
         // narrow-batch prefix path (11.5 -> 1.8 s warm at sf0.1,
         // identical pair set — see ngramJaccardPairsAgainstStoreBand).
         // While the probe's shingles and their postings fit the driver
-        // budget (the small scale factors) the driver path answers
-        // instead and `band` is not consulted
+        // budget (sf0.1 and below: ~270k probe shingles) the driver path
+        // answers instead and `band` is not consulted
         Dedup.admitNewAgainstStore(qualified, shingleStore(s, d),
           "doc_id", "text", 0.3, band = true),
         Seq("doc_id"))
@@ -1322,8 +1322,9 @@ object SparkEntry {
       // probe wins on this dense-vocabulary corpus (4.8 -> 0.8 s warm at
       // sf0.1, identical rows); the prefix path stays hash-gated via d29
       // as the Zipfian-store default. While the batch's shingles and their
-      // postings fit the driver budget (the small scale factors) the
-      // driver path answers instead and `band` is not consulted
+      // postings fit the driver budget (sf0.1 and below: ~39k batch
+      // shingles) the driver path answers instead and `band` is not
+      // consulted
       val docs = Tables.documents(s, d)
       Dedup.admitNewAgainstStore(
           docs.filter(col("doc_id") % 7 === 0), shingleStore(s, d),

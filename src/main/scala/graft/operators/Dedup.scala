@@ -595,7 +595,10 @@ object Dedup {
     * ([[admitOnDriver]]): one collect of the probe (no job when it is
     * driver-held rows), one job reading the matching postings, the
     * Jaccard test on the driver, and a `LocalRelation` of the admitted
-    * ids — no checkpoint, no exchange. Past the budget the distributed
+    * ids — no checkpoint, no exchange. A batch past the budget costs that
+    * attempt about the budget's worth of rows read: each collect is
+    * cancelled as soon as what it has counted passes the budget
+    * ([[IndexSearch.collectInternalWithin]]). Then the distributed
     * pair relation runs: `band = true` selects the one-pass size-banded
     * probe ([[ngramJaccardPairsAgainstStoreBand]]) — the right strategy
     * when the probe is corpus-scale (see its doc) — and `band = false`

@@ -1,7 +1,10 @@
 package graft.operators
 
 import scala.collection.mutable
+import scala.concurrent.{Await, ExecutionContext, Future, Promise}
+import scala.concurrent.duration.Duration
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BindReferences,
@@ -82,11 +85,18 @@ object IndexSearch {
 
   /** [[collectWithin]] in Spark's internal row form, each row counting
     * `weight(row)` (at least 1) against `limit`. Rows the optimizer folds
-    * onto the driver are taken with no job; otherwise one job runs every
-    * partition at once, each task stopping at the row whose weight passes
-    * `limit`. The driver drops what it holds as soon as the total passes
-    * `limit`, so it never keeps more than about twice `limit` at once.
-    * Rows come back in partition order, as a `collect()` returns them. */
+    * onto the driver are taken with no job. Otherwise one job runs every
+    * partition at once; a task ships its rows only while they weigh at
+    * most its share, `limit` over the partition count, and past it ships
+    * just their weight, counted up to `limit`. As soon as the weights
+    * returned pass `limit` the job is cancelled (its running tasks stop at
+    * their next row) and the answer is None, so an input past the limit
+    * costs about `limit` weight of rows read, however large it is. When
+    * the weights fit and some partition outgrew its share (a skewed
+    * input), a second job fetches those partitions alone. Either way the
+    * tasks ship at most `limit` weight of rows in all, as Spark's
+    * `maxResultSize` counts them. Rows come back in partition order, as a
+    * `collect()` returns them. */
   private[graft] def collectInternalWithin(df: DataFrame, limit: Long,
                                            weight: InternalRow => Long = _ => 1L)
       : Option[Array[InternalRow]] = {
@@ -97,18 +107,42 @@ object IndexSearch {
       case _: LocalTableScanExec => Some(GraftSqlShim.collectInternal(df)).filter(fits)
       case _ => SQLExecution.withNewExecutionId(qe, Some("collectWithin")) {
         val rdd = qe.toRdd
-        val parts = new Array[Array[InternalRow]](rdd.getNumPartitions)
+        val n = rdd.getNumPartitions
+        val weights = new Array[Long](n)
+        val parts = new Array[Array[InternalRow]](n)
         var total = 0L
-        df.sparkSession.sparkContext.runJob(rdd, (rows: Iterator[InternalRow]) => {
-            var w = 0L
-            rows.takeWhile(_ => w <= limit)
-              .map { r => w += cost(r); r.copy() }.toArray
-          },
-          (i: Int, part: Array[InternalRow]) => if (total <= limit) {
-            total += part.iterator.map(cost).sum
-            if (total <= limit) parts(i) = part else parts.indices.foreach(parts(_) = null)
-          })
-        Option.when(total <= limit)(parts.flatten)
+        // each task: (its weight up to past `limit`, its rows or null
+        // once they weigh more than `share`)
+        def fetch(partitions: Seq[Int], share: Long): Unit = if (partitions.nonEmpty) {
+          val over = Promise[Unit]()
+          val job = df.sparkSession.sparkContext.submitJob(rdd,
+            (rows: Iterator[InternalRow]) => {
+              val task = TaskContext.get()
+              val kept = mutable.ArrayBuffer.empty[InternalRow]
+              var w = 0L
+              while (w <= limit && !task.isInterrupted() && rows.hasNext) {
+                val r = rows.next()
+                w += cost(r)
+                if (w <= share) kept += r.copy() else kept.clear()
+              }
+              (w, if (w <= share) kept.toArray else null)
+            },
+            partitions,
+            (j: Int, part: (Long, Array[InternalRow])) => {
+              val i = partitions(j)
+              total += part._1 - weights(i)
+              weights(i) = part._1
+              parts(i) = part._2
+              if (total > limit) over.trySuccess(())
+            }, ())
+          Await.ready(Future.firstCompletedOf(Seq(job, over.future))(ExecutionContext.parasitic),
+            Duration.Inf)
+          if (over.isCompleted) { job.cancel(); Await.ready(job, Duration.Inf) }
+          else job.value.foreach(_.get) // a failed job throws here
+        }
+        fetch(0 until n, limit / math.max(n, 1))
+        if (total <= limit) fetch(parts.indices.filter(parts(_) == null), limit)
+        Option.when(total <= limit && parts.forall(_ != null))(parts.flatten)
       }
     }
   }

@@ -628,6 +628,37 @@ class IndexExtrasSpec extends SparkSpec {
     assert(localJobs == 0 && local.map(_.map(_.getLong(0)).toSeq).contains(Seq(1L, 2L)))
   }
 
+  test("collectWithin ships at most its limit of rows, however the input is split") {
+    // 40 partitions of 50 rows of about 1 kB each, against a limit of 500
+    // rows: every partition fits the limit, their sum does not
+    val fat = spark.range(0, 2000, 1, 40).select(col("id"), repeat(lit("x"), 1000).as("pad"))
+    val (over, overBytes) = resultBytesOf(IndexSearch.collectWithin(fat, 500))
+    assert(over.isEmpty)
+    assert(overBytes < 500L * 1000, s"$overBytes result bytes for a limit of 500 rows")
+    info(s"$overBytes result bytes past the limit")
+    val (_, overJobs) = jobsOf(IndexSearch.collectWithin(fat, 500))
+    assert(overJobs == 1)
+    // skewed and fitting: the partition past its share is fetched by a
+    // second job, and the rows keep their order
+    val skewed = spark.range(0, 400, 1, 8).union(spark.range(400, 1000, 1, 1)).toDF()
+    val (fits, fitJobs) = jobsOf(IndexSearch.collectWithin(skewed, 1000))
+    assert(fitJobs == 2)
+    assert(fits.map(_.map(_.getLong(0)).toSeq).contains(0L until 1000L))
+    val (fitAgain, fitBytes) = resultBytesOf(IndexSearch.collectWithin(skewed, 1000))
+    assert(fitAgain.map(_.length).contains(1000))
+    assert(fitBytes < 1000L * 100, s"$fitBytes result bytes for 1000 one-long rows")
+    info(s"$fitBytes result bytes within the limit")
+    // past the limit the job is cancelled: 40 partitions of 50 slow rows,
+    // of which a limit of 500 needs about 11 before it overflows
+    IndexExtrasSpec.rowsRead.set(0)
+    val read = udf((id: Long) => { IndexExtrasSpec.rowsRead.incrementAndGet(); Thread.sleep(1); id })
+    assert(IndexSearch.collectWithin(spark.range(0, 2000, 1, 40).select(read(col("id"))), 500)
+      .isEmpty)
+    val rowsRead = IndexExtrasSpec.rowsRead.get
+    assert(rowsRead < 1500, s"$rowsRead of 2000 rows read for a limit of 500")
+    info(s"$rowsRead of 2000 rows read past the limit")
+  }
+
   test("localNodeLimit = 0 after a kept pin still runs the frontier search") {
     val e = Tables.embeddings(spark, sf0001)
     val q = QueryConstants.Q64
@@ -765,4 +796,9 @@ class IndexExtrasSpec extends SparkSpec {
       assert(IndexStore.load(spark, s"$dir/idx").count() == all)
     } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
+}
+
+object IndexExtrasSpec {
+  /** Rows a spec's input has produced, counted from its tasks. */
+  val rowsRead = new java.util.concurrent.atomic.AtomicLong
 }

@@ -449,6 +449,29 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("store admission falls back when the batch fits the budget but its postings do not") {
+    // a hot store: 200 copies of one text, so each of the batch's few
+    // shingles matches 200 postings
+    val hot = (1 to 10).map(i => s"h$i").mkString(" ")
+    val dir = java.nio.file.Files.createTempDirectory("graftadmitover").resolve("store").toString
+    Dedup.writeShingleStore(spark.range(1, 201).select(col("id").as("doc_id"), lit(hot).as("text")),
+      "doc_id", "text", 3, dir, buckets = 4)
+    val store = Dedup.openShingleStore(spark, dir)
+    // 8 + 5 distinct shingles, within a budget of 100; 1600 postings, past it
+    val probe = Seq[(java.lang.Long, String)](
+      (1001L, hot), (1002L, "a fresh text the store never saw")).toDF("doc_id", "text")
+    for (band <- Seq(false, true)) {
+      val fallback = Dedup.admitNewAgainstStore(probe, store, "doc_id", "text", 0.3,
+        pruneBuckets = false, band = band, pinBudgetRows = 100L)
+      assert(!fallback.queryExecution.analyzed
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+        s"band=$band: the postings fit the budget after all")
+      assert(admittedIds(fallback) == Seq("1002"), s"band=$band")
+      assert(admittedIds(Dedup.admitNewAgainstStore(probe, store, "doc_id", "text", 0.3,
+        band = band)) == Seq("1002"), s"band=$band")
+    }
+  }
+
   test("store admission of a small batch runs at most 2 jobs and pins nothing") {
     val (probe, store) = admissionFixture("graftadmitjobs")
     // the batch as an ingest holds it: rows on the driver

@@ -1,11 +1,12 @@
 package graft
 
 import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.storage.RDDBlockId
 import org.scalatest.funsuite.AnyFunSuite
@@ -53,6 +54,30 @@ abstract class SparkSpec extends AnyFunSuite {
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       assert(delivered.await(60, TimeUnit.SECONDS), "listener bus never drained")
       (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** `f`'s result and the bytes its tasks sent the driver as results:
+    * Spark's task `resultSize`, what `spark.driver.maxResultSize` counts. */
+  protected def resultBytesOf[T](f: => T): (T, Long) = {
+    val sc = spark.sparkContext
+    val tag = s"measured-${java.util.UUID.randomUUID()}"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val bytes = new AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).map(_.getProperty("spark.jobGroup.id")).contains(tag))
+          e.stageIds.foreach(stages.add)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          bytes.addAndGet(e.taskMetrics.resultSize)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(tag, "measured")
+      val out = try f finally sc.clearJobGroup()
+      jobsOf(()) // its barrier job drains the listener bus
+      (out, bytes.get)
     } finally sc.removeSparkListener(listener)
   }
 
